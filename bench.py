@@ -306,9 +306,9 @@ def main() -> None:
     calib_py_start = round(min(calib_py() for _ in range(9)), 4)
     calib_start = round(min(calib() for _ in range(3)), 3)
 
-    # Round-11 measurement fix: earlier rounds called
-    # catalog.cache_tables() here, persisting + materializing every base
-    # table BEFORE the timed loop so per-query times excluded the input
+    # Round-11 measurement fix: earlier rounds persisted + materialized
+    # every base table here (through a catalog helper, since deleted)
+    # BEFORE the timed loop, so per-query times excluded the input
     # scan. That is exactly the pattern the optimization brief bans
     # (".cache() of base tables outside the timed region"), so it is
     # removed: every timed sample now computes from the parquet inputs,

@@ -62,6 +62,10 @@ def test_keyword_hits_counts_each_keyword_once(spark):
         [keyword_hits(F.lit("good good good bad"), ["good", "bad", "zzz"]).alias("k")],
     )
     assert row.k == 2
+    # a NULL text contains no keyword
+    null_text = F.lit(None).cast("string")
+    row = _one(spark, [keyword_hits(null_text, ["good", "bad"]).alias("k")])
+    assert row.k == 0
 
 
 def test_text_blob_join_and_lower(spark):

@@ -122,6 +122,8 @@ def test_enrich_videos_matches_reference_semantics(spark):
         [
             ("v1", "ch1", 1, "amazing great", "", [], 100, 10, 5),
             ("v2", "ch1", 19, "whatever", "", [], 0, 0, 0),
+            ("v3", "ch1", 1, None, None, None, 10, 1, 0),  # no text at all
+            ("v4", "ch1", 2, "Awful", "just great", ["x"], 10, 0, 0),  # 1-1 tie
         ],
         "video_id string, channel_id string, category_id int, title string, "
         "description string, tags array<string>, view_count long, "
@@ -134,6 +136,12 @@ def test_enrich_videos_matches_reference_semantics(spark):
     assert out["v2"].final_sentiment == "POSITIVE"
     assert out["v2"].classification_method == "CATEGORY_BASED"
     assert out["v2"].engagement_rate == 0.0
+    for vid, hits in (("v3", (0, 0)), ("v4", (1, 1))):
+        r = out[vid]
+        assert (r.positive_keyword_count, r.negative_keyword_count) == hits
+        assert r.final_sentiment == "NEUTRAL"
+        assert r.classification_method == "KEYWORD_BASED"
+    assert out["v3"].engagement_rate == 10.0
 
 
 def test_run_day_distributed_sink_end_to_end(spark, tmp_path):
@@ -168,6 +176,55 @@ def test_run_day_distributed_sink_end_to_end(spark, tmp_path):
     assert parts, "expected distributed part files in the raw sink"
     arrays = glob.glob(f"{raw_root}/2024/03/02/*.json")
     assert not arrays, "reference-shaped array fixtures are test-only now"
+
+
+def test_run_day_warm_job_budget(spark, tmp_path):
+    """Timing-free plan-shape guard: a warm ``run_day`` launches at most 15
+    Spark jobs — no schema-inference job per table read, no count job
+    after a write, no pass over the aggregate to find the partitions it
+    replaces — and opening a warehouse table launches none. Jobs are
+    counted per job group."""
+    import uuid
+    from datetime import timedelta
+
+    from youtube_etl_project_spark.pipeline import run_day
+    from youtube_etl_project_spark.testkit import make_channel, make_video
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(fn):
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(tracker.getJobIdsForGroup(group))
+
+    raw_root, wh_root = str(tmp_path / "raw"), str(tmp_path / "wh")
+
+    def day(n: int):
+        d = DAY + timedelta(days=n)
+        videos = spark.createDataFrame([
+            make_video(f"v{n}{i}", f"ch{i % 2}", category_id=(1, 20)[i % 2],
+                       title="amazing day", tags=["t"],
+                       collected_at=f"{d}T06:00:00")
+            for i in range(4)
+        ])
+        channels = spark.createDataFrame(
+            [make_channel("ch0", subscriber_count=n), make_channel("ch1")]
+        )
+        return lambda: run_day(spark, videos, channels, raw_root, wh_root, d)
+
+    jobs_of(day(0))
+    warm = jobs_of(day(1))
+    assert warm <= 15, f"warm run_day launched {warm} Spark jobs"
+
+    wh = Warehouse(spark, wh_root)
+    tables = (wh.stg_videos, wh.dim_channels, wh.fact_videos, wh.agg_daily)
+    assert jobs_of(lambda: [t.read() for t in tables]) == 0
+    assert wh.fact_videos.count() == 8 and wh.agg_daily.count() == 4
 
 
 def test_backfill_skips_done_days_and_resumes(spark, tmp_path, raw_root):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.upsert import (
@@ -39,15 +40,63 @@ def test_insert_only_merge_keeps_target(spark):
 def test_parquet_table_atomic_swap_and_truncate(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     assert not t.exists()
-    t.write(spark.range(5).withColumn("x", F.lit("a")))
+    assert t.write(spark.range(5).withColumn("x", F.lit("a"))) == 5
     assert t.read().count() == 5
     v1 = t.current_path()
     t.write(spark.range(3).withColumn("x", F.lit("b")))
     assert t.read().count() == 3
+    assert t.count() == 3  # from the commit record
     assert t.current_path() != v1  # new version, old dir gone
-    t.truncate()
+    _truncate_within(t)
     assert t.read().count() == 0
     assert t.read().columns == ["id", "x"]  # schema preserved
+
+    # the commit record is faithful: read() with the recorded schema
+    # sees what schema inference sees, for every non-empty warehouse table
+    wh = _run_one_day(spark, tmp_path)
+    for table in (wh.dim_channels, wh.fact_videos, wh.agg_daily):
+        assert table.count() > 0
+        assert table.read().schema == spark.read.parquet(table.current_path()).schema
+
+    # a version without a commit record (written before records existed)
+    # falls back to inference; the next write records again
+    t.write(spark.range(2).withColumn("x", F.lit("c")))
+    os.remove(os.path.join(t.current_path(), "_COMMIT.json"))
+    assert t.read().columns == ["id", "x"]
+    assert t.count() == 2  # scanned
+    _truncate_within(t)
+    assert os.path.exists(os.path.join(t.current_path(), "_COMMIT.json"))
+    assert t.count() == 0 and t.read().columns == ["id", "x"]
+
+
+def _truncate_within(t: ParquetTable, timeout: float = 60.0) -> None:
+    """Truncate on a thread: the empty write's row-count Observation must
+    resolve, not leave the commit waiting."""
+    import threading
+
+    done = threading.Event()
+
+    def run():
+        t.truncate()
+        done.set()
+
+    threading.Thread(target=run, daemon=True).start()
+    assert done.wait(timeout), "truncate() blocked on its write's Observation"
+
+
+def _run_one_day(spark, tmp_path):
+    from datetime import date
+
+    from youtube_etl_project_spark.pipeline import Warehouse, run_day
+    from youtube_etl_project_spark.testkit import make_channel, make_video
+
+    videos = spark.createDataFrame(
+        [make_video("v1", "ch1", tags=["a"]), make_video("v2", "ch2", category_id=20)]
+    )
+    channels = spark.createDataFrame([make_channel("ch1"), make_channel("ch2")])
+    root = str(tmp_path / "wh")
+    run_day(spark, videos, channels, str(tmp_path / "raw"), root, date(2024, 3, 2))
+    return Warehouse(spark, root)
 
 
 def test_overwrite_partitions_replaces_only_named(spark, tmp_path):
@@ -59,9 +108,27 @@ def test_overwrite_partitions_replaces_only_named(spark, tmp_path):
         )
     )
     fresh = spark.createDataFrame([("2024-01-02", "GB", 99)], "d string, r string, n int")
-    overwrite_partitions(t, fresh, "d")
+    overwrite_partitions(t, fresh, "d", "2024-01-02")
     rows = sorted(map(tuple, t.read().collect()))
     assert rows == [("2024-01-01", "US", 1), ("2024-01-02", "GB", 99)]
+
+
+def test_overwrite_partitions_keeps_null_partition_and_rejects_foreign_rows(
+    spark, tmp_path
+):
+    schema = "d string, n int"
+    t = ParquetTable(spark, str(tmp_path / "agg"))
+    t.write(spark.createDataFrame([(None, 1), ("a", 2), ("b", 3)], schema))
+    fresh = spark.createDataFrame([("a", 20), ("b", 30)], schema)
+    assert overwrite_partitions(t, fresh, "d", ["a", "b"]) == 3
+    assert set(map(tuple, t.read().collect())) == {(None, 1), ("a", 20), ("b", 30)}
+    committed = t.current_path()
+    # a row outside the named partitions fails the write, nothing commits
+    with pytest.raises(Exception, match="outside the replaced d partitions"):
+        overwrite_partitions(
+            t, spark.createDataFrame([("a", 21), ("c", 4)], schema), "d", "a"
+        )
+    assert t.current_path() == committed
 
 
 def test_crash_between_write_and_swap(spark, tmp_path, monkeypatch):

@@ -10,6 +10,7 @@ from youtube_etl_project_spark.functions.text import (
 from youtube_etl_project_spark.functions.classify import (
     classify_sentiment,
     engagement_rate,
+    sentiment_fields,
 )
 from youtube_etl_project_spark.functions.safe import (
     safe_double,
@@ -22,6 +23,7 @@ __all__ = [
     "keyword_hits",
     "tokens",
     "classify_sentiment",
+    "sentiment_fields",
     "engagement_rate",
     "safe_long",
     "safe_double",

@@ -27,7 +27,7 @@ from youtube_etl_project_spark import config
 from youtube_etl_project_spark.functions.text import keyword_hits
 
 
-def classify_sentiment(
+def sentiment_fields(
     category_id: Column | str,
     text: Column | str,
     positive_categories: Collection[int] = config.POSITIVE_CATEGORIES,
@@ -35,38 +35,53 @@ def classify_sentiment(
     mixed_categories: Collection[int] = config.MIXED_CATEGORIES,
     positive_keywords: Sequence[str] = config.POSITIVE_KEYWORDS,
     negative_keywords: Sequence[str] = config.NEGATIVE_KEYWORDS,
-) -> Column:
-    """Struct(final_sentiment, classification_method,
-    positive_keyword_count, negative_keyword_count) — reference F3."""
+) -> dict[str, Column]:
+    """Reference F3 as four named Columns, in ``classify_sentiment``'s
+    field order — for a caller that projects them as top-level columns.
+
+    Each category test and keyword count is built once and reused, and
+    result strings pass as plain values: building the plan is a few dozen
+    Column calls rather than hundreds."""
     cat = F.col(category_id) if isinstance(category_id, str) else category_id
     pos = keyword_hits(text, positive_keywords)
     neg = keyword_hits(text, negative_keywords)
+    is_pos = cat.isin(list(positive_categories))
+    is_neg = cat.isin(list(negative_categories))
+    is_mixed = cat.isin(list(mixed_categories))
 
     sentiment = (
-        F.when(cat.isin(*positive_categories), F.lit("POSITIVE"))
-        .when(cat.isin(*negative_categories), F.lit("NEGATIVE"))
+        F.when(is_pos, "POSITIVE")
+        .when(is_neg, "NEGATIVE")
         .when(
-            cat.isin(*mixed_categories),
-            F.when(pos > neg, F.lit("POSITIVE"))
-            .when(neg > pos, F.lit("NEGATIVE"))
-            .otherwise(F.lit("NEUTRAL")),
+            is_mixed,
+            F.when(pos > neg, "POSITIVE")
+            .when(neg > pos, "NEGATIVE")
+            .otherwise("NEUTRAL"),
         )
-        .otherwise(F.lit("UNKNOWN"))
+        .otherwise("UNKNOWN")
     )
     method = (
-        F.when(
-            cat.isin(*positive_categories) | cat.isin(*negative_categories),
-            F.lit("CATEGORY_BASED"),
-        )
-        .when(cat.isin(*mixed_categories), F.lit("KEYWORD_BASED"))
-        .otherwise(F.lit("UNCATEGORIZED"))
+        F.when(is_pos | is_neg, "CATEGORY_BASED")
+        .when(is_mixed, "KEYWORD_BASED")
+        .otherwise("UNCATEGORIZED")
     )
-    return F.struct(
-        sentiment.alias("final_sentiment"),
-        method.alias("classification_method"),
-        pos.alias("positive_keyword_count"),
-        neg.alias("negative_keyword_count"),
-    )
+    return {
+        "final_sentiment": sentiment,
+        "classification_method": method,
+        "positive_keyword_count": pos,
+        "negative_keyword_count": neg,
+    }
+
+
+def classify_sentiment(
+    category_id: Column | str, text: Column | str, **vocab
+) -> Column:
+    """Struct(final_sentiment, classification_method,
+    positive_keyword_count, negative_keyword_count) — reference F3.
+    ``vocab`` takes ``sentiment_fields``' category-set and keyword-list
+    keywords."""
+    fields = sentiment_fields(category_id, text, **vocab)
+    return F.struct(*[c.alias(name) for name, c in fields.items()])
 
 
 def engagement_rate(

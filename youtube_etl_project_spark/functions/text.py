@@ -9,6 +9,8 @@ they stay inside whole-stage codegen, no Python serialization.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -29,15 +31,18 @@ def keyword_hits(text: Column | str, keywords: Sequence[str]) -> Column:
     """Number of keywords from ``keywords`` contained in ``text``
     (substring containment counted once per keyword, reference F2).
 
-    Implemented as a sum of boolean casts — constant-folds into one codegen
-    stage; cost is O(len(keywords)) substring scans per row, no shuffle.
+    Implemented as ``coalesce(int(contains(t, kw1)) + ..., 0)`` — a sum of
+    boolean casts in one codegen stage; cost is O(len(keywords)) substring
+    scans per row, no shuffle. A NULL text contains no keyword: 0 hits.
+    Each keyword costs three Column calls (the keyword literal rides
+    ``contains``), so building the plan stays cheap for long lists; no
+    higher-order ``aggregate``, which would fall back from codegen.
     """
     t = F.col(text) if isinstance(text, str) else text
-    hit = None
-    for kw in keywords:
-        h = F.when(t.contains(F.lit(kw)), F.lit(1)).otherwise(F.lit(0))
-        hit = h if hit is None else hit + h
-    return (hit if hit is not None else F.lit(0)).cast("int")
+    hits = [t.contains(kw).cast("int") for kw in keywords]
+    if not hits:
+        return F.lit(0)
+    return F.coalesce(functools.reduce(operator.add, hits), F.lit(0))
 
 
 def tokens(text: Column | str, pattern: str = r"\s+") -> Column:

@@ -23,13 +23,15 @@ duplicate keys — same ordering the reference encodes (SL:82 before SL:86).
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -104,6 +106,24 @@ def scd_upsert_dim(
     ).drop("__t_first_seen")
 
 
+# Per-version commit record: written schema + row count (see ParquetTable).
+_COMMIT_RECORD = "_COMMIT.json"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 class ParquetTable:
     """Versioned parquet table with atomic pointer swap.
 
@@ -112,6 +132,14 @@ class ParquetTable:
     directory and the pointer flips last, so readers never observe partial
     data — the parquet stand-in for Delta's ACID commit (SURVEY §4
     transaction row; reference FA:294-365 semantics).
+
+    Each version directory also holds ``_COMMIT.json``: the written schema
+    and row count (Spark's file listing skips ``_`` files). ``read()``
+    hands that schema to the reader, so opening a table launches no
+    schema-inference job, and ``count()`` answers from the record with no
+    scan. The row count comes from an ``Observation`` riding the write
+    job itself. A version without the record (committed before it
+    existed) is read with inference; the next write adds one.
 
     Concurrent writers are guarded Delta-OCC-style since round 5: the
     pointer swap is a compare-and-swap inside a lock-file critical
@@ -257,16 +285,38 @@ class ParquetTable:
         v = self._pointer_version()
         return None if v is None else os.path.join(self.root, v)
 
+    def _commit_record(self, path: str) -> dict | None:
+        try:
+            with open(os.path.join(path, _COMMIT_RECORD)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _read_path(self, path: str) -> DataFrame:
+        rec = self._commit_record(path)
+        reader = self.spark.read
+        if rec is not None:
+            reader = reader.schema(T.StructType.fromJson(rec["schema"]))
+        return reader.parquet(path)
+
     def read(self) -> DataFrame:
         path = self.current_path()
         if path is None:
             raise FileNotFoundError(f"table {self.root} has no committed version")
-        return self.spark.read.parquet(path)
+        return self._read_path(path)
+
+    def count(self) -> int:
+        """Rows in the current version: the count its write observed, or a
+        scan for a version committed without a commit record."""
+        path = self.current_path()
+        rec = None if path is None else self._commit_record(path)
+        return rec["rows"] if rec is not None else self.read().count()
 
     def write(
         self, df: DataFrame, mode: str = "overwrite", force: bool = False
-    ) -> None:
-        """Commit ``df`` as the new current version.
+    ) -> int:
+        """Commit ``df`` as the new current version; return its row count,
+        observed on the write job (no second scan).
 
         Concurrent-writer guard (optimistic concurrency, Delta-OCC
         style): the pointer value is snapshotted HERE, before the data
@@ -287,8 +337,17 @@ class ParquetTable:
         prior = self.history()
         version = f"v_{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.root, version)
-        df.write.mode("errorifexists").parquet(out)
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "errorifexists"
+        ).parquet(out)
+        rows = int(obs.get["rows"])
+        # The schema as a parquet read reports it: every field nullable.
+        record = {"schema": _nullable(df.schema).jsonValue(), "rows": rows}
+        with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
+            json.dump(record, f)
         self._commit(version, base, prior, force)
+        return rows
 
     def _commit(
         self,
@@ -381,7 +440,7 @@ class ParquetTable:
                 f"version {n_back} back not retained "
                 f"(history depth {len(hist)}, keep_versions={self.keep_versions})"
             )
-        return self.spark.read.parquet(os.path.join(self.root, hist[n_back]))
+        return self._read_path(os.path.join(self.root, hist[n_back]))
 
     def truncate(self) -> None:
         """S9: TRUNCATE TABLE — commit an empty version preserving schema."""
@@ -435,18 +494,28 @@ class ParquetTable:
 
 
 def overwrite_partitions(
-    table: ParquetTable, df: DataFrame, partition_col: str
-) -> None:
-    """A7: replaceWhere-style refresh — replace exactly the partitions
-    present in ``df``, keep the rest (the DELETE today + INSERT pattern,
-    SL:136-155, made atomic by the version swap)."""
+    table: ParquetTable, df: DataFrame, partition_col: str, values
+) -> int:
+    """A7: replaceWhere-style refresh — replace the partitions whose
+    ``partition_col`` is in ``values`` (one value or a list) with ``df``
+    and keep the rest: the reference's ``DELETE … WHERE analysis_date =
+    today`` + INSERT (SL:136-155), made atomic by the version swap. Rows
+    whose partition value is NULL are never replaced. ``df`` must hold
+    rows of the named partitions only; like Delta's replaceWhere, the
+    write fails on any other row. Returns the committed row count."""
+    values = list(values) if isinstance(values, (list, tuple, set)) else [values]
+    key = F.col(partition_col)
+    fresh = df.withColumn(
+        partition_col,
+        F.when(key.isin(values), key).otherwise(
+            F.raise_error(f"row outside the replaced {partition_col} partitions")
+        ),
+    )
     if not table.exists():
-        table.write(df)
-        return
+        return table.write(fresh)
     current = table.read()
-    fresh_keys = df.select(partition_col).distinct()
-    kept = current.join(F.broadcast(fresh_keys), partition_col, "left_anti")
-    table.write(kept.unionByName(df.select(*current.columns)))
+    kept = current.filter(key.isNull() | ~key.isin(values))
+    return table.write(kept.unionByName(fresh.select(*current.columns)))
 
 
 def scd2_upsert(

@@ -9,7 +9,9 @@ Reference lifecycles re-expressed:
   the raw videos frame; all compute executor-side (the reference's
   driver-side ``all_videos`` list is exactly what this removes).
 * load (src/snowflake_loader.py load_todays_data): stage JSON with lineage →
-  latest-per-key dedup → dim MERGE → typed fact insert → aggregate refresh →
+  latest-per-key dedup → dim MERGE → typed fact insert → aggregate refresh
+  (today's ``analysis_date`` partition replaced by its known date, the
+  reference's DELETE … WHERE analysis_date = today + INSERT, SL:136-155) →
   staging truncate, with the reference's fatal/non-fatal step policy
   (steps 1-3 fatal, 4-5 warn — FA:294-365) and per-table atomic commits
   (ParquetTable version swap standing in for per-step transactions).
@@ -26,15 +28,15 @@ import os
 from dataclasses import dataclass, field
 from datetime import date as _date
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark import schemas
 from youtube_etl_project_spark.functions import (
-    classify_sentiment,
     engagement_rate,
     safe_long,
     safe_str,
+    sentiment_fields,
     text_blob,
 )
 from youtube_etl_project_spark.operators.upsert import (
@@ -63,22 +65,17 @@ def enrich_videos(raw: DataFrame) -> DataFrame:
 
     Input: flat raw video records (schemas.VIDEO_SCHEMA without the derived
     fields). Output adds final_sentiment / classification_method / keyword
-    counts / engagement_rate — all Column expressions, zero Python.
+    counts / engagement_rate — all Column expressions, zero Python, in one
+    projection (one plan analysis, where a ``withColumn`` chain re-analyses
+    the plan per column).
     """
     blob = text_blob("title", "description", tags_col="tags")
-    cls = classify_sentiment("category_id", blob)
-    return (
-        raw.withColumn("__c", cls)
-        .withColumn("final_sentiment", F.col("__c.final_sentiment"))
-        .withColumn("classification_method", F.col("__c.classification_method"))
-        .withColumn("positive_keyword_count", F.col("__c.positive_keyword_count"))
-        .withColumn("negative_keyword_count", F.col("__c.negative_keyword_count"))
-        .withColumn(
-            "engagement_rate",
-            engagement_rate("view_count", "like_count", "comment_count"),
-        )
-        .drop("__c")
-    )
+    return raw.withColumns({
+        **sentiment_fields("category_id", blob),
+        "engagement_rate": engagement_rate(
+            "view_count", "like_count", "comment_count"
+        ),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +101,10 @@ class Warehouse:
 def load_day(
     wh: Warehouse, raw_root: str, day: _date, file_format: str = "array"
 ) -> dict[str, int]:
-    """The 5-stage daily load (SL:20-40). Returns per-stage row counts.
+    """The 5-stage daily load (SL:20-40). Returns per-stage row counts:
+    each stage's table size as its write observed it (``ParquetTable.count``
+    reads the commit record — no second scan per stage, where the
+    reference re-counts every table after its step).
 
     Stages 1-3 raise on failure (fatal); stages 4-5 log and continue
     (non-fatal) — the reference's semantics (FA:304-355).
@@ -118,22 +118,13 @@ def load_day(
     day_glob = date_path(raw_root, day) + "/*"
     reader = read_json_line_files if file_format == "jsonl" else read_json_array_files
 
-    def observed_write(table, df: DataFrame) -> int:
-        """Write + row count in ONE action: an Observation rides the write
-        job instead of re-scanning the table afterwards (each stage's
-        table write IS the full post-stage table here, so observed rows ==
-        table size — and at 100 TB the read-back count the reference does
-        per stage would cost a second full scan per stage)."""
-        obs = Observation()
-        table.write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
-        return int(obs.get["rows"])
-
     # -- stage 1: staging with lineage (S6/F11; fatal) ---------------------
     staged_v = route_files(
         reader(wh.spark, day_glob, schemas.VIDEO_SCHEMA), "videos_"
     )
     stg = staged_v.select("raw_json", "load_timestamp", "file_name", "record")
-    counts["staged_videos"] = observed_write(wh.stg_videos, stg.drop("record"))
+    wh.stg_videos.write(stg.drop("record"))
+    counts["staged_videos"] = wh.stg_videos.count()
 
     # -- stage 2: channel dim upsert (W1 dedup → J2 MERGE; fatal) ----------
     staged_c = route_files(
@@ -158,10 +149,10 @@ def load_day(
         merged = channels.withColumn("first_seen_date", F.current_date()).withColumn(
             "last_updated", F.current_timestamp()
         )
-    counts["dim_channels"] = observed_write(
-        wh.dim_channels,
-        merged.select(*[f.name for f in schemas.DIM_CHANNELS_SCHEMA]),
+    wh.dim_channels.write(
+        merged.select(*[f.name for f in schemas.DIM_CHANNELS_SCHEMA])
     )
+    counts["dim_channels"] = wh.dim_channels.count()
 
     # -- stage 3: fact insert-only merge (P7 typed extract → J3; fatal) ----
     facts = (
@@ -176,14 +167,12 @@ def load_day(
         .select(*[f.name for f in schemas.FACT_VIDEOS_SCHEMA])
     )
     if wh.fact_videos.exists():
-        counts["fact_videos"] = observed_write(
-            wh.fact_videos,
-            insert_only_merge(wh.fact_videos.read(), facts, ["video_id"]),
+        wh.fact_videos.write(
+            insert_only_merge(wh.fact_videos.read(), facts, ["video_id"])
         )
     else:
-        counts["fact_videos"] = observed_write(
-            wh.fact_videos, facts.dropDuplicates(["video_id"])
-        )
+        wh.fact_videos.write(facts.dropDuplicates(["video_id"]))
+    counts["fact_videos"] = wh.fact_videos.count()
 
     # -- stage 4: aggregate refresh (J1+A1 → A7 replaceWhere; non-fatal) ---
     try:
@@ -202,8 +191,8 @@ def load_day(
             .withColumn("analysis_date", F.lit(day).cast("date"))
             .select(*[f.name for f in schemas.AGG_DAILY_SCHEMA])
         )
-        overwrite_partitions(wh.agg_daily, agg, "analysis_date")
-        counts["agg_daily"] = wh.agg_daily.read().count()
+        overwrite_partitions(wh.agg_daily, agg, "analysis_date", day)
+        counts["agg_daily"] = wh.agg_daily.count()
     except Exception:  # noqa: BLE001 — reference treats aggs as non-fatal
         log.warning("aggregate refresh failed (non-fatal)", exc_info=True)
 

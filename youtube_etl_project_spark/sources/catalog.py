@@ -36,7 +36,7 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 # plan over that table hit the cache — bench.py uses this to share scan
 # cost across queries (the driver contract still holds: queries get only
 # (spark, sf_dir)). DataFrames are immutable, so memoizing is semantics-
-# free; nothing is persisted unless a caller explicitly asks (cache_tables).
+# free; nothing is persisted unless a caller explicitly asks.
 _MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -52,15 +52,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key not in _MEMO:
         _MEMO[key] = _load_table(spark, sf_dir, name)
     return _MEMO[key]
-
-
-def cache_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Persist + materialize the shared table DataFrames (bench/interactive
-    use: pay each scan once instead of per query)."""
-    for n in names:
-        load_table(spark, sf_dir, n).cache().count()
 
 
 def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -137,8 +137,8 @@ HEADLINE = [
     # round-8 addition: IVF-PQ composed ANN — both training loops (coarse
     # exact-grid k-means + residual PQ) and the per-probe ADC search in
     # one oracle-gated plan; the coarse model is shared with
-    # embed_ivf_ann / ivf_cell_report via _IVF_BOOK_CACHE so the bench
-    # pays the coarse trainer once
+    # embed_ivf_ann / ivf_cell_report through fixture_cache.cached_model
+    # so the bench pays the coarse trainer once
     "embed_ivfpq_ann",
     # round-8 continuation: MMR-diversified retrieval (exact top-20
     # shortlist -> 5 greedy max-marginal-relevance rounds, all int64,

@@ -507,46 +507,53 @@ def test_nsw_compact_reduces_files_preserves_results(
 def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
     spark, sf_dir, tmp_path
 ):
-    """Round 12 (ADVICE r11 #1/#3): nsw_insert WIDENS the cached cell
-    adjacency with its known (cell, dst_cell) additions instead of
-    dropping it (no full edges re-scan per micro-batch), and the cache
-    revalidates against an edges-dir metadata stamp so any OTHER writer
-    invalidates it loudly instead of silently under-pruning."""
+    """nsw_insert WIDENS the cached cell adjacency with its known
+    (cell, dst_cell) additions instead of dropping it (no full edges
+    re-scan per micro-batch), and the entry is keyed by the edges dir's
+    content fingerprint, so any OTHER writer invalidates it loudly
+    instead of silently under-pruning."""
     import os
 
-    from youtube_etl_project_spark.operators import ann_index
+    from youtube_etl_project_spark.operators import ann_index, fixture_cache
 
     emb = _emb(spark, sf_dir)
     base = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
     idx = str(tmp_path / "nsw_adj")
     _nsw_index_from(spark, base, idx)
-    key = (spark.sparkContext.applicationId, idx)
+    edges = os.path.join(idx, "edges")
+    rebuilds = []
 
-    # prime the cache, then insert: the widened entry must equal a cold
-    # rebuild from the post-insert edge list (a missing pair would drop
-    # frontier distance rows silently)
+    def rebuild():
+        rebuilds.append(1)
+        return ann_index._load_nsw_adjacency(spark, idx)
+
+    # prime the cache, then insert: the widened entry must be served
+    # without a rebuild and cover a cold rebuild from the post-insert
+    # edge list (a missing pair would drop frontier distance rows)
     ann_index._nsw_cell_adjacency(spark, idx)
     ann_index.nsw_insert(batch, idx)
-    assert key in ann_index._NSW_ADJ_CACHE, "insert dropped the entry"
     widened = {
-        c: set(d) for c, d in ann_index._NSW_ADJ_CACHE[key][1].items()
+        c: set(d)
+        for c, d in fixture_cache.cached_model(
+            ann_index._NSW_ADJ, edges, rebuild
+        ).items()
     }
-    ann_index._NSW_ADJ_CACHE.pop(key)
-    cold = ann_index._nsw_cell_adjacency(spark, idx)
+    assert not rebuilds, "insert dropped the entry"
+    cold = ann_index._load_nsw_adjacency(spark, idx)
     for cell, dsts in cold.items():
         assert dsts <= widened.get(cell, set()), (
             f"cell {cell}: widened cache missing {dsts - widened.get(cell, set())}"
         )
 
-    # a foreign write to {path}/edges changes the stamp -> next lookup
-    # rebuilds instead of serving the (possibly under-pruning) entry
-    stamped = ann_index._NSW_ADJ_CACHE[key]
-    marker = os.path.join(idx, "edges", "_foreign_touch")
+    # a foreign write to {path}/edges changes the fingerprint -> the
+    # next lookup rebuilds instead of serving the (possibly
+    # under-pruning) entry
+    marker = os.path.join(edges, "_foreign_touch")
     with open(marker, "w") as fh:
         fh.write("x")
     try:
-        ann_index._nsw_cell_adjacency(spark, idx)
-        assert ann_index._NSW_ADJ_CACHE[key][0] != stamped[0]
+        fixture_cache.cached_model(ann_index._NSW_ADJ, edges, rebuild)
+        assert rebuilds == [1]
     finally:
         os.remove(marker)

@@ -1,11 +1,18 @@
-"""operators/fixture_cache: content-fingerprint keying (ADVICE r10 —
-a fixture dir whose contents change in-process must miss, not serve a
-stale build) and cleanup registration. Pure-filesystem tests."""
+"""operators/fixture_cache: content-fingerprint keying (a fixture dir
+whose contents change in-process must miss, not serve a stale build or
+model), cleanup registration, and the one-tier rule for module-level
+caches. Pure-filesystem tests."""
 
+import ast
 import os
 import time
+from pathlib import Path
+
+import pytest
 
 from youtube_etl_project_spark.operators import fixture_cache
+
+PKG = Path(__file__).resolve().parents[1] / "youtube_etl_project_spark"
 
 
 def _write(d, name, body):
@@ -58,4 +65,80 @@ def test_fingerprint_is_content_sensitive(tmp_path):
     assert f1 == fixture_cache.fingerprint(str(d))  # stable
     time.sleep(0.01)
     _write(str(d), "x", "abcd")
-    assert fixture_cache.fingerprint(str(d)) != f1
+    f2 = fixture_cache.fingerprint(str(d))
+    assert f2 != f1
+    # a touch alone (same size, new mtime) also changes it
+    st = os.stat(d / "x")
+    os.utime(d / "x", ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert fixture_cache.fingerprint(str(d)) != f2
+
+
+def test_cached_model_hit_retrain_and_prefixes(tmp_path):
+    src = tmp_path / "fixture"
+    src.mkdir()
+    data = _write(str(src), "a.parquet", "one")
+    trains = []
+
+    def train(tag):
+        def _train():
+            trains.append(tag)
+            return {"tag": tag}
+        return _train
+
+    v1 = fixture_cache.cached_model("m_", str(src), train("m"))
+    assert fixture_cache.cached_model("m_", str(src), train("m")) is v1
+    assert trains == ["m"]  # warm hit, no retrain
+
+    # distinct prefixes never collide on the same dir
+    w1 = fixture_cache.cached_model("w_", str(src), train("w"))
+    assert w1["tag"] == "w" and trains == ["m", "w"]
+    assert fixture_cache.cached_model("m_", str(src), train("m")) is v1
+
+    # a content change (touch) retrains and REPLACES the entry
+    st = os.stat(data)
+    os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    v2 = fixture_cache.cached_model("m_", str(src), train("m"))
+    assert v2 is not v1 and trains == ["m", "w", "m"]
+    assert fixture_cache.cached_model("m_", str(src), train("m")) is v2
+    entries = [k for k in fixture_cache._MODELS if k[1] == str(src)]
+    assert sorted(entries) == [("m_", str(src)), ("w_", str(src))]
+    assert fixture_cache._MODELS[("m_", str(src))] == (
+        fixture_cache.fingerprint(str(src)), v2
+    )
+
+
+def test_cached_model_raising_train_stores_nothing(tmp_path):
+    src = tmp_path / "fixture"
+    src.mkdir()
+    _write(str(src), "a.parquet", "one")
+
+    def boom():
+        raise RuntimeError("train failed")
+
+    with pytest.raises(RuntimeError):
+        fixture_cache.cached_model("r_", str(src), boom)
+    assert ("r_", str(src)) not in fixture_cache._MODELS
+    assert fixture_cache.cached_model("r_", str(src), lambda: 7) == 7
+
+
+def test_no_module_level_cache_dict_outside_fixture_cache():
+    """Every per-fixture cache goes through operators/fixture_cache: no
+    other module of the package may bind a module-level ``*_CACHE``
+    name (scanned from source, not imported)."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        if py == PKG / "operators" / "fixture_cache.py":
+            continue
+        for node in ast.parse(py.read_text(), str(py)).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            offenders += [
+                f"{py.relative_to(PKG)}:{node.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+            ]
+    assert not offenders, offenders

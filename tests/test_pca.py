@@ -70,3 +70,37 @@ def test_projection_deterministic_across_runs(spark, sf_dir):
     a = {(r["vec_id"], r["pos"]): r["pq"] for r in fn(spark, sf_dir).collect()}
     b = {(r["vec_id"], r["pos"]): r["pq"] for r in fn(spark, sf_dir).collect()}
     assert a == b
+
+
+def test_trained_basis_is_cached_per_fixture_content(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """embed_pca_project trains its basis once per fixture CONTENT: a
+    second call reuses it, and touching the fixture's embeddings file
+    (same path, new mtime) retrains, with identical rows."""
+    import os
+    import shutil
+
+    from youtube_etl_project_spark.plans import exact_linalg
+
+    fixture = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, fixture)
+    calls = []
+    real = exact_linalg.pca_subspace_train
+    monkeypatch.setattr(
+        exact_linalg,
+        "pca_subspace_train",
+        lambda *a, **k: calls.append(1) or real(*a, **k),
+    )
+    fn = load_all_plans()["embed_pca_project"].fn
+
+    def rows():
+        return sorted(map(tuple, fn(spark, fixture).collect()))
+
+    first = rows()
+    assert rows() == first and len(calls) == 1  # warm: no retrain
+
+    data = os.path.join(fixture, "embeddings.parquet")
+    st = os.stat(data)
+    os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert rows() == first and len(calls) == 2  # content key changed

@@ -49,13 +49,12 @@ def main() -> None:
     app_id = sc.applicationId
 
     from youtube_etl_project_spark.plans.dedup2 import (
-        _SEM_BOOK_CACHE,
+        _semantic_books,
         _semantic_pairs_blocked,
     )
     from youtube_etl_project_spark.plans.exact_kmeans import (
         centroid_df,
         kmeans_assign_arrow,
-        kmeans_train_exact,
         quantize_vectors,
     )
     from youtube_etl_project_spark.sources import load_table
@@ -66,11 +65,7 @@ def main() -> None:
     emb = load_table(spark, sf_dir, "embeddings")
     k = max(16, int(emb.count() ** 0.5))
     nn_emb = emb.filter(F.col("embedding").isNotNull())
-    books = _SEM_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        qe_t = quantize_vectors(nn_emb, "vec_id", "embedding")
-        books = kmeans_train_exact(qe_t, k=k, iters=2)
-        _SEM_BOOK_CACHE[sf_dir] = books
+    books = _semantic_books(sf_dir, nn_emb, k)
     assign = kmeans_assign_arrow(nn_emb, "vec_id", "embedding", books)
 
     # --- form A: the pre-round-12 flat (cell, pos) self-join pair pass

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from functools import lru_cache
+from functools import cache, lru_cache
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -166,13 +166,11 @@ def load_merges(path: str) -> list[tuple[bytes, bytes]]:
 # which is what makes the golden-count oracle of text_token_count_bpe
 # sf-independent.
 MERGES_V1 = __file__.rsplit("/", 1)[0] + "/bpe_merges_v1.txt"
-_ARTIFACT_CACHE: dict[str, list] = {}
 
 
+@cache
 def released_merges(path: str = MERGES_V1) -> list[tuple[bytes, bytes]]:
-    if path not in _ARTIFACT_CACHE:
-        _ARTIFACT_CACHE[path] = load_merges(path)
-    return _ARTIFACT_CACHE[path]
+    return load_merges(path)
 
 
 def fit_corpus_bpe(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.similarity import (
     cosine,
     kmeans_centroids,
@@ -400,102 +401,39 @@ def ivf_query(
 # lookup).
 
 
-# (application id, index path) -> (edges-dir stamp, {cell ->
-# set(dst_cell)}): which cells a beam step out of `cell` can reach. Lets
-# nsw_query prune the components scan of its fused per-round action
-# BEFORE the action runs (the exact frontier cells are only known after
-# the edges scan). K²-bounded model state.
-#
-# VALIDITY CONTRACT (round 12, ADVICE r11): every lookup revalidates
-# against a cheap metadata stamp of {path}/edges (sorted relpath + size
-# + mtime_ns — no data read), so ANY writer to the edge list — known or
-# not — invalidates the cache loudly instead of silently under-pruning
-# a frontier (a missing cell->dst_cell pair would DROP that frontier's
-# distance rows with no error; extra pairs merely widen a pruning
-# filter and are always safe). nsw_insert, which knows exactly which
-# adjacencies its writes can add, WIDENS the cached entry with those
-# pairs and re-stamps instead of dropping it — the previous
-# drop-on-insert contract forced a full edges scan + distinct + collect
-# into every micro-batch's embedded search (ADVICE r11 #3).
-_NSW_ADJ_CACHE: "dict[tuple, tuple[str, dict]]" = {}
-
-
-def _edges_stamp(path: str) -> str:
-    """Metadata fingerprint of the persisted edge list (dir walk only)."""
-    import hashlib
-    import os
-
-    h = hashlib.sha256()
-    root_dir = f"{path}/edges"
-    for root, dirs, files in os.walk(root_dir):
-        dirs.sort()
-        for name in sorted(files):
-            p = os.path.join(root, name)
-            try:
-                st = os.stat(p)
-            except OSError:
-                h.update(f"{p}:gone;".encode())
-                continue
-            rel = os.path.relpath(p, root_dir)
-            h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:16]
-
-
-# (application id, index path) -> (coarse-dir stamp, (pos tuple, cell
-# tuple, {(cell, pos) -> cq})): the persisted coarse codebook as a
-# driver-side model dict. K·dim-bounded model state; nsw_build writes
-# coarse exactly once per index path and nsw_insert never touches it,
-# but every lookup revalidates against the same cheap metadata stamp
-# the adjacency cache uses, so any unexpected writer invalidates loudly.
-_NSW_COARSE_CACHE: "dict[tuple, tuple[str, tuple]]" = {}
-
-
-def _dir_stamp(root_dir: str) -> str:
-    """Metadata fingerprint of a persisted parquet dir (walk only)."""
-    import hashlib
-    import os
-
-    h = hashlib.sha256()
-    for root, dirs, files in os.walk(root_dir):
-        dirs.sort()
-        for name in sorted(files):
-            p = os.path.join(root, name)
-            try:
-                st = os.stat(p)
-            except OSError:
-                h.update(f"{p}:gone;".encode())
-                continue
-            rel = os.path.relpath(p, root_dir)
-            h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:16]
+# Driver-side NSW models, both held in fixture_cache.cached_model and so
+# revalidated on every lookup against a metadata fingerprint of the dir
+# they are read from:
+# - the coarse codebook (K·dim) from {path}/coarse;
+# - the cell adjacency {cell -> set(dst_cell)} (K²) from {path}/edges:
+#   which cells a beam step out of `cell` can reach. It lets nsw_query
+#   prune the components scan of its fused per-round action BEFORE the
+#   action runs. Any writer to the edge list invalidates it, because a
+#   missing pair would silently DROP frontier distance rows; extra pairs
+#   only widen a pruning filter and are always safe. nsw_insert knows
+#   which pairs its writes add, so it widens the entry instead of
+#   forcing a full edges scan + distinct + collect per micro-batch.
+_NSW_ADJ = "nsw_adj"
 
 
 def _nsw_coarse_model(spark: SparkSession, path: str):
-    """The persisted coarse codebook collected once per (app, path):
+    """The persisted coarse codebook as a driver-side model:
     (sorted pos tuple, sorted cell tuple, {(cell, pos) -> cq})."""
-    key = (spark.sparkContext.applicationId, path)
-    stamp = _dir_stamp(f"{path}/coarse")
-    hit = _NSW_COARSE_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    books: "dict[tuple, int]" = {}
-    for r in spark.read.parquet(f"{path}/coarse").collect():
-        books[(r.cell, r.pos)] = r.cq
-    model = (
-        tuple(sorted({p for _, p in books})),
-        tuple(sorted({c for c, _ in books})),
-        books,
-    )
-    _NSW_COARSE_CACHE[key] = (stamp, model)
-    return model
+
+    def train():
+        books: "dict[tuple, int]" = {}
+        for r in spark.read.parquet(f"{path}/coarse").collect():
+            books[(r.cell, r.pos)] = r.cq
+        return (
+            tuple(sorted({p for _, p in books})),
+            tuple(sorted({c for c, _ in books})),
+            books,
+        )
+
+    return fixture_cache.cached_model("nsw_coarse", f"{path}/coarse", train)
 
 
-def _nsw_cell_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
-    key = (spark.sparkContext.applicationId, path)
-    stamp = _edges_stamp(path)
-    hit = _NSW_ADJ_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
+def _load_nsw_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
     adj: "dict[int, set]" = {}
     for r in (
         spark.read.parquet(f"{path}/edges")
@@ -504,31 +442,26 @@ def _nsw_cell_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
         .collect()
     ):
         adj.setdefault(r.cell, set()).add(r.dst_cell)
-    _NSW_ADJ_CACHE[key] = (stamp, adj)
     return adj
 
 
-def _invalidate_nsw_adjacency(spark: SparkSession, path: str) -> None:
-    _NSW_ADJ_CACHE.pop((spark.sparkContext.applicationId, path), None)
+def _nsw_cell_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
+    return fixture_cache.cached_model(
+        _NSW_ADJ, f"{path}/edges", lambda: _load_nsw_adjacency(spark, path)
+    )
 
 
 def _widen_nsw_adjacency(
-    spark: SparkSession, path: str, pairs: "list[tuple[int, int]]"
+    path: str, adj: "dict[int, set]", pairs: "list[tuple[int, int]]"
 ) -> None:
-    """Fold an insert's known (cell, dst_cell) additions into the cached
-    adjacency and re-stamp it — widening is always safe (see the cache
-    contract above; the re-cap in nsw_insert can only REMOVE edges,
-    which leaves the cache a superset — correct, merely under-pruned).
-    A miss (no cached entry, or a stamp from a writer we did not see)
-    stays a miss: the next lookup rebuilds from the edge list."""
-    key = (spark.sparkContext.applicationId, path)
-    hit = _NSW_ADJ_CACHE.get(key)
-    if hit is None:
-        return
-    adj = hit[1]
+    """Add an insert's known (cell, dst_cell) pairs to ``adj``, the
+    adjacency it read before writing, and store the result under the
+    edge list's post-write fingerprint. Widening is always safe: the
+    re-cap in nsw_insert can only REMOVE edges, leaving a superset
+    (correct, merely under-pruned)."""
     for cell, dst_cell in pairs:
         adj.setdefault(cell, set()).add(dst_cell)
-    _NSW_ADJ_CACHE[key] = (_edges_stamp(path), adj)
+    fixture_cache.cached_model(_NSW_ADJ, f"{path}/edges", lambda: adj)
 
 
 def nsw_build(
@@ -561,7 +494,6 @@ def nsw_build(
     qe.join(assign, "id").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{path}/components")
-    _invalidate_nsw_adjacency(cb.sparkSession, path)
 
 
 def nsw_query(
@@ -590,7 +522,7 @@ def nsw_query(
     pinned action whose plan carries BOTH pruned scans: the edges scan
     filtered to the beam's cells, and the components scan filtered to
     the cell-adjacency superset of those cells (adj[c] = distinct
-    dst_cell of c's edges — memoized per index path, so the superset
+    dst_cell of c's edges — cached per index path, so the superset
     is known BEFORE the action runs; superset cells only widen the
     pruning filter, the (id, pos) join drops their rows). Visited/beam
     state merges on the DRIVER between rounds — bounded by
@@ -626,15 +558,12 @@ def nsw_query(
         edges = edges.join(
             ex.withColumnRenamed("id", "dst"), "dst", "left_anti"
         )
-    # Round 12: the query batch is collected ONCE (batch-sized by
-    # contract) and the entry-cell ranking runs driver-side against the
-    # memoized coarse codebook (model-sized — the books-as-dicts tier).
-    # The old form spent a Spark job ranking cells through a broadcast
-    # codebook join AND re-derived the quantized query frame from
-    # parquet inside every round's fused action (scan + quantize +
-    # broadcast exchange per action); qa is now a 640-row literal. The
-    # arithmetic is the same exact integers — Python ints, Σ(q-cq)² with
-    # the (dist, cell) sort — so the trace is bit-identical.
+    # The query batch is collected ONCE (batch-sized by contract) and
+    # the entry-cell ranking runs driver-side against the cached coarse
+    # codebook (model-sized), so no Spark job ranks cells and no round
+    # re-derives the quantized query frame; qa is a batch-sized literal.
+    # The arithmetic is the same exact integers — Python ints, Σ(q-cq)²
+    # with the (dist, cell) sort — so the trace is bit-identical.
     qrows = queries_qe.collect()
     by_q: "dict[int, dict[int, int]]" = {}
     for r in qrows:
@@ -844,6 +773,7 @@ def nsw_insert(
         include_cell=True, reliable=False,
         exclude=qe_new.select("id"),  # pre-batch graph view on replay
     )
+    adj = _nsw_cell_adjacency(spark, path)  # a hit: nsw_query just read it
     new_edges = pin(  # referenced by out-append, reverse rows, cell list
         res.select(
             F.col("query_id").alias("src"),
@@ -884,15 +814,11 @@ def nsw_insert(
     out_new.write.mode("append").partitionBy("cell").parquet(
         f"{path}/edges"
     )
-    # ADVICE r11 #3: inserts know exactly which (cell, dst_cell)
-    # adjacencies their writes can add — widen the cached adjacency with
-    # them instead of invalidating, so the next search's pruning set is
-    # known without a full edges scan + distinct + collect per batch.
     out_pairs = [
         (r.cell, r.dst_cell)
         for r in out_new.select("cell", "dst_cell").distinct().collect()
     ]
-    _widen_nsw_adjacency(spark, path, out_pairs)
+    _widen_nsw_adjacency(path, adj, out_pairs)
     # 4) reverse edges into the touched neighbor cells: read the touched
     # partitions (AFTER the out-edge append, so same-cell new edges
     # survive the overwrite), merge, re-cap, dynamic-overwrite
@@ -930,14 +856,12 @@ def nsw_insert(
     merged.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("cell").parquet(f"{path}/edges")
-    # reverse edges add (neighbor cell -> new vector's cell) pairs; the
-    # re-cap can only REMOVE edges, which leaves the widened cache a
-    # safe superset (see _widen_nsw_adjacency)
+    # reverse edges add (neighbor cell -> new vector's cell) pairs
     rev_pairs = [
         (r.cell, r.dst_cell)
         for r in rev.select("cell", "dst_cell").distinct().collect()
     ]
-    _widen_nsw_adjacency(spark, path, rev_pairs)
+    _widen_nsw_adjacency(path, adj, rev_pairs)
 
 
 def nsw_cell_stats(spark: SparkSession, path: str) -> DataFrame:

@@ -13,14 +13,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.registry import cnt, register
 from youtube_etl_project_spark.sources import load_table
 
 _K = 16  # span width in tokens
 
-# dedup_semantic's trained √n-cell quantizer (plain dicts) keyed by
-# fixture dir — see the memo note inside dedup_semantic
-_SEM_BOOK_CACHE: "dict[str, dict]" = {}
+
+def _semantic_books(sf_dir: str, nn_emb: DataFrame, k: int) -> dict:
+    """dedup_semantic's trained √n-cell quantizer for the fixture,
+    trained on a miss from its non-null embeddings ``nn_emb``. The
+    quantized frame is only the trainer's input, so it is built (and
+    pinned for the Lloyd rounds) inside ``train``."""
+    from youtube_etl_project_spark.operators.checkpointing import pin
+    from youtube_etl_project_spark.plans.exact_kmeans import (
+        kmeans_train_exact,
+        quantize_vectors,
+    )
+
+    def train() -> dict:
+        qe = pin(quantize_vectors(nn_emb, "vec_id", "embedding"))
+        return kmeans_train_exact(qe, k=k, iters=2)
+
+    return fixture_cache.cached_model("semantic_books", sf_dir, train)
 
 
 def _semantic_pairs_blocked(
@@ -289,26 +304,12 @@ def _dedup_semantic_oracle() -> str:
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import graph
     from youtube_etl_project_spark.operators.checkpointing import pin
-    from youtube_etl_project_spark.plans.exact_kmeans import (
-        kmeans_assign_arrow,
-        kmeans_train_exact,
-        quantize_vectors,
-    )
+    from youtube_etl_project_spark.plans.exact_kmeans import kmeans_assign_arrow
 
     emb = load_table(spark, sf_dir, "embeddings")
     k = max(16, int(emb.count() ** 0.5))
     nn_emb = emb.filter(F.col("embedding").isNotNull())
-    # trained √n-cell quantizer memoized per fixture dir (round 10, the
-    # _IVF_BOOK_CACHE precedent): model-sized plain dict, deterministic
-    # in the fixture; the oracle twin still trains in SQL so the hash
-    # gate keeps checking the trainer. Round 12: the quantized frame is
-    # only the trainer's input now, so it is built (and pinned for the
-    # Lloyd rounds) inside the cold-cache branch
-    books = _SEM_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        qe = pin(quantize_vectors(nn_emb, "vec_id", "embedding"))
-        books = kmeans_train_exact(qe, k=k, iters=2)
-        _SEM_BOOK_CACHE[sf_dir] = books
+    books = _semantic_books(sf_dir, nn_emb, k)
     # round 12: corpus-wide assignment as ONE Arrow int64 matmul pass
     # (kmeans_assign_arrow) — the exploded kmeans_assign_exact form
     # fanned (id, pos) rows out k≈√n× through the centroid join

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.registry import fixture_path, register
 from youtube_etl_project_spark.sources import load_table
@@ -189,13 +190,12 @@ def embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qe = pin(_scatter_qe(spark, sf_dir))
-    cached = _PCA_V_CACHE.get(sf_dir)
-    if cached is None:
+
+    def train():
         n, Sx, Cq = _collect_scatter(qe)
-        V = pca_subspace_train(Cq, 16)
-        cached = (n, Sx, V)
-        _PCA_V_CACHE[sf_dir] = cached
-    n, Sx, V = cached
+        return n, Sx, pca_subspace_train(Cq, 16)
+
+    n, Sx, V = fixture_cache.cached_model("pca_basis", sf_dir, train)
     sxdf = spark.createDataFrame(
         [(j, int(v)) for j, v in enumerate(Sx)], "j int, sxv long"
     )
@@ -296,16 +296,9 @@ def embed_pca_project_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-8 exact-grid trained-model machinery (plans/exact_linalg) ------
-# Every model below is deterministic in the data alone (integer grids,
-# tdiv arithmetic), so it is memoized per fixture dir like _PQ_BOOK_CACHE /
-# _IVF_BOOK_CACHE — gate + bench + determinism passes share one training
-# run per query family.
-_RIDGE_W_CACHE: dict[str, list[int]] = {}
-_SCORER_W_CACHE: dict[str, dict[str, list[int]]] = {}
-_MAHA_X_CACHE: dict[str, tuple[int, list[int], list[list[int]]]] = {}
-_PCA_V_CACHE: dict[str, tuple[int, list[int], list[list[int]]]] = {}
-
+# --- exact-grid trained-model machinery (plans/exact_linalg) -------------
+# Every model here is deterministic in the data alone (integer grids,
+# tdiv arithmetic) and goes through fixture_cache.cached_model.
 _RIDGE_D = 65  # 64 embedding dims + intercept
 
 
@@ -487,11 +480,10 @@ def embed_ridge_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qe, yy = _ridge_qe_yy(spark, sf_dir)
     qe = pin(qe)  # Gram pass + scoring join both read it
-    wq = _RIDGE_W_CACHE.get(sf_dir)
-    if wq is None:
-        G, b, n = _collect_ridge_stats(qe, yy, _RIDGE_D)
-        wq = ridge_gd_train(G, b, n)
-        _RIDGE_W_CACHE[sf_dir] = wq
+    wq = fixture_cache.cached_model(
+        "ridge_w", sf_dir,
+        lambda: ridge_gd_train(*_collect_ridge_stats(qe, yy, _RIDGE_D)),
+    )
     wdf = spark.createDataFrame(
         [(j, int(w)) for j, w in enumerate(wq)], "j int, wq long"
     )
@@ -617,8 +609,8 @@ def source_quality_scorer_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("rid"),
         "yq",
     )
-    wmap = _SCORER_W_CACHE.get(sf_dir)
-    if wmap is None:
+
+    def train() -> dict[str, list[int]]:
         a, bb = qe.alias("a"), qe.alias("b")
         g_rows = (
             a.join(bb, ["grp", "rid"])
@@ -646,10 +638,11 @@ def source_quality_scorer_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats[r["grp"]][0][r["i"]][r["jj"]] = int(r["v"])
         for r in b_rows:
             stats[r["grp"]][1][r["j"]] = int(r["v"])
-        wmap = {
+        return {
             grp: ridge_gd_train(G, b, n) for grp, (G, b, n) in stats.items()
         }
-        _SCORER_W_CACHE[sf_dir] = wmap
+
+    wmap = fixture_cache.cached_model("scorer_w", sf_dir, train)
     wdf = spark.createDataFrame(
         [(grp, j, int(w)) for grp, ws in wmap.items()
          for j, w in enumerate(ws)],
@@ -869,8 +862,8 @@ def embed_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qe = pin(_scatter_qe(spark, sf_dir))
-    cached = _MAHA_X_CACHE.get(sf_dir)
-    if cached is None:
+
+    def train():
         n, Sx, Cq = _collect_scatter(qe)
         tr = sum(Cq[i][i] for i in range(64))
         epsq = max(1, tdiv(tr, 64 * 100))
@@ -878,10 +871,9 @@ def embed_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             [Cq[i][j] + (epsq if i == j else 0) for j in range(64)]
             for i in range(64)
         ]
-        X = ns_inverse_train(Aq, n * n * _EL_S1 * _EL_S1)
-        cached = (n, Sx, X)
-        _MAHA_X_CACHE[sf_dir] = cached
-    n, Sx, X = cached
+        return n, Sx, ns_inverse_train(Aq, n * n * _EL_S1 * _EL_S1)
+
+    n, Sx, X = fixture_cache.cached_model("mahalanobis_x", sf_dir, train)
     sxdf = spark.createDataFrame(
         [(j, int(v)) for j, v in enumerate(Sx)], "j int, sxv long"
     )

@@ -993,11 +993,10 @@ def embed_nsw_alpha_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _beam_search(edges3, qe, assign)
 
 
-# Built persisted NSW graph indexes — the _IVFPQ_INDEX_CACHE pattern:
-# the registered query below is the "probe many" half of
-# build-once/probe-many, so repeated gate/bench runs probe the SAME
-# materialized graph instead of rebuilding per call. Cache validity +
-# cleanup via operators.fixture_cache (ADVICE r10).
+# Built persisted NSW graph indexes: the registered query below is the
+# "probe many" half of build-once/probe-many, so repeated gate/bench runs
+# probe the SAME materialized graph instead of rebuilding per call. Cache
+# validity + cleanup via operators.fixture_cache.
 
 
 def _nsw_index_path(spark: SparkSession, sf_dir: str) -> str:

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators import quantization as pq
 from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.registry import register
@@ -120,12 +121,6 @@ _PQ_ADC_CTES = f""", lut AS (
         )"""
 
 
-# Training is deterministic in the data alone (exact integer arithmetic,
-# no session state), so the model is safely memoized per fixture dir —
-# the three converted queries share one training run per gate/bench pass.
-_PQ_BOOK_CACHE: dict[str, dict[tuple[int, int, int], int]] = {}
-
-
 def _pq_exact_parts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -134,12 +129,12 @@ def _pq_exact_parts(
     trained book. dists_final feeds both enc and the ADC LUT, so it is
     pinned (CLAUDE.md: multi-referenced derived frames)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = pq.pq_train_exact(
+    # the three converted queries share one training run per fixture
+    books = fixture_cache.cached_model(
+        "pq_book", sf_dir, lambda: pq.pq_train_exact(
             emb, "vec_id", "embedding", _M, _DIM, _K, _ITERS, _QGRID
         )
-        _PQ_BOOK_CACHE[sf_dir] = books
+    )
     cb = spark.createDataFrame(
         [(s, c, p, q) for (s, c, p), q in books.items()],
         "sub long, cell int, pos int, cq long",

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.operators import similarity
+from youtube_etl_project_spark.operators import fixture_cache, similarity
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -315,36 +315,33 @@ def _embed_ivf_ann_oracle() -> str:
     """
 
 
-# Exact-grid IVF training is deterministic in the data alone (seeds = the
-# k lowest ids, int64 arithmetic, no session state), so the trained
-# codebook is safely memoized per fixture dir — embed_ivf_ann and
-# ivf_cell_report train the IDENTICAL model (same data, same k, same
-# iters) and previously each ran the driver-looped collect-per-round
-# trainer from scratch (ADVICE r7; the PQ family's _PQ_BOOK_CACHE is the
-# model). Value: (k_cells, n_probe, books).
-_IVF_BOOK_CACHE: dict[str, tuple[int, int, dict[tuple[int, int], int]]] = {}
+def _ivf_model(spark: SparkSession, sf_dir: str, qe: DataFrame):
+    """The fixture's exact-grid IVF coarse model (k_cells, n_probe,
+    books), trained from its (id, pos, q) grid rows ``qe`` on a miss.
+    embed_ivf_ann, ivf_cell_report and the IVF-PQ family share it."""
+    from youtube_etl_project_spark.plans.exact_kmeans import (
+        kmeans_train_exact,
+    )
+
+    def train():
+        n = load_table(spark, sf_dir, "embeddings").count()
+        k_cells, n_probe = similarity.auto_ivf_geometry(n)
+        return k_cells, n_probe, kmeans_train_exact(qe, k=k_cells, iters=2)
+
+    return fixture_cache.cached_model("ivf_book", sf_dir, train)
 
 
 def _ivf_trained_parts(spark: SparkSession, sf_dir: str):
     """Shared trained-IVF inputs: pinned (id, pos, q) grid rows, the
-    memoized exact-grid codebook, and the auto (K, n_probe) geometry."""
+    cached exact-grid codebook, and the auto (K, n_probe) geometry."""
     from youtube_etl_project_spark.operators.checkpointing import pin
-    from youtube_etl_project_spark.plans.exact_kmeans import (
-        kmeans_train_exact,
-        quantize_vectors,
-    )
+    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
     qe = pin(quantize_vectors(
         emb.filter(F.col("embedding").isNotNull()), "vec_id", "embedding"
     ))
-    cached = _IVF_BOOK_CACHE.get(sf_dir)
-    if cached is None:
-        k_cells, n_probe = similarity.auto_ivf_geometry(emb.count())
-        books = kmeans_train_exact(qe, k=k_cells, iters=2)
-        cached = (k_cells, n_probe, books)
-        _IVF_BOOK_CACHE[sf_dir] = cached
-    k_cells, n_probe, books = cached
+    k_cells, n_probe, books = _ivf_model(spark, sf_dir, qe)
     return qe, books, k_cells, n_probe
 
 

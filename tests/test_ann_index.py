@@ -235,7 +235,7 @@ def test_streaming_nsw_ingest_bootstrap_insert_parity(spark, sf_dir, tmp_path):
     import shutil
 
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
     from youtube_etl_project_spark.streaming.pipeline import (
         streaming_nsw_ingest,
     )
@@ -264,7 +264,9 @@ def test_streaming_nsw_ingest_bootstrap_insert_parity(spark, sf_dir, tmp_path):
     e1 = spark.read.parquet(f"{idx}/edges")
 
     # (1) inserted out-edges == beam-search top-m on the frozen snapshot
-    qe_b = quantize_vectors(half_b, "vec_id", "embedding")
+    qe_b = grid_rows(
+        half_b, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    )
     want_rows = ann_index.nsw_query(qe_b, pre, topk=8).collect()
     want = {(r.query_id, r.neighbor_id, r.dist_q) for r in want_rows}
     got = {
@@ -354,7 +356,7 @@ def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
 
     # partial replay: simulate a crash that landed ONLY the components
     # append of a second batch, then replay the whole batch
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     batch2 = emb.filter(
         (F.col("vec_id") % 2 == 1)
@@ -368,7 +370,9 @@ def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
     idx3 = str(tmp_path / "nsw3")
     _nsw_index_from(spark, base, idx3)
     # crash-landed components only (what step 2 of the insert writes)
-    qe_b = quantize_vectors(batch2, "vec_id", "embedding")
+    qe_b = grid_rows(
+        batch2, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    )
     cb = spark.read.parquet(f"{idx3}/coarse")
     qq = qe_b.withColumnRenamed("id", "query_id")
     from pyspark.sql import Window
@@ -409,9 +413,13 @@ def test_nsw_insert_empty_cell_attaches_via_second_cell(
     # drain one cell: pick the cell of the first held-out vector, remove
     # its partitions so that vector's nearest cell is guaranteed empty
     held = emb.filter(F.col("vec_id") % 2 == 1).limit(1)
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
-    qe_h = quantize_vectors(held, "vec_id", "embedding")
+    qe_h = grid_rows(
+
+        held, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+
+    )
     probe = ann_index.nsw_query(qe_h, idx, topk=1, include_cell=True)
     # cell of the held vector under the persisted codebook = entry cell
     cb = spark.read.parquet(f"{idx}/coarse")
@@ -461,7 +469,7 @@ def test_nsw_compact_reduces_files_preserves_results(
     partitions; nsw_compact rewrites ONLY fragmented cells down to one
     file each and every nsw_query trace is bit-identical before/after."""
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     emb = _emb(spark, sf_dir)
     base = emb.filter(F.col("vec_id") % 3 == 0)
@@ -480,8 +488,9 @@ def test_nsw_compact_reduces_files_preserves_results(
         n > 1 for ds in before.values() for n in ds.values()
     ), before
 
-    qs = quantize_vectors(
-        emb.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding"
+    qs = grid_rows(
+        emb.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding",
+        GRID, id_out="id", pos="pos"
     )
     want = sorted(map(tuple, ann_index.nsw_query(qs, idx).collect()))
     health_want = sorted(

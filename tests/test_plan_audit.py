@@ -30,12 +30,9 @@ ARROW_ALLOWED = {
     "embed_ivf_ann",
     "embed_ivf_index_ann",  # persisted-index probe: same numpy cell-assign
     "dedup_embed_cosine_lsh",  # hyperplane-LSH bucket keys: numpy matmul
-    # round 12: the md5-plane family's bucket keys moved to the SAME
-    # Arrow int64-matmul kernel shape as the sha256 twin above — the
-    # old explode + sign-join + two-aggregate-exchange chain computed
-    # twice per self-join (exchange reuse defeated by the aggregates)
-    # and measured 2x the whole row's floor; exact integers, oracle
-    # hashes unchanged (see _md5_bucket_keys_folded)
+    # (_table_keys_exact_vectorized → grid.snap_np + grid.plane_keys)
+    # md5-plane bucket keys: the same map-side Arrow int64 matmul
+    # (_md5_bucket_keys_folded → grid.snap_np + grid.plane_keys)
     "dedup_embed_cosine_lsh_md5",
     "embed_lsh_ann_md5",
     "embed_lsh_multiprobe_md5",
@@ -43,6 +40,7 @@ ARROW_ALLOWED = {
     "dedup_embed_cosine",  # blocked matmul prefilter + exact-fold verify
     "dedup_hash_embed_cosine",  # same (cosine_pairs_blocked)
     "dedup_ensemble_matrix",  # composes the blocked-matmul cosine pairs
+    # the three blocked kernels share _block_cosines' chunked matmul
     "embed_knn_label_accuracy",  # nn_shortlist_blocked + exact re-rank
     "embed_hard_negatives",  # class_nn_shortlist_blocked + exact re-rank
     "multimodal_decode",
@@ -53,7 +51,7 @@ ARROW_ALLOWED = {
     "multimodal_ahash_near_dup",  # same decode+aHash kernel, then banding
     "multimodal_video_frame_near_dup",  # same aHash kernel, bounded to
     # DISTINCT frame keys (dedupe-before-decode) + synth payload udf
-    "text_topic_clusters",  # kmeans assignment: numpy matmul per batch
+    "text_topic_clusters",  # kmeans_assign_arrow: grid.sq_dists per batch
     "multimodal_frame_sample",
     "text_token_count_bpe",
     "pack_sequences_bpe",
@@ -64,16 +62,15 @@ ARROW_ALLOWED = {
     # Python in the plan at all; see plans/exact_linalg.py)
     "text_topic_assign_v1",  # frozen-centroid assignment: numpy matmul
     "embed_nsw_ann",  # graph build: per-cell exact-int64 k-NN matmul
-    # (_knn_parts_blocked — inside the edges pin, so it surfaces via the
-    # pre-pin gates; the search trace itself is pure codegen)
+    # (_knn_parts_blocked → grid.sq_dists — inside the edges pin, so it
+    # surfaces via the pre-pin gates; the search trace is pure codegen)
     "embed_nsw_nnd_ann",  # same build kernel under the NN-descent round
     # (round 7: embed_pq_rmse / adc_topk / rerank_topk left this list —
     # the exact-grid trainer's assignment is a broadcast codebook join in
     # whole-stage codegen, no Python in the plan at all)
-    # round 12: the SemDeDup within-cell τ test runs as the per-cell
-    # Arrow int64 matmul kernel (_semantic_pairs_blocked — the
-    # _knn_parts_blocked precedent) instead of a Σ|cell|²·dim-row flat
-    # (cell, pos) self-join; exact integers, oracle hashes unchanged
+    # the SemDeDup within-cell τ test runs as the per-cell Arrow int64
+    # matmul kernel (_semantic_pairs_blocked, grid.snap_np at 1e3);
+    # exact integers, oracle hashes unchanged
     "dedup_semantic",
     "dedup_semantic_v1",
     # round 12: the greedy MMR trace over the pinned shortlist runs as

@@ -21,21 +21,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from youtube_etl_project_spark.operators.grid import (  # noqa: E402
+    GRID,
+    snap_np,
+    sq_dists,
+)
+
 N_QUERIES = 50
 TOPK = 5
 
 
 def exact_ground_truth(emb_rows, n_queries: int) -> set:
     ids = np.array([r.vec_id for r in emb_rows])
-    Q = np.floor(
-        np.stack([np.array(r.embedding, dtype=np.float64) for r in emb_rows])
-        * 1e6
-        + 0.5
-    ).astype(np.int64)
-    na = (Q * Q).sum(axis=1)
+    Q = snap_np([r.embedding for r in emb_rows], GRID)
     exact = set()
     for qi in np.where(ids < n_queries)[0]:
-        d = na + na[qi] - 2 * (Q @ Q[qi])
+        d = sq_dists(Q[qi:qi + 1], Q)[0]
         d[qi] = 2**62  # exclude self, like the search trace
         sel = np.lexsort((ids, d))[:TOPK]
         exact.update((int(ids[qi]), int(ids[j])) for j in sel)

@@ -1,20 +1,18 @@
-"""Round-12 §5 evidence probe: shuffle bytes of dedup_semantic's
-within-cell pair pass, flat (cell, pos) self-join form vs the per-cell
-Arrow kernel form (guide §5 — the 100 TB story needs a bytes number,
-not just a plan shape).
+"""Shuffle-bytes probe of dedup_semantic's within-cell pair pass: the
+flat (cell, pos) self-join form vs the per-cell Arrow kernel form.
 
-Runs each form under a job-description label with the Spark event log
-enabled, then parses the event log for per-stage shuffle read/write
-bytes and prints a summary. Bytes are contention-immune, so this probe
-needs no quiet host. Usage:
+Runs each form under its own job group with the Spark event log
+enabled, then sums per-group shuffle read/write bytes and stage counts
+with ``perfbench.eventlog.parse`` and prints a summary. Bytes do not
+depend on host load, so this probe needs no quiet host. Usage:
 
     python tools/shuffle_probe.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -24,7 +22,8 @@ EVDIR = "/tmp/spark-events-probe"
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    os.makedirs(EVDIR, exist_ok=True)
+    shutil.rmtree(EVDIR, ignore_errors=True)  # parse() reads every log
+    os.makedirs(EVDIR)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import SparkSession
@@ -46,16 +45,16 @@ def main() -> None:
         .getOrCreate()
     )
     sc = spark.sparkContext
-    app_id = sc.applicationId
 
+    from perfbench import eventlog
+    from youtube_etl_project_spark.operators.grid import grid_rows
     from youtube_etl_project_spark.plans.dedup2 import (
+        _TAU_GRID,
         _semantic_books,
         _semantic_pairs_blocked,
     )
     from youtube_etl_project_spark.plans.exact_kmeans import (
-        centroid_df,
         kmeans_assign_arrow,
-        quantize_vectors,
     )
     from youtube_etl_project_spark.sources import load_table
 
@@ -68,10 +67,12 @@ def main() -> None:
     books = _semantic_books(sf_dir, nn_emb, k)
     assign = kmeans_assign_arrow(nn_emb, "vec_id", "embedding", books)
 
-    # --- form A: the pre-round-12 flat (cell, pos) self-join pair pass
+    # --- form A: the flat (cell, pos) self-join pair pass
     sc.setJobDescription("probe:flat-pair-pass")
     sc.setJobGroup("flat", "flat pair pass")
-    qe = quantize_vectors(nn_emb, "vec_id", "embedding", grid=1000)
+    qe = grid_rows(
+        nn_emb, "vec_id", "embedding", _TAU_GRID, id_out="id", pos="pos"
+    )
     feats = assign.withColumnRenamed("id", "fid").join(
         qe, F.col("fid") == F.col("id")
     ).select("cell", "id", "pos", "q")
@@ -105,7 +106,7 @@ def main() -> None:
     )
     noop(flat_pairs)
 
-    # --- form B: the round-12 per-cell Arrow kernel
+    # --- form B: the per-cell Arrow kernel
     sc.setJobDescription("probe:kernel-pair-pass")
     sc.setJobGroup("kernel", "kernel pair pass")
     members = assign.join(
@@ -113,58 +114,20 @@ def main() -> None:
     ).select("cell", "id", "embedding")
     noop(
         _semantic_pairs_blocked(
-            members, grid=1000.0, id_a="id_a", id_b="id_b"
+            members, grid=_TAU_GRID, id_a="id_a", id_b="id_b"
         ).select("id_a", "id_b")
     )
 
     sc.setJobGroup("", "")
     spark.stop()
 
-    # --- parse the event log: stage -> shuffle bytes, grouped by the
-    # job group that submitted the stage
-    log_path = os.path.join(EVDIR, app_id)
-    if not os.path.exists(log_path):  # Spark 4 rolling dir layout
-        cands = [p for p in os.listdir(EVDIR) if app_id in p]
-        log_path = os.path.join(EVDIR, sorted(cands)[-1])
-
-    def _lines():
-        if os.path.isdir(log_path):
-            for name in sorted(os.listdir(log_path)):
-                if name.startswith("events"):
-                    with open(os.path.join(log_path, name)) as f:
-                        yield from f
-        else:
-            with open(log_path) as f:
-                yield from f
-
-    stage_group: dict[int, str] = {}
-    totals: dict[str, dict[str, int]] = {}
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            if ev.get("Event") == "SparkListenerJobStart":
-                grp = ev.get("Properties", {}).get("spark.jobGroup.id", "")
-                for sid in ev.get("Stage IDs", []):
-                    stage_group[sid] = grp
-            elif ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                grp = stage_group.get(si["Stage ID"], "")
-                acc = totals.setdefault(
-                    grp, {"write": 0, "read": 0, "stages": 0}
-                )
-                for a in si.get("Accumulables", []):
-                    if a.get("Name") == "internal.metrics.shuffle.write.bytesWritten":
-                        acc["write"] += int(a.get("Value", 0))
-                    elif a.get("Name") == "internal.metrics.shuffle.read.remoteBytesRead":
-                        acc["read"] += int(a.get("Value", 0))
-                    elif a.get("Name") == "internal.metrics.shuffle.read.localBytesRead":
-                        acc["read"] += int(a.get("Value", 0))
-                acc["stages"] += 1
+    totals = eventlog.parse(EVDIR)
     for grp in ("flat", "kernel"):
-        t = totals.get(grp, {"write": 0, "read": 0, "stages": 0})
+        t = totals.get(grp, dict.fromkeys(eventlog.ENGINE_KEYS, 0))
         print(
-            f"{grp}: shuffle_write={t['write']:,} B "
-            f"shuffle_read={t['read']:,} B over {t['stages']} stages"
+            f"{grp}: shuffle_write={int(t['shuffle_write_bytes']):,} B "
+            f"shuffle_read={int(t['shuffle_read_bytes']):,} B over "
+            f"{int(t['stages'])} stages"
         )
 
 

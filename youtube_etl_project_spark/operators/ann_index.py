@@ -744,14 +744,12 @@ def nsw_insert(
     from pyspark.sql import Window
 
     from youtube_etl_project_spark.operators.checkpointing import pin
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     spark = batch.sparkSession
     nn = batch.filter(F.col(vec).isNotNull())
-    # exact_kmeans.quantize_vectors — the same GRID constant the
-    # persisted index was built with (ADVICE r10: an inline formula here
-    # would silently diverge bit-wise if GRID ever changed)
-    qe_new = quantize_vectors(nn, id_col, vec)
+    # the same grid snap the persisted index was built with
+    qe_new = grid_rows(nn, id_col, vec, GRID, id_out="id", pos="pos")
     if qe_new.isEmpty():
         return
     cb = spark.read.parquet(f"{path}/coarse")

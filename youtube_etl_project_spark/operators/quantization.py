@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap
 from pyspark.sql.functions import pandas_udf
 
 _GRID = 1e9  # mean-snap grid: exact in bigint, ~9 fractional digits
@@ -128,10 +129,7 @@ def pq_train(
             )
             .groupBy("sub_id", "cell", "pos")
             .agg(
-                F.sum(
-                    F.floor(F.col("val") * F.lit(_GRID) + F.lit(0.5))
-                    .cast("long")
-                ).alias("s"),
+                F.sum(snap(F.col("val"), _GRID)).alias("s"),
                 F.count(F.lit(1)).alias("n"),
             )
             .collect()
@@ -145,34 +143,22 @@ def pq_train(
     return books
 
 
-QGRID = 1_000_000  # component grid for the EXACT (cross-engine) trainer
-
-
 def quantized_components(
     df: DataFrame,
     id_col: str = "vec_id",
     vec: str = "embedding",
     m: int = 8,
     dim: int = 64,
-    grid: int = QGRID,
+    grid: int = GRID,
 ) -> DataFrame:
-    """(id, sub, pos, q) rows: every component snapped to the integer
-    grid with the one formula both engines share
-    (``FLOOR(CAST(v AS DOUBLE) * grid + 0.5)``)."""
+    """(id, sub, pos, q) rows: :func:`grid.grid_rows` split into m
+    subspaces of dim/m positions."""
     dsub = dim // m
-    return (
-        df.filter(F.col(vec).isNotNull())
-        .select(F.col(id_col).alias("id"), F.posexplode(vec).alias("j", "e"))
-        .select(
-            "id",
-            (F.col("j") / dsub).cast("long").alias("sub"),
-            (F.col("j") % dsub).alias("pos"),
-            F.floor(
-                F.col("e").cast("double") * F.lit(float(grid)) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("q"),
-        )
+    return grid_rows(df, id_col, vec, grid, id_out="id").select(
+        "id",
+        (F.col("j") / dsub).cast("long").alias("sub"),
+        (F.col("j") % dsub).alias("pos"),
+        "q",
     )
 
 
@@ -184,7 +170,7 @@ def pq_train_exact(
     dim: int = 64,
     k: int = 16,
     iters: int = 2,
-    grid: int = QGRID,
+    grid: int = GRID,
 ) -> dict[tuple[int, int, int], int]:
     """EXACT-arithmetic PQ trainer: every quantity in the Lloyd loop is an
     integer on the grid, so the whole training run — seeds, assignment

@@ -14,12 +14,19 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # noqa: TCH002 — pandas_udf resolves type hints at runtime
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    plane_keys,
+    snap_np,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -138,7 +145,6 @@ def _table_keys_vectorized(dim: int, n_planes: int, n_tables: int, seed: int):
     Column fold interprets ~4M lambda steps for 2k vectors × 32 planes).
     Returns a pandas_udf: array<float> → array<long> (one key per table).
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     mats = [
@@ -151,15 +157,7 @@ def _table_keys_vectorized(dim: int, n_planes: int, n_tables: int, seed: int):
     @pandas_udf("array<long>")
     def keys(v: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype(np.float64)  # batch × dim
-        per_table = []
-        for mat in mats:
-            bits = (x @ mat) >= 0  # batch × n_planes
-            k = np.zeros(len(x), dtype=np.int64)
-            for p in range(bits.shape[1]):
-                k |= bits[:, p].astype(np.int64) << p
-            per_table.append(k)
-        stacked = np.stack(per_table, axis=1)  # batch × n_tables
-        return pd.Series(list(stacked))
+        return pd.Series(list(plane_keys(x, mats, strict=False)))
 
     return keys
 
@@ -390,14 +388,14 @@ def sha256_plane_sign(seed: int, t: int, p: int, j: int) -> int:
 
 
 def _table_keys_exact_vectorized(
-    dim: int, n_planes: int, n_tables: int, seed: int, grid: int = 1_000_000
+    dim: int, n_planes: int, n_tables: int, seed: int, grid: int = GRID
 ):
     """Arrow-vectorized EXACT bucket keys: components snap to the integer
     grid and the sign test is an int64 dot against ±1 planes — every bit
     is reproducible term-for-term in DuckDB (unlike the float-matmul
     keys, whose near-zero dots are summation-order-sensitive). One numpy
-    int64 matmul per table per batch; bit = (dot > 0), strict."""
-    import numpy as np
+    int64 matmul per table per batch; bit = (dot > 0), strict. At grid
+    1e6 |dot| ≤ dim·1e6·max|x|, far inside int64."""
     from pyspark.sql.functions import pandas_udf
 
     mats = [
@@ -413,19 +411,7 @@ def _table_keys_exact_vectorized(
 
     @pandas_udf("array<long>")
     def keys(v: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: F811 — runs on the worker
-
-        x = np.stack(v.to_numpy()).astype(np.float64)
-        xq = np.floor(x * float(grid) + 0.5).astype(np.int64)
-        per_table = []
-        for mat in mats:
-            bits = (xq @ mat) > 0  # batch × n_planes, exact int64 dots
-            k = np.zeros(len(xq), dtype=np.int64)
-            for p in range(bits.shape[1]):
-                k |= bits[:, p].astype(np.int64) << p
-            per_table.append(k)
-        stacked = np.stack(per_table, axis=1)
-        return pd.Series(list(stacked))
+        return pd.Series(list(plane_keys(snap_np(v, grid), mats, strict=True)))
 
     return keys
 
@@ -441,7 +427,7 @@ def lsh_topk_exact(
     cand_id: str = "neighbor_id",
     vec: str = "embedding",
     seed: int = 42,
-    grid: int = 1_000_000,
+    grid: int = GRID,
 ) -> DataFrame:
     """:func:`lsh_topk` with EXACT-integer bucket keys (sha256-parity ±1
     planes, grid-quantized dots) — the oracle-expressible form that put
@@ -666,23 +652,6 @@ def md5_plane_signs(
     ]
 
 
-def _quantized_flat(
-    df: DataFrame, id_out: str, vec: str, scale: int
-) -> DataFrame:
-    """(id, j, q) rows: embedding components snapped to the integer grid
-    (``FLOOR(e·scale + 0.5)`` — the repo's standard cross-engine snap)."""
-    flat = df.filter(F.col(vec).isNotNull()).select(
-        F.col(id_out), F.posexplode(F.col(vec)).alias("j", "e")
-    )
-    return flat.select(
-        id_out,
-        "j",
-        F.floor(
-            F.col("e").cast("double") * F.lit(float(scale)) + F.lit(0.5)
-        ).cast("long").alias("q"),
-    )
-
-
 def _md5_bucket_keys_folded(
     vectors: DataFrame,
     id_col: str,
@@ -692,34 +661,17 @@ def _md5_bucket_keys_folded(
     n_planes: int,
     scale: int,
 ) -> DataFrame:
-    """(id, t, key) bucket keys — same exact integers as the old
-    flat-join form, computed MAP-SIDE with zero exchanges (round 12,
-    guide §2.4 "remove shuffles outright"): the old form exploded every
-    vector to (id, j, q) rows, fanned each out 16x through a broadcast
-    sign join, and paid two hash-aggregate EXCHANGES to fold the dots
-    back per (id, t) — and the aggregate subtree defeated exchange
-    reuse, so the LSH self-join computed it twice. The planner's size
-    estimate of the keys frame now stays at scan size (no aggregates
-    inflating it), which lets the bucket self-join auto-broadcast at
-    bench scale and stay a shuffle join at real scale — the
-    scale-adaptive choice, not a forced hint.
+    """(id, t, key) bucket keys, computed map-side with no exchange: one
+    Arrow int64 ``xq @ signs`` matmul per table per batch, bit = (dot ≥
+    0). Keeping the keys frame at scan size lets the planner
+    auto-broadcast the bucket self-join at bench scale and keep a
+    shuffle join at real scale. At grid 1e6 |dot| ≤ dim·1e6·max|x|, far
+    inside int64, so every key is exact and matches the oracle's SQL
+    sums.
 
-    The kernel is the Arrow int64-matmul shape the sha256 twin
-    (:func:`_table_keys_exact_vectorized`, `dedup_embed_cosine_lsh`)
-    has always used — one ``xq @ signs`` per table per batch (guide
-    §4.2: hand whole batches to vectorized native code; a first cut as
-    SQL ``aggregate(zip_with(...))`` folds measured 1.16 s for 2000x16
-    folds because higher-order functions evaluate interpreted,
-    per-element). int64 matmul is exact, and integer addition is
-    associative, so reordering cannot change a bit.
-
-    Precondition (same as the callers always guaranteed via ``dim``):
-    vectors have exactly ``dim`` non-null components — the old flat
-    form dropped j ≥ dim rows and F.sum skipped null components, while
-    the matrix form requires rectangular input; the fixtures'
-    embeddings are fixed 64-wide, and the shared oracles hash-check
-    the keys end-to-end."""
-    import numpy as np
+    Precondition: vectors have exactly ``dim`` non-null components (the
+    matrix form needs rectangular input; the fixtures' embeddings are
+    64-wide and the shared oracles hash-check the keys end to end)."""
     from pyspark.sql.functions import pandas_udf
 
     sign_of = {
@@ -739,19 +691,8 @@ def _md5_bucket_keys_folded(
 
     @pandas_udf("array<long>")
     def keys(v: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: F811 — runs on the worker
-
-        x = np.stack(v.to_numpy()).astype(np.float64)[:, :dim]
-        xq = np.floor(x * float(scale) + 0.5).astype(np.int64)
-        per_table = []
-        for mat in mats:
-            bits = (xq @ mat) >= 0  # batch × n_planes, exact int64 dots
-            k = np.zeros(len(xq), dtype=np.int64)
-            for p in range(bits.shape[1]):
-                k |= bits[:, p].astype(np.int64) << p
-            per_table.append(k)
-        stacked = np.stack(per_table, axis=1)
-        return pd.Series(list(stacked))
+        xq = snap_np(v, scale)[:, :dim]
+        return pd.Series(list(plane_keys(xq, mats, strict=False)))
 
     return (
         vectors.filter(
@@ -764,6 +705,37 @@ def _md5_bucket_keys_folded(
     )
 
 
+def _exact_verify(
+    cand: DataFrame, vectors: DataFrame, id_col: str, vec: str,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, cosine) for the candidate pairs ``cand(id_a, id_b)``
+    whose sequential-fold cosine over ``vectors`` is ≥ threshold, rounded
+    to 6 dp — the value DuckDB's ``list_inner_product`` twin computes.
+    Each side's norm is computed once per vector, so a candidate pays one
+    dot fold; ``dot/(‖a‖·‖b‖)`` is :func:`cosine`'s float ops in the same
+    order, bit for bit."""
+
+    def side(s: str) -> DataFrame:
+        return vectors.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(vec).alias(f"__v{s}"),
+            norm(F.col(vec)).alias(f"__n{s}"),
+        )
+
+    return (
+        cand.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .withColumn(
+            "cosine",
+            dot(F.col("__va"), F.col("__vb"))
+            / (F.col("__na") * F.col("__nb")),
+        )
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
+
+
 def cosine_pairs_lsh_md5(
     vectors: DataFrame,
     id_col: str,
@@ -772,7 +744,7 @@ def cosine_pairs_lsh_md5(
     n_tables: int = 4,
     n_planes: int = 4,
     threshold: float = 0.4,
-    scale: int = 10**6,
+    scale: int = GRID,
 ) -> DataFrame:
     """Near-dup pair generation via md5-domain hyperplane LSH — the
     oracle-twin of :func:`cosine_pairs_lsh` (whose sha256 planes and
@@ -782,16 +754,6 @@ def cosine_pairs_lsh_md5(
     matches DuckDB's sequential ``list_inner_product`` bit-for-bit (the
     ``dedup_embed_cosine`` precedent). Returns (id_a, id_b, cosine ≥
     threshold) with id_a < id_b."""
-    # Round-12 shape (guide §2.4/§1.2; measured at sf0.1): bucket keys
-    # fold map-side with ZERO exchanges (was: explode + 16x sign join +
-    # two aggregate exchanges, ~2 s — and computed TWICE, once per
-    # self-join side, because the aggregate subtree defeated exchange
-    # reuse), the self-join auto-broadcasts at bench scale (scan-sized
-    # estimates) and stays a shuffle join at real scale, and the verify
-    # attaches PRE-COMPUTED per-vector norms so each candidate pays one
-    # dot fold instead of three (dot/(sqrt(na)·sqrt(nb)) — the same
-    # float ops in the same order, bit-identical; measured 3.3 s →
-    # 1.4 s over 462 k candidates).
     keys = _md5_bucket_keys_folded(
         vectors, id_col, vec, dim, n_tables, n_planes, scale
     )
@@ -809,27 +771,7 @@ def cosine_pairs_lsh_md5(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    a = vectors.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec).alias("__va"),
-        norm(F.col(vec)).alias("__na"),
-    )
-    b = vectors.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec).alias("__vb"),
-        norm(F.col(vec)).alias("__nb"),
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "cosine",
-            dot(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _exact_verify(pairs, vectors, id_col, vec, threshold)
 
 
 def lsh_ann_md5(
@@ -839,7 +781,7 @@ def lsh_ann_md5(
     n_tables: int = 4,
     n_planes: int = 4,
     k: int = 5,
-    scale: int = 10**6,
+    scale: int = GRID,
     query_id: str = "query_id",
     cand_id: str = "neighbor_id",
     vec: str = "embedding",
@@ -860,10 +802,10 @@ def lsh_ann_md5(
       quantized vectors (MIPS scoring) with an id tiebreak — every
       emitted value is integer-domain.
 
-    Same scale posture as the flagship: bucket keys build from one
-    explode + broadcast-join + two aggregations (all codegen, no Python),
-    the bucket equi-join shuffles bare ids, and scoring touches candidate
-    pairs only. Returns (query_id, neighbor_id, rank, dot_q).
+    Same scale posture as the flagship: bucket keys are one map-side
+    Arrow int64 kernel (:func:`_md5_bucket_keys_folded`), the bucket
+    equi-join shuffles bare ids, and scoring touches candidate pairs
+    only. Returns (query_id, neighbor_id, rank, dot_q).
 
     ``multiprobe > 0`` additionally probes, per table, every bucket at
     Hamming distance 1 from the query's own (the first ``multiprobe``
@@ -878,19 +820,13 @@ def lsh_ann_md5(
     """
     spark = queries.sparkSession
 
-    def quantized(df: DataFrame, id_out: str) -> DataFrame:
-        return _quantized_flat(df, id_out, vec, scale)
-
     def bucket_keys(df: DataFrame, id_out: str) -> DataFrame:
-        # round 12: map-side fold keys (zero exchanges) — same exact
-        # integers as the old explode + sign-join + two-aggregate chain;
-        # see _md5_bucket_keys_folded
         return _md5_bucket_keys_folded(
             df, id_out, vec, dim, n_tables, n_planes, scale
         )
 
-    qq = quantized(queries, query_id)
-    qc = quantized(candidates, cand_id)
+    qq = grid_rows(queries, query_id, vec, scale)
+    qc = grid_rows(candidates, cand_id, vec, scale)
     probe_keys = bucket_keys(queries, query_id)
     if multiprobe > 0:
         flips = spark.range(multiprobe).select(
@@ -1008,15 +944,7 @@ def cosine_pairs_lsh(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec).alias("__va"))
-    vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec).alias("__vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _exact_verify(cand, vectors, id_col, vec, threshold)
 
 
 def cosine_pairs_lsh_exact(
@@ -1028,7 +956,7 @@ def cosine_pairs_lsh_exact(
     n_planes: int = 4,
     n_tables: int = 16,
     seed: int = 42,
-    grid: int = 1_000_000,
+    grid: int = GRID,
 ) -> DataFrame:
     """:func:`cosine_pairs_lsh` with EXACT-integer bucket keys
     (sha256-parity ±1 planes, grid-quantized strict-positive dots — the
@@ -1058,42 +986,41 @@ def cosine_pairs_lsh_exact(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec).alias("__va"))
-    vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec).alias("__vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _exact_verify(cand, vectors, id_col, vec, threshold)
 
 
 def _checkpointed_blocks(
-    vectors: DataFrame, id_col: str, vec: str, block_rows: int
+    vectors: DataFrame,
+    id_col: str,
+    vec: str,
+    block_rows: int,
+    class_col: str | None = None,
 ) -> tuple[DataFrame, int]:
-    """Project to (id, __v), drop nulls, checkpoint (the subtree is
-    referenced by the fan-out AND the exact-verify joins, and counted
-    once), and derive the block count nb = ceil(n / block_rows)."""
-    v = pin(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec).alias("__v"))
-        .filter(F.col("__v").isNotNull())
-    )
+    """Project to (id, __v[, __c]), drop rows with a null vector (or
+    class), checkpoint (the subtree is referenced by the fan-out AND the
+    exact-verify joins, and counted once), and derive the block count
+    nb = ceil(n / block_rows)."""
+    cols = [F.col(id_col).alias("id"), F.col(vec).alias("__v")]
+    keep = F.col("__v").isNotNull()
+    if class_col is not None:
+        cols.append(F.col(class_col).alias("__c"))
+        keep = keep & F.col("__c").isNotNull()
+    v = pin(vectors.select(*cols).filter(keep))
     n = v.count()
     return v, max(1, -(-n // block_rows)) if n else 1
 
 
 def _block_fanout(v: DataFrame, nb: int) -> DataFrame:
-    """Fan each (id, __v) row out to every block pair it participates in
-    (one shuffle of n·nb rows); downstream groups by (ga, gb) so each
-    Arrow group holds exactly the two blocks it must score."""
+    """Fan each row of ``v`` (every column kept) out to every block pair
+    it participates in (one shuffle of n·nb rows); downstream groups by
+    (ga, gb) so each Arrow group holds exactly the two blocks it must
+    score."""
+    cols = v.columns
     return v.select(
-        "id",
-        "__v",
+        *cols,
         F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int").alias("__b"),
     ).select(
-        "id",
-        "__v",
+        *cols,
         "__b",
         F.explode(
             F.array_distinct(
@@ -1109,12 +1036,55 @@ def _block_fanout(v: DataFrame, nb: int) -> DataFrame:
             )
         ).alias("__g"),
     ).select(
-        "id",
-        "__v",
+        *cols,
         "__b",
         F.col("__g.ga").alias("ga"),
         F.col("__g.gb").alias("gb"),
     )
+
+
+def _block_cosines(pdf: pd.DataFrame, emit, both_ways: bool) -> None:
+    """Score one (ga, gb) group of :func:`_block_fanout` rows as chunked
+    float64 cosine matmuls (512 rows per chunk, so per-task memory stays
+    bounded by the two blocks plus one score chunk), calling
+    ``emit(cs, valid, r, c)`` per chunk: ``cs[i, k]`` is the cosine of
+    the rows at positions ``r[i]`` and ``c[k]`` of ``pdf``, and
+    ``valid`` masks self pairs out. Across two blocks the rows of ``ga``
+    meet the rows of ``gb``, and with ``both_ways`` also the reverse (a
+    per-row maximum needs every candidate on the row side). Within one
+    block every row meets every other; without ``both_ways`` each
+    unordered pair is scored once (strict upper triangle)."""
+    X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
+    nrm = np.sqrt((X * X).sum(axis=1))
+    ga = int(pdf["ga"].iloc[0])
+    if ga == int(pdf["gb"].iloc[0]):
+        idx = np.arange(len(X))
+        passes = [(idx, idx, X, X)]
+    else:
+        am = pdf["__b"].to_numpy() == ga
+        ia, ib = np.flatnonzero(am), np.flatnonzero(~am)
+        A, B = X[am], X[~am]
+        passes = [(ia, ib, A, B)] + ([(ib, ia, B, A)] if both_ways else [])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for r, c, R, C in passes:
+            if not (len(r) and len(c)):
+                continue
+            for s in range(0, len(r), 512):
+                e = min(s + 512, len(r))
+                cs = (R[s:e] @ C.T) / (nrm[r[s:e], None] * nrm[None, c])
+                if r is c:
+                    off = c[None, :] - r[s:e, None]
+                    valid = off != 0 if both_ways else off > 0
+                else:
+                    valid = np.ones_like(cs, dtype=bool)
+                emit(cs, valid, r[s:e], c)
+
+
+def _near_row_max(cs: np.ndarray, valid: np.ndarray, margin: float):
+    """Valid scores within ``margin`` of their row's valid maximum, plus
+    NaN scores (zero-norm vectors: the exact path decides those)."""
+    rowmax = np.where(valid, cs, -np.inf).max(axis=1)
+    return valid & ((cs >= rowmax[:, None] - margin) | np.isnan(cs))
 
 
 def cosine_pairs_blocked(
@@ -1152,72 +1122,34 @@ def cosine_pairs_blocked(
     path. Per-task memory is bounded by 2·block_rows vectors plus a
     512-row score-matrix chunk regardless of n.
     """
-    import numpy as np
     from pyspark.sql.types import StructField, StructType
 
     id_type = vectors.schema[id_col].dataType
     v, nb = _checkpointed_blocks(vectors, id_col, vec, block_rows)
-    fanned = _block_fanout(v, nb)
-
     thr = threshold - 1e-6
     out_schema = StructType(
         [StructField("id_a", id_type), StructField("id_b", id_type)]
     )
 
     def _score_block(pdf):
-        ga = int(pdf["ga"].iloc[0])
-        gb = int(pdf["gb"].iloc[0])
         ids = pdf["id"].to_numpy()
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-        nrm = np.sqrt((X * X).sum(axis=1))
         res_a: list = []
         res_b: list = []
 
-        def emit(keep, rids, cids):
-            ii, jj = np.nonzero(keep)
-            for i, j in zip(ii, jj):
-                a, b = rids[i], cids[j]
-                if a < b:
-                    res_a.append(a)
-                    res_b.append(b)
-                elif b < a:
-                    res_a.append(b)
-                    res_b.append(a)
+        def emit(cs, valid, r, c):
+            ii, jj = np.nonzero(valid & ((cs >= thr) | ~np.isfinite(cs)))
+            a, b = ids[r[ii]], ids[c[jj]]
+            lo, hi = a < b, b < a  # orient by id value; drop equal ids
+            res_a.extend(np.where(lo, a, b)[lo | hi])
+            res_b.extend(np.where(lo, b, a)[lo | hi])
 
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if ga == gb:
-                col = np.arange(len(ids))[None, :]
-                for s in range(0, len(ids), 512):
-                    e = min(s + 512, len(ids))
-                    cs = (X[s:e] @ X.T) / (nrm[s:e, None] * nrm[None, :])
-                    keep = (cs >= thr) | ~np.isfinite(cs)
-                    # score each unordered index pair exactly once (strict
-                    # upper triangle); emit() orients by id value
-                    keep &= col > np.arange(s, e)[:, None]
-                    emit(keep, ids[s:e], ids)
-            else:
-                am = pdf["__b"].to_numpy() == ga
-                A, B = X[am], X[~am]
-                ia, ib = ids[am], ids[~am]
-                na, nb_ = nrm[am], nrm[~am]
-                for s in range(0, len(ia), 512):
-                    e = min(s + 512, len(ia))
-                    cs = (A[s:e] @ B.T) / (na[s:e, None] * nb_[None, :])
-                    emit((cs >= thr) | ~np.isfinite(cs), ia[s:e], ib)
+        _block_cosines(pdf, emit, both_ways=False)
         return pd.DataFrame({"id_a": res_a, "id_b": res_b})
 
-    cand = fanned.groupBy("ga", "gb").applyInPandas(
+    cand = _block_fanout(v, nb).groupBy("ga", "gb").applyInPandas(
         _score_block, schema=out_schema
     )
-    va = v.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _exact_verify(cand, v, "id", "__v", threshold)
 
 
 def nn_shortlist_blocked(
@@ -1243,63 +1175,28 @@ def nn_shortlist_blocked(
     with NULL vectors are excluded here — handle their (engine-identical)
     all-NULL-cosine ordering separately; see embed_knn_label_accuracy.
     """
-    import numpy as np
     from pyspark.sql.types import StructField, StructType
 
     id_type = vectors.schema[id_col].dataType
     v, nb = _checkpointed_blocks(vectors, id_col, vec, block_rows)
-    fanned = _block_fanout(v, nb)
     out_schema = StructType(
         [StructField("id", id_type), StructField("cand_id", id_type)]
     )
 
     def _shortlist(pdf):
-        ga = int(pdf["ga"].iloc[0])
-        gb = int(pdf["gb"].iloc[0])
         ids = pdf["id"].to_numpy()
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-        nrm = np.sqrt((X * X).sum(axis=1))
         res_i: list = []
         res_j: list = []
 
-        def emit(cs, valid, rids, cids):
-            # rowmax over valid entries only; -inf placeholder never leaks
-            # back into keep because keep is ANDed with `valid`
-            masked = np.where(valid, cs, -np.inf)
-            rowmax = masked.max(axis=1)
-            keep = valid & (
-                (cs >= rowmax[:, None] - margin) | np.isnan(cs)
-            )
-            ii, jj = np.nonzero(keep)
-            res_i.extend(rids[ii])
-            res_j.extend(cids[jj])
+        def emit(cs, valid, r, c):
+            ii, jj = np.nonzero(_near_row_max(cs, valid, margin))
+            res_i.extend(ids[r[ii]])
+            res_j.extend(ids[c[jj]])
 
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if ga == gb:
-                col = np.arange(len(ids))[None, :]
-                for s in range(0, len(ids), 512):
-                    e = min(s + 512, len(ids))
-                    cs = (X[s:e] @ X.T) / (nrm[s:e, None] * nrm[None, :])
-                    emit(cs, col != np.arange(s, e)[:, None], ids[s:e], ids)
-            else:
-                am = pdf["__b"].to_numpy() == ga
-                A, B = X[am], X[~am]
-                ia, ib = ids[am], ids[~am]
-                na, nb_ = nrm[am], nrm[~am]
-                if len(ia) and len(ib):
-                    for s in range(0, len(ia), 512):
-                        e = min(s + 512, len(ia))
-                        cs = (A[s:e] @ B.T) / (na[s:e, None] * nb_[None, :])
-                        ok = np.ones_like(cs, dtype=bool)
-                        emit(cs, ok, ia[s:e], ib)
-                    for s in range(0, len(ib), 512):
-                        e = min(s + 512, len(ib))
-                        cs = (B[s:e] @ A.T) / (nb_[s:e, None] * na[None, :])
-                        ok = np.ones_like(cs, dtype=bool)
-                        emit(cs, ok, ib[s:e], ia)
+        _block_cosines(pdf, emit, both_ways=True)
         return pd.DataFrame({"id": res_i, "cand_id": res_j})
 
-    return fanned.groupBy("ga", "gb").applyInPandas(
+    return _block_fanout(v, nb).groupBy("ga", "gb").applyInPandas(
         _shortlist, schema=out_schema
     )
 
@@ -1518,48 +1415,10 @@ def class_nn_shortlist_blocked(
     contrastive-mining primitive: positives and hard negatives in one
     blocked pass instead of one job per label subset.
     """
-    import numpy as np
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     id_type = vectors.schema[id_col].dataType
-    v = (
-        vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec).alias("__v"),
-            F.col(class_col).alias("__c"),
-        )
-        .filter(F.col("__v").isNotNull() & F.col("__c").isNotNull())
-    )
-    v = pin(v)
-    n = v.count()
-    nb = max(1, -(-n // block_rows)) if n else 1
-    fanned = v.select(
-        "id",
-        "__v",
-        "__c",
-        F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int").alias("__b"),
-    ).select(
-        "id",
-        "__v",
-        "__c",
-        "__b",
-        F.explode(
-            F.array_distinct(
-                F.array(
-                    *[
-                        F.struct(
-                            F.least(F.col("__b"), F.lit(o)).alias("ga"),
-                            F.greatest(F.col("__b"), F.lit(o)).alias("gb"),
-                        )
-                        for o in range(nb)
-                    ]
-                )
-            )
-        ).alias("__g"),
-    ).select(
-        "id", "__v", "__c", "__b",
-        F.col("__g.ga").alias("ga"), F.col("__g.gb").alias("gb"),
-    )
+    v, nb = _checkpointed_blocks(vectors, id_col, vec, block_rows, class_col)
     out_schema = StructType(
         [
             StructField("id", id_type),
@@ -1569,55 +1428,24 @@ def class_nn_shortlist_blocked(
     )
 
     def _shortlist(pdf):
-        ga = int(pdf["ga"].iloc[0])
-        gb = int(pdf["gb"].iloc[0])
         ids = pdf["id"].to_numpy()
         cls = pdf["__c"].to_numpy()
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-        nrm = np.sqrt((X * X).sum(axis=1))
         res_i: list = []
         res_j: list = []
         res_s: list = []
 
-        def emit(cs, valid, rids, cids, rcls, ccls):
-            samec = rcls[:, None] == ccls[None, :]
+        def emit(cs, valid, r, c):
+            samec = cls[r][:, None] == cls[c][None, :]
             for side in (True, False):
                 m = valid & (samec if side else ~samec)
-                masked = np.where(m, cs, -np.inf)
-                rowmax = masked.max(axis=1)
-                keep = m & ((cs >= rowmax[:, None] - margin) | np.isnan(cs))
-                ii, jj = np.nonzero(keep)
-                res_i.extend(rids[ii])
-                res_j.extend(cids[jj])
+                ii, jj = np.nonzero(_near_row_max(cs, m, margin))
+                res_i.extend(ids[r[ii]])
+                res_j.extend(ids[c[jj]])
                 res_s.extend([side] * len(ii))
 
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if ga == gb:
-                col = np.arange(len(ids))[None, :]
-                for s in range(0, len(ids), 512):
-                    e = min(s + 512, len(ids))
-                    cs = (X[s:e] @ X.T) / (nrm[s:e, None] * nrm[None, :])
-                    emit(cs, col != np.arange(s, e)[:, None],
-                         ids[s:e], ids, cls[s:e], cls)
-            else:
-                am = pdf["__b"].to_numpy() == ga
-                A, B = X[am], X[~am]
-                ia, ib = ids[am], ids[~am]
-                ca, cb = cls[am], cls[~am]
-                na, nb_ = nrm[am], nrm[~am]
-                if len(ia) and len(ib):
-                    for s in range(0, len(ia), 512):
-                        e = min(s + 512, len(ia))
-                        cs = (A[s:e] @ B.T) / (na[s:e, None] * nb_[None, :])
-                        emit(cs, np.ones_like(cs, dtype=bool),
-                             ia[s:e], ib, ca[s:e], cb)
-                    for s in range(0, len(ib), 512):
-                        e = min(s + 512, len(ib))
-                        cs = (B[s:e] @ A.T) / (nb_[s:e, None] * na[None, :])
-                        emit(cs, np.ones_like(cs, dtype=bool),
-                             ib[s:e], ia, cb[s:e], ca)
+        _block_cosines(pdf, emit, both_ways=True)
         return pd.DataFrame({"id": res_i, "cand_id": res_j, "same": res_s})
 
-    return fanned.groupBy("ga", "gb").applyInPandas(
+    return _block_fanout(v, nb).groupBy("ga", "gb").applyInPandas(
         _shortlist, schema=out_schema
     )

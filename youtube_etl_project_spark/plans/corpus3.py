@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators.grid import GRID, snap
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -276,9 +277,7 @@ def text_hash_embedding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(
             F.transform(
                 F.col("embedding"),
-                lambda x: F.floor(x * F.lit(1_000_000.0) + F.lit(0.5))
-                .cast("long")
-                .cast("string"),
+                lambda x: snap(x, GRID).cast("string"),
             ),
             "|",
         ).alias("emb_micros"),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import cnt, fixture_path, register
 from youtube_etl_project_spark.sources import load_table
 
@@ -399,7 +400,6 @@ def text_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.plans.exact_kmeans import (
         kmeans_assign_arrow,
         kmeans_train_exact,
-        quantize_vectors,
     )
 
     emb = text_hash_embedding(spark, sf_dir)
@@ -407,7 +407,11 @@ def text_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it; assignment is one Arrow int64 matmul pass
     books = fixture_cache.cached_model(
         "topic_books", sf_dir, lambda: kmeans_train_exact(
-            pin(quantize_vectors(emb, "doc_id", "embedding")), k=8, iters=2
+            pin(grid_rows(
+                emb, "doc_id", "embedding", GRID, id_out="id", pos="pos"
+            )),
+            k=8,
+            iters=2,
         )
     )
     assigned = kmeans_assign_arrow(emb, "doc_id", "embedding", books).select(

@@ -14,10 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap_np
 from youtube_etl_project_spark.registry import cnt, register
 from youtube_etl_project_spark.sources import load_table
 
 _K = 16  # span width in tokens
+_TAU_GRID = 1_000  # SemDeDup τ-test grid: keeps 25·dot² inside int64
 
 
 def _semantic_books(sf_dir: str, nn_emb: DataFrame, k: int) -> dict:
@@ -28,32 +30,30 @@ def _semantic_books(sf_dir: str, nn_emb: DataFrame, k: int) -> dict:
     from youtube_etl_project_spark.operators.checkpointing import pin
     from youtube_etl_project_spark.plans.exact_kmeans import (
         kmeans_train_exact,
-        quantize_vectors,
     )
 
     def train() -> dict:
-        qe = pin(quantize_vectors(nn_emb, "vec_id", "embedding"))
+        qe = pin(grid_rows(
+            nn_emb, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+        ))
         return kmeans_train_exact(qe, k=k, iters=2)
 
     return fixture_cache.cached_model("semantic_books", sf_dir, train)
 
 
 def _semantic_pairs_blocked(
-    members: DataFrame, grid: float, id_a: str, id_b: str
+    members: DataFrame, grid: int, id_a: str, id_b: str
 ) -> DataFrame:
     """Within-cell SemDeDup pair pass as a per-cell Arrow int64 kernel
-    (round 12 — the `_knn_parts_blocked` precedent from plans/graph_ann:
-    dense per-row linear algebra runs as Arrow-batched numpy, the repo's
-    measured rule). ``members`` is (cell, id, embedding); output is
-    every within-cell pair (id_a < id_b) passing the exact integer
-    τ=0.4 test ``dot > 0 AND 25·dot² ≥ 4·|a|²·|b|²`` on the ``grid``
-    snap, with the dot. The flat (cell, pos) self-join this replaces
-    shuffled Σ|cell|²·dim rows (~32 M at sf0.1, measured ~3.7 s of the
-    row); the kernel computes the same int64s per cell group — numpy
-    int64 matmul is exact (dot ≤ 64·(1e3·1)² margins; 25·dot² ≤ ~1e17 ≪
-    2^63) — so this is a plan change, not a semantics change, and the
-    value-hash oracles (which recompute the flat form in SQL) prove it
-    per run."""
+    (dense per-row linear algebra runs as Arrow-batched numpy).
+    ``members`` is (cell, id, embedding); output is every within-cell
+    pair (id_a < id_b) passing the exact integer τ=0.4 test ``dot > 0
+    AND 25·dot² ≥ 4·|a|²·|b|²`` on the ``grid`` snap, with the dot. A
+    flat (cell, pos) self-join would shuffle Σ|cell|²·dim rows (~32 M
+    at sf0.1); the kernel computes the same int64s per cell group —
+    numpy int64 matmul is exact (at grid 1e3, |q| ≤ 578 ⇒ 25·dot² ≤
+    ~1e17 ≪ 2^63) — and the value-hash oracles, which compute the flat
+    form in SQL, prove it per run."""
     import pandas as pd
 
     def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -61,11 +61,7 @@ def _semantic_pairs_blocked(
         import pandas as pd
 
         cell = pdf["cell"].iloc[0]
-        Q = np.floor(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            * float(grid)
-            + 0.5
-        ).astype(np.int64)
+        Q = snap_np(pdf["embedding"], grid)
         ids = pdf["id"].to_numpy()
         G = Q @ Q.T
         na = np.einsum("ij,ij->i", Q, Q)
@@ -310,21 +306,17 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(16, int(emb.count() ** 0.5))
     nn_emb = emb.filter(F.col("embedding").isNotNull())
     books = _semantic_books(sf_dir, nn_emb, k)
-    # round 12: corpus-wide assignment as ONE Arrow int64 matmul pass
-    # (kmeans_assign_arrow) — the exploded kmeans_assign_exact form
-    # fanned (id, pos) rows out k≈√n× through the centroid join
+    # corpus-wide assignment as ONE Arrow int64 matmul pass
     assign = pin(
         kmeans_assign_arrow(nn_emb, "vec_id", "embedding", books)
     )  # referenced by members + the output join
 
-    # round 12: the within-cell τ test runs as the per-cell Arrow int64
-    # kernel (see _semantic_pairs_blocked) instead of a Σ|cell|²·dim-row
-    # flat (cell, pos) self-join + two norm join-backs
+    # the within-cell τ test is the per-cell Arrow int64 kernel
     members = assign.join(
         nn_emb.select(F.col("vec_id").alias("id"), "embedding"), "id"
     ).select("cell", "id", "embedding")
     pairs = _semantic_pairs_blocked(
-        members, grid=1000.0, id_a="id_a", id_b="id_b"
+        members, grid=_TAU_GRID, id_a="id_a", id_b="id_b"
     ).select("id_a", "id_b")
     labels = graph.connected_components(pairs, src="id_a", dst="id_b")
     return (
@@ -424,30 +416,16 @@ def dedup_semantic_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # round 12: qe lost its pin and the q3 column — the Arrow pair
-    # kernel reads raw embeddings, so the quantized frame feeds only the
-    # (now identity-form, see _ivf_v1_dists) cell assignment
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
-    dists = _ivf_v1_dists(spark, qe)
+    # the Arrow pair kernel reads raw embeddings, so the grid rows feed
+    # only the cell assignment
+    dists = _ivf_v1_dists(spark, grid_rows(emb, "vec_id", "embedding", GRID))
     wc = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cell"))
     assign = (
         dists.withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cell")
     )
-    # round 12: within-cell τ test as the per-cell Arrow int64 kernel
-    # (see _semantic_pairs_blocked) — replaces the (cell, j) flat
-    # self-join + group-by that shuffled Σ|cell|²·dim rows
+    # within-cell τ test as the per-cell Arrow int64 kernel
     members = assign.join(
         emb.filter(F.col("embedding").isNotNull()).select(
             F.col("vec_id").alias("id"), "embedding"
@@ -455,7 +433,7 @@ def dedup_semantic_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") == F.col("id"),
     ).select("cell", "id", "embedding")
     return _semantic_pairs_blocked(
-        members, grid=1000.0, id_a="vec_a", id_b="vec_b"
+        members, grid=_TAU_GRID, id_a="vec_a", id_b="vec_b"
     ).select(
         F.col("cell").cast("long").alias("cell"), "vec_a", "vec_b", "dot_q"
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -173,10 +174,10 @@ def _mmr_oracle() -> str:
         "vs plain top-5 pinned by tests/test_mmr.py",
 )
 def embed_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
-
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = pin(quantize_vectors(emb, "vec_id", "embedding"))
+    qe = pin(grid_rows(
+        emb, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    ))
     qq = qe.filter(F.col("id") < _N_QUERIES).select(
         F.col("id").alias("query_id"), "pos", F.col("q").alias("ql")
     )
@@ -326,26 +327,22 @@ def _ann_mmr_oracle() -> str:
 )
 def embed_ann_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
     from youtube_etl_project_spark.plans.ivfpq import (
         _ivfpq_index_path,
         _refine_r,
     )
 
-    # Round-11: take the ANN shortlist from the PERSISTED IVF-PQ index
-    # (ann_index.ivfpq_query) instead of re-running the in-memory
-    # probe+ADC pipeline (ivfpq_refined) per call. The persisted probe is
-    # bit-identical to the capstone under the same trained model (its own
-    # contract, gate-shared oracle), so the top-_SHORTLIST set — and the
-    # MMR trace over it — is unchanged; the index build amortizes across
-    # the embed_ivfpq_index_ann serving row, and the probe's codes/
-    # components scans carry cell IN (probed) partition filters, which is
-    # the actual production composition this row documents. Measured at
-    # sf0.1: 5.6 s → ~2.9 s, oracle hash unchanged.
+    # The ANN shortlist comes from the PERSISTED IVF-PQ index
+    # (ann_index.ivfpq_query), bit-identical to the in-memory probe under
+    # the same trained model; the index build amortizes across the
+    # embed_ivfpq_index_ann serving row, and the probe's codes/components
+    # scans carry cell IN (probed) partition filters.
     path = _ivfpq_index_path(spark, sf_dir)
     n, n_probe = ann_index.ivfpq_meta(spark, path)
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = pin(quantize_vectors(emb, "vec_id", "embedding"))
+    qe = pin(grid_rows(
+        emb, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    ))
     short = ann_index.ivfpq_query(
         qe.filter(F.col("id") < _N_QUERIES),
         path,
@@ -428,10 +425,10 @@ def _kcenter_oracle() -> str:
         "Max-min radius monotonicity pinned by tests/test_mmr.py",
 )
 def embed_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
-
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = pin(quantize_vectors(emb, "vec_id", "embedding"))
+    qe = pin(grid_rows(
+        emb, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    ))
     seed = (
         qe.groupBy()
         .agg(F.min("id").alias("id"))

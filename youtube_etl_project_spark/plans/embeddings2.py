@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap
 from youtube_etl_project_spark.registry import fixture_path, register
 from youtube_etl_project_spark.sources import load_table
 
@@ -78,18 +79,8 @@ _EL_S1 = 1_000  # maha / PCA feature grid (keeps every chain in HUGEINT)
 def _scatter_qe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, j, q) on the 1e3 grid — the moment/scoring input shared
     by the trained Mahalanobis and PCA queries."""
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(float(_EL_S1))
-                + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
+    return grid_rows(
+        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", _EL_S1
     )
 
 
@@ -290,9 +281,7 @@ def embed_pca_project_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat.select(
         "vec_id",
         F.col("pos").cast("long").alias("pos"),
-        F.floor(F.col("p") * F.lit(10_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("pq"),
+        snap(F.col("p"), 10_000).alias("pq"),
     )
 
 
@@ -310,15 +299,7 @@ def _ridge_qe_yy(spark: SparkSession, sf_dir: str):
     base = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    comp = base.select(
-        "vec_id", F.posexplode("embedding").alias("j", "e")
-    ).select(
-        "vec_id",
-        "j",
-        F.floor(
-            F.col("e").cast("double") * F.lit(float(RIDGE_S1)) + F.lit(0.5)
-        ).cast("long").alias("q"),
-    )
+    comp = grid_rows(base, "vec_id", "embedding", RIDGE_S1)
     icept = base.select(
         "vec_id",
         F.lit(_RIDGE_D - 1).alias("j"),
@@ -593,9 +574,7 @@ def source_quality_scorer_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         "rid",
         "j",
-        F.floor(F.col("e") * F.lit(float(RIDGE_S1)) + F.lit(0.5))
-        .cast("long")
-        .alias("q"),
+        snap(F.col("e"), RIDGE_S1).alias("q"),
     )
     icept = joined.select(
         F.col("source").alias("grp"),
@@ -971,17 +950,7 @@ _RIDGE_VALUES = ", ".join(f"({j}, {q})" for j, q in _RIDGE_WQ)
 def embed_ridge_score_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdf = spark.createDataFrame(_RIDGE_WQ, "j int, wq long")
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
+    qe = grid_rows(emb, "vec_id", "embedding", GRID)
     return (
         qe.join(F.broadcast(wdf), "j")
         .groupBy("vec_id")
@@ -1063,17 +1032,7 @@ def embed_mahalanobis_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     mudf = spark.createDataFrame(_MAHA_MU, "j int, muq long")
     adf = spark.createDataFrame(_MAHA_A, "i int, j int, aq long")
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
+    qe = grid_rows(emb, "vec_id", "embedding", _EL_S1)
     centered = qe.join(F.broadcast(mudf), "j").select(
         "vec_id", "j", (F.col("q") - F.col("muq")).alias("c")
     )
@@ -1200,28 +1159,8 @@ def ridge_eval_mae_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rollup — scoring cost, not an extra pass",
 )
 def ridge_calibration_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wdf = spark.createDataFrame(_RIDGE_WQ, "j int, wq long")
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
-    scores = (
-        qe.join(F.broadcast(wdf), "j")
-        .groupBy("vec_id")
-        .agg(
-            (F.sum(F.col("q") * F.col("wq")) + F.lit(_RIDGE_BQ))
-            .cast("long")
-            .alias("yhat_q")
-        )
-    )
+    scores = embed_ridge_score_v1(spark, sf_dir)
     binned = scores.join(emb.select("vec_id", "label"), "vec_id").select(
         F.floor(
             F.col("yhat_q").cast("double") / F.lit(500_000_000_000.0)
@@ -1306,28 +1245,8 @@ def ridge_calibration_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ridge_conformal_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators.ranking import global_rank
 
-    wdf = spark.createDataFrame(_RIDGE_WQ, "j int, wq long")
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
-    scores = (
-        qe.join(F.broadcast(wdf), "j")
-        .groupBy("vec_id")
-        .agg(
-            (F.sum(F.col("q") * F.col("wq")) + F.lit(_RIDGE_BQ))
-            .cast("long")
-            .alias("yhat_q")
-        )
-    )
+    scores = embed_ridge_score_v1(spark, sf_dir)
     res = scores.join(emb.select("vec_id", "label"), "vec_id").select(
         "vec_id",
         F.abs(

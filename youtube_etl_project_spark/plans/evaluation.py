@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import dedup
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.plans.dedup_queries import (
     _MD5_BANDS,
     _MD5_HASHES,
@@ -411,7 +412,6 @@ def _ann_recall_oracle() -> str:
         _N_QUERIES as _PQ_NQ,
     )
     from youtube_etl_project_spark.plans.similarity_queries import (
-        _ANN_SCALE,
         _N_QUERIES,
     )
 
@@ -421,7 +421,7 @@ def _ann_recall_oracle() -> str:
     return f"""
         WITH qe AS (
             SELECT vec_id, u.pos - 1 AS j,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_ANN_SCALE} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -510,18 +510,7 @@ def _ann_gt_path(spark: SparkSession, sf_dir: str) -> str:
 
     def _build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        qe = (
-            emb.filter(F.col("embedding").isNotNull())
-            .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-            .select(
-                "vec_id",
-                "j",
-                F.floor(
-                    F.col("e").cast("double") * F.lit(float(sq._ANN_SCALE))
-                    + F.lit(0.5)
-                ).cast("long").alias("q"),
-            )
-        )
+        qe = grid_rows(emb, "vec_id", "embedding", GRID)
         qa = qe.filter(F.col("vec_id") < sq._N_QUERIES).select(
             F.col("vec_id").alias("query_id"), "j", F.col("q").alias("qa")
         )

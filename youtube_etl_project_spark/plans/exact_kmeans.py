@@ -1,6 +1,5 @@
-"""Exact-grid k-means (full-dimension Lloyd) shared by the converted
-trained-model queries (round 7): text_topic_clusters, dedup_semantic,
-embed_ivf_ann.
+"""Exact-grid k-means (full-dimension Lloyd) shared by the trained-model
+queries text_topic_clusters, dedup_semantic and embed_ivf_ann.
 
 Same contract as ``operators/quantization.pq_train_exact`` with m=1:
 every quantity in the training loop is an int64 on the component grid or
@@ -21,37 +20,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
-
-GRID = 1_000_000
-
-
-def quantize_vectors(
-    df: DataFrame, id_col: str, vec: str, grid: int = GRID
-) -> DataFrame:
-    """(id, pos, q) rows — the full-dimension twin of
-    ``quantization.quantized_components``; q is int64 on the grid."""
-    return (
-        df.filter(F.col(vec).isNotNull())
-        .select(F.col(id_col).alias("id"), F.posexplode(vec).alias("pos", "e"))
-        .select(
-            "id",
-            "pos",
-            F.floor(
-                F.col("e").cast("double") * F.lit(float(grid)) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("q"),
-        )
-    )
+from youtube_etl_project_spark.operators.grid import GRID, snap_np, sq_dists
 
 
 def kmeans_train_exact(
     qe: DataFrame, k: int, iters: int = 2
 ) -> dict[tuple[int, int], int]:
-    """Train k exact-grid centroids over (id, pos, q) rows; returns
-    {(cell, pos): cq}. Seeds = the k lowest ids (cell = id rank); each
-    round is one broadcast-join assignment + one snapped-mean aggregate;
-    only model-sized centroid tables (k·dim rows) reach the driver."""
+    """Train k exact-grid centroids over (id, pos, q) rows (``grid_rows``
+    with ``id_out="id", pos="pos"``); returns {(cell, pos): cq}. Seeds =
+    the k lowest ids (cell = id rank); each round is one broadcast-join
+    assignment + one snapped-mean aggregate; only model-sized centroid
+    tables (k·dim rows) reach the driver."""
     spark = qe.sparkSession
     qe = pin(qe)  # reused every round + by callers
     seed_ids = sorted(
@@ -139,15 +118,14 @@ def kmeans_assign_arrow(
 ) -> DataFrame:
     """(id, cell) as ONE Arrow int64 pass over the raw vectors — the
     corpus-wide twin of :func:`kmeans_assign_exact` for a trained books
-    DICT (round 12, guide §3.4/§4.2): the exploded form fans every
-    (id, pos) row out k× through the broadcast centroid join (k≈√n ⇒
-    ~180 M join rows at sf0.1) before aggregating; here the same exact
-    integers come from a numpy matmul via the binomial identity.
-    Bit-identical by construction: np.floor on float64 is the double op
-    F.floor compiles to (the _semantic_pairs_blocked precedent), all
-    distances are int64 (≤ 64·(2·grid)² ≪ 2⁶³), and np.argmin returns
-    the FIRST minimum — cell-ascending columns ⇒ the lowest-cell
-    tiebreak. The books stay model-sized in the task closure."""
+    DICT: the exploded form fans every (id, pos) row out k× through the
+    broadcast centroid join (k≈√n ⇒ ~180 M join rows at sf0.1) before
+    aggregating; here the same exact integers come from one numpy
+    matmul per batch (``grid.sq_dists``). Distances stay far inside
+    int64 (≤ 64·(2·grid)² ≪ 2⁶³ for unit-range components), and
+    np.argmin returns the FIRST minimum — cell-ascending columns ⇒ the
+    lowest-cell tiebreak. The books stay model-sized in the task
+    closure."""
     import pandas as pd
 
     cells = sorted({c for c, _ in books})
@@ -159,18 +137,11 @@ def kmeans_assign_arrow(
         import pandas as pd
 
         Cm = np.asarray(cmat, dtype=np.int64)
-        c2 = np.einsum("ij,ij->i", Cm, Cm)
         cells_arr = np.asarray(cells, dtype=np.int32)
         for pdf in it:
             if not len(pdf):
                 continue
-            Q = np.floor(
-                np.stack(pdf[vec].to_numpy()).astype(np.float64)
-                * float(grid)
-                + 0.5
-            ).astype(np.int64)
-            q2 = np.einsum("ij,ij->i", Q, Q)
-            d = q2[:, None] - 2 * (Q @ Cm.T) + c2[None, :]
+            d = sq_dists(snap_np(pdf[vec], grid), Cm)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].to_numpy(),

@@ -38,6 +38,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    snap_np,
+    sq_dists,
+)
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -419,30 +425,25 @@ def _knn_parts_blocked(m2emb: DataFrame) -> DataFrame:
     """Per-cell exact-int64 k-NN candidates: for each src row of a cell
     group (members + second-choice visitors), the top-M own-member dsts
     by exact squared grid distance (dst-id tiebreak). The distances are
-    the same FLOOR(v*1e6+0.5) grid int64s the SQL/oracle path computes —
-    numpy int64 matmul is exact (|dot| <= 64*(2e6)^2 ~ 2.6e14 << 2^63),
-    so this is a PLAN optimization, not a semantics change: the repo's
-    measured rule that dense per-row linear algebra runs as Arrow-batched
-    numpy, ~6x over the 2n^2/K-pair component join (21 s -> 3.5 s end-to-end
-    at sf0.1, the residue being the fixed trace overhead). Per-src top-M within the group; the caller re-ranks globally
-    across each src's <= 2 groups."""
+    the same grid int64s the SQL/oracle path computes — numpy int64
+    matmul is exact (|dot| <= 64*(2e6)^2 ~ 2.6e14 << 2^63), so this is
+    a plan optimization, not a semantics change: dense per-row linear
+    algebra runs as Arrow-batched numpy, ~6x over the 2n^2/K-pair
+    component join (21 s -> 3.5 s end-to-end at sf0.1, the residue
+    being the fixed trace overhead). Per-src top-M within the group;
+    the caller re-ranks globally across each src's <= 2 groups."""
 
     def per_cell(pdf):
         import numpy as np
         import pandas as pd
 
-        Q = np.floor(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            * 1e6
-            + 0.5
-        ).astype(np.int64)
+        Q = snap_np(pdf["embedding"], GRID)
         ids = pdf["id"].to_numpy()
         own = pdf["own"].to_numpy()
         B, bids = Q[own], ids[own]
         if bids.size == 0:
             return pd.DataFrame({"src": [], "dst": [], "d": []})
-        na = (Q * Q).sum(axis=1)
-        D = na[:, None] + na[own][None, :] - 2 * (Q @ B.T)
+        D = sq_dists(Q, B)
         src_l, dst_l, d_l = [], [], []
         for i in range(ids.size):
             mask = bids != ids[i]
@@ -582,12 +583,11 @@ def nsw_graph_from_vectors(
     )
     from youtube_etl_project_spark.plans.exact_kmeans import (
         kmeans_train_exact,
-        quantize_vectors,
     )
 
     spark = df.sparkSession
     nn = df.filter(F.col(vec).isNotNull())
-    qe = pin(quantize_vectors(nn, id_col, vec))
+    qe = pin(grid_rows(nn, id_col, vec, GRID, id_out="id", pos="pos"))
     k_cells, _ = auto_ivf_geometry(df.count())
     books = kmeans_train_exact(qe, k=k_cells, iters=2)
     emb = nn.select(F.col(id_col).alias("id"), F.col(vec).alias("embedding"))
@@ -718,11 +718,10 @@ def _alpha_prune_blocked(cand_emb: DataFrame) -> DataFrame:
     embedding) — ≤ 2·DEG_CAP rows per group by construction — keep edge
     (src, w) unless some candidate v STRICTLY closer to src (lexsort by
     (d, id), the same tiebreak as every trace here) has
-    3·d²(v,w) < 2·d²(src,w). Distances are the same FLOOR(v·1e6+0.5)
-    grid int64s the oracle computes (|3·d²| ≤ 3·64·(2e6)² ≈ 7.7e14 <<
-    2^63 — exact), so this is a plan optimization over the equivalent
-    n·deg²-pair component join, not a semantics change (the
-    _knn_parts_blocked precedent, measured ~6× there)."""
+    3·d²(v,w) < 2·d²(src,w). Distances are the same grid int64s the
+    oracle computes (|3·d²| ≤ 3·64·(2e6)² ≈ 7.7e14 << 2^63 — exact), so
+    this is a plan optimization over the equivalent n·deg²-pair
+    component join, not a semantics change."""
 
     def per_src(pdf):
         import numpy as np
@@ -730,16 +729,12 @@ def _alpha_prune_blocked(cand_emb: DataFrame) -> DataFrame:
 
         if not len(pdf):
             return pd.DataFrame({"src": [], "dst": [], "d": []})
-        Q = np.floor(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1e6
-            + 0.5
-        ).astype(np.int64)
+        Q = snap_np(pdf["embedding"], GRID)
         ids = pdf["dst"].to_numpy()
         dw = pdf["d"].to_numpy()
         order = np.lexsort((ids, dw))
         Q, ids, dw = Q[order], ids[order], dw[order]
-        na = (Q * Q).sum(axis=1)
-        D = na[:, None] + na[None, :] - 2 * (Q @ Q.T)
+        D = sq_dists(Q, Q)
         k = ids.size
         before = np.triu(np.ones((k, k), dtype=bool), 1)  # [v,w]: v<w order
         dominated = ((3 * D < 2 * dw[None, :]) & before).any(axis=0)
@@ -1040,12 +1035,12 @@ def _nsw_alpha_index_path(spark: SparkSession, sf_dir: str) -> str:
 )
 def embed_nsw_alpha_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     path = _nsw_alpha_index_path(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_qe = quantize_vectors(
-        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding"
+    queries_qe = grid_rows(
+        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding",
+        GRID, id_out="id", pos="pos"
     )
     return ann_index.nsw_query(
         queries_qe, path, topk=_TOPK, beam=_B, rounds=_T
@@ -1075,12 +1070,12 @@ def embed_nsw_alpha_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embed_nsw_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     path = _nsw_index_path(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_qe = quantize_vectors(
-        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding"
+    queries_qe = grid_rows(
+        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding",
+        GRID, id_out="id", pos="pos"
     )
     return ann_index.nsw_query(
         queries_qe, path, topk=_TOPK, beam=_B, rounds=_T
@@ -1325,12 +1320,12 @@ def embed_nsw_online_ingest_ann(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     path = _online_ingest_index_path(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_qe = quantize_vectors(
-        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding"
+    queries_qe = grid_rows(
+        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding",
+        GRID, id_out="id", pos="pos"
     )
     return ann_index.nsw_query(
         queries_qe, path, topk=_TOPK, beam=_B, rounds=_T

@@ -37,6 +37,7 @@ from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.quantization import (
     pq_train_exact_rows,
 )
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -521,13 +522,13 @@ def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
 )
 def embed_ivfpq_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     path = _ivfpq_index_path(spark, sf_dir)
     n, n_probe = ann_index.ivfpq_meta(spark, path)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_qe = quantize_vectors(
-        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding"
+    queries_qe = grid_rows(
+        emb.filter(F.col("vec_id") < _N_QUERIES), "vec_id", "embedding",
+        GRID, id_out="id", pos="pos"
     )
     return ann_index.ivfpq_query(
         queries_qe, path, n_probe=n_probe, topk=_TOPK, rerank=_refine_r(n)

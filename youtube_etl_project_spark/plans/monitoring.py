@@ -31,12 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from youtube_etl_project_spark.operators.grid import GRID, snap
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
 _DIM = 64
 _BINS = 8
-_SCALE = 1_000_000  # float -> fixed-point grid, the shared _ANN_SCALE grid
 _SPAN = 500_000  # fixture embeddings live in ~[-0.5, 0.5); edges clamp
 
 
@@ -45,7 +45,7 @@ _SPAN = 500_000  # fixture embeddings live in ~[-0.5, 0.5); edges clamp
     oracle=f"""
         WITH vals AS (
             SELECT e.label % 2 AS grp, u.pos - 1 AS dim,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_SCALE} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -118,7 +118,7 @@ def embed_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select((F.col("label") % 2).alias("grp"), "embedding"),
         dims=_DIM,
         bins=_BINS,
-        scale=_SCALE,
+        scale=GRID,
         span=_SPAN,
     )
 
@@ -143,9 +143,7 @@ def drift_report(
     ).select(
         "grp",
         F.col("dim").cast("long").alias("dim"),
-        F.floor(F.col("vf").cast("double") * scale + F.lit(0.5))
-        .cast("long")
-        .alias("q"),
+        snap(F.col("vf"), scale).alias("q"),
     )
     binned = vals.select(
         "grp",

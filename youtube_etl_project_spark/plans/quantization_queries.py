@@ -22,13 +22,13 @@ from pyspark.sql import functions as F
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators import quantization as pq
 from youtube_etl_project_spark.operators.checkpointing import pin
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
 _M, _DIM, _K, _ITERS = 8, 64, 16, 2
 _N_QUERIES, _TOPK = 5, 10
 _DSUB = _DIM // _M
-_QGRID = pq.QGRID
 
 
 def _pq_exact_train_ctes(iters: int = _ITERS) -> str:
@@ -43,7 +43,7 @@ def _pq_exact_train_ctes(iters: int = _ITERS) -> str:
         f"""qe AS MATERIALIZED (
             SELECT vec_id, CAST((u.pos - 1) // {_DSUB} AS BIGINT) AS sub,
                    (u.pos - 1) % {_DSUB} AS pos,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_QGRID} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -132,7 +132,7 @@ def _pq_exact_parts(
     # the three converted queries share one training run per fixture
     books = fixture_cache.cached_model(
         "pq_book", sf_dir, lambda: pq.pq_train_exact(
-            emb, "vec_id", "embedding", _M, _DIM, _K, _ITERS, _QGRID
+            emb, "vec_id", "embedding", _M, _DIM, _K, _ITERS, GRID
         )
     )
     cb = spark.createDataFrame(
@@ -141,7 +141,7 @@ def _pq_exact_parts(
     )
     qe = pin(
         pq.quantized_components(
-            emb, "vec_id", "embedding", _M, _DIM, _QGRID
+            emb, "vec_id", "embedding", _M, _DIM, GRID
         ).withColumnRenamed("id", "vec_id")
     )
     d = F.col("q") - F.col("cq")
@@ -187,7 +187,7 @@ def _pq_exact_adc(dists: DataFrame, enc: DataFrame) -> DataFrame:
             ) GROUP BY 1
         )
         SELECT vec_id,
-               ROUND(SQRT(CAST(sse AS DOUBLE) / {_DIM}) / {_QGRID}.0, 6)
+               ROUND(SQRT(CAST(sse AS DOUBLE) / {_DIM}) / {GRID}.0, 6)
                    AS pq_rmse
         FROM sse
     """,
@@ -214,7 +214,7 @@ def embed_pq_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(
             F.sqrt(F.col("sse").cast("double") / F.lit(float(_DIM)))
-            / F.lit(float(_QGRID)),
+            / F.lit(float(GRID)),
             6,
         ).alias("pq_rmse"),
     )
@@ -361,7 +361,7 @@ def _pq_v1_codebook_q() -> list[tuple[int, int, int, int]]:
     with open(path) as f:
         cb = json.load(f)["codebooks"]  # m × k × dsub
     return [
-        (sub, code, pos, int(math.floor(v * 1_000_000 + 0.5)))
+        (sub, code, pos, int(math.floor(v * GRID + 0.5)))
         for sub, codes in enumerate(cb)
         for code, vec in enumerate(codes)
         for pos, v in enumerate(vec)
@@ -443,6 +443,15 @@ def _pq_v1_dists(spark: SparkSession, qe: DataFrame) -> DataFrame:
     )
 
 
+def _v1_components(emb: DataFrame) -> DataFrame:
+    """(vec_id, sub, pos, q) grid rows in the v1 codebook's subspaces."""
+    return grid_rows(emb, "vec_id", "embedding", GRID).select(
+        "vec_id",
+        (F.col("j") / _PQ_DSUB).cast("long").alias("sub"),
+        (F.col("j") % _PQ_DSUB).alias("pos"),
+        "q",
+    )
+
 
 @register(
     "embed_pq_encode_v1",
@@ -484,18 +493,7 @@ def _pq_v1_dists(spark: SparkSession, qe: DataFrame) -> DataFrame:
 
 def embed_pq_encode_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            (F.col("j") / _PQ_DSUB).cast("long").alias("sub"),
-            (F.col("j") % _PQ_DSUB).alias("pos"),
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
+    qe = _v1_components(emb)
     dists = _pq_v1_dists(spark, qe)
     w = Window.partitionBy("vec_id", "sub").orderBy(
         F.asc("dist"), F.asc("code")
@@ -555,18 +553,7 @@ def _pq_v1_spark_parts(spark: SparkSession, sf_dir: str):
     DataFrames, all exact-bigint.  ``dists`` feeds both codes and lut, so
     it is pinned once (CLAUDE.md: multi-referenced derived frames)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            (F.col("j") / _PQ_DSUB).cast("long").alias("sub"),
-            (F.col("j") % _PQ_DSUB).alias("pos"),
-            F.floor(
-                F.col("e").cast("double") * F.lit(1_000_000.0) + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
+    qe = _v1_components(emb)
     dists = pin(_pq_v1_dists(spark, qe))
     w = Window.partitionBy("vec_id", "sub").orderBy(
         F.asc("dist"), F.asc("code")

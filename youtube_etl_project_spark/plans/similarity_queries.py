@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache, similarity
+from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -179,7 +180,7 @@ def embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_TABLES, _ANN_PLANES, _ANN_SCALE = 4, 4, 1_000_000
+_ANN_TABLES, _ANN_PLANES = 4, 4
 
 
 @register(
@@ -195,7 +196,7 @@ _ANN_TABLES, _ANN_PLANES, _ANN_SCALE = 4, 4, 1_000_000
                  range({_DIM}) rj
         ), qe AS (
             SELECT vec_id, u.pos - 1 AS j,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_ANN_SCALE} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -251,7 +252,7 @@ def embed_lsh_ann_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
     return similarity.lsh_ann_md5(
         queries, candidates, dim=_DIM, n_tables=_ANN_TABLES,
-        n_planes=_ANN_PLANES, k=5, scale=_ANN_SCALE,
+        n_planes=_ANN_PLANES, k=5, scale=GRID,
     )
 
 
@@ -335,11 +336,10 @@ def _ivf_trained_parts(spark: SparkSession, sf_dir: str):
     """Shared trained-IVF inputs: pinned (id, pos, q) grid rows, the
     cached exact-grid codebook, and the auto (K, n_probe) geometry."""
     from youtube_etl_project_spark.operators.checkpointing import pin
-    from youtube_etl_project_spark.plans.exact_kmeans import quantize_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = pin(quantize_vectors(
-        emb.filter(F.col("embedding").isNotNull()), "vec_id", "embedding"
+    qe = pin(grid_rows(
+        emb, "vec_id", "embedding", GRID, id_out="id", pos="pos"
     ))
     k_cells, n_probe, books = _ivf_model(spark, sf_dir, qe)
     return qe, books, k_cells, n_probe
@@ -506,7 +506,7 @@ def _ivf_v1_centroids_q() -> list[tuple[int, int, int]]:
     with open(path) as f:
         cents = json.load(f)["centroids"]
     return [
-        (cell, j, int(math.floor(c * 1_000_000 + 0.5)))
+        (cell, j, int(math.floor(c * GRID + 0.5)))
         for cell, vec in enumerate(cents)
         for j, c in enumerate(vec)
     ]
@@ -578,7 +578,7 @@ def _ivf_v1_dists(spark: SparkSession, qe: DataFrame) -> DataFrame:
         WITH cents(cell, j, cq) AS (VALUES {_IVF_V1_VALUES}),
         qe AS (
             SELECT vec_id, u.pos - 1 AS j,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_ANN_SCALE} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -639,18 +639,7 @@ def _ivf_v1_dists(spark: SparkSession, qe: DataFrame) -> DataFrame:
 )
 def embed_ivf_ann_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qe = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.posexplode("embedding").alias("j", "e"))
-        .select(
-            "vec_id",
-            "j",
-            F.floor(
-                F.col("e").cast("double") * F.lit(float(_ANN_SCALE))
-                + F.lit(0.5)
-            ).cast("long").alias("q"),
-        )
-    )
+    qe = grid_rows(emb, "vec_id", "embedding", GRID)
     dists = _ivf_v1_dists(spark, qe)
     wc = Window.partitionBy("vec_id").orderBy(
         F.asc("dist"), F.asc("cell")
@@ -907,7 +896,7 @@ _MP_TABLES = 2  # HALF the flagship twin's tables — multiprobe makes it up
                  range({_DIM}) rj
         ), qe AS (
             SELECT vec_id, u.pos - 1 AS j,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {_ANN_SCALE} + 0.5)
+                   CAST(FLOOR(CAST(u.v AS DOUBLE) * {GRID} + 0.5)
                         AS BIGINT) AS q
             FROM embeddings e CROSS JOIN LATERAL (
                 SELECT unnest(e.embedding) AS v,
@@ -980,6 +969,6 @@ def embed_lsh_multiprobe_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
     return similarity.lsh_ann_md5(
         queries, candidates, dim=_DIM, n_tables=_MP_TABLES,
-        n_planes=_ANN_PLANES, k=5, scale=_ANN_SCALE,
+        n_planes=_ANN_PLANES, k=5, scale=GRID,
         multiprobe=_ANN_PLANES,
     )

@@ -566,3 +566,104 @@ def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
         assert rebuilds == [1]
     finally:
         os.remove(marker)
+
+
+def test_probe_ranking_keeps_null_and_tie_order(spark, tmp_path):
+    """ivf_query ranks probe cells on the driver; ivf_topk ranks them
+    with Spark Columns. They must agree where Spark's ordering decides:
+    a NULL query vector (every distance NULL, so cells come in index
+    order and its k rows carry a NULL cosine) and queries equidistant
+    from two or four centroids (ties go to the lower cell)."""
+    from youtube_etl_project_spark.operators.ann_index import _assign
+
+    cents = [[0.0, 0.0], [2.0, 0.0], [0.0, 2.0], [2.0, 2.0]]
+    ticks = (-0.5, 0.25, 0.5, 1.0, 1.5, 1.75, 2.5)
+    cand = spark.createDataFrame(
+        [(i, [x, y]) for i, (x, y) in enumerate(
+            (x, y) for x in ticks for y in ticks
+        )],
+        "vec_id bigint, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf_ties")
+    spark.createDataFrame(
+        list(enumerate(cents)), "cell int, centroid array<double>"
+    ).coalesce(1).write.parquet(f"{path}/centroids")
+    _assign(cand, cents, "vec_id", "embedding").write.partitionBy(
+        "cell"
+    ).parquet(f"{path}/assignments")
+    queries = spark.createDataFrame(
+        [
+            (100, [1.0, 0.0]),  # cells 0 = 1, then 2 = 3
+            (101, None),
+            (102, [1.0, 1.0]),  # all four cells equidistant
+            (103, [2.0, 1.0]),  # cells 1 = 3, then 0 = 2
+        ],
+        "query_id bigint, embedding array<float>",
+    )
+    candidates = cand.select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    for n_probe in (1, 2, 3):
+        got = ivf_query(queries, path, k=5, n_probe=n_probe).collect()
+        want = similarity.ivf_topk(
+            queries, candidates, cents, k=5, n_probe=n_probe
+        ).collect()
+        assert sorted(map(tuple, got), key=lambda t: (t[0], t[2])) == sorted(
+            map(tuple, want), key=lambda t: (t[0], t[2])
+        ), n_probe
+        null_rows = [r for r in got if r.query_id == 101]
+        assert len(null_rows) == 5 and all(r.cosine is None for r in null_rows)
+    # the NULL query probed cells 0..n_probe-1 only
+    by_id = {
+        r.id: r.cell
+        for r in _assign(cand, cents, "vec_id", "embedding").collect()
+    }
+    got1 = ivf_query(queries, path, k=5, n_probe=1).collect()
+    assert {by_id[r.neighbor_id] for r in got1 if r.query_id == 101} == {0}
+    assert {by_id[r.neighbor_id] for r in got1 if r.query_id == 102} == {0}
+    assert {by_id[r.neighbor_id] for r in got1 if r.query_id == 103} == {1}
+
+
+def test_warm_probe_job_budget(spark, sf_dir):
+    """Timing-free plan-shape guard for build-once/probe-many queries: a
+    warm call reuses the schema, model and row count known since the
+    build. The second embed_ivf_index_ann call builds its DataFrame with
+    at most one Spark job (the query-batch collect), and the second
+    dedup_minhash_lsh_md5 and record_linkage_mutual_best calls run no
+    parquet schema-inference job. Jobs are counted per job group."""
+    import uuid
+
+    from youtube_etl_project_spark.registry import load_all_plans
+
+    specs = load_all_plans()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def build_jobs(name) -> "list[str]":
+        """Stage names of each job that building ``name``'s DataFrame
+        launched."""
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            specs[name].fn(spark, sf_dir)
+        finally:
+            sc._jsc.clearJobGroup()
+        out = []
+        for j in sorted(tracker.getJobIdsForGroup(group)):
+            info = tracker.getJobInfo(j)
+            stages = [tracker.getStageInfo(s) for s in info.stageIds]
+            out.append("|".join(s.name for s in stages if s))
+        return out
+
+    names = (
+        "embed_ivf_index_ann",
+        "dedup_minhash_lsh_md5",
+        "record_linkage_mutual_best",
+    )
+    for name in names:
+        build_jobs(name)  # cold: builds the cache entries
+    warm = {name: build_jobs(name) for name in names}
+    assert len(warm["embed_ivf_index_ann"]) <= 1, warm
+    for name in names[1:]:
+        inference = [j for j in warm[name] if j.startswith("parquet at")]
+        assert not inference, (name, warm[name])

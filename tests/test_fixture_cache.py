@@ -142,3 +142,83 @@ def test_no_module_level_cache_dict_outside_fixture_cache():
                 if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
             ]
     assert not offenders, offenders
+
+
+def test_stats_count_a_miss_then_a_hit_per_tier(tmp_path):
+    src = tmp_path / "fixture"
+    src.mkdir()
+    _write(str(src), "a.parquet", "one")
+    before = fixture_cache.stats()
+
+    def build(path):
+        _write(path, "_SUCCESS", "")
+
+    for _ in range(2):
+        fixture_cache.cached_build("s_", str(src), build)
+        fixture_cache.cached_model("s_", str(src), lambda: 1)
+    after = fixture_cache.stats()
+    for tier in ("frames", "models"):
+        assert after[tier]["misses"] - before[tier]["misses"] == 1, tier
+        assert after[tier]["hits"] - before[tier]["hits"] == 1, tier
+        assert after[tier]["seconds"] >= before[tier]["seconds"], tier
+    # a copy: callers cannot reset the counters through it
+    after["frames"]["hits"] = -1
+    assert fixture_cache.stats()["frames"]["hits"] >= 1
+
+
+def test_fingerprint_of_a_single_file(tmp_path):
+    f = _write(str(tmp_path), "t.parquet", "abc")
+    f1 = fixture_cache.fingerprint(f)
+    assert f1 == fixture_cache.fingerprint(f)
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert fixture_cache.fingerprint(f) != f1
+
+
+def test_cache_tier_frames_are_read_through_read_frame():
+    """Frames written by ``cached_build`` (and the persisted ANN indexes)
+    are read with ``fixture_cache.read_frame``, which reuses the schema
+    recorded at the dir's fingerprint. A plain ``.read.parquet`` of such
+    a dir launches a schema-inference job on every warm call. Scanned
+    from source: ``operators/ann_index.py`` makes no ``.read.parquet(``
+    call, and no package module reads ``f"{path}/..."`` or a
+    ``*_path(...)`` cache dir with it."""
+    owner = PKG / "operators" / "fixture_cache.py"
+    ann = PKG / "operators" / "ann_index.py"
+
+    def read_parquet_arg(node):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "read"
+        ):
+            return None
+        return node.args[0] if node.args else ast.Constant(None)
+
+    def cache_dir(arg) -> bool:
+        if isinstance(arg, ast.JoinedStr) and len(arg.values) > 1:
+            head, rest = arg.values[0], arg.values[1]
+            return (
+                isinstance(head, ast.FormattedValue)
+                and isinstance(rest, ast.Constant)
+                and str(rest.value).startswith("/")
+            )
+        return (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Name)
+            and arg.func.id.endswith("_path")
+        )
+
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        if py == owner:
+            continue
+        for node in ast.walk(ast.parse(py.read_text(), str(py))):
+            arg = read_parquet_arg(node)
+            if arg is not None and (py == ann or cache_dir(arg)):
+                offenders.append(f"{py.relative_to(PKG)}:{node.lineno}")
+    assert not offenders, (
+        f"cache-tier frames read without fixture_cache.read_frame: {offenders}"
+    )

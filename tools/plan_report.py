@@ -77,7 +77,8 @@ SHOWCASE = {
     "band-bucket self-join, verify on candidates — same exchanges as "
     "the xxhash flagship, every value reproducible in ANSI SQL",
     "embed_ivf_index_ann": "persisted-index ANN serving: probe cells "
-    "derived from the driver-held centroid model, cell IN (...) filter "
+    "ranked on the driver against the cached centroid model and "
+    "broadcast back as a local relation, cell IN (...) filter "
     "on the partitioned assignments scan → partition pruning reads "
     "n_probe/K of the index files",
     "dedup_prefix_filter_join": "prefix-filtered similarity join: the "

@@ -1,4 +1,5 @@
-"""Persisted IVF index: build once, query many, append increments.
+"""Persisted ANN indexes (IVF, IVF-PQ, NSW): build once, query many,
+append increments.
 
 ``similarity.ivf_topk`` trains and assigns on every call — right for the
 oracle gate, wrong for production, where the corpus is ~static and
@@ -6,12 +7,20 @@ queries arrive forever. This module materializes the two IVF artifacts
 the same way ``dedup.lsh_index`` does for near-dup:
 
 * ``<path>/centroids`` — the K×dim coarse quantizer (the *model*; a few
-  KB, read driver-side at query time).
+  KB). :func:`ivf_centroids` holds it in the model tier of
+  ``operators/fixture_cache``, so a warm probe reads no file for it.
 * ``<path>/assignments`` — (id, embedding, cell) **partitioned by
   cell**, so probing n_probe of K cells is PARTITION PRUNING: a query
   batch physically reads n_probe/K of the index files (asserted in
   tests/test_ann_index.py), the file-skipping twin of the Z-order story
   in operators/layout.py.
+
+Every index dir is read through ``fixture_cache.read_frame``, whose
+schema is held in the model tier: a warm probe launches no
+schema-inference job, and an append changes the dir's fingerprint, so
+the next read re-infers once. Probe cells are ranked on the driver
+against the cached model-sized codebooks; only the answer's own scans
+and joins run as Spark jobs.
 
 Increments: ``ivf_append`` assigns new vectors with the FROZEN centroids
 and appends only their cell partitions — O(batch) work, no corpus
@@ -24,6 +33,8 @@ IVF operational caveat, handled by monitoring cell sizes via
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,7 +86,7 @@ def ivf_append(
     append only the touched cell partitions. O(batch); the existing
     index's data is never rewritten.
 
-    IDEMPOTENT (ADVICE r10 follow-through): foreachBatch delivery is
+    IDEMPOTENT: foreachBatch delivery is
     at-least-once, so a replayed batch excludes ids a previous attempt
     already appended — one pruned scan of the batch's own cell
     partitions (eagerly pinned before the append so the plan never
@@ -88,7 +99,9 @@ def ivf_append(
         r.cell for r in assigned.select("cell").distinct().collect()
     )
     existing = (
-        new_vectors.sparkSession.read.parquet(f"{path}/assignments")
+        fixture_cache.read_frame(
+            new_vectors.sparkSession, f"{path}/assignments"
+        )
         .filter(F.col("cell").isin(cells))
         .select("id")
     )
@@ -100,8 +113,18 @@ def ivf_append(
 
 
 def ivf_centroids(spark: SparkSession, path: str) -> "list[list[float]]":
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    return [list(map(float, r.centroid)) for r in rows]
+    """The K×dim quantizer in cell order, held in the model tier."""
+
+    def train():
+        rows = fixture_cache.read_frame(spark, f"{path}/centroids").collect()
+        return [
+            list(map(float, r.centroid))
+            for r in sorted(rows, key=lambda r: r.cell)
+        ]
+
+    return fixture_cache.cached_model(
+        "ivf_centroids", f"{path}/centroids", train
+    )
 
 
 def ivf_cell_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -109,14 +132,14 @@ def ivf_cell_stats(spark: SparkSession, path: str) -> DataFrame:
     siblings means the frozen quantizer no longer fits the data and the
     index should be rebuilt."""
     return (
-        spark.read.parquet(f"{path}/assignments")
+        fixture_cache.read_frame(spark, f"{path}/assignments")
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
 
 
 # ---------------------------------------------------------------------------
-# Persisted IVF-PQ index (round 9): the build-once/probe-many twin of the
+# Persisted IVF-PQ index: the build-once/probe-many twin of the
 # embed_ivfpq_ann capstone (plans/ivfpq.py — FAISS IndexIVFPQ + refine).
 # Unlike the float ivf_* family above, every artifact here is EXACT-GRID
 # integer data (the plans/exact_kmeans 1e6 grid), so the persisted probe
@@ -158,7 +181,7 @@ def ivfpq_build(
     rule (plans/ivfpq._refine_r), whose oracle twin (the ``cnt`` CTE)
     and the in-memory capstone both count raw rows, so storing the
     post-null-filter count would silently diverge the persisted twin's
-    shortlist on any corpus with null embeddings (ADVICE r9)."""
+    shortlist on any corpus with null embeddings."""
     spark = qe.sparkSession
     cb.coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
     pqcb.coalesce(1).write.mode("overwrite").parquet(f"{path}/pq")
@@ -174,8 +197,13 @@ def ivfpq_build(
 
 
 def ivfpq_meta(spark: SparkSession, path: str) -> "tuple[int, int]":
-    r = spark.read.parquet(f"{path}/meta").first()
-    return int(r.n_vectors), int(r.n_probe)
+    """(n_vectors, n_probe) of the index, held in the model tier."""
+
+    def train():
+        r = fixture_cache.read_frame(spark, f"{path}/meta").first()
+        return int(r.n_vectors), int(r.n_probe)
+
+    return fixture_cache.cached_model("ivfpq_meta", f"{path}/meta", train)
 
 
 def ivfpq_query(
@@ -197,8 +225,8 @@ def ivfpq_query(
     from pyspark.sql import Window
 
     spark = queries_qe.sparkSession
-    cb = spark.read.parquet(f"{path}/coarse")
-    pqcb = spark.read.parquet(f"{path}/pq")
+    cb = fixture_cache.read_frame(spark, f"{path}/coarse")
+    pqcb = fixture_cache.read_frame(spark, f"{path}/pq")
     qq = queries_qe.withColumnRenamed("id", "query_id")
     d = F.col("q") - F.col("cq")
     wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cell"))
@@ -219,7 +247,11 @@ def ivfpq_query(
         spark.createDataFrame(probe_rows, "query_id bigint, cell int")
     )
     # per-(query, probed cell) residuals -> exact-int ADC lookup table
-    dsub = pqcb.agg(F.max("pos")).first()[0] + 1
+    dsub = fixture_cache.cached_model(
+        "ivfpq_dsub",
+        f"{path}/pq",
+        lambda: pqcb.agg(F.max("pos")).first()[0] + 1,
+    )
     rqp = (
         probes.join(qq, "query_id")
         .join(F.broadcast(cb), ["cell", "pos"])
@@ -242,7 +274,7 @@ def ivfpq_query(
         .agg(F.sum(dl * dl).cast("long").alias("d"))
     )
     codes = (
-        spark.read.parquet(f"{path}/codes")
+        fixture_cache.read_frame(spark, f"{path}/codes")
         .filter(F.col("cell").isin(cells))
         .withColumnRenamed("id", "neighbor_id")
     )
@@ -264,7 +296,7 @@ def ivfpq_query(
     # exact refine stays inside the probed partitions: every ADC candidate
     # came from a probed cell, so the components scan is pruned too
     nq = (
-        spark.read.parquet(f"{path}/components")
+        fixture_cache.read_frame(spark, f"{path}/components")
         .filter(F.col("cell").isin(cells))
         .select(F.col("id").alias("neighbor_id"), "pos", F.col("q").alias("nq"))
     )
@@ -295,6 +327,27 @@ def ivfpq_query(
     )
 
 
+def _probe_cells(
+    vec: "list | None", centroids: np.ndarray, n_probe: int
+) -> "list[int]":
+    """The ``n_probe`` nearest cells of one query vector, by the arithmetic
+    of ``similarity.ivf_topk``'s Column form: d = Σ (double(a) − c)²
+    summed left to right from 0.0, cells ordered by (d, cell). Spark's
+    NULL and NaN ordering is kept too: a NULL vector, a NULL component
+    or a length mismatch makes every cell's d NULL, so the cells come
+    in index order, and a NaN d sorts after every number."""
+    k, dim = centroids.shape
+    if vec is None or len(vec) != dim or any(a is None for a in vec):
+        return list(range(min(n_probe, k)))
+    diff = np.asarray(vec, dtype=np.float64) - centroids
+    d = np.cumsum(diff * diff, axis=1)[:, -1]
+    order = sorted(
+        range(k),
+        key=lambda c: (1, 0.0, c) if np.isnan(d[c]) else (0, d[c], c),
+    )
+    return order[:n_probe]
+
+
 def ivf_query(
     queries: DataFrame,
     path: str,
@@ -305,58 +358,44 @@ def ivf_query(
 ) -> DataFrame:
     """Top-k cosine against the persisted index.
 
-    The query batch computes its probe cells map-side against the
-    driver-held centroid matrix; the assignments scan carries a
-    ``cell IN (probed)`` predicate, which Spark turns into partition
+    The query batch (small by contract — it is the broadcast side of
+    every top-k here) is collected once and its probe cells are ranked
+    on the driver against the cached centroid model, as ``nsw_query``
+    ranks its entry cells. The (query, vector, cell) probe rows re-enter
+    the plan as a broadcast local relation, and the assignments scan
+    carries ``cell IN (probed)``, which Spark turns into partition
     pruning — only the probed cells' files are read. Returns
-    (query_id, neighbor_id, rank, cosine) like the in-memory twins.
+    (query_id, neighbor_id, rank, cosine) like the in-memory twins;
+    ``similarity.ivf_topk`` keeps the Column form of the same ranking.
     """
+    from pyspark.sql import Window
+
     spark = queries.sparkSession
-    centroids = ivf_centroids(spark, path)
-    # One nested centroid-matrix literal + indexed transform (see
-    # similarity.ivf_topk): per-element F.lit at auto-scaled K is a py4j
-    # and expression-tree blowup.
-    dists = F.transform(
-        F.lit(centroids),
-        lambda cvec, i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec), cvec, lambda a, b: (a.cast("double") - b) ** 2
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("d"),
-            i.alias("cell"),
-        ),
+    centroids = np.asarray(ivf_centroids(spark, path), dtype=np.float64)
+    batch = queries.select(query_id, F.col(vec).alias("__qv")).toArrow()
+    rows, probe_cells = [], []
+    for i, qv in enumerate(batch.column("__qv").to_pylist()):
+        for c in _probe_cells(qv, centroids, n_probe):
+            rows.append(i)
+            probe_cells.append(c)
+    # An Arrow table becomes a LocalRelation: broadcasting it reads no
+    # RDD, unlike a DataFrame made from Python rows.
+    probes = F.broadcast(
+        spark.createDataFrame(
+            batch.take(rows).append_column(
+                "cell", pa.array(probe_cells, pa.int32())
+            )
+        )
     )
-    probed = queries.select(
-        query_id,
-        F.col(vec).alias("__qv"),
-        F.transform(
-            F.slice(F.array_sort(dists), 1, n_probe),
-            lambda s: s.getField("cell"),
-        ).alias("__probes"),
-    )
-    # Distinct probed cells reach the scan as a pushable partition filter.
-    # The collect is bounded by the QUERY batch (queries broadcast in every
-    # top-k variant here — they are the small side by contract), and is
-    # what converts the probe set into literal partition pruning.
-    cells = sorted(
-        {c for r in probed.select("__probes").collect() for c in r[0]}
-    )
+    cells = sorted(set(probe_cells))
     assignments = (
-        spark.read.parquet(f"{path}/assignments")
+        fixture_cache.read_frame(spark, f"{path}/assignments")
         .filter(F.col("cell").isin(cells))
         .select(F.col("id").alias("neighbor_id"),
                 F.col("embedding").alias("__cv"), "cell")
     )
-    q = probed.select(
-        query_id, "__qv", F.explode("__probes").alias("cell")
-    )
-    from pyspark.sql import Window
-
     scored = (
-        q.join(assignments, "cell")
+        probes.join(assignments, "cell")
         .filter(F.col(query_id) != F.col("neighbor_id"))
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
@@ -376,7 +415,7 @@ def ivf_query(
 
 
 # ---------------------------------------------------------------------------
-# NSW graph serving index (round 10) — the persisted twin of
+# NSW graph serving index — the persisted twin of
 # plans/graph_ann's in-memory build, completing the promise in that
 # module's docstring: "a deployment buckets the persisted edge list by
 # src for shuffle-free probes". Layout at <path>:
@@ -422,7 +461,7 @@ def _nsw_coarse_model(spark: SparkSession, path: str):
 
     def train():
         books: "dict[tuple, int]" = {}
-        for r in spark.read.parquet(f"{path}/coarse").collect():
+        for r in fixture_cache.read_frame(spark, f"{path}/coarse").collect():
             books[(r.cell, r.pos)] = r.cq
         return (
             tuple(sorted({p for _, p in books})),
@@ -436,7 +475,7 @@ def _nsw_coarse_model(spark: SparkSession, path: str):
 def _load_nsw_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
     adj: "dict[int, set]" = {}
     for r in (
-        spark.read.parquet(f"{path}/edges")
+        fixture_cache.read_frame(spark, f"{path}/edges")
         .select("cell", "dst_cell")
         .distinct()
         .collect()
@@ -526,18 +565,14 @@ def nsw_query(
     is known BEFORE the action runs; superset cells only widen the
     pruning filter, the (id, pos) join drops their rows). Visited/beam
     state merges on the DRIVER between rounds — bounded by
-    q·(1 + rounds·beam·deg_cap) rows independent of corpus size, the
-    same beam-sized driver-state budget the collected frontiers
-    already used. Round 11: this replaced the 4-actions-per-round form
-    (frontier pin, dst-cells collect, growing visited union re-pin,
-    beam window) — the per-action planning/stage constant, not scan
-    bytes, dominated the probe (measured: bare pruned scans 0.05-0.15 s
-    vs 0.8 s per frontier action at sf0.1). Round 12: the per-action
-    pin()s are gone too — each fused action is collected exactly once
-    (loop state is driver-side), so checkpointing bought no reuse and
-    cost one extra eager job per round; plans stay audit-visible via
-    audit_plan. ``reliable`` is accepted for caller compatibility
-    (nsw_insert passes False) but no longer used: no pins remain here.
+    q·(1 + rounds·beam·deg_cap) rows independent of corpus size. One
+    fused action per round is what keeps the probe cheap: the
+    per-action planning/stage constant, not scan bytes, dominates it
+    (measured: bare pruned scans 0.05-0.15 s vs 0.8 s per frontier
+    action at sf0.1). Each fused action is collected exactly once and
+    the loop state is driver-side, so nothing is pinned; plans stay
+    audit-visible via audit_plan. ``reliable`` is accepted for caller
+    compatibility (nsw_insert passes False) but not used.
     Returns (query_id, neighbor_id, rank, dist_q).
 
     ``exclude`` (optional, single ``id`` column, batch-sized) removes
@@ -550,8 +585,8 @@ def nsw_query(
     from youtube_etl_project_spark.operators.checkpointing import audit_plan
 
     spark = queries_qe.sparkSession
-    comp = spark.read.parquet(f"{path}/components")
-    edges = spark.read.parquet(f"{path}/edges")
+    comp = fixture_cache.read_frame(spark, f"{path}/components")
+    edges = fixture_cache.read_frame(spark, f"{path}/edges")
     if exclude is not None:
         ex = F.broadcast(exclude.select("id").distinct())
         comp = comp.join(ex, "id", "left_anti")
@@ -624,10 +659,10 @@ def nsw_query(
         )
 
     adj = _nsw_cell_adjacency(spark, path)
-    # Round 12: ent/nd are collected exactly once each — the loop state
-    # lives on the driver, so the old per-action pin() bought no lineage
-    # reuse and cost one extra eager job per round (~4 jobs per probe).
-    # audit_plan keeps the plans visible to the plan-audit gates.
+    # ent/nd are collected exactly once each — the loop state lives on
+    # the driver, so a pin would buy no lineage reuse and cost one eager
+    # job per round. audit_plan keeps the plans visible to the
+    # plan-audit gates.
     ent = audit_plan(qdist(entry, qcells))
     # driver-side search state: (query_id, id) -> (d, cell). Bounded by
     # q·(1 + rounds·beam·deg_cap) independent of corpus size — the same
@@ -726,7 +761,7 @@ def nsw_insert(
     batch-insert semantics; intra-batch links arrive with later
     batches' searches).
 
-    IDEMPOTENT per batch (ADVICE r10): foreachBatch delivery is
+    IDEMPOTENT per batch: foreachBatch delivery is
     at-least-once, so a crash between this function's writes replays
     the whole batch. Each write therefore excludes what a previous
     attempt already landed — components anti-join existing (id, pos)
@@ -752,7 +787,7 @@ def nsw_insert(
     qe_new = grid_rows(nn, id_col, vec, GRID, id_out="id", pos="pos")
     if qe_new.isEmpty():
         return
-    cb = spark.read.parquet(f"{path}/coarse")
+    cb = fixture_cache.read_frame(spark, f"{path}/coarse")
     qq = qe_new.withColumnRenamed("id", "query_id")
     dc = F.col("q") - F.col("cq")
     wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cell"))
@@ -784,7 +819,9 @@ def nsw_insert(
     # 2) components of the new vectors -> their own cell partitions
     # (minus rows a replayed attempt already landed — pruned scan of
     # the batch's own cells only)
-    existing_comp = spark.read.parquet(f"{path}/components").filter(
+    existing_comp = fixture_cache.read_frame(
+        spark, f"{path}/components"
+    ).filter(
         F.col("cell").isin(new_cells)
     )
     comp_new = pin(  # scans the path it then appends to — pin first
@@ -798,7 +835,7 @@ def nsw_insert(
     )
     # 3) out-edges of the new vectors -> their own cell partitions
     # (same replay exclusion on (src, dst))
-    existing_out = spark.read.parquet(f"{path}/edges").filter(
+    existing_out = fixture_cache.read_frame(spark, f"{path}/edges").filter(
         F.col("cell").isin(new_cells)
     )
     out_new = pin(
@@ -835,7 +872,7 @@ def nsw_insert(
             F.col("dst_cell").alias("cell"),
         )
     )
-    existing = spark.read.parquet(f"{path}/edges").filter(
+    existing = fixture_cache.read_frame(spark, f"{path}/edges").filter(
         F.col("cell").isin(touched)
     )
     wsrc = Window.partitionBy("src").orderBy(F.asc("d"), F.asc("dst"))
@@ -863,8 +900,8 @@ def nsw_insert(
 
 
 def nsw_cell_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Per-cell health of the persisted NSW graph (VERDICT r10 #6 — the
-    graph twin of :func:`ivf_cell_stats`): node count, out-edge count,
+    """Per-cell health of the persisted NSW graph (the graph twin of
+    :func:`ivf_cell_stats`): node count, out-edge count,
     min/max out-degree, and the EDGELESS-node count — the observable
     form of the documented nsw_insert caveat (a vector whose top-2
     coarse cells held no indexed member at insert time attaches to
@@ -877,12 +914,12 @@ def nsw_cell_stats(spark: SparkSession, path: str) -> DataFrame:
     Reads each dataset once, aggregates — all bigint, oracle-friendly.
     Returns (cell, n_nodes, n_edges, n_edgeless, min_deg, max_deg)."""
     nodes = (
-        spark.read.parquet(f"{path}/components")
+        fixture_cache.read_frame(spark, f"{path}/components")
         .select("id", "cell")
         .distinct()
     )
     deg = (
-        spark.read.parquet(f"{path}/edges")
+        fixture_cache.read_frame(spark, f"{path}/edges")
         .groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("outd"))
     )
@@ -941,10 +978,10 @@ def nsw_compact(
     spark: SparkSession, path: str, max_files_per_cell: int = 1
 ) -> "dict[str, int]":
     """Compact fragmented cell partitions of the persisted NSW graph —
-    the post-ingest maintenance pass (VERDICT r10 #6): for each dataset
-    (edges, components), cells holding more than ``max_files_per_cell``
-    parquet files are read back, eagerly pinned (round-10 rule: a plan
-    may never scan the path its dynamic overwrite is rewriting — the
+    the post-ingest maintenance pass: for each dataset (edges,
+    components), cells holding more than ``max_files_per_cell`` parquet
+    files are read back, eagerly pinned (a plan may never scan the path
+    its dynamic overwrite is rewriting — the
     localCheckpoint materializes the rows FIRST), coalesced to one file
     per cell, and dynamic-partition-overwritten in place. Rewrite cost
     is proportional to the fragmented cells' data only — untouched
@@ -965,7 +1002,7 @@ def nsw_compact(
         if not frag:
             continue
         rows = pin(  # eager materialization BEFORE the overwrite
-            spark.read.parquet(f"{path}/{ds}").filter(
+            fixture_cache.read_frame(spark, f"{path}/{ds}").filter(
                 F.col("cell").isin(frag)
             ),
             reliable=False,

@@ -443,9 +443,27 @@ class ParquetTable:
         return self._read_path(os.path.join(self.root, hist[n_back]))
 
     def truncate(self) -> None:
-        """S9: TRUNCATE TABLE — commit an empty version preserving schema."""
-        if self.exists():
+        """S9: TRUNCATE TABLE — commit an empty version preserving schema.
+
+        The empty version is a directory holding only a commit record
+        with the current version's schema and ``rows: 0``, so no Spark
+        job runs: ``read()`` hands that schema to a reader that finds no
+        data files. A current version without a record is emptied
+        through a ``write``."""
+        base = self._pointer_version()
+        if base is None:
+            return
+        rec = self._commit_record(os.path.join(self.root, base))
+        if rec is None:
             self.write(self.read().limit(0))
+            return
+        prior = self.history()
+        version = f"v_{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self.root, version)
+        os.makedirs(out)
+        with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
+            json.dump({"schema": rec["schema"], "rows": 0}, f)
+        self._commit(version, base, prior)
 
     def delete_where(self, condition) -> int:
         """DELETE FROM table WHERE condition — the GDPR/right-to-erasure

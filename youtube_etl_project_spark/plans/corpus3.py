@@ -192,7 +192,7 @@ def text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache.cached_build(
         "hashemb_", sf_dir, _build, marker="emb/_SUCCESS"
     )
-    return spark.read.parquet(f"{path}/emb")
+    return fixture_cache.read_frame(spark, f"{path}/emb")
 
 
 def _hash_embedding_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.operators import dedup, graph
+from youtube_etl_project_spark.operators import dedup, fixture_cache, graph
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -351,7 +351,9 @@ def dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs_md5(
         docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.5,
-        signatures=spark.read.parquet(md5_sig_full_path(spark, sf_dir)),
+        signatures=fixture_cache.read_frame(
+            spark, md5_sig_full_path(spark, sf_dir)
+        ),
     )
     labels = graph.connected_components(pairs, src="id_a", dst="id_b")
     return docs.join(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.operators import dedup
+from youtube_etl_project_spark.operators import dedup, fixture_cache
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -197,7 +197,6 @@ def xx_sig_full_path(spark: SparkSession, sf_dir: str) -> str:
     :func:`md5_sig_full_path` (hashed shingle ids and signature slots are
     all bigint, so the parquet round trip is bit-exact); rows-only gate +
     tests/test_dedup.py recall floors keep checking the pair output."""
-    from youtube_etl_project_spark.operators import fixture_cache
 
     def _build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -233,7 +232,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", shingle_k=3, n_hashes=32, n_bands=8,
         threshold=0.5,
-        signatures=spark.read.parquet(xx_sig_full_path(spark, sf_dir)),
+        signatures=fixture_cache.read_frame(
+            spark, xx_sig_full_path(spark, sf_dir)
+        ),
     )
 
 
@@ -373,7 +374,9 @@ def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs_md5(
         docs, "doc_id", "text", n_hashes=_MD5_HASHES, n_bands=_MD5_BANDS,
         threshold=0.5,
-        signatures=spark.read.parquet(md5_sig_full_path(spark, sf_dir)),
+        signatures=fixture_cache.read_frame(
+            spark, md5_sig_full_path(spark, sf_dir)
+        ),
     )
 
 
@@ -796,7 +799,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the SAME materialized signature table across gate runs instead of
 # re-shingling the corpus per call (the dedup twin of the persisted-IVF
 # cache in plans/similarity_queries.py). Cache validity + cleanup via
-# operators.fixture_cache (ADVICE r10).
+# operators.fixture_cache.
 
 
 def md5_sig_full_path(spark: SparkSession, sf_dir: str) -> str:
@@ -816,7 +819,6 @@ def md5_sig_full_path(spark: SparkSession, sf_dir: str) -> str:
     string-arrays round-trip parquet exactly; the DuckDB oracles keep
     recomputing signatures in SQL, so a stale or wrong index fails the
     value hash."""
-    from youtube_etl_project_spark.operators import fixture_cache
 
     def _build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -833,8 +835,6 @@ def md5_sig_full_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _lsh_index_path(spark: SparkSession, sf_dir: str) -> str:
-    from youtube_etl_project_spark.operators import fixture_cache
-
     def _build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         is_batch = (
@@ -876,7 +876,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         < "1a"
     )
-    idx = spark.read.parquet(_lsh_index_path(spark, sf_dir))
+    idx = fixture_cache.read_frame(spark, _lsh_index_path(spark, sf_dir))
     return dedup.incremental_minhash_pairs_md5(
         None,
         docs.filter(is_batch),

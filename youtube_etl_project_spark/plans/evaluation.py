@@ -18,7 +18,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.operators import dedup
+from youtube_etl_project_spark.operators import dedup, fixture_cache
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.plans.dedup_queries import (
     _MD5_BANDS,
@@ -86,7 +86,9 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught = dedup.minhash_lsh_pairs_md5(
         docs, "doc_id", "text", n_hashes=_MD5_HASHES, n_bands=_MD5_BANDS,
         threshold=0.5,
-        signatures=spark.read.parquet(md5_sig_full_path(spark, sf_dir)),
+        signatures=fixture_cache.read_frame(
+            spark, md5_sig_full_path(spark, sf_dir)
+        ),
     ).select("id_a", "id_b", F.lit(1).alias("caught"))
     return (
         exact.join(caught, ["id_a", "id_b"], "left")
@@ -377,7 +379,9 @@ def dedup_ensemble_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     lex = dedup.minhash_lsh_pairs_md5(
         docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.5,
-        signatures=spark.read.parquet(md5_sig_full_path(spark, sf_dir)),
+        signatures=fixture_cache.read_frame(
+            spark, md5_sig_full_path(spark, sf_dir)
+        ),
     ).select("id_a", "id_b", F.lit(1).alias("__lex"))
     sem = dedup_hash_embed_cosine(spark, sf_dir).select(
         "id_a", "id_b", F.lit(1).alias("__sem")
@@ -504,7 +508,6 @@ def _ann_gt_path(spark: SparkSession, sf_dir: str) -> str:
     fixture's content fingerprint changes. The DuckDB oracle still
     recomputes both ground truths from raw parquet in SQL every gate
     run, so a stale/wrong cache fails the value hash, not just a test."""
-    from youtube_etl_project_spark.operators import fixture_cache
     from youtube_etl_project_spark.plans import quantization_queries as qq
     from youtube_etl_project_spark.plans import similarity_queries as sq
 
@@ -594,7 +597,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sq, _, _, _ = _ann_eval_parts()
     gt_path = _ann_gt_path(spark, sf_dir)
-    exact = spark.read.parquet(f"{gt_path}/mips")
+    exact = fixture_cache.read_frame(spark, f"{gt_path}/mips")
 
     def hits(ann: DataFrame, method: str, gt: DataFrame = None) -> DataFrame:
         marked = ann.select(
@@ -618,7 +621,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PQ family: graded against exact L2 ground truth (ITS metric) —
     # ADC/re-rank minimize squared distance, so MIPS ground truth would
     # mis-grade it; same fixture-cached build as the MIPS frame
-    exact_l2 = spark.read.parquet(f"{gt_path}/l2")
+    exact_l2 = fixture_cache.read_frame(spark, f"{gt_path}/l2")
 
     ivf = sq.embed_ivf_ann_v1(spark, sf_dir)
     lsh = sq.embed_lsh_ann_md5(spark, sf_dir)

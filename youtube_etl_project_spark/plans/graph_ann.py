@@ -46,6 +46,7 @@ from youtube_etl_project_spark.operators.grid import (
 )
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
+from youtube_etl_project_spark.sources.catalog import row_count
 
 _N_QUERIES, _TOPK = 10, 5
 _M = 8        # k-NN out-degree
@@ -534,10 +535,10 @@ def _memo_graph(
         prefix, sf_dir, _write, marker="cb/_SUCCESS"
     )
     return (
-        spark.read.parquet(f"{path}/edges"),
-        spark.read.parquet(f"{path}/qe"),
-        spark.read.parquet(f"{path}/assign"),
-        spark.read.parquet(f"{path}/cb"),
+        fixture_cache.read_frame(spark, f"{path}/edges"),
+        fixture_cache.read_frame(spark, f"{path}/qe"),
+        fixture_cache.read_frame(spark, f"{path}/assign"),
+        fixture_cache.read_frame(spark, f"{path}/cb"),
     )
 
 
@@ -1153,7 +1154,7 @@ def nsw_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embed_nsw_alpha_auto_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges3, qe, assign, _cb = nsw_alpha_graph(spark, sf_dir)
-    n = load_table(spark, sf_dir, "embeddings").count()
+    n = row_count(spark, sf_dir, "embeddings")
     t_rounds, beam = auto_search_geometry(n)
     return _beam_search(edges3, qe, assign, rounds=t_rounds, beam=beam)
 

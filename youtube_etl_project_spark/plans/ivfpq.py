@@ -40,6 +40,7 @@ from youtube_etl_project_spark.operators.quantization import (
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
+from youtube_etl_project_spark.sources.catalog import row_count
 
 _M, _DIM, _KPQ, _ITERS = 8, 64, 16, 2
 _DSUB = _DIM // _M
@@ -149,10 +150,10 @@ def _ivfpq_parts(spark: SparkSession, sf_dir: str):
     from youtube_etl_project_spark.plans.similarity_queries import _ivf_model
 
     path = _ivfpq_frames_path(spark, sf_dir)
-    qe = spark.read.parquet(f"{path}/qe")
-    assign = spark.read.parquet(f"{path}/assign")
-    qer = spark.read.parquet(f"{path}/qer")
-    enc = spark.read.parquet(f"{path}/enc")
+    qe = fixture_cache.read_frame(spark, f"{path}/qe")
+    assign = fixture_cache.read_frame(spark, f"{path}/assign")
+    qer = fixture_cache.read_frame(spark, f"{path}/qer")
+    enc = fixture_cache.read_frame(spark, f"{path}/enc")
     # the frames build trained both models, so these are hits; on a miss
     # they retrain from the cached frames rather than re-pinning qe
     _k_cells, n_probe, books = _ivf_model(spark, sf_dir, qe)
@@ -388,7 +389,7 @@ def ivfpq_refined(
     qe, cb, assign, qer, pqcb, n_probe, enc = _ivfpq_parts(spark, sf_dir)
     # parquet-metadata count (same driver-side action dedup_semantic
     # uses to size k — fine at any scale); feeds the integer R rule
-    rerank = _refine_r(load_table(spark, sf_dir, "embeddings").count())
+    rerank = _refine_r(row_count(spark, sf_dir, "embeddings"))
     wq = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
     probes = (
         kmeans_dists_exact(qe.filter(F.col("id") < _N_QUERIES), cb)
@@ -491,7 +492,7 @@ def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
         # raw row count INCLUDING null-embedding rows: the rerank rule's
         # oracle twin (cnt CTE) and the in-memory capstone both count raw
         # rows (ADVICE r9 — assign.count() would diverge under nulls)
-        n_raw = load_table(spark, sf_dir, "embeddings").count()
+        n_raw = row_count(spark, sf_dir, "embeddings")
         ann_index.ivfpq_build(
             assign, qe, _encode(qer, pqcb), cb, pqcb, n_probe, path,
             n_vectors=n_raw,

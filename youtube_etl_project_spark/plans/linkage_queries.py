@@ -125,7 +125,7 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache.cached_build(
         "linkage_pairs_", sf_dir, _build, marker="pairs/_SUCCESS"
     )
-    return spark.read.parquet(f"{path}/pairs")
+    return fixture_cache.read_frame(spark, f"{path}/pairs")
 
 
 @register(

@@ -9,6 +9,7 @@ from youtube_etl_project_spark.operators import fixture_cache, similarity
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
+from youtube_etl_project_spark.sources.catalog import row_count
 
 _N_QUERIES = 10  # fixed, small query set → broadcastable at any sf
 _DIM = 64
@@ -700,7 +701,7 @@ def embed_ivf_ann_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Built persisted indexes — the registered query below is the "query
 # many" half of build-once/query-many, so repeated gate runs probe the
 # SAME materialized index instead of retraining per call. Cache
-# validity + cleanup via operators.fixture_cache (ADVICE r10).
+# validity + cleanup via operators.fixture_cache.
 
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -712,7 +713,9 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
         # rounds, seeded sample init) → identical centroids, so the
         # persisted path is pinned result-identical to the in-memory twin
         # by tests/test_ann_index.py.
-        k_cells, _ = similarity.auto_ivf_geometry(emb.count())
+        k_cells, _ = similarity.auto_ivf_geometry(
+            row_count(spark, sf_dir, "embeddings")
+        )
         ann_index.ivf_build(emb, path, k=k_cells, iters=2)
 
     return fixture_cache.cached_build(
@@ -728,8 +731,8 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     # to exact-grid training + its own oracle in round 7)
     doc="X3 serving path: the PERSISTED IVF index (operators/ann_index) — "
         "build-once (K×dim centroid model + assignments partitioned by "
-        "cell), probe-many. The query batch derives its probe cells "
-        "map-side from the driver-held centroid model; the assignments "
+        "cell), probe-many. The query batch ranks its probe cells on "
+        "the driver against the cached centroid model; the assignments "
         "scan carries cell IN (probed) which Spark turns into partition "
         "pruning, so a probe physically reads n_probe/K of the index "
         "files — the production serving plan, vs embed_ivf_ann's "
@@ -743,7 +746,9 @@ def embed_ivf_index_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    _, n_probe = similarity.auto_ivf_geometry(emb.count())
+    _, n_probe = similarity.auto_ivf_geometry(
+        row_count(spark, sf_dir, "embeddings")
+    )
     return ann_index.ivf_query(queries, path, k=5, n_probe=n_probe)
 
 

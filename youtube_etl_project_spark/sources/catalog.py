@@ -84,5 +84,18 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Rows of fixture table ``name``, counted once per content
+    fingerprint of its parquet file(s) and then served from the model
+    tier of ``operators.fixture_cache``; a rewritten table recounts."""
+    from youtube_etl_project_spark.operators import fixture_cache
+
+    return fixture_cache.cached_model(
+        "row_count",
+        os.path.join(sf_dir, f"{name}.parquet"),
+        lambda: load_table(spark, sf_dir, name).count(),
+    )
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -568,6 +568,18 @@ def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
         os.remove(marker)
 
 
+def _write_ivf(path, cents, cand):
+    """Persist an IVF index with the given centroids over ``cand``."""
+    from youtube_etl_project_spark.operators.ann_index import _assign
+
+    cand.sparkSession.createDataFrame(
+        list(enumerate(cents)), "cell int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _assign(cand, cents, "vec_id", "embedding").write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(f"{path}/assignments")
+
+
 def test_probe_ranking_keeps_null_and_tie_order(spark, tmp_path):
     """ivf_query ranks probe cells on the driver; ivf_topk ranks them
     with Spark Columns. They must agree where Spark's ordering decides:
@@ -585,12 +597,7 @@ def test_probe_ranking_keeps_null_and_tie_order(spark, tmp_path):
         "vec_id bigint, embedding array<float>",
     )
     path = str(tmp_path / "ivf_ties")
-    spark.createDataFrame(
-        list(enumerate(cents)), "cell int, centroid array<double>"
-    ).coalesce(1).write.parquet(f"{path}/centroids")
-    _assign(cand, cents, "vec_id", "embedding").write.partitionBy(
-        "cell"
-    ).parquet(f"{path}/assignments")
+    _write_ivf(path, cents, cand)
     queries = spark.createDataFrame(
         [
             (100, [1.0, 0.0]),  # cells 0 = 1, then 2 = 3
@@ -667,3 +674,32 @@ def test_warm_probe_job_budget(spark, sf_dir):
     for name in names[1:]:
         inference = [j for j in warm[name] if j.startswith("parquet at")]
         assert not inference, (name, warm[name])
+
+
+def test_rebuild_at_a_uri_path_serves_the_new_centroids(spark, tmp_path):
+    """An index addressed by a ``file://`` URI has no local content
+    fingerprint, so its centroids and frame schemas are never reused
+    across calls: rebuilding it in place must show in the next probe."""
+    cand = spark.createDataFrame(
+        [(i, [1.0 + i % 5, 1.0 + i // 5]) for i in range(25)],
+        "vec_id bigint, embedding array<float>",
+    )
+    queries = cand.filter(F.col("vec_id") % 6 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    candidates = cand.select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    uri = (tmp_path / "ivf_uri").as_uri()
+    assert uri.startswith("file://")
+    for cents in (
+        [[1.0, 1.0], [5.0, 5.0]],
+        [[5.0, 1.0], [1.0, 5.0], [3.0, 3.0]],
+    ):
+        _write_ivf(uri, cents, cand)
+        assert ivf_centroids(spark, uri) == cents
+        got = ivf_query(queries, uri, k=3, n_probe=1).collect()
+        want = similarity.ivf_topk(
+            queries, candidates, cents, k=3, n_probe=1
+        ).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))

@@ -222,3 +222,20 @@ def test_cache_tier_frames_are_read_through_read_frame():
     assert not offenders, (
         f"cache-tier frames read without fixture_cache.read_frame: {offenders}"
     )
+
+
+def test_source_without_a_local_fingerprint_is_never_reused(tmp_path):
+    """A URI (or a missing path) cannot be fingerprinted here, so a value
+    built from it could go stale unseen: both tiers rebuild it per call."""
+    src = (tmp_path / "fixture").as_uri()
+    assert fixture_cache.fingerprint(src) is None
+    trains = []
+    for _ in range(2):
+        fixture_cache.cached_model("n_", src, lambda: trains.append(1))
+    assert len(trains) == 2 and ("n_", src) not in fixture_cache._MODELS
+
+    def build(path):
+        _write(path, "_SUCCESS", "")
+
+    p1 = fixture_cache.cached_build("n_", src, build)
+    assert fixture_cache.cached_build("n_", src, build) != p1

@@ -70,8 +70,8 @@ def test_parquet_table_atomic_swap_and_truncate(spark, tmp_path):
 
 
 def _truncate_within(t: ParquetTable, timeout: float = 60.0) -> None:
-    """Truncate on a thread: the empty write's row-count Observation must
-    resolve, not leave the commit waiting."""
+    """Truncate on a thread: the empty version must commit, not leave
+    the caller waiting."""
     import threading
 
     done = threading.Event()

@@ -341,11 +341,8 @@ def _probe_cells(
         return list(range(min(n_probe, k)))
     diff = np.asarray(vec, dtype=np.float64) - centroids
     d = np.cumsum(diff * diff, axis=1)[:, -1]
-    order = sorted(
-        range(k),
-        key=lambda c: (1, 0.0, c) if np.isnan(d[c]) else (0, d[c], c),
-    )
-    return order[:n_probe]
+    # numpy sorts NaN last; a stable sort keeps ties in cell order
+    return np.argsort(d, kind="stable")[:n_probe].tolist()
 
 
 def ivf_query(

@@ -3,7 +3,10 @@
 Both tiers key an entry by a cheap CONTENT fingerprint of its source
 (sorted relpath + size + mtime_ns of its files; no data read), so a
 source whose contents change in process misses instead of serving
-stale state.
+stale state. A source that is not an existing local file or dir (a
+``file://``, ``hdfs://`` or ``s3a://`` URI, or a missing path) has no
+fingerprint: its entries are rebuilt or retrained on every call, never
+memoized.
 
 - FRAMES on disk (:func:`cached_build`): derived frames and persisted
   indexes are written once to a temp dir minted here; every minted dir
@@ -58,11 +61,15 @@ _STATS: dict[str, dict[str, float]] = {
 }
 
 
-def fingerprint(src: str) -> str:
+def fingerprint(src: str) -> "str | None":
     """Cheap content fingerprint of a fixture dir or file: the sha256 of
     the sorted (relative path, size, mtime_ns) listing of its files.
     Reads metadata only — never file contents — so it is safe to
-    evaluate per query call."""
+    evaluate per query call. ``None`` when ``src`` is not an existing
+    local path: its contents cannot be checked here, so nothing keyed
+    by it may be reused."""
+    if not os.path.exists(src):
+        return None
     h = hashlib.sha256()
     if os.path.isfile(src):
         st = os.stat(src)
@@ -107,8 +114,9 @@ def cached_build(
     temp dir on miss. ``marker`` is a path relative to the dir whose
     existence revalidates a hit (e.g. ``edges`` for a persisted graph,
     ``_SUCCESS`` for a single parquet frame)."""
-    key = (prefix, sf_dir, fingerprint(sf_dir))
-    path = _CACHE.get(key)
+    fp = fingerprint(sf_dir)
+    key = (prefix, sf_dir, fp)
+    path = None if fp is None else _CACHE.get(key)
     if path is not None and os.path.exists(os.path.join(path, marker)):
         _count("frames", hit=True)
         return path
@@ -117,7 +125,8 @@ def cached_build(
     t0 = time.perf_counter()
     build(path)
     _count("frames", hit=False, seconds=time.perf_counter() - t0)
-    _CACHE[key] = path
+    if fp is not None:
+        _CACHE[key] = path
     return path
 
 
@@ -130,18 +139,20 @@ def cached_model(prefix: str, src_dir: str, train: Callable[[], T]) -> T:
     the same value, so the fingerprint is the entry's whole validity
     condition. One entry is kept per ``(prefix, src_dir)``; a changed
     fingerprint retrains and replaces it. If ``train`` raises, nothing
-    is stored. The oracle twins of the queries that use it train in SQL
+    is stored, and neither is a value for a source without a
+    fingerprint. The oracle twins of the queries that use it train in SQL
     on every run, so caching hides no trainer from the hash gate."""
     key = (prefix, src_dir)
     fp = fingerprint(src_dir)
     hit = _MODELS.get(key)
-    if hit is not None and hit[0] == fp:
+    if fp is not None and hit is not None and hit[0] == fp:
         _count("models", hit=True)
         return hit[1]
     t0 = time.perf_counter()
     value = train()
     _count("models", hit=False, seconds=time.perf_counter() - t0)
-    _MODELS[key] = (fp, value)
+    if fp is not None:
+        _MODELS[key] = (fp, value)
     return value
 
 

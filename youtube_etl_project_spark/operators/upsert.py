@@ -448,21 +448,21 @@ class ParquetTable:
         The empty version is a directory holding only a commit record
         with the current version's schema and ``rows: 0``, so no Spark
         job runs: ``read()`` hands that schema to a reader that finds no
-        data files. A current version without a record is emptied
-        through a ``write``."""
+        data files. A current version without a record (written before
+        records existed) takes its schema from one inference read."""
         base = self._pointer_version()
         if base is None:
             return
         rec = self._commit_record(os.path.join(self.root, base))
-        if rec is None:
-            self.write(self.read().limit(0))
-            return
+        schema = (
+            rec["schema"] if rec else _nullable(self.read().schema).jsonValue()
+        )
         prior = self.history()
         version = f"v_{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.root, version)
         os.makedirs(out)
         with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
-            json.dump({"schema": rec["schema"], "rows": 0}, f)
+            json.dump({"schema": schema, "rows": 0}, f)
         self._commit(version, base, prior)
 
     def delete_where(self, condition) -> int:

@@ -568,6 +568,56 @@ def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
         os.remove(marker)
 
 
+def test_driver_coarse_ranking_matches_the_spark_tie_rule(spark, tmp_path):
+    """The NSW and IVF-PQ probes rank coarse cells on the driver
+    (``_nearest_coarse_cells``); the in-memory builds rank them with
+    ``exact_kmeans.nearest_cells`` over ``kmeans_dists_exact``. Both must
+    give the same (query, cell, rank) rows where Spark's rules decide:
+    exact ties go to the lower cell, the distance sums over the positions
+    the query shares with the codebook, NULL components add nothing, an
+    all-NULL distance sorts first, and a query sharing no position ranks
+    no cell."""
+    from youtube_etl_project_spark.operators.ann_index import (
+        _nearest_coarse_cells,
+        _query_vectors,
+    )
+    from youtube_etl_project_spark.plans.exact_kmeans import (
+        kmeans_dists_exact,
+        nearest_cells,
+    )
+
+    cb = spark.createDataFrame(
+        [
+            (c, p, q)
+            for c, vec in enumerate([(0, 0, 0), (2, 0, 0), (0, 2, 0), (2, 2, 5)])
+            for p, q in enumerate(vec)
+        ],
+        "cell int, pos int, cq long",
+    )
+    path = str(tmp_path / "coarse_idx")
+    cb.coalesce(1).write.parquet(f"{path}/coarse")
+    qe = spark.createDataFrame(
+        [
+            (1, 0, 1), (1, 1, 0), (1, 2, 0),  # cells 0 and 1 tie
+            (2, 0, 1), (2, 1, 1), (2, 2, 9),  # cells 0-2 tie behind 3
+            (3, 0, 2), (3, 1, 2),             # no pos 2: partial sum
+            (4, 0, None), (4, 1, 2), (4, 2, 0),  # a NULL component
+            (5, 0, None), (5, 1, None),       # every distance NULL
+            (6, 7, 1),                        # shares no position
+        ],
+        "id long, pos int, q long",
+    )
+    for n in (1, 2, 4):
+        want = sorted(
+            (r.id, r.cell, r.rn)
+            for r in nearest_cells(kmeans_dists_exact(qe, cb), ["id"], n)
+            .select("id", "cell", "rn")
+            .collect()
+        )
+        got = _nearest_coarse_cells(spark, path, _query_vectors(qe.collect()), n)
+        assert sorted(got) == want, n
+
+
 def _write_ivf(path, cents, cand):
     """Persist an IVF index with the given centroids over ``cand``."""
     from youtube_etl_project_spark.operators.ann_index import _assign
@@ -634,8 +684,9 @@ def test_probe_ranking_keeps_null_and_tie_order(spark, tmp_path):
 def test_warm_probe_job_budget(spark, sf_dir):
     """Timing-free plan-shape guard for build-once/probe-many queries: a
     warm call reuses the schema, model and row count known since the
-    build. The second embed_ivf_index_ann call builds its DataFrame with
-    at most one Spark job (the query-batch collect), and the second
+    build. The second embed_ivf_index_ann and embed_ivfpq_index_ann calls
+    each build their DataFrame with at most one Spark job (the query-batch
+    collect; probe cells are ranked on the driver), and the second
     dedup_minhash_lsh_md5 and record_linkage_mutual_best calls run no
     parquet schema-inference job. Jobs are counted per job group."""
     import uuid
@@ -664,6 +715,7 @@ def test_warm_probe_job_budget(spark, sf_dir):
 
     names = (
         "embed_ivf_index_ann",
+        "embed_ivfpq_index_ann",
         "dedup_minhash_lsh_md5",
         "record_linkage_mutual_best",
     )
@@ -671,7 +723,8 @@ def test_warm_probe_job_budget(spark, sf_dir):
         build_jobs(name)  # cold: builds the cache entries
     warm = {name: build_jobs(name) for name in names}
     assert len(warm["embed_ivf_index_ann"]) <= 1, warm
-    for name in names[1:]:
+    assert len(warm["embed_ivfpq_index_ann"]) <= 1, warm
+    for name in names[2:]:
         inference = [j for j in warm[name] if j.startswith("parquet at")]
         assert not inference, (name, warm[name])
 

@@ -73,8 +73,8 @@ _CRASH_SCRIPT = textwrap.dedent(
     if crash_after:
         real_pin, seen = ckpt.pin, [0]
 
-        def dying_pin(df, eager=True, reliable=None):
-            out = real_pin(df, eager=eager, reliable=reliable)
+        def dying_pin(df, reliable=None):
+            out = real_pin(df, reliable=reliable)
             seen[0] += 1
             if seen[0] >= crash_after:
                 # hard driver death mid-iteration: no cleanup, no

@@ -407,7 +407,10 @@ def test_stale_lock_steal_is_atomic_across_waiters(spark, tmp_path):
 
     def worker():
         t = ParquetTable(spark, root)
-        t.lock_stale_sec = 0.01
+        # Above the 0.05 s hold below, so only the dead writer's lock is
+        # stale; at 0.01 s a waiter could rightly steal the winner's live
+        # lock and the assertion failed by timing alone.
+        t.lock_stale_sec = 1.0
         t.lock_timeout_sec = 5.0
         gate.wait(5)
         try:

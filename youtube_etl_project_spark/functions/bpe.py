@@ -30,7 +30,7 @@ from collections import Counter
 from functools import cache, lru_cache
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # GPT-2-style pre-tokenization, expressed in stdlib `re` (no \p classes):
@@ -175,16 +175,14 @@ def released_merges(path: str = MERGES_V1) -> list[tuple[bytes, bytes]]:
 
 def fit_corpus_bpe(
     docs: DataFrame,
-    text_col: str = "text",
-    order_col: str = "doc_id",
     sample: int = 128,
     n_merges: int = 200,
 ) -> list[tuple[bytes, bytes]]:
-    """Train merges on a deterministic corpus sample (lowest ``order_col``
-    first — stable across partitioning/run order)."""
+    """Train merges on a deterministic sample of ``docs`` (doc_id, text):
+    lowest ``doc_id`` first, stable across partitioning/run order."""
     rows = (
-        docs.select(F.col(text_col).alias("t"))
-        .orderBy(F.col(order_col).asc())
+        docs.select(F.col("text").alias("t"))
+        .orderBy(F.col("doc_id").asc())
         .limit(sample)
         .collect()
     )

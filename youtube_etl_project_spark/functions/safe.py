@@ -16,19 +16,19 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def safe_long(col: Column | str, default: int = 0) -> Column:
-    """Null/malformed-safe cast to long with default (reference F5).
+def safe_long(col: Column | str) -> Column:
+    """Null/malformed-safe cast to long, defaulting to 0 (reference F5).
 
     try_cast, not cast: Spark 4 runs ANSI mode by default, where a malformed
     string cast throws — the reference's posture is degrade-to-default.
     """
-    return F.coalesce(_c(col).try_cast("long"), F.lit(default).cast("long"))
+    return F.coalesce(_c(col).try_cast("long"), F.lit(0).cast("long"))
 
 
-def safe_double(col: Column | str, default: float = 0.0) -> Column:
-    return F.coalesce(_c(col).try_cast("double"), F.lit(default).cast("double"))
+def safe_double(col: Column | str) -> Column:
+    return F.coalesce(_c(col).try_cast("double"), F.lit(0.0).cast("double"))
 
 
-def safe_str(col: Column | str, default: str = "UNKNOWN") -> Column:
+def safe_str(col: Column | str) -> Column:
     """Null-defaulted string (reference P2's ``.get('country','UNKNOWN')``)."""
-    return F.coalesce(_c(col).cast("string"), F.lit(default))
+    return F.coalesce(_c(col).cast("string"), F.lit("UNKNOWN"))

@@ -45,7 +45,7 @@ def keyword_hits(text: Column | str, keywords: Sequence[str]) -> Column:
     return F.coalesce(functools.reduce(operator.add, hits), F.lit(0))
 
 
-def tokens(text: Column | str, pattern: str = r"\s+") -> Column:
+def tokens(text: Column | str) -> Column:
     """Whitespace tokenization to array<string>, empty tokens removed."""
     t = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(t, pattern), lambda x: x != F.lit(""))
+    return F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))

@@ -60,31 +60,24 @@ def ivf_build(
     path: str,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
 ) -> None:
-    """Train the quantizer and materialize the index at ``path``."""
+    """Train the quantizer over ``vectors`` (vec_id, embedding) and
+    materialize the index at ``path``."""
     spark = vectors.sparkSession
-    centroids = kmeans_centroids(vectors, vec=vec, k=k, iters=iters,
-                                 id_col=id_col)
+    centroids = kmeans_centroids(vectors, k=k, iters=iters)
     rows = [(i, c) for i, c in enumerate(centroids)]
     spark.createDataFrame(rows, "cell int, centroid array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    _assign(vectors, centroids, id_col, vec).write.mode(
+    _assign(vectors, centroids, "vec_id", "embedding").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{path}/assignments")
 
 
-def ivf_append(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-) -> None:
-    """Add a batch under the frozen quantizer: assign cells map-side,
-    append only the touched cell partitions. O(batch); the existing
-    index's data is never rewritten.
+def ivf_append(new_vectors: DataFrame, path: str) -> None:
+    """Add a (vec_id, embedding) batch under the frozen quantizer: assign
+    cells map-side, append only the touched cell partitions. O(batch);
+    the existing index's data is never rewritten.
 
     IDEMPOTENT: foreachBatch delivery is
     at-least-once, so a replayed batch excludes ids a previous attempt
@@ -92,9 +85,9 @@ def ivf_append(
     partitions (eagerly pinned before the append so the plan never
     scans the path it is appending to)."""
     centroids = ivf_centroids(new_vectors.sparkSession, path)
-    assigned = _assign(new_vectors, centroids, id_col, vec).localCheckpoint(
-        eager=True
-    )
+    assigned = _assign(
+        new_vectors, centroids, "vec_id", "embedding"
+    ).localCheckpoint(eager=True)
     cells = sorted(
         r.cell for r in assigned.select("cell").distinct().collect()
     )
@@ -216,10 +209,11 @@ def ivfpq_query(
     """ADC + exact-refine top-k against the persisted index.
 
     ``queries_qe`` is the quantized query batch (id, pos, q) — small by
-    contract (it broadcasts). Probe cells are computed batch-side against
-    the broadcast coarse codebook, collected (batch × n_probe rows), and
-    re-enter the plan as literals so the ``codes`` and ``components``
-    scans both carry ``cell IN (probed)`` partition filters. Result
+    contract (it broadcasts). It is collected once and its probe cells
+    are ranked on the driver against the cached coarse codebook
+    (:func:`_nearest_coarse_cells`); the (query, cell) rows re-enter the
+    plan as literals so the ``codes`` and ``components`` scans both
+    carry ``cell IN (probed)`` partition filters. Result
     (query_id, neighbor_id, rank, dist_q) is bit-identical to
     plans/ivfpq.embed_ivfpq_ann under the same trained model."""
     from pyspark.sql import Window
@@ -228,18 +222,10 @@ def ivfpq_query(
     cb = fixture_cache.read_frame(spark, f"{path}/coarse")
     pqcb = fixture_cache.read_frame(spark, f"{path}/pq")
     qq = queries_qe.withColumnRenamed("id", "query_id")
-    d = F.col("q") - F.col("cq")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cell"))
     probe_rows = [
-        (r.query_id, r.cell)
-        for r in (
-            qq.join(F.broadcast(cb), "pos")
-            .groupBy("query_id", "cell")
-            .agg(F.sum(d * d).cast("long").alias("dist"))
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= n_probe)
-            .select("query_id", "cell")
-            .collect()
+        (qid, c)
+        for qid, c, _ in _nearest_coarse_cells(
+            spark, path, _query_vectors(queries_qe.collect()), n_probe
         )
     ]
     cells = sorted({c for _, c in probe_rows})
@@ -350,8 +336,6 @@ def ivf_query(
     path: str,
     k: int = 5,
     n_probe: int = 3,
-    query_id: str = "query_id",
-    vec: str = "embedding",
 ) -> DataFrame:
     """Top-k cosine against the persisted index.
 
@@ -369,7 +353,9 @@ def ivf_query(
 
     spark = queries.sparkSession
     centroids = np.asarray(ivf_centroids(spark, path), dtype=np.float64)
-    batch = queries.select(query_id, F.col(vec).alias("__qv")).toArrow()
+    batch = queries.select(
+        "query_id", F.col("embedding").alias("__qv")
+    ).toArrow()
     rows, probe_cells = [], []
     for i, qv in enumerate(batch.column("__qv").to_pylist()):
         for c in _probe_cells(qv, centroids, n_probe):
@@ -393,17 +379,17 @@ def ivf_query(
     )
     scored = (
         probes.join(assignments, "cell")
-        .filter(F.col(query_id) != F.col("neighbor_id"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy(query_id).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
+            "query_id",
             "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 6).alias("cosine"),
@@ -452,8 +438,9 @@ def ivf_query(
 _NSW_ADJ = "nsw_adj"
 
 
-def _nsw_coarse_model(spark: SparkSession, path: str):
-    """The persisted coarse codebook as a driver-side model:
+def _coarse_model(spark: SparkSession, path: str):
+    """The persisted coarse codebook ``{path}/coarse`` (cell, pos, cq) of
+    an NSW or IVF-PQ index as a driver-side model:
     (sorted pos tuple, sorted cell tuple, {(cell, pos) -> cq})."""
 
     def train():
@@ -466,7 +453,41 @@ def _nsw_coarse_model(spark: SparkSession, path: str):
             books,
         )
 
-    return fixture_cache.cached_model("nsw_coarse", f"{path}/coarse", train)
+    return fixture_cache.cached_model("coarse", f"{path}/coarse", train)
+
+
+def _query_vectors(qrows: "list") -> "dict[int, dict[int, int]]":
+    """Collected (id, pos, q) grid rows as {id: {pos: q}}."""
+    by_q: "dict[int, dict[int, int]]" = {}
+    for r in qrows:
+        by_q.setdefault(r.id, {})[r.pos] = r.q
+    return by_q
+
+
+def _nearest_coarse_cells(
+    spark: SparkSession, path: str, by_q: "dict[int, dict[int, int]]", n: int
+) -> "list[tuple[int, int, int]]":
+    """(query_id, cell, rank) of each query's ``n`` nearest coarse cells
+    under the index's cached codebook, ranked on the driver in exact
+    Python ints: d = Σ (q − cq)² over the positions the query and the
+    codebook share (an inner join on pos; a NULL q adds nothing and an
+    all-NULL sum is NULL, as Spark sums), ordered by (d, cell) with NULL
+    first — the rule of ``exact_kmeans.nearest_cells``. A query with no
+    shared position ranks no cell."""
+    pos_order, cell_order, books = _coarse_model(spark, path)
+    out = []
+    for qid in sorted(by_q):
+        qv = by_q[qid]
+        shared = [p for p in pos_order if p in qv]
+        if not shared:
+            continue
+        terms = [p for p in shared if qv[p] is not None]
+        ranked = sorted(
+            (bool(terms), sum((qv[p] - books[(c, p)]) ** 2 for p in terms), c)
+            for c in cell_order
+        )
+        out += [(qid, c, rn) for rn, (_, _, c) in enumerate(ranked[:n], 1)]
+    return out
 
 
 def _load_nsw_adjacency(spark: SparkSession, path: str) -> "dict[int, set]":
@@ -539,8 +560,6 @@ def nsw_query(
     beam: int = 8,
     rounds: int = 3,
     include_cell: bool = False,
-    entry_cells: int = 2,
-    reliable: "bool | None" = None,
     exclude: "DataFrame | None" = None,
 ) -> DataFrame:
     """Greedy beam-search trace against the persisted NSW graph —
@@ -548,7 +567,7 @@ def nsw_query(
 
     ``queries_qe`` is the quantized query batch (id, pos, q), small by
     contract. Entry = lowest-(cell rank, id) member over the query's
-    ``entry_cells`` nearest coarse cells under the persisted codebook
+    2 nearest coarse cells under the persisted codebook
     (the build's 2-nearest-cells rule): a corpus-member query's rank-1
     cell contains itself, so it recovers its own training assignment
     and the trace is unchanged — the widening only matters when the
@@ -568,8 +587,7 @@ def nsw_query(
     (measured: bare pruned scans 0.05-0.15 s vs 0.8 s per frontier
     action at sf0.1). Each fused action is collected exactly once and
     the loop state is driver-side, so nothing is pinned; plans stay
-    audit-visible via audit_plan. ``reliable`` is accepted for caller
-    compatibility (nsw_insert passes False) but not used.
+    audit-visible via audit_plan.
     Returns (query_id, neighbor_id, rank, dist_q).
 
     ``exclude`` (optional, single ``id`` column, batch-sized) removes
@@ -594,29 +612,16 @@ def nsw_query(
     # the entry-cell ranking runs driver-side against the cached coarse
     # codebook (model-sized), so no Spark job ranks cells and no round
     # re-derives the quantized query frame; qa is a batch-sized literal.
-    # The arithmetic is the same exact integers — Python ints, Σ(q-cq)²
-    # with the (dist, cell) sort — so the trace is bit-identical.
     qrows = queries_qe.collect()
-    by_q: "dict[int, dict[int, int]]" = {}
-    for r in qrows:
-        by_q.setdefault(r.id, {})[r.pos] = r.q
-    pos_order, cell_order, books = _nsw_coarse_model(spark, path)
-    qcell_rows = []
+    by_q = _query_vectors(qrows)
+    pos_order = _coarse_model(spark, path)[0]
     for qid in sorted(by_q):
-        qv = by_q[qid]
-        if sorted(qv) != list(pos_order):  # partial vector: fail loudly
+        if sorted(by_q[qid]) != list(pos_order):  # partial vector: fail loudly
             raise ValueError(
-                f"query {qid} has {len(qv)} dims, codebook has "
+                f"query {qid} has {len(by_q[qid])} dims, codebook has "
                 f"{len(pos_order)} — inner-join dist would be partial"
             )
-        ranked = sorted(
-            (sum((qv[p] - books[(c, p)]) ** 2 for p in pos_order), c)
-            for c in cell_order
-        )
-        qcell_rows += [
-            (qid, c, rn)
-            for rn, (_d, c) in enumerate(ranked[:entry_cells], 1)
-        ]
+    qcell_rows = _nearest_coarse_cells(spark, path, by_q, 2)
     qcells = sorted({c for _, c, _ in qcell_rows})
     qcell_df = F.broadcast(
         spark.createDataFrame(
@@ -729,26 +734,18 @@ def nsw_query(
     return spark.createDataFrame(out, schema)
 
 
-def nsw_insert(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    m: int = 8,
-    beam: int = 8,
-    rounds: int = 3,
-    deg_cap: int = 16,
-) -> None:
-    """Online insert into the persisted NSW graph — the standard
+def nsw_insert(batch: DataFrame, path: str) -> None:
+    """Online insert of a (vec_id, embedding) batch into the persisted
+    NSW graph — the standard
     online-HNSW attach, micro-batch-sized work against an index of any
     size: each new vector beam-searches the EXISTING graph for its
-    top-``m`` neighbors (pruned scans, like any probe), gains those as
+    top-8 neighbors (pruned scans, like any probe), gains those as
     out-edges, and its neighbors gain capped reverse edges.
 
     Write mechanics per batch: new components and new out-edges APPEND
     to the new vectors' own cell partitions; reverse edges rewrite only
     the touched neighbors' cell partitions (dynamic partition
-    overwrite), re-applying the (d asc, dst asc) top-``deg_cap`` rule —
+    overwrite), re-applying the (d asc, dst asc) top-16 rule —
     online-HNSW's prune — to every node in them. The merged frame is
     localCheckpoint'ed before the overwrite (a plan may not scan the
     path it overwrites; batch-scoped pins stay local — reliable=False —
@@ -767,8 +764,8 @@ def nsw_insert(
     (src, dst) rows before re-capping — so a replay converges to the
     exact state a single clean run produces (duplicated component rows
     would otherwise silently DOUBLE nsw_query's sum-over-pos
-    distances). Entry widening (nsw_query entry_cells=2, the build's
-    2-nearest-cells rule) means a vector landing in an empty coarse
+    distances). Entry widening (nsw_query's entry over 2 cells, the
+    build's 2-nearest-cells rule) means a vector landing in an empty coarse
     cell attaches via its second-nearest cell instead of being
     inserted edgeless; only a batch arriving before ANY indexed member
     shares its top-2 cells stays edgeless.
@@ -779,9 +776,11 @@ def nsw_insert(
     from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     spark = batch.sparkSession
-    nn = batch.filter(F.col(vec).isNotNull())
+    nn = batch.filter(F.col("embedding").isNotNull())
     # the same grid snap the persisted index was built with
-    qe_new = grid_rows(nn, id_col, vec, GRID, id_out="id", pos="pos")
+    qe_new = grid_rows(
+        nn, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    )
     if qe_new.isEmpty():
         return
     cb = fixture_cache.read_frame(spark, f"{path}/coarse")
@@ -799,8 +798,7 @@ def nsw_insert(
     new_cells = sorted(r.cell for r in assign_new.select("cell").collect())
     # 1) neighbors of each new vector on the PRE-batch graph
     res = nsw_query(
-        qe_new, path, topk=m, beam=beam, rounds=rounds,
-        include_cell=True, reliable=False,
+        qe_new, path, topk=8, include_cell=True,
         exclude=qe_new.select("id"),  # pre-batch graph view on replay
     )
     adj = _nsw_cell_adjacency(spark, path)  # a hit: nsw_query just read it
@@ -881,7 +879,7 @@ def nsw_insert(
         # each one eats a degree slot
         .dropDuplicates(["src", "dst"])
         .withColumn("rn", F.row_number().over(wsrc))
-        .filter(F.col("rn") <= deg_cap)
+        .filter(F.col("rn") <= 16)
         .select("src", "dst", "d", "dst_cell", "cell"),
         reliable=False,
     )
@@ -971,16 +969,14 @@ def nsw_file_stats(path: str) -> "dict[str, dict[int, int]]":
     return out
 
 
-def nsw_compact(
-    spark: SparkSession, path: str, max_files_per_cell: int = 1
-) -> "dict[str, int]":
+def nsw_compact(spark: SparkSession, path: str) -> "dict[str, int]":
     """Compact fragmented cell partitions of the persisted NSW graph —
     the post-ingest maintenance pass: for each dataset (edges,
-    components), cells holding more than ``max_files_per_cell`` parquet
-    files are read back, eagerly pinned (a plan may never scan the path
-    its dynamic overwrite is rewriting — the
-    localCheckpoint materializes the rows FIRST), coalesced to one file
-    per cell, and dynamic-partition-overwritten in place. Rewrite cost
+    components), cells holding more than one parquet file are read back,
+    eagerly pinned (a plan may never scan the path its dynamic overwrite
+    is rewriting — the localCheckpoint materializes the rows FIRST),
+    coalesced to one file per cell, and dynamic-partition-overwritten in
+    place. Rewrite cost
     is proportional to the fragmented cells' data only — untouched
     partitions' files are never opened or rewritten. Row content is
     unchanged (pinned by pytest: identical nsw_query traces before and
@@ -993,7 +989,7 @@ def nsw_compact(
     done: dict[str, int] = {}
     for ds, cells in stats.items():
         frag = sorted(
-            c for c, n in cells.items() if n > max_files_per_cell
+            c for c, n in cells.items() if n > 1
         )
         done[ds] = len(frag)
         if not frag:

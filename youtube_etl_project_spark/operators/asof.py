@@ -22,14 +22,15 @@ def asof_join(
     keys: list[str],
     right_value_cols: list[str] | None = None,
     strict: bool = True,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For each left row, attach the most recent right row with
-    ``right.on < left.on`` (strict) or ``<=`` (not strict), per key group.
+    ``right.on < left.on`` (strict) or ``<=`` (not strict), per key group,
+    as ``<col>_asof`` columns.
 
     Ties inside one instant resolve right-before-left via a side marker in
     the sort, so results are deterministic.
     """
+    suffix = "_asof"
     rv = right_value_cols or [c for c in right.columns if c not in {on, *keys}]
     lt = left.withColumn("__side", F.lit(1))
     rt = right.select(

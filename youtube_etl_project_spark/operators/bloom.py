@@ -27,26 +27,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _WORD = 64
+_SEED = 7
 
 
-def _positions(key: Column, m: int, k: int, seed: int) -> list[Column]:
+def _positions(key: Column, m: int, k: int) -> list[Column]:
     """k bit positions from k independent xxhash64 seeds. (The classic
     h1 + i·h2 double-hash overflows int64 under ANSI mode; k seeded
     hashes cost the same one instruction each in codegen and are the
     ANSI-safe idiom used throughout operators/dedup.py.)"""
     return [
-        F.pmod(F.xxhash64(key, F.lit(seed * 1_000_003 + i)), F.lit(m))
+        F.pmod(F.xxhash64(key, F.lit(_SEED * 1_000_003 + i)), F.lit(m))
         for i in range(k)
     ]
 
 
 def build_bloom(
-    df: DataFrame, key: str, m: int = 1 << 17, k: int = 5, seed: int = 7
+    df: DataFrame, key: str, m: int = 1 << 17, k: int = 5
 ) -> list[int]:
     """Distributed bitmap build: explode the k positions per key, OR the
     word-local bits per 64-bit word, collect the m/64 words."""
     pos = df.select(
-        F.explode(F.array(*_positions(F.col(key), m, k, seed))).alias("p")
+        F.explode(F.array(*_positions(F.col(key), m, k))).alias("p")
     )
     words = (
         pos.groupBy(F.floor(F.col("p") / _WORD).cast("long").alias("w"))
@@ -69,16 +70,14 @@ def build_bloom(
     return bitmap
 
 
-def might_contain(
-    key: Column, bitmap: list[int], m: int, k: int, seed: int = 7
-) -> Column:
+def might_contain(key: Column, bitmap: list[int], m: int, k: int) -> Column:
     """Codegen membership probe: k word-lookups + bit tests, ANDed.
     The bitmap travels as an array literal (m/64 longs) inside the plan.
     One F.lit over the whole list — element-wise F.lit costs a py4j round
     trip per word (measured 5.3 s of pure client time at m=2^17)."""
     words = F.lit(bitmap).cast("array<long>")
     checks = []
-    for p in _positions(key, m, k, seed):
+    for p in _positions(key, m, k):
         word = F.element_at(words, (F.floor(p / _WORD) + 1).cast("int"))
         bit = F.bit_get(word, F.pmod(p, F.lit(_WORD)).cast("int"))
         checks = checks + [bit == 1]
@@ -93,11 +92,9 @@ def bloom_semi_join(
     build: DataFrame,
     fact_key: str,
     build_key: str,
-    m: int = 1 << 17,
-    k: int = 5,
-    seed: int = 7,
 ) -> DataFrame:
-    """fact ⋉ build with a bloom prefilter on the fact scan.
+    """fact ⋉ build with a bloom prefilter (m = 2^17 bits, k = 5 hashes)
+    on the fact scan.
 
     Returns exactly the rows of ``fact.join(build, semi)`` — the bloom
     admits no false negatives and the closing semi-join removes the
@@ -105,8 +102,9 @@ def bloom_semi_join(
     scan instead of after the shuffle.
     """
     keys = build.select(F.col(build_key).alias("__bk")).distinct()
-    bitmap = build_bloom(keys, "__bk", m, k, seed)
-    pre = fact.filter(might_contain(F.col(fact_key), bitmap, m, k, seed))
+    m, k = 1 << 17, 5
+    bitmap = build_bloom(keys, "__bk", m, k)
+    pre = fact.filter(might_contain(F.col(fact_key), bitmap, m, k))
     return pre.join(
         F.broadcast(keys), pre[fact_key] == keys["__bk"], "left_semi"
     )

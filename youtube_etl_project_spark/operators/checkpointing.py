@@ -100,11 +100,9 @@ def audit_plan(df: DataFrame) -> DataFrame:
     return df
 
 
-def pin(
-    df: DataFrame, eager: bool = True, reliable: bool | None = None
-) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage, pinning partition
-    placement for multi-reference use.
+def pin(df: DataFrame, reliable: bool | None = None) -> DataFrame:
+    """Materialize ``df`` now (an eager checkpoint) and truncate its
+    lineage, pinning partition placement for multi-reference use.
 
     ``reliable=None`` (default) auto-selects: a RELIABLE checkpoint when
     ``SPARK_GRAFT_CHECKPOINT_DIR`` is set (the cluster posture), else
@@ -120,7 +118,7 @@ def pin(
     if reliable is None:
         reliable = bool(env_dir)
     if not reliable:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=True)
 
     sc = df.sparkSession.sparkContext
     current = None
@@ -147,4 +145,4 @@ def pin(
             "reliable pin needs a checkpoint dir: set "
             f"{ENV_DIR} or call sc.setCheckpointDir()"
         )
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)

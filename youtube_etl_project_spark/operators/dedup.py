@@ -63,8 +63,9 @@ def df_cut(
     )
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Repartition ahead of CPU-heavy per-row work.
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition to the default parallelism ahead of CPU-heavy per-row
+    work.
 
     Small dimension-sized inputs often arrive as a single parquet file →
     one partition → single-threaded signature/shingle computation (measured:
@@ -72,8 +73,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     narrow input buys full parallelism for everything downstream; on a real
     cluster with many input splits this is a no-op cost-wise.
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------
@@ -803,11 +803,11 @@ def ngram_containment_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(tokens: Column, seed: int = 7) -> Column:
+def simhash64(tokens: Column) -> Column:
     """64-bit SimHash: bit i set iff the majority of token hashes have bit i
     set. Expressed as a 64-wide array fold over per-token xxhash64 — all
     map-side, one long out."""
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed)))
+    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(7)))
     n = F.size(hashes)
 
     def bit_vote(i: int) -> Column:
@@ -829,7 +829,7 @@ def simhash64(tokens: Column, seed: int = 7) -> Column:
 
 
 def simhash64_df(
-    docs: DataFrame, id_col: str, text_col: str, seed: int = 7
+    docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """DataFrame-level SimHash: explode tokens → hash once → 64 bit-count
     aggregates → fold back to one long. Same result as ``simhash64`` but
@@ -840,7 +840,7 @@ def simhash64_df(
     tok_rows = spread(docs).select(
         F.col(id_col).alias("doc"), F.explode(toks).alias("t")
     )
-    hashed = tok_rows.select("doc", F.xxhash64("t", F.lit(seed)).alias("h"))
+    hashed = tok_rows.select("doc", F.xxhash64("t", F.lit(7)).alias("h"))
     agg = hashed.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         *[
@@ -920,9 +920,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_distance: int = 3,
-    seed: int = 7,
-    max_bucket: int | None = None,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs at Hamming distance ≤ d over 64-bit SimHashes —
     *exact* (recall 1.0), via pigeonhole banding instead of all-pairs.
@@ -932,15 +929,14 @@ def simhash_pairs(
     they agree exactly on at least one band. Bucket-join on
     (band_id, band_bits), verify ``bit_count(xor) ≤ d`` on candidates only
     (the classic Manku/Jain/Sarma'07 web-dedup layout). Cost ∝ band
-    collisions, not n²; ``max_bucket`` drops degenerate hot buckets (e.g.
-    a band that is all-zero for most short docs) at a bounded recall loss.
+    collisions, not n².
 
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    sig = simhash64_df(docs, id_col, text_col, seed).select(
+    sig = simhash64_df(docs, id_col, text_col).select(
         F.col(id_col).alias("doc"), "simhash"
     )
-    return simhash_banded_pairs(sig, max_distance, max_bucket, n_blocks)
+    return simhash_banded_pairs(sig, max_distance)
 
 
 def simhash_pairs_md5(
@@ -948,7 +944,6 @@ def simhash_pairs_md5(
     id_col: str,
     text_col: str,
     max_distance: int = 3,
-    max_bucket: int | None = None,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """:func:`simhash_pairs` over the **md5-domain** fingerprints
@@ -959,7 +954,7 @@ def simhash_pairs_md5(
     sig = simhash64_md5_df(docs, id_col, text_col).select(
         F.col(id_col).alias("doc"), "simhash"
     )
-    return simhash_banded_pairs(sig, max_distance, max_bucket, n_blocks)
+    return simhash_banded_pairs(sig, max_distance, n_blocks=n_blocks)
 
 
 def simhash_block_lengths(n_blocks: int) -> "list[int]":
@@ -983,7 +978,7 @@ def simhash_block_combos(
     return list(combinations(range(n_blocks), n_blocks - max_distance))
 
 
-def choose_simhash_blocks(n: int, max_distance: int = 3) -> int:
+def choose_simhash_blocks(n: int) -> int:
     """Adaptive band geometry — the auto_lsh_geometry pattern for the
     simhash candidate join: pick the smallest block count B whose
     combination-key width is ≥ log2(n) + 8, so expected band-bucket
@@ -1000,6 +995,7 @@ def choose_simhash_blocks(n: int, max_distance: int = 3) -> int:
     definition by tests/test_dedup.py."""
     from math import comb
 
+    max_distance = 3
     target = min(40, max(2, n - 1).bit_length() + 8)
     best_b, best_w = max_distance + 1, -1
     b = max_distance + 1
@@ -1020,7 +1016,6 @@ def choose_simhash_blocks(n: int, max_distance: int = 3) -> int:
 def simhash_banded_pairs(
     sig: DataFrame,
     max_distance: int = 3,
-    max_bucket: int | None = None,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Pigeonhole banding + exact-Hamming verify over (doc, simhash)
@@ -1072,14 +1067,6 @@ def simhash_banded_pairs(
             )
         ).alias("b"),
     ).select("doc", "b.band_id", "b.bits")
-    if max_bucket is not None:
-        wb = Window.partitionBy("band_id", "bits")
-        bands = (
-            bands.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-
     l, r = bands.alias("l"), bands.alias("r")
     candidates = (
         l.join(

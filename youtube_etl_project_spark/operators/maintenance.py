@@ -32,11 +32,12 @@ def table_bytes(table: ParquetTable) -> int:
     )
 
 
-def compact(table: ParquetTable, target_file_bytes: int = TARGET_FILE_BYTES) -> int:
-    """Rewrite the current version into ceil(bytes/target) files (≥1).
+def compact(table: ParquetTable) -> int:
+    """Rewrite the current version into ceil(bytes/TARGET_FILE_BYTES)
+    files (≥1).
     Atomic — readers see old or new version, never a mix. Returns the new
     file count."""
-    n_files = max(1, -(-table_bytes(table) // target_file_bytes))
+    n_files = max(1, -(-table_bytes(table) // TARGET_FILE_BYTES))
     df = table.read().coalesce(n_files)
     table.write(df)
     return data_file_count(table)

@@ -25,7 +25,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DECODE_SCHEMA = "doc_id long, width int, height int, n_frames int"

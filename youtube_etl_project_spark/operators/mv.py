@@ -79,7 +79,6 @@ def scoped_refresh(
     affected_keys: DataFrame,
     recompute: Callable[[DataFrame], DataFrame],
     keys: Sequence[str],
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Refresh only the groups whose keys appear in ``affected_keys``.
 
@@ -87,12 +86,9 @@ def scoped_refresh(
     exactly those keys (the caller owns the base+delta reconciliation —
     it differs per upsert/delete semantics). The untouched remainder of
     ``old_view`` is kept via an anti-join, so stale rows for affected
-    keys can never survive. ``broadcast_keys`` fits the common case (a
-    day's delta touches a bounded key set); pass False when the affected
-    set is data-sized and must shuffle.
+    keys can never survive. The key set broadcasts: a day's delta
+    touches a bounded key set.
     """
-    keyset = affected_keys.select(*keys).distinct()
-    if broadcast_keys:
-        keyset = F.broadcast(keyset)
+    keyset = F.broadcast(affected_keys.select(*keys).distinct())
     untouched = old_view.join(keyset, list(keys), "left_anti")
     return untouched.unionByName(recompute(keyset))

@@ -21,7 +21,7 @@ Scale shape:
   integer addition — partial-aggregation order can't change the result),
   divided back once. The numpy replica in tests/test_pq.py reproduces
   the exact same centroids, codes, and RMSE values.
-* **Encode / RMSE / ADC** are Arrow-batched numpy (whitelisted in
+* **Code assignment** is Arrow-batched numpy (whitelisted in
   tests/test_plan_audit.py): dense per-row linear algebra belongs in
   numpy, per the measured rule on ``nearest_centroid_vectorized``.
 
@@ -274,94 +274,3 @@ def pq_train_exact_rows(
             fresh[(r["sub"], r["cell"], r["pos"])] = r["cq"]
         books = fresh
     return books
-
-
-def pq_encode_udf(codebooks: np.ndarray):
-    """Arrow UDF: full vector → array<int> of m codes (one matmul per
-    subspace per batch)."""
-    C = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, k, dsub = C.shape
-    c2 = (C * C).sum(axis=2)
-
-    @pandas_udf("array<int>")
-    def encode(v: pd.Series) -> pd.Series:
-        arr = v.to_numpy()
-        valid = np.array([e is not None for e in arr])
-        out: list = [None] * len(arr)
-        if valid.any():
-            x = np.stack(arr[valid]).astype(np.float64)
-            x = x.reshape(len(x), m, dsub)
-            codes = np.zeros((len(x), m), dtype="int32")
-            for s in range(m):
-                d = -2.0 * (x[:, s, :] @ C[s].T) + c2[s]
-                codes[:, s] = d.argmin(axis=1).astype("int32")
-            for i, j in enumerate(np.flatnonzero(valid)):
-                out[j] = codes[i].tolist()
-        return pd.Series(out)
-
-    return encode
-
-
-def pq_rmse_udf(codebooks: np.ndarray):
-    """Arrow UDF: full vector → per-vector reconstruction RMSE (encode +
-    decode + error in one batch pass; the vector never leaves the worker)."""
-    C = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, k, dsub = C.shape
-    c2 = (C * C).sum(axis=2)
-
-    @pandas_udf("double")
-    def rmse(v: pd.Series) -> pd.Series:
-        arr = v.to_numpy()
-        valid = np.array([e is not None for e in arr])
-        out = np.full(len(arr), np.nan)
-        if valid.any():
-            x = np.stack(arr[valid]).astype(np.float64)
-            xs = x.reshape(len(x), m, dsub)
-            recon = np.empty_like(xs)
-            for s in range(m):
-                d = -2.0 * (xs[:, s, :] @ C[s].T) + c2[s]
-                recon[:, s, :] = C[s][d.argmin(axis=1)]
-            err = (xs - recon).reshape(len(x), m * dsub)
-            out[valid] = np.sqrt((err * err).mean(axis=1))
-        return pd.Series(out)
-
-    return rmse
-
-
-def adc_lut(query: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """m×k table of squared L2 distances between a query's subvectors and
-    every code — the per-query ADC model."""
-    C = np.asarray(codebooks, dtype=np.float64)
-    m, k, dsub = C.shape
-    q = np.asarray(query, dtype=np.float64).reshape(m, dsub)
-    diff = C - q[:, None, :]  # m × k × dsub
-    return (diff * diff).sum(axis=2)
-
-
-def adc_scores_udf(luts: np.ndarray):
-    """Arrow UDF: codes array → array<double> of approximate squared L2
-    distances, one per query (LUT gather — no vector math at scan time).
-
-    luts: (n_queries, m, k). The LUT tensor is closure-broadcast —
-    model-sized (queries × m × k floats), like IVF centroids.
-    """
-    L = np.ascontiguousarray(luts, dtype=np.float64)
-    nq, m, k = L.shape
-    flat = L.reshape(nq, m * k)
-    offs = np.arange(m, dtype=np.int64) * k
-
-    @pandas_udf("array<double>")
-    def score(codes: pd.Series) -> pd.Series:
-        arr = codes.to_numpy()
-        valid = np.array([c is not None for c in arr])
-        out: list = [None] * len(arr)
-        if valid.any():
-            cm = np.stack(arr[valid]).astype(np.int64)  # batch × m
-            idx = cm + offs  # batch × m, flat positions
-            # batch × nq: sum of per-subspace LUT entries
-            d = flat[:, idx].sum(axis=2).T
-            for i, j in enumerate(np.flatnonzero(valid)):
-                out[j] = d[i].tolist()
-        return pd.Series(out)
-
-    return score

@@ -50,9 +50,6 @@ def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    query_id: str = "query_id",
-    cand_id: str = "neighbor_id",
-    vec: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: returns (query_id, neighbor_id, rank, cosine).
 
@@ -61,24 +58,26 @@ def brute_force_topk(
     partitions by query_id. Deterministic tiebreak on neighbor id.
     """
     q = queries.select(
-        F.col(query_id), F.col(vec).alias("__qv")
+        F.col("query_id"), F.col("embedding").alias("__qv")
     )
-    c = candidates.select(F.col(cand_id), F.col(vec).alias("__cv"))
+    c = candidates.select(
+        F.col("neighbor_id"), F.col("embedding").alias("__cv")
+    )
     scored = (
         F.broadcast(q)
         .crossJoin(c)
-        .filter(F.col(query_id) != F.col(cand_id))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(cand_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            cand_id,
+            "query_id",
+            "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 6).alias("cosine"),
         )
@@ -97,46 +96,6 @@ def hyperplane_components(dim: int, plane_id: int, seed: int = 42) -> list[float
         h = hashlib.sha256(f"{seed}:{plane_id}:{j}".encode()).digest()[0]
         out.append(1.0 if h & 1 else -1.0)
     return out
-
-
-def hyperplane(dim: int, plane_id: int, seed: int = 42) -> Column:
-    return F.array(
-        *[F.lit(v) for v in hyperplane_components(dim, plane_id, seed)]
-    )
-
-
-def lsh_bucket_key(
-    vec: Column, dim: int, n_planes: int = 8, seed: int = 42
-) -> Column:
-    """Sign-bit bucket key over n_planes random hyperplanes → a long in
-    [0, 2^n_planes). Map-side only.
-
-    Keeps the zip_with/aggregate dot: a flat 64-term Add chain was tried
-    and measured 8× SLOWER (deep binary expression trees overflow codegen
-    method limits and interpret worse than one array fold).
-    """
-    key = F.lit(0).cast("long")
-    for p in range(n_planes):
-        bit = F.when(dot(vec, hyperplane(dim, p, seed)) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        key = key + F.shiftleft(bit.cast("long"), p)
-    return key
-
-
-def _table_keys(vec: Column, dim: int, n_planes: int, n_tables: int, seed: int) -> Column:
-    """Array of per-table bucket structs: (table, key). Multi-table LSH —
-    candidates union over tables — is what buys recall on weakly-clustered
-    vectors; each table uses an independent hyperplane set."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table"),
-                lsh_bucket_key(vec, dim, n_planes, seed + 7919 * t).alias("key"),
-            )
-            for t in range(n_tables)
-        ]
-    )
 
 
 def _table_keys_vectorized(dim: int, n_planes: int, n_tables: int, seed: int):
@@ -237,46 +196,19 @@ def nearest_centroid_vectorized(centroids: list[list[float]]):
     return assign
 
 
-def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid (squared L2), as a Column over literal
-    centroid arrays — map-side assignment, no join. Fine for small inputs
-    (e.g. the query side); use ``nearest_centroid_vectorized`` for corpus
-    scans."""
-
-    def sqdist(c: list[float]) -> Column:
-        lit = F.array(*[F.lit(x) for x in c])
-        return F.aggregate(
-            F.zip_with(vec, lit, lambda a, b: (a.cast("double") - b) ** 2),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    best_idx = F.lit(0)
-    best_d = sqdist(centroids[0])
-    for i in range(1, len(centroids)):
-        d = sqdist(centroids[i])
-        closer = d < best_d
-        best_idx = F.when(closer, F.lit(i)).otherwise(best_idx)
-        best_d = F.when(closer, d).otherwise(best_d)
-    return best_idx.cast("int")
-
-
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
     centroids: list[list[float]],
     k: int = 5,
     n_probe: int = 3,
-    query_id: str = "query_id",
-    cand_id: str = "neighbor_id",
-    vec: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: candidates pre-bucketed by nearest centroid; each query
     probes its n_probe closest cells and scores only those candidates.
     The cell equi-join replaces the cross product — the other classic ANN
     scale path besides hyperplane LSH."""
     c = candidates.withColumn(
-        "__cell", nearest_centroid_vectorized(centroids)(F.col(vec))
+        "__cell", nearest_centroid_vectorized(centroids)(F.col("embedding"))
     )
     # ONE nested literal for the centroid matrix + an indexed transform —
     # never K*dim per-element F.lit calls (at auto-scaled K=128/dim=64
@@ -287,7 +219,9 @@ def ivf_topk(
         lambda cvec, i: F.struct(
             F.aggregate(
                 F.zip_with(
-                    F.col(vec), cvec, lambda a, b: (a.cast("double") - b) ** 2
+                    F.col("embedding"),
+                    cvec,
+                    lambda a, b: (a.cast("double") - b) ** 2,
                 ),
                 F.lit(0.0),
                 lambda acc, v: acc + v,
@@ -300,36 +234,36 @@ def ivf_topk(
         F.transform(
             F.slice(F.array_sort(dists), 1, n_probe), lambda s: s.getField("cell")
         ),
-    ).select(query_id, F.col(vec).alias("__qv"), F.explode("__probes").alias("__cell"))
+    ).select(
+        "query_id",
+        F.col("embedding").alias("__qv"),
+        F.explode("__probes").alias("__cell"),
+    )
 
     scored = (
-        q.join(c.select(cand_id, F.col(vec).alias("__cv"), "__cell"), "__cell")
-        .filter(F.col(query_id) != F.col(cand_id))
+        q.join(
+            c.select("neighbor_id", F.col("embedding").alias("__cv"), "__cell"),
+            "__cell",
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(cand_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            cand_id,
+            "query_id",
+            "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 6).alias("cosine"),
         )
     )
 
 
-def auto_ivf_geometry(
-    n_candidates: int,
-    cell_sq: float = 31.25,
-    p_first: float = 0.79,
-    recall: float = 0.9,
-    min_k: int = 4,
-    max_k: int = 4096,
-) -> tuple[int, int]:
+def auto_ivf_geometry(n_candidates: int) -> tuple[int, int]:
     """Derive (K, n_probe) from the corpus size — the IVF twin of
     ``auto_lsh_geometry`` (round-3 left K fixed at 8, which degrades the
     same way fixed LSH planes did: at 100x corpus, 8 cells of 12.5% each
@@ -341,7 +275,7 @@ def auto_ivf_geometry(
       training quadratic — measured 1.4x worse at the 16x probe).
       ``cell_sq = 31.25`` calibrates K(2000) = √(2000/31.25) = 8, the
       measured RECALL.md knee geometry. The K×dim centroid model stays
-      driver-sized (capped at ``max_k``).
+      driver-sized (K is clamped to [4, 4096]).
     * ``n_probe = ceil(1 + (recall - p_first)/(1 - p_first) · (K-1))``:
       back-solved from the measured RECALL.md sweep at sf0.1 — the
       nearest cell holds ``p_first ≈ 0.79`` of true top-10 mass
@@ -357,10 +291,11 @@ def auto_ivf_geometry(
     """
     import math
 
+    cell_sq, p_first, recall = 31.25, 0.79, 0.9
     k = max(
-        min_k,
+        4,
         min(
-            max_k,
+            4096,
             2
             ** math.ceil(
                 math.log2(
@@ -369,11 +304,8 @@ def auto_ivf_geometry(
             ),
         ),
     )
-    if recall <= p_first:
-        probe = 1
-    else:
-        frac = (recall - p_first) / (1.0 - p_first)
-        probe = min(k, max(1, math.ceil(1 + frac * (k - 1))))
+    frac = (recall - p_first) / (1.0 - p_first)
+    probe = min(k, max(1, math.ceil(1 + frac * (k - 1))))
     return k, probe
 
 
@@ -423,11 +355,6 @@ def lsh_topk_exact(
     k: int = 5,
     n_planes: int | None = None,
     n_tables: int | None = None,
-    query_id: str = "query_id",
-    cand_id: str = "neighbor_id",
-    vec: str = "embedding",
-    seed: int = 42,
-    grid: int = GRID,
 ) -> DataFrame:
     """:func:`lsh_topk` with EXACT-integer bucket keys (sha256-parity ±1
     planes, grid-quantized dots) — the oracle-expressible form that put
@@ -438,14 +365,16 @@ def lsh_topk_exact(
         ap, at = auto_lsh_geometry(candidates.count())
         n_planes = ap if n_planes is None else n_planes
         n_tables = at if n_tables is None else n_tables
-    queries = queries.filter(F.col(vec).isNotNull())
-    candidates = candidates.filter(F.col(vec).isNotNull())
+    queries = queries.filter(F.col("embedding").isNotNull())
+    candidates = candidates.filter(F.col("embedding").isNotNull())
     keys_udf = _table_keys_exact_vectorized(
-        dim, n_planes, n_tables, seed, grid
+        dim, n_planes, n_tables, 42, GRID
     )
 
     def bucket_ids(df: DataFrame, id_out: str) -> DataFrame:
-        keyed = df.select(F.col(id_out), keys_udf(F.col(vec)).alias("__ks"))
+        keyed = df.select(
+            F.col(id_out), keys_udf(F.col("embedding")).alias("__ks")
+        )
         return keyed.select(
             id_out, F.posexplode("__ks").alias("__table", "__key")
         ).select(
@@ -456,58 +385,54 @@ def lsh_topk_exact(
         )
 
     pairs = (
-        F.broadcast(bucket_ids(queries, query_id))
-        .join(bucket_ids(candidates, cand_id), "__b")
-        .filter(F.col(query_id) != F.col(cand_id))
-        .select(query_id, cand_id)
-        .dropDuplicates([query_id, cand_id])
+        F.broadcast(bucket_ids(queries, "query_id"))
+        .join(bucket_ids(candidates, "neighbor_id"), "__b")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = (
         pairs.join(
             F.broadcast(
-                queries.select(F.col(query_id), F.col(vec).alias("__qv"))
+                queries.select(
+                    F.col("query_id"), F.col("embedding").alias("__qv")
+                )
             ),
-            query_id,
+            "query_id",
         )
         .join(
-            candidates.select(F.col(cand_id), F.col(vec).alias("__cv")),
-            cand_id,
+            candidates.select(
+                F.col("neighbor_id"), F.col("embedding").alias("__cv")
+            ),
+            "neighbor_id",
         )
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(cand_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            cand_id,
+            "query_id",
+            "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 6).alias("cosine"),
         )
     )
 
 
-def auto_lsh_geometry(
-    n_candidates: int,
-    target_bucket: int = 128,
-    p_near: float = 0.60,
-    recall: float = 0.9,
-    min_planes: int = 2,
-    max_planes: int = 16,
-    max_tables: int = 64,
-) -> tuple[int, int]:
+def auto_lsh_geometry(n_candidates: int) -> tuple[int, int]:
     """Derive (n_planes, n_tables) from the corpus size so expected bucket
     density stays bounded as n grows — the fix for fixed-geometry LSH
     degrading toward dense buckets at 100× corpus (bucket collisions grow
     ∝ n²/2^planes at fixed planes).
 
-    * ``n_planes = ceil(log2(n / target_bucket))``: expected bucket size
-      stays ≈ target_bucket regardless of n.
-    * ``n_tables = ceil(ln(1-recall) / ln(1-p^planes))``: holds
-      recall ≈ 1-(1-p^planes)^tables as planes rise. ``p_near = 0.60``
+    * ``n_planes = ceil(log2(n / target_bucket))`` in [2, 16]: expected
+      bucket size stays ≈ target_bucket = 128 regardless of n.
+    * ``n_tables = ceil(ln(1-recall) / ln(1-p^planes))`` in [1, 64]: holds
+      recall ≈ 1-(1-p^planes)^tables ≈ 0.9 as planes rise. ``p_near = 0.60``
       is the per-plane collision probability of a true top-10 neighbor
       back-solved from the WEAKEST measured plane family (round 8: the
       sha256-parity exact-key family that the gated embed_lsh_ann
@@ -524,15 +449,15 @@ def auto_lsh_geometry(
     """
     import math
 
+    target_bucket, p_near, recall = 128, 0.60, 0.9
     planes = max(
-        min_planes,
-        min(max_planes, math.ceil(math.log2(max(n_candidates, 1) / target_bucket))),
+        2,
+        min(16, math.ceil(math.log2(max(n_candidates, 1) / target_bucket))),
     )
+    # planes >= 2, so p_near ** planes < 1 and the log is finite
     p_all = p_near ** planes
-    tables = (
-        max_tables
-        if p_all >= 1.0
-        else max(1, min(max_tables, math.ceil(math.log(1 - recall) / math.log(1 - p_all))))
+    tables = max(
+        1, min(64, math.ceil(math.log(1 - recall) / math.log(1 - p_all)))
     )
     return planes, tables
 
@@ -544,10 +469,6 @@ def lsh_topk(
     k: int = 5,
     n_planes: int | None = 4,
     n_tables: int | None = 8,
-    query_id: str = "query_id",
-    cand_id: str = "neighbor_id",
-    vec: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """ANN top-k: score only candidates that share ≥1 LSH bucket with the
     query across n_tables hash tables.
@@ -571,14 +492,14 @@ def lsh_topk(
         ap, at = auto_lsh_geometry(candidates.count())
         n_planes = ap if n_planes is None else n_planes
         n_tables = at if n_tables is None else n_tables
-    keys_udf = _table_keys_vectorized(dim, n_planes, n_tables, seed)
+    keys_udf = _table_keys_vectorized(dim, n_planes, n_tables, 42)
 
     def bucket_ids(df: DataFrame, id_out: str) -> DataFrame:
         # ids + bucket keys ONLY — the 64-float vectors never enter the
         # bucket join or the pair dedup (measured 12x blow-up at 80k
         # candidates when they did: every exploded row, join row, and
         # dropDuplicates shuffle carried two dense arrays)
-        keyed = df.select(F.col(id_out), keys_udf(vec).alias("__ks"))
+        keyed = df.select(F.col(id_out), keys_udf("embedding").alias("__ks"))
         return keyed.select(
             id_out, F.posexplode("__ks").alias("__table", "__key")
         ).select(
@@ -591,34 +512,38 @@ def lsh_topk(
     # query side is small by contract → broadcast: the candidate side never
     # shuffles for the bucket join, only the bare id pairs do (for dedup)
     pairs = (
-        F.broadcast(bucket_ids(queries, query_id))
-        .join(bucket_ids(candidates, cand_id), "__b")
-        .filter(F.col(query_id) != F.col(cand_id))
-        .select(query_id, cand_id)
-        .dropDuplicates([query_id, cand_id])
+        F.broadcast(bucket_ids(queries, "query_id"))
+        .join(bucket_ids(candidates, "neighbor_id"), "__b")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = (
         pairs.join(
             F.broadcast(
-                queries.select(F.col(query_id), F.col(vec).alias("__qv"))
+                queries.select(
+                    F.col("query_id"), F.col("embedding").alias("__qv")
+                )
             ),
-            query_id,
+            "query_id",
         )
         .join(
-            candidates.select(F.col(cand_id), F.col(vec).alias("__cv")),
-            cand_id,
+            candidates.select(
+                F.col("neighbor_id"), F.col("embedding").alias("__cv")
+            ),
+            "neighbor_id",
         )
         .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(cand_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            cand_id,
+            "query_id",
+            "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 6).alias("cosine"),
         )
@@ -740,11 +665,7 @@ def cosine_pairs_lsh_md5(
     vectors: DataFrame,
     id_col: str,
     dim: int,
-    vec: str = "embedding",
-    n_tables: int = 4,
-    n_planes: int = 4,
     threshold: float = 0.4,
-    scale: int = GRID,
 ) -> DataFrame:
     """Near-dup pair generation via md5-domain hyperplane LSH — the
     oracle-twin of :func:`cosine_pairs_lsh` (whose sha256 planes and
@@ -755,7 +676,7 @@ def cosine_pairs_lsh_md5(
     ``dedup_embed_cosine`` precedent). Returns (id_a, id_b, cosine ≥
     threshold) with id_a < id_b."""
     keys = _md5_bucket_keys_folded(
-        vectors, id_col, vec, dim, n_tables, n_planes, scale
+        vectors, id_col, "embedding", dim, 4, 4, GRID
     )
     l, r = keys.alias("l"), keys.alias("r")
     pairs = (
@@ -771,7 +692,7 @@ def cosine_pairs_lsh_md5(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _exact_verify(pairs, vectors, id_col, vec, threshold)
+    return _exact_verify(pairs, vectors, id_col, "embedding", threshold)
 
 
 def lsh_ann_md5(
@@ -782,9 +703,6 @@ def lsh_ann_md5(
     n_planes: int = 4,
     k: int = 5,
     scale: int = GRID,
-    query_id: str = "query_id",
-    cand_id: str = "neighbor_id",
-    vec: str = "embedding",
     multiprobe: int = 0,
 ) -> DataFrame:
     """Hyperplane-LSH ANN whose EVERY intermediate is reproducible in
@@ -822,18 +740,18 @@ def lsh_ann_md5(
 
     def bucket_keys(df: DataFrame, id_out: str) -> DataFrame:
         return _md5_bucket_keys_folded(
-            df, id_out, vec, dim, n_tables, n_planes, scale
+            df, id_out, "embedding", dim, n_tables, n_planes, scale
         )
 
-    qq = grid_rows(queries, query_id, vec, scale)
-    qc = grid_rows(candidates, cand_id, vec, scale)
-    probe_keys = bucket_keys(queries, query_id)
+    qq = grid_rows(queries, "query_id", "embedding", scale)
+    qc = grid_rows(candidates, "neighbor_id", "embedding", scale)
+    probe_keys = bucket_keys(queries, "query_id")
     if multiprobe > 0:
         flips = spark.range(multiprobe).select(
             F.col("id").cast("int").alias("__mp_p")
         )
         flipped = probe_keys.crossJoin(F.broadcast(flips)).select(
-            query_id,
+            "query_id",
             "t",
             F.col("key").bitwiseXOR(
                 F.call_function(
@@ -841,39 +759,39 @@ def lsh_ann_md5(
                 )
             ).alias("key"),
         )
-        probe_keys = probe_keys.select(query_id, "t", "key").union(
+        probe_keys = probe_keys.select("query_id", "t", "key").union(
             flipped
-        ).dropDuplicates([query_id, "t", "key"])
+        ).dropDuplicates(["query_id", "t", "key"])
     pairs = (
         F.broadcast(probe_keys)
-        .join(bucket_keys(candidates, cand_id), ["t", "key"])
-        .filter(F.col(query_id) != F.col(cand_id))
-        .select(query_id, cand_id)
-        .dropDuplicates([query_id, cand_id])
+        .join(bucket_keys(candidates, "neighbor_id"), ["t", "key"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = (
         pairs.join(
             F.broadcast(
-                qq.select(query_id, "j", F.col("q").alias("qa"))
+                qq.select("query_id", "j", F.col("q").alias("qa"))
             ),
-            query_id,
+            "query_id",
         )
         .join(
-            qc.select(cand_id, "j", F.col("q").alias("qb")),
-            [cand_id, "j"],
+            qc.select("neighbor_id", "j", F.col("q").alias("qb")),
+            ["neighbor_id", "j"],
         )
-        .groupBy(query_id, cand_id)
+        .groupBy("query_id", "neighbor_id")
         .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot_q"))
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("dot_q").desc(), F.col(cand_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dot_q").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id,
-            cand_id,
+            "query_id",
+            "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
             F.col("dot_q").cast("long").alias("dot_q"),
         )
@@ -902,13 +820,7 @@ def cosine_pairs(
 
 def cosine_pairs_lsh(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
     threshold: float = 0.4,
-    dim: int = 64,
-    n_planes: int | None = 4,
-    n_tables: int | None = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane-LSH bucket self-join.
 
@@ -916,20 +828,14 @@ def cosine_pairs_lsh(
     collisions, not n²; the dense vectors never travel with the exploded
     bucket rows (same discipline as ``lsh_topk``). Verification computes
     the exact cosine on candidates only → precision 1.0; recall at the
-    default 4 planes × 16 tables is ≈ 1-(1-p^4)^16 with p = 1-θ/π
-    (≈ 0.94 at cosine 0.4), pinned by tests/test_similarity.py.
-
-    ``n_planes=None`` / ``n_tables=None`` auto-derive the geometry from
-    the corpus count (``auto_lsh_geometry``): for a SELF-join the
-    collision cost is ∝ tables·n²/2^planes, so scaling planes with
-    log2(n) is what keeps the pair-generation subquadratic at 100 TB.
+    4 planes × 16 tables over 64-dim ``(vec_id, embedding)`` rows is
+    ≈ 1-(1-p^4)^16 with p = 1-θ/π (≈ 0.94 at cosine 0.4), pinned by
+    tests/test_similarity.py.
     """
-    if n_planes is None or n_tables is None:
-        ap, at = auto_lsh_geometry(vectors.count())
-        n_planes = ap if n_planes is None else n_planes
-        n_tables = at if n_tables is None else n_tables
-    keys_udf = _table_keys_vectorized(dim, n_planes, n_tables, seed)
-    keyed = vectors.select(F.col(id_col).alias("id"), keys_udf(vec).alias("__ks"))
+    keys_udf = _table_keys_vectorized(64, 4, 16, 42)
+    keyed = vectors.select(
+        F.col("vec_id").alias("id"), keys_udf("embedding").alias("__ks")
+    )
     buckets = keyed.select(
         "id", F.posexplode("__ks").alias("__table", "__key")
     )
@@ -944,7 +850,7 @@ def cosine_pairs_lsh(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _exact_verify(cand, vectors, id_col, vec, threshold)
+    return _exact_verify(cand, vectors, "vec_id", "embedding", threshold)
 
 
 def cosine_pairs_lsh_exact(
@@ -952,11 +858,6 @@ def cosine_pairs_lsh_exact(
     id_col: str = "vec_id",
     vec: str = "embedding",
     threshold: float = 0.4,
-    dim: int = 64,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    seed: int = 42,
-    grid: int = GRID,
 ) -> DataFrame:
     """:func:`cosine_pairs_lsh` with EXACT-integer bucket keys
     (sha256-parity ±1 planes, grid-quantized strict-positive dots — the
@@ -967,7 +868,7 @@ def cosine_pairs_lsh_exact(
     (id_a, id_b, cosine)."""
     vectors = vectors.filter(F.col(vec).isNotNull())
     keys_udf = _table_keys_exact_vectorized(
-        dim, n_planes, n_tables, seed, grid
+        64, 4, 16, 42, GRID
     )
     keyed = vectors.select(
         F.col(id_col).alias("id"), keys_udf(F.col(vec)).alias("__ks")
@@ -1080,11 +981,11 @@ def _block_cosines(pdf: pd.DataFrame, emit, both_ways: bool) -> None:
                 emit(cs, valid, r[s:e], c)
 
 
-def _near_row_max(cs: np.ndarray, valid: np.ndarray, margin: float):
-    """Valid scores within ``margin`` of their row's valid maximum, plus
+def _near_row_max(cs: np.ndarray, valid: np.ndarray):
+    """Valid scores within 1e-6 of their row's valid maximum, plus
     NaN scores (zero-norm vectors: the exact path decides those)."""
     rowmax = np.where(valid, cs, -np.inf).max(axis=1)
-    return valid & ((cs >= rowmax[:, None] - margin) | np.isnan(cs))
+    return valid & ((cs >= rowmax[:, None] - 1e-6) | np.isnan(cs))
 
 
 def cosine_pairs_blocked(
@@ -1157,11 +1058,10 @@ def nn_shortlist_blocked(
     id_col: str = "vec_id",
     vec: str = "embedding",
     block_rows: int = 4096,
-    margin: float = 1e-6,
 ) -> DataFrame:
     """Directional leave-one-out nearest-neighbor shortlist: for every
     non-null vector, the candidate ids whose blocked-matmul cosine is
-    within ``margin`` of that row's per-block maximum. Returns
+    within 1e-6 of that row's per-block maximum. Returns
     ``(id, cand_id)`` — guaranteed to contain the exact argmax (and every
     exact tie): the true 1-NN j* is its own block's maximum, and any j
     tied with j* to float precision (~1e-13) is within margin of *its*
@@ -1189,7 +1089,7 @@ def nn_shortlist_blocked(
         res_j: list = []
 
         def emit(cs, valid, r, c):
-            ii, jj = np.nonzero(_near_row_max(cs, valid, margin))
+            ii, jj = np.nonzero(_near_row_max(cs, valid))
             res_i.extend(ids[r[ii]])
             res_j.extend(ids[c[jj]])
 
@@ -1207,7 +1107,6 @@ def semantic_dedup(
     vec: str = "embedding",
     k: int = 16,
     threshold: float = 0.9,
-    iters: int = 2,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup removal (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings coarsely, compare cosines only
@@ -1238,7 +1137,7 @@ def semantic_dedup(
     """
     from . import graph
 
-    cents = kmeans_centroids(vectors, vec=vec, k=k, iters=iters, id_col=id_col)
+    cents = kmeans_centroids(vectors, vec=vec, k=k, iters=2, id_col=id_col)
     assigned = pin(
         vectors.select(F.col(id_col).alias("id"), F.col(vec).alias("__v"))
         .withColumn("cell", nearest_centroid_vectorized(cents)(F.col("__v")))
@@ -1278,7 +1177,7 @@ def semantic_dedup(
 
 
 def pca_moments(
-    vectors: DataFrame, vec: str = "embedding"
+    vectors: DataFrame,
 ) -> tuple[int, "list[float]", "list[list[float]]"]:
     """Distributed PCA training, step 1: the sufficient statistics.
 
@@ -1300,7 +1199,7 @@ def pca_moments(
         s = None
         o = None
         for pdf in it:
-            col = pdf[vec].to_numpy()
+            col = pdf["embedding"].to_numpy()
             col = [e for e in col if e is not None]
             if not col:
                 continue
@@ -1314,7 +1213,7 @@ def pca_moments(
             )
 
     rows = (
-        vectors.select(vec)
+        vectors.select("embedding")
         .mapInPandas(partials, "n long, s array<double>, o array<double>")
         .collect()
     )
@@ -1359,7 +1258,6 @@ def pca_project(
     mean: "list[float]",
     components: "list[list[float]]",
     n_components: int,
-    vec: str = "embedding",
     out: str = "proj",
     round_dp: int | None = 6,
 ) -> DataFrame:
@@ -1392,7 +1290,7 @@ def pca_project(
                 res[slot] = row.tolist()
         return pd.Series(res)
 
-    return vectors.withColumn(out, project(F.col(vec)))
+    return vectors.withColumn(out, project(F.col("embedding")))
 
 
 def class_nn_shortlist_blocked(
@@ -1400,11 +1298,9 @@ def class_nn_shortlist_blocked(
     id_col: str = "vec_id",
     vec: str = "embedding",
     class_col: str = "label",
-    block_rows: int = 4096,
-    margin: float = 1e-6,
 ) -> DataFrame:
     """Per-class leave-one-out 1-NN shortlist: for every non-null vector,
-    candidate ids within ``margin`` of that row's per-block maximum
+    candidate ids within 1e-6 of that row's per-block maximum
     cosine — tracked SEPARATELY for same-class and different-class
     candidates. Returns ``(id, cand_id, same)``.
 
@@ -1418,7 +1314,7 @@ def class_nn_shortlist_blocked(
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     id_type = vectors.schema[id_col].dataType
-    v, nb = _checkpointed_blocks(vectors, id_col, vec, block_rows, class_col)
+    v, nb = _checkpointed_blocks(vectors, id_col, vec, 4096, class_col)
     out_schema = StructType(
         [
             StructField("id", id_type),
@@ -1438,7 +1334,7 @@ def class_nn_shortlist_blocked(
             samec = cls[r][:, None] == cls[c][None, :]
             for side in (True, False):
                 m = valid & (samec if side else ~samec)
-                ii, jj = np.nonzero(_near_row_max(cs, m, margin))
+                ii, jj = np.nonzero(_near_row_max(cs, m))
                 res_i.extend(ids[r[ii]])
                 res_j.extend(ids[c[jj]])
                 res_s.extend([side] * len(ii))

@@ -92,9 +92,9 @@ def cms_estimate(
     key: str,
     d: int = 4,
     w: int = 2048,
-    out: str = "cms_count",
 ) -> DataFrame:
-    """Point-estimate the frequency of each ``items.key``: min over the d
+    """Point-estimate the frequency of each ``items.key`` as
+    ``cms_count``: min over the d
     probed cells. The sketch broadcasts (≤ d·w cells); items only explode
     ×d, so the estimate is a map-side join at any item count."""
     probes = items.select(
@@ -103,5 +103,9 @@ def cms_estimate(
     return (
         probes.join(F.broadcast(sketch), ["row", "col"], "left")
         .groupBy(key)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("long").alias(out))
+        .agg(
+            F.min(F.coalesce("cnt", F.lit(0)))
+            .cast("long")
+            .alias("cms_count")
+        )
     )

@@ -13,7 +13,7 @@ match. Shuffle keys become (key, salt) → hot keys fan out S ways.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,23 +22,18 @@ def salted_join(
     small: DataFrame,
     key: str,
     salt_buckets: int = 8,
-    salt_source: Column | str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side salted S ways and the small side
-    replicated S×. ``salt_source`` defaults to the key itself plus a hash of
-    all big-side columns — any stable per-row expression works."""
-    if salt_source is None:
-        salt_source = F.xxhash64(*[F.col(c) for c in big.columns])
-    elif isinstance(salt_source, str):
-        salt_source = F.col(salt_source)
+    """Inner equi-join with the big side salted S ways and the small side
+    replicated S×. The salt is a hash of all big-side columns, a stable
+    per-row expression."""
+    salt_source = F.xxhash64(*[F.col(c) for c in big.columns])
     salted_big = big.withColumn(
         "__salt", F.pmod(salt_source, F.lit(salt_buckets)).cast("int")
     )
     replicated_small = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(s) for s in range(salt_buckets)]))
     )
-    out = salted_big.join(replicated_small, [key, "__salt"], how)
+    out = salted_big.join(replicated_small, [key, "__salt"], "inner")
     return out.drop("__salt")
 
 
@@ -47,12 +42,11 @@ def hot_cold_split_join(
     small: DataFrame,
     key: str,
     weight: str,
-    hot_k: int = 1024,
 ) -> DataFrame:
-    """Inner equi-join split by key frequency: the ``hot_k`` heaviest
+    """Inner equi-join split by key frequency: the 1024 heaviest
     small-side rows (by ``weight``) broadcast — their big-side rows never
     shuffle — while the cold tail takes the normal shuffle join, whose
-    worst reducer key is now bounded by the (hot_k+1)-th weight.
+    worst reducer key is now bounded by the 1025th weight.
 
     The Zipf-shaped complement to ``salted_join``: salting spreads a known
     hot key S ways; the frequency split removes the head of the
@@ -63,7 +57,7 @@ def hot_cold_split_join(
     key)``: hot and cold partitions of the small side are disjoint and
     cover it, so the union is exactly the inner join.
     """
-    hot = small.orderBy(F.col(weight).desc(), F.col(key).asc()).limit(hot_k)
+    hot = small.orderBy(F.col(weight).desc(), F.col(key).asc()).limit(1024)
     cold = small.join(F.broadcast(hot.select(key)), key, "left_anti")
     return big.join(F.broadcast(hot), key).unionByName(big.join(cold, key))
 

@@ -21,19 +21,21 @@ def stopword_hits(toks: Column, stopwords: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def lang_scores(toks: Column, table: dict[str, list[str]] | None = None) -> dict[str, Column]:
+def lang_scores(toks: Column) -> dict[str, Column]:
     """Per-language stopword-hit scores (the n-gram-free language-ID
     heuristic: count of language-characteristic function words)."""
-    table = table or LANG_STOPWORDS
-    return {lang: stopword_hits(toks, words) for lang, words in table.items()}
+    return {
+        lang: stopword_hits(toks, words)
+        for lang, words in LANG_STOPWORDS.items()
+    }
 
 
-def lang_guess(toks: Column, table: dict[str, list[str]] | None = None) -> Column:
-    """Argmax language with a fixed preference order on ties (dict order) —
-    deterministic, SQL-expressible (nested CASE)."""
-    table = table or LANG_STOPWORDS
-    scores = lang_scores(toks, table)
-    langs = list(table)
+def lang_guess(toks: Column) -> Column:
+    """Argmax language with a fixed preference order on ties
+    (``LANG_STOPWORDS`` order) — deterministic, SQL-expressible (nested
+    CASE)."""
+    scores = lang_scores(toks)
+    langs = list(LANG_STOPWORDS)
     expr = F.lit(langs[-1])
     # build from the back: lang_i wins if its score >= every later lang's
     for i in range(len(langs) - 2, -1, -1):
@@ -62,17 +64,15 @@ def bpe_ish_token_estimate(text: Column | str) -> Column:
     )
 
 
-def quality_features(text: Column | str, stopwords: list[str] | None = None) -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio features (the classic cheap
-    quality filters for web-scale corpora)."""
+def quality_features(text: Column | str) -> dict[str, Column]:
+    """Length / punctuation / English-stopword-ratio features (the classic
+    cheap quality filters for web-scale corpora)."""
     c = F.col(text) if isinstance(text, str) else text
     toks = tokens(c)
     n_tok = F.size(toks)
     n_chars = F.length(c)
-    stop = stopwords if stopwords is not None else LANG_STOPWORDS["en"]
-    n_stop = stopword_hits(toks, stop)
-    n_punct = n_chars - F.length(F.regexp_replace(c, r"[^\w\s]", "")) \
-        if False else F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
+    n_stop = stopword_hits(toks, LANG_STOPWORDS["en"])
+    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
     return {
         "n_chars": n_chars.cast("long"),
         "n_tokens": n_tok.cast("long"),
@@ -89,9 +89,9 @@ def fingerprint_sha(text: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-def rolling_hash(text: Column | str, base: int = 31, mod: int = 2**31 - 1) -> Column:
+def rolling_hash(text: Column | str) -> Column:
     """Polynomial rolling hash over tokens (Rabin-Karp style):
-    h = (h*base + v(tok)) % mod with v(tok) = first 32 md5 bits
+    h = (h*31 + v(tok)) % (2^31 - 1) with v(tok) = first 32 md5 bits
     (``conv(substr(md5(tok),1,8),16,10)``). Content-order-sensitive,
     cheap, streamable — and, since round 4, reproducible in ANSI SQL:
     DuckDB computes the identical fold via
@@ -100,11 +100,12 @@ def rolling_hash(text: Column | str, base: int = 31, mod: int = 2**31 - 1) -> Co
     the previous token hash, has no cross-engine twin). Intermediate
     ``acc*31 + v`` stays < 2^37 — exact in int64 on both engines."""
     t = tokens(text)
+    mod = 2**31 - 1
     return F.aggregate(
         t,
         F.lit(0).cast("long"),
         lambda acc, w: (
-            acc * base
+            acc * 31
             + F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long") % mod
         )
         % mod,

@@ -40,7 +40,7 @@ class ConcurrentWriteError(RuntimeError):
     the competitor's commit intact. Re-read and retry the write."""
 
 
-def _presence(df: DataFrame, keys: list[str]) -> DataFrame:
+def _presence(df: DataFrame) -> DataFrame:
     # Null-safe presence marker: join keys may legitimately be null-free,
     # but a literal flag keeps "row exists on this side" unambiguous.
     return df.withColumn("__present", F.lit(True))
@@ -53,8 +53,8 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataF
     column, unmatched keep the target row. Columns = union of both sides'
     columns (missing side → null).
     """
-    t = _presence(target, keys).alias("t")
-    s = _presence(source, keys).alias("s")
+    t = _presence(target).alias("t")
+    s = _presence(source).alias("s")
     cond = None
     for k in keys:
         c = F.col(f"s.{k}") == F.col(f"t.{k}")
@@ -90,19 +90,18 @@ def scd_upsert_dim(
     target: DataFrame,
     source: DataFrame,
     keys: list[str],
-    first_seen_col: str = "first_seen_date",
-    last_updated_col: str = "last_updated",
 ) -> DataFrame:
     """Dimension upsert with SCD-lite bookkeeping (reference SL:86-104):
     matched → source attributes + target's first_seen + fresh last_updated;
     new → source attributes + today's first_seen."""
     merged = merge_upsert(
-        target.withColumnRenamed(first_seen_col, "__t_first_seen"),
-        source.withColumn(last_updated_col, F.current_timestamp()),
+        target.withColumnRenamed("first_seen_date", "__t_first_seen"),
+        source.withColumn("last_updated", F.current_timestamp()),
         keys,
     )
     return merged.withColumn(
-        first_seen_col, F.coalesce(F.col("__t_first_seen"), F.current_date())
+        "first_seen_date",
+        F.coalesce(F.col("__t_first_seen"), F.current_date()),
     ).drop("__t_first_seen")
 
 
@@ -312,11 +311,10 @@ class ParquetTable:
         rec = None if path is None else self._commit_record(path)
         return rec["rows"] if rec is not None else self.read().count()
 
-    def write(
-        self, df: DataFrame, mode: str = "overwrite", force: bool = False
-    ) -> int:
-        """Commit ``df`` as the new current version; return its row count,
-        observed on the write job (no second scan).
+    def write(self, df: DataFrame) -> int:
+        """Commit ``df`` as the new current version, replacing the table's
+        contents; return its row count, observed on the write job (no
+        second scan).
 
         Concurrent-writer guard (optimistic concurrency, Delta-OCC
         style): the pointer value is snapshotted HERE, before the data
@@ -327,8 +325,7 @@ class ParquetTable:
         raised (re-read + retry is the caller's move — blind last-wins
         would silently drop the competitor's commit, which for
         read-modify-write verbs like delete_where means losing its
-        changes entirely). ``force=True`` skips the check for pure blind
-        overwrites that genuinely don't care what they replace.
+        changes entirely).
         """
         # Snapshot pointer + history BEFORE the data write: the CAS base,
         # and (for retention) a pre-_LOG current version only reachable
@@ -346,7 +343,7 @@ class ParquetTable:
         record = {"schema": _nullable(df.schema).jsonValue(), "rows": rows}
         with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
             json.dump(record, f)
-        self._commit(version, base, prior, force)
+        self._commit(version, base, prior)
         return rows
 
     def _commit(
@@ -542,8 +539,6 @@ def scd2_upsert(
     keys: list[str],
     attrs: list[str],
     effective: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension MERGE: history-preserving upsert.
 
@@ -565,8 +560,8 @@ def scd2_upsert(
     must be pre-deduped to one row per key (use latest_per_key first),
     matching the ordering contract of ``merge_upsert``.
     """
-    current = target.filter(F.col(valid_to).isNull())
-    history = target.filter(F.col(valid_to).isNotNull())
+    current = target.filter(F.col("valid_to").isNull())
+    history = target.filter(F.col("valid_to").isNotNull())
 
     t = current.alias("t")
     s = source.alias("s")
@@ -581,7 +576,7 @@ def scd2_upsert(
         F.struct(*[F.col(f"s.{a}") for a in attrs])
     )
 
-    out_cols = list(dict.fromkeys(keys + attrs + [valid_from, valid_to]))
+    out_cols = list(dict.fromkeys(keys + attrs + ["valid_from", "valid_to"]))
 
     # 1. surviving current rows: unchanged-matched or source-absent
     keep = joined.filter(t_here & (~s_here | ~changed)).select(
@@ -591,15 +586,15 @@ def scd2_upsert(
     closed = joined.filter(t_here & s_here & changed).select(
         *[F.col(f"t.{k}").alias(k) for k in keys],
         *[F.col(f"t.{a}").alias(a) for a in attrs],
-        F.col(f"t.{valid_from}").alias(valid_from),
-        F.col(f"s.{effective}").cast("date").alias(valid_to),
+        F.col("t.valid_from").alias("valid_from"),
+        F.col(f"s.{effective}").cast("date").alias("valid_to"),
     ).select(*out_cols)
     # 3. fresh current versions: changed keys + brand-new keys
     fresh = joined.filter(s_here & (~t_here | changed)).select(
         *[F.col(f"s.{k}").alias(k) for k in keys],
         *[F.col(f"s.{a}").alias(a) for a in attrs],
-        F.col(f"s.{effective}").cast("date").alias(valid_from),
-        F.lit(None).cast("date").alias(valid_to),
+        F.col(f"s.{effective}").cast("date").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
     ).select(*out_cols)
 
     return (

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.registry import cnt, dec, dec_sum, register
+from youtube_etl_project_spark.registry import dec, register
 from youtube_etl_project_spark.sources import load_table
 
 

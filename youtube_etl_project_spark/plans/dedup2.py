@@ -409,8 +409,7 @@ def _semantic_v1_oracle() -> str:
         "sits on top is separately oracle-proven by dedup_cluster_cc",
 )
 def dedup_semantic_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+    from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
     from youtube_etl_project_spark.plans.similarity_queries import (
         _ivf_v1_dists,
     )
@@ -419,12 +418,7 @@ def dedup_semantic_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Arrow pair kernel reads raw embeddings, so the grid rows feed
     # only the cell assignment
     dists = _ivf_v1_dists(spark, grid_rows(emb, "vec_id", "embedding", GRID))
-    wc = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cell"))
-    assign = (
-        dists.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
+    assign = nearest_cells(dists, ["vec_id"], 1).select("vec_id", "cell")
     # within-cell τ test as the per-cell Arrow int64 kernel
     members = assign.join(
         emb.filter(F.col("embedding").isNotNull()).select(

@@ -84,10 +84,12 @@ def _scatter_qe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _collect_scatter(qe: DataFrame, d: int = 64):
-    """(n, Sx, Cq) as exact Python ints: Cq = n*sum(q_i q_j) - Sx_i Sx_j,
-    the n^2*S1^2-scaled covariance. Dense by construction (posexplode
-    emits every position). Model-sized collects (d + d^2 rows)."""
+def _collect_scatter(qe: DataFrame):
+    """(n, Sx, Cq) as exact Python ints over the 64 dims: Cq =
+    n*sum(q_i q_j) - Sx_i Sx_j, the n^2*S1^2-scaled covariance. Dense by
+    construction (posexplode emits every position). Model-sized collects
+    (d + d^2 rows)."""
+    d = 64
     a, bb = qe.alias("a"), qe.alias("b")
     g_rows = (
         a.join(bb, "vec_id")

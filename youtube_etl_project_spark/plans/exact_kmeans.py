@@ -98,14 +98,21 @@ def kmeans_dists_exact(qe: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
+def nearest_cells(dists: DataFrame, keys: "list[str]", n: int) -> DataFrame:
+    """The ``n`` nearest cells per ``keys`` of (..., cell, dist) rows:
+    ``rn`` is the row_number over ``keys`` ordered by (dist, cell), so on
+    an exact-int distance tie the lower cell wins; rows with
+    ``rn <= n`` are kept."""
+    w = Window.partitionBy(*keys).orderBy(F.asc("dist"), F.asc("cell"))
+    return dists.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= n
+    )
+
+
 def kmeans_assign_exact(qe: DataFrame, cb: DataFrame) -> DataFrame:
     """(id, cell): nearest centroid, lowest cell on exact-int ties."""
-    w = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
-    return (
-        kmeans_dists_exact(qe, cb)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "cell")
+    return nearest_cells(kmeans_dists_exact(qe, cb), ["id"], 1).select(
+        "id", "cell"
     )
 
 
@@ -114,7 +121,6 @@ def kmeans_assign_arrow(
     id_col: str,
     vec: str,
     books: dict[tuple[int, int], int],
-    grid: int = GRID,
 ) -> DataFrame:
     """(id, cell) as ONE Arrow int64 pass over the raw vectors — the
     corpus-wide twin of :func:`kmeans_assign_exact` for a trained books
@@ -122,7 +128,7 @@ def kmeans_assign_arrow(
     broadcast centroid join (k≈√n ⇒ ~180 M join rows at sf0.1) before
     aggregating; here the same exact integers come from one numpy
     matmul per batch (``grid.sq_dists``). Distances stay far inside
-    int64 (≤ 64·(2·grid)² ≪ 2⁶³ for unit-range components), and
+    int64 (≤ 64·(2·GRID)² ≪ 2⁶³ for unit-range components), and
     np.argmin returns the FIRST minimum — cell-ascending columns ⇒ the
     lowest-cell tiebreak. The books stay model-sized in the task
     closure."""
@@ -141,7 +147,7 @@ def kmeans_assign_arrow(
         for pdf in it:
             if not len(pdf):
                 continue
-            d = sq_dists(snap_np(pdf[vec], grid), Cm)
+            d = sq_dists(snap_np(pdf[vec], GRID), Cm)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].to_numpy(),
@@ -156,12 +162,14 @@ def kmeans_assign_arrow(
     )
 
 
-def kmeans_exact_ctes(k_sql: str | int, iters: int = 2) -> str:
-    """DuckDB twin of train+assign. The caller's WITH list must already
-    define ``qe(id, pos, q)``; this appends seed/c0, the unrolled rounds
-    (d_i/a_i/m_i/c_i), the final distances (``kdists``) and assignments
-    (``kassign(id, cell)``). ``k_sql`` may be an int literal or a scalar
-    subquery string (dynamic k)."""
+def kmeans_exact_ctes(k_sql: str | int) -> str:
+    """DuckDB twin of train+assign with the trainer's default 2 rounds.
+    The caller's WITH list must already define ``qe(id, pos, q)``; this
+    appends seed/c0, the unrolled rounds (d_i/a_i/m_i/c_i), the final
+    distances (``kdists``) and assignments (``kassign(id, cell)``).
+    ``k_sql`` may be an int literal or a scalar subquery string
+    (dynamic k)."""
+    iters = 2
     parts = [
         f""", seed AS (
             SELECT id,

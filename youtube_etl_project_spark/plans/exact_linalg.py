@@ -97,18 +97,14 @@ def ridge_gd_train(
     return wq
 
 
-def ridge_gd_ctes(
-    d: int,
-    iters: int = RIDGE_ITERS,
-    s1: int = RIDGE_S1,
-    s2: int = RIDGE_S2,
-) -> str:
+def ridge_gd_ctes(d: int) -> str:
     """DuckDB twin of :func:`ridge_gd_train`, GROUPED: the caller's WITH
     list must already define ``qe(grp, rid, j, q)`` (features, intercept
     row j=d-1 included) and ``yy(grp, rid, yq)``; this appends the
     sufficient statistics (``nn/g/bv``), ``w0``, and the unrolled
-    iterations. The final weights are ``w{iters}(grp, j, wq)``. A global
-    (ungrouped) fit passes a constant grp."""
+    iterations. The final weights are ``w{RIDGE_ITERS}(grp, j, wq)``. A
+    global (ungrouped) fit passes a constant grp."""
+    iters, s1, s2 = RIDGE_ITERS, RIDGE_S1, RIDGE_S2
     en, ed, bn, bd = RIDGE_EN, RIDGE_ED, RIDGE_BN, RIDGE_BD
     parts = [
         f""", nn AS MATERIALIZED (
@@ -164,11 +160,10 @@ NS_ITERS = 30
 def ns_inverse_train(
     Aq: list[list[int]],
     sa: int,
-    iters: int = NS_ITERS,
-    sx: int = NS_SX,
 ) -> list[list[int]]:
-    """Grid-snapped Newton-Schulz; returns X ~ inv(A_real)*SX where
+    """Grid-snapped Newton-Schulz; returns X ~ inv(A_real)*NS_SX where
     A_real = Aq/sa. Mirrors :func:`ns_ctes` term-for-term."""
+    iters, sx = NS_ITERS, NS_SX
     d = len(Aq)
     rq = max(sum(abs(v) for v in row) for row in Aq)
     X = [[tdiv(Aq[i][j] * sa * sx, rq * rq) for j in range(d)] for i in range(d)]
@@ -194,11 +189,12 @@ def ns_inverse_train(
     return X
 
 
-def ns_ctes(iters: int = NS_ITERS, sx: int = NS_SX) -> str:
+def ns_ctes() -> str:
     """DuckDB twin of :func:`ns_inverse_train`. The caller's WITH list
     must define ``aq(i, j, v)`` (dense, HUGEINT) and ``sa(v)``; appends
     ``rq``, ``x0`` and the iteration chain — the inverse is
-    ``x{iters}(i, j, v)`` on the SX grid."""
+    ``x{NS_ITERS}(i, j, v)`` on the NS_SX grid."""
+    iters, sx = NS_ITERS, NS_SX
     parts = [
         f""", rq AS (
             SELECT MAX(s) AS v
@@ -247,13 +243,13 @@ PCA_ITERS = 6
 def pca_subspace_train(
     C: list[list[int]],
     k: int,
-    iters: int = PCA_ITERS,
-    sv: int = PCA_SV,
 ) -> list[list[int]]:
     """Integer subspace iteration over the scatter matrix C (any fixed
-    positive scale); returns V as d x k columns on the SV grid, mutually
-    orthogonal (max-abs normalized, NOT unit — projections are exact up
-    to a per-component positive scale). Mirrors :func:`pca_ctes`."""
+    positive scale); returns V as d x k columns on the PCA_SV grid,
+    mutually orthogonal (max-abs normalized, NOT unit — projections are
+    exact up to a per-component positive scale). Mirrors
+    :func:`pca_ctes`."""
+    iters, sv = PCA_ITERS, PCA_SV
     d = len(C)
     V = [
         [sv if i == kk else tdiv(sv, i + 2 * kk + 2) for kk in range(k)]
@@ -295,16 +291,12 @@ def pca_subspace_train(
     return V
 
 
-def pca_ctes(
-    d: int,
-    k: int,
-    iters: int = PCA_ITERS,
-    sv: int = PCA_SV,
-) -> str:
+def pca_ctes(d: int, k: int) -> str:
     """DuckDB twin of :func:`pca_subspace_train`. The caller's WITH list
     must define ``cq(i, j, v)`` (dense scatter, HUGEINT); appends the
     seed ``v0`` and per-round matvec + Gram-Schmidt chains — the final
-    basis is ``v{iters}(i, k, v)``."""
+    basis is ``v{PCA_ITERS}(i, k, v)``."""
+    iters, sv = PCA_ITERS, PCA_SV
     parts = [
         f""", v0 AS MATERIALIZED (
             SELECT CAST(ri.range AS INT) AS i, CAST(rk.range AS INT) AS k,

@@ -132,14 +132,11 @@ def _nsw_search_ctes(
     edges: str = "edges",
     assign: str = "kassign",
     qe: str = "qe",
-    final: bool = True,
-    topk: int = _TOPK,
 ) -> str:
     """Oracle CTEs for the beam-search trace over CTE
     ``{edges}(src, dst, ...)`` with membership ``{assign}(id, cell)``
-    and grid rows ``{qe}(id, pos, q)``; ``final=True`` appends the
-    top-``topk`` projection, ``final=False`` leaves the trace open for
-    a caller that consumes v{_T} itself (the online-ingest oracle)."""
+    and grid rows ``{qe}(id, pos, q)``, ending in the top-``_TOPK``
+    projection."""
     parts = [
         f""", entry AS (
             SELECT q.id AS query_id, MIN(o.id) AS id
@@ -182,9 +179,8 @@ def _nsw_search_ctes(
             ) WHERE rn <= {_B}
         )"""
         )
-    if final:
-        parts.append(
-            f"""
+    parts.append(
+        f"""
         SELECT query_id, id AS neighbor_id, CAST(rnk AS BIGINT) AS rank,
                d AS dist_q
         FROM (
@@ -192,9 +188,9 @@ def _nsw_search_ctes(
                    ROW_NUMBER() OVER (PARTITION BY query_id
                                       ORDER BY d ASC, id ASC) AS rnk
             FROM v{_T} WHERE id <> query_id
-        ) WHERE rnk <= {topk}
+        ) WHERE rnk <= {_TOPK}
     """
-        )
+    )
     return "".join(parts)
 
 
@@ -338,18 +334,19 @@ def _nsw_alpha_oracle() -> str:
     return _nsw_alpha_oracle._alpha_ctes + _nsw_search_ctes("edges3")
 
 
-def _nsw_search_auto_ctes(edges: str, t_max: int = 8) -> str:
+def _nsw_search_auto_ctes(edges: str) -> str:
     """The beam-search trace with AUTO (T, B) from the corpus size — the
     guarded-unroll form of ``_nsw_search_ctes``: ``geo`` mirrors
     :func:`auto_search_geometry` as pure integer SQL (L = smallest p
     with 2^p ≥ n via a VALUES table, the kk-CTE precedent), the unroll
-    goes to ``t_max`` rounds, and each round t guards its frontier with
+    goes to ``t_max`` = 8 rounds, and each round t guards its frontier with
     ``t ≤ (SELECT tr FROM geo)`` — a skipped round's frontier is empty,
     so v{t} = v{t-1} and beam{t} = beam{t-1}: rounds beyond T are exact
     pass-throughs, which is what lets ONE static SQL string express a
     corpus-dependent round count at every gate scale. Beam width is the
     scalar ``(SELECT bw FROM geo)``. t_max = 8 covers n ≤ 2^16 (any
     gate/bench scale; the Spark loop itself is unbounded)."""
+    t_max = 8
     parts = [
         f""", geo AS MATERIALIZED (
             SELECT GREATEST(3, (lg + 1) // 2) AS tr,
@@ -472,15 +469,14 @@ def _graph_from_parts(
     from youtube_etl_project_spark.plans.exact_kmeans import (
         centroid_df,
         kmeans_dists_exact,
+        nearest_cells,
     )
 
     cb = centroid_df(spark, books)
-    wc = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
     ranked = pin(
-        kmeans_dists_exact(qe, cb)
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= _NC)
-        .select("id", "cell", "rn")
+        nearest_cells(kmeans_dists_exact(qe, cb), ["id"], _NC).select(
+            "id", "cell", "rn"
+        )
     )
     assign = ranked.filter(F.col("rn") == 1).select("id", "cell")
     m2emb = ranked.join(emb, "id").select(
@@ -572,9 +568,9 @@ def _nsw_graph_build(
 
 
 def nsw_graph_from_vectors(
-    df: DataFrame, id_col: str = "vec_id", vec: str = "embedding"
+    df: DataFrame,
 ) -> "tuple[DataFrame, DataFrame, DataFrame, DataFrame]":
-    """The same bounded build from an arbitrary embedding DataFrame —
+    """The same bounded build from any (vec_id, embedding) DataFrame —
     trains its own exact-grid coarse quantizer (auto K from the row
     count, the auto_ivf_geometry rule) instead of the fixture-dir
     memoized model. The streaming NSW ingest bootstraps its index from
@@ -587,11 +583,13 @@ def nsw_graph_from_vectors(
     )
 
     spark = df.sparkSession
-    nn = df.filter(F.col(vec).isNotNull())
-    qe = pin(grid_rows(nn, id_col, vec, GRID, id_out="id", pos="pos"))
+    nn = df.filter(F.col("embedding").isNotNull())
+    qe = pin(
+        grid_rows(nn, "vec_id", "embedding", GRID, id_out="id", pos="pos")
+    )
     k_cells, _ = auto_ivf_geometry(df.count())
     books = kmeans_train_exact(qe, k=k_cells, iters=2)
-    emb = nn.select(F.col(id_col).alias("id"), F.col(vec).alias("embedding"))
+    emb = nn.select(F.col("vec_id").alias("id"), "embedding")
     return _graph_from_parts(spark, emb, qe, books)
 
 

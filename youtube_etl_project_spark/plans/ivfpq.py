@@ -38,6 +38,7 @@ from youtube_etl_project_spark.operators.quantization import (
     pq_train_exact_rows,
 )
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
+from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 from youtube_etl_project_spark.sources.catalog import row_count
@@ -166,24 +167,23 @@ def _encode(qer: DataFrame, pqcb: DataFrame) -> DataFrame:
     """(id, sub, code): residual subvectors -> nearest PQ centroid,
     lowest cell on exact-int ties (the pq_train_exact assignment rule)."""
     d = F.col("q") - F.col("cq")
-    w = Window.partitionBy("id", "sub").orderBy(F.asc("dist"), F.asc("cell"))
-    return (
+    dists = (
         qer.join(F.broadcast(pqcb), ["sub", "pos"])
         .groupBy("id", "sub", "cell")
         .agg(F.sum(d * d).cast("long").alias("dist"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "sub", F.col("cell").alias("code"))
+    )
+    return nearest_cells(dists, ["id", "sub"], 1).select(
+        "id", "sub", F.col("cell").alias("code")
     )
 
 
-def _pq_residual_ctes(iters: int = _ITERS) -> str:
+def _pq_residual_ctes() -> str:
     """DuckDB twin of the residual PQ train + encode: the caller's WITH
     list must already define qe(id, pos, q), kassign(id, cell) and the
     final coarse book c2 (from exact_kmeans.kmeans_exact_ctes at
     iters=2). Appends qer (residual components), the unrolled Lloyd
     rounds (pd_i/pa_i/pm_i/p_i — p-prefixed to avoid the coarse CTE
-    names) and the final codes penc(id, sub, code)."""
+    names) and the final codes penc(id, sub, code), over _ITERS rounds."""
     parts = [
         f""", qer AS MATERIALIZED (
             SELECT a.id, qe.pos // {_DSUB} AS sub, qe.pos % {_DSUB} AS pos,
@@ -201,7 +201,7 @@ def _pq_residual_ctes(iters: int = _ITERS) -> str:
             WHERE s.cell < {_KPQ}
         )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _ITERS + 1):
         parts.append(
             f""", pd{i} AS (
             SELECT qer.id, qer.sub, c.cell,
@@ -235,7 +235,7 @@ def _pq_residual_ctes(iters: int = _ITERS) -> str:
             SELECT qer.id, qer.sub, c.cell,
                    CAST(SUM((qer.q - c.cq) * (qer.q - c.cq)) AS BIGINT)
                        AS dist
-            FROM qer JOIN p{iters} c ON c.sub = qer.sub AND c.pos = qer.pos
+            FROM qer JOIN p{_ITERS} c ON c.sub = qer.sub AND c.pos = qer.pos
             GROUP BY 1, 2, 3
         ), penc AS MATERIALIZED (
             SELECT id, sub, cell AS code FROM (
@@ -390,13 +390,11 @@ def ivfpq_refined(
     # parquet-metadata count (same driver-side action dedup_semantic
     # uses to size k — fine at any scale); feeds the integer R rule
     rerank = _refine_r(row_count(spark, sf_dir, "embeddings"))
-    wq = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
-    probes = (
-        kmeans_dists_exact(qe.filter(F.col("id") < _N_QUERIES), cb)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select(F.col("id").alias("query_id"), "cell")
-    )
+    probes = nearest_cells(
+        kmeans_dists_exact(qe.filter(F.col("id") < _N_QUERIES), cb),
+        ["id"],
+        n_probe,
+    ).select(F.col("id").alias("query_id"), "cell")
     rqp = (
         probes.join(
             qe.filter(F.col("id") < _N_QUERIES).withColumnRenamed(

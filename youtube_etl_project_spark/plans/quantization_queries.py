@@ -23,6 +23,7 @@ from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators import quantization as pq
 from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
+from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
@@ -31,7 +32,7 @@ _N_QUERIES, _TOPK = 5, 10
 _DSUB = _DIM // _M
 
 
-def _pq_exact_train_ctes(iters: int = _ITERS) -> str:
+def _pq_exact_train_ctes() -> str:
     """The WHOLE exact-grid PQ training loop as DuckDB CTEs — the SQL twin
     of ``pq_train_exact``: grid-snap (qe), id-rank seeds (c0), then per
     Lloyd round the exact squared-distance argmin (d_i/a_i), the snapped
@@ -61,7 +62,7 @@ def _pq_exact_train_ctes(iters: int = _ITERS) -> str:
             WHERE s.cell < {_K}
         )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _ITERS + 1):
         parts.append(
             f""", d{i} AS (
             SELECT qe.vec_id, qe.sub, c.cell,
@@ -95,7 +96,7 @@ def _pq_exact_train_ctes(iters: int = _ITERS) -> str:
             SELECT qe.vec_id, qe.sub, c.cell,
                    CAST(SUM((qe.q - c.cq) * (qe.q - c.cq)) AS BIGINT)
                        AS dist
-            FROM qe JOIN c{iters} c ON c.sub = qe.sub AND c.pos = qe.pos
+            FROM qe JOIN c{_ITERS} c ON c.sub = qe.sub AND c.pos = qe.pos
             GROUP BY 1, 2, 3
         ), enc AS (
             SELECT vec_id, sub, cell FROM (
@@ -150,13 +151,8 @@ def _pq_exact_parts(
         .groupBy("vec_id", "sub", "cell")
         .agg(F.sum(d * d).cast("long").alias("dist"))
     )
-    w = Window.partitionBy("vec_id", "sub").orderBy(
-        F.asc("dist"), F.asc("cell")
-    )
-    enc = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "cell")
+    enc = nearest_cells(dists, ["vec_id", "sub"], 1).select(
+        "vec_id", "sub", "cell"
     )
     return qe, dists, enc
 

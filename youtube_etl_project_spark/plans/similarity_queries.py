@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache, similarity
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
+from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 from youtube_etl_project_spark.sources.catalog import row_count
@@ -378,13 +379,11 @@ def embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         books,
     )
-    wq = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
-    probes = (
-        kmeans_dists_exact(qe.filter(F.col("id") < _N_QUERIES), cb)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select(F.col("id").alias("query_id"), "cell")
-    )
+    probes = nearest_cells(
+        kmeans_dists_exact(qe.filter(F.col("id") < _N_QUERIES), cb),
+        ["id"],
+        n_probe,
+    ).select(F.col("id").alias("query_id"), "cell")
     cand = (
         probes.join(assign.withColumnRenamed("id", "neighbor_id"), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -478,11 +477,8 @@ def ivf_cell_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qe, books, _, _ = _ivf_trained_parts(spark, sf_dir)
-    w = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("cell"))
-    best = (
-        kmeans_dists_exact(qe, centroid_df(spark, books))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+    best = nearest_cells(
+        kmeans_dists_exact(qe, centroid_df(spark, books)), ["id"], 1
     )
     return best.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
@@ -641,19 +637,15 @@ def _ivf_v1_dists(spark: SparkSession, qe: DataFrame) -> DataFrame:
 def embed_ivf_ann_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qe = grid_rows(emb, "vec_id", "embedding", GRID)
-    dists = _ivf_v1_dists(spark, qe)
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.asc("dist"), F.asc("cell")
+    ranked_cells = nearest_cells(
+        _ivf_v1_dists(spark, qe), ["vec_id"], _IVF_V1_NPROBE
     )
-    ranked_cells = dists.withColumn("rn", F.row_number().over(wc))
     assign = ranked_cells.filter(F.col("rn") == 1).select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
     probes = (
-        ranked_cells.filter(
-            (F.col("vec_id") < _N_QUERIES)
-            & (F.col("rn") <= _IVF_V1_NPROBE)
-        ).select(F.col("vec_id").alias("query_id"), "cell")
+        ranked_cells.filter(F.col("vec_id") < _N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "cell")
     )
     cand = (
         F.broadcast(probes)

@@ -135,24 +135,6 @@ def _window_tuple_frame(toks: DataFrame, span_len: int) -> DataFrame:
     return _chunk_tuples(r, c, q)
 
 
-def suffix_window_ranks(
-    toks: DataFrame, span_len: int
-) -> DataFrame:
-    """Dense window ranks: for ``toks`` (doc_id, t array<string>),
-    return (doc_id, i, rk) for every 0-based position i with a FULL
-    in-document ``span_len``-token window, where rk is a dense rank of
-    the window's token sequence: rk equal ⟺ windows equal (exact).
-    ``span_len`` must be a power of two ≥ 2. Built on the radix-8
-    chunk-rank rounds (see _RADIX); no window text is ever
-    materialized, no unpartitioned window is used."""
-    tup = pin(_window_tuple_frame(toks, span_len))
-    keys = [c for c in tup.columns if c.startswith("__c")]
-    dr, _ = global_rank(
-        tup.select(*keys).distinct(), [F.col(k) for k in keys], "rk"
-    )
-    return tup.join(dr, keys).select("doc_id", "i", "rk")
-
-
 def dup_window_starts(
     toks: DataFrame, span_len: int
 ) -> "tuple[DataFrame, DataFrame]":

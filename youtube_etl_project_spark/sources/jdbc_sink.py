@@ -49,12 +49,11 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: str = "overwrite",
     driver: str = DERBY_DRIVER,
-    batchsize: int = 10_000,
     max_connections: int | None = None,
 ) -> None:
-    """Land a DataFrame in a warehouse table over JDBC.
+    """Land a DataFrame in a warehouse table over JDBC, replacing the
+    table, in batches of 10 000 rows.
 
     ``max_connections`` caps write parallelism (coalesce before write) —
     at cluster scale the connection budget belongs to the warehouse, not
@@ -66,8 +65,8 @@ def write_jdbc(
         .option("url", url)
         .option("dbtable", table)
         .option("driver", driver)
-        .option("batchsize", str(batchsize))
-        .mode(mode)
+        .option("batchsize", "10000")
+        .mode("overwrite")
         .save()
     )
 

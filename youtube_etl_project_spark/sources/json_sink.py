@@ -1,11 +1,10 @@
 """Date-partitioned JSON sink (SURVEY §2a S5; reference
 src/youtube_collector.py:198-239).
 
-The reference writes one JSON array per blob under ``raw/Y/M/D/`` plus a
-run-metadata file. Spark-first: ``partitionBy(year, month, day)`` JSON writes
-(line-delimited — the scalable layout; the array-file reader in staging.py
-exists for reference-shaped inputs), and the run metadata is a 1-row
-DataFrame written next to it.
+The reference writes one JSON array per blob under ``raw/Y/M/D/``.
+Spark-first: ``partitionBy(year, month, day)`` JSON writes (line-delimited
+— the scalable layout; the array-file reader in staging.py exists for
+reference-shaped inputs).
 """
 
 from __future__ import annotations
@@ -15,16 +14,17 @@ from pyspark.sql import functions as F
 
 
 def write_date_partitioned(
-    df: DataFrame, root: str, ts_col: str = "collected_at", mode: str = "overwrite"
+    df: DataFrame, root: str, ts_col: str = "collected_at"
 ) -> None:
-    """Write line-delimited JSON partitioned by year/month/day derived from
-    ``ts_col`` — Hive-style so readers get partition pruning for free
-    (replaces the reference's manual date-path interpolation, SL:21-22)."""
+    """Overwrite ``root`` with line-delimited JSON partitioned by
+    year/month/day derived from ``ts_col`` — Hive-style so readers get
+    partition pruning for free (replaces the reference's manual date-path
+    interpolation, SL:21-22)."""
     (
         df.withColumn("year", F.year(ts_col))
         .withColumn("month", F.month(ts_col))
         .withColumn("day", F.dayofmonth(ts_col))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("year", "month", "day")
         .json(root)
     )
@@ -41,8 +41,3 @@ def write_day_entity(df: DataFrame, raw_root: str, day, entity: str) -> str:
     path = f"{date_path(raw_root, day)}/{entity}_spark"
     df.write.mode("overwrite").json(path)
     return path
-
-
-def write_run_metadata(df: DataFrame, path: str) -> None:
-    """Run-summary sink (reference YC:221-228): counts + configs, one row."""
-    df.coalesce(1).write.mode("overwrite").json(path)

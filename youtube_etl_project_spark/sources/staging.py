@@ -96,13 +96,13 @@ def route_files(staged: DataFrame, name_token: str) -> DataFrame:
     return staged.filter(F.col("file_name").like(f"%{name_token}%"))
 
 
-def latest_per_key(df: DataFrame, key: str, order_col: str = "file_name") -> DataFrame:
+def latest_per_key(df: DataFrame, key: str) -> DataFrame:
     """W1: keep the newest-file record per key (QUALIFY ROW_NUMBER() ... = 1,
     SL:82). Shuffles once on ``key``; at scale this is the dedup-before-merge
     step that keeps the MERGE's shuffle small."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
+    w = Window.partitionBy(key).orderBy(F.col("file_name").desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

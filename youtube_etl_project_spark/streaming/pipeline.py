@@ -144,14 +144,13 @@ def enriched_event_stream(
     events: DataFrame,
     dim: DataFrame,
     on: str,
-    how: str = "left",
 ) -> DataFrame:
-    """Stream-static join: every micro-batch joins against the (slowly
+    """Stream-static left join: every micro-batch joins against the (slowly
     changing) dimension snapshot. The static side is broadcast — no
     per-batch shuffle of the stream, no streaming state; the planner
     re-reads the dim per batch so dim updates are picked up without
     restarting the query."""
-    return events.join(F.broadcast(dim), on, how)
+    return events.join(F.broadcast(dim), on, "left")
 
 
 def interval_joined_streams(
@@ -229,13 +228,12 @@ def run_events_stream_availablenow(
     schema: T.StructType,
     checkpoint_dir: str,
     output_dir: str,
-    ts_col: str = "ts",
 ) -> StreamingQuery:
     """End-to-end streaming rollup: parquet file source → watermarked window
     agg → parquet append sink, drained with AvailableNow (the reference's
     daily-cron semantics, minus the cron)."""
     src = spark.readStream.schema(schema).parquet(source_dir)
-    agg = windowed_event_stream(src, ts_col, "1 hour", "2 hours", "event_type")
+    agg = windowed_event_stream(src, "ts", "1 hour", "2 hours", "event_type")
     return (
         agg.writeStream.format("parquet")
         .option("path", output_dir)
@@ -343,15 +341,12 @@ def streaming_ann_ingest(
     schema: T.StructType,
     index_path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
     k: int = 16,
-    iters: int = 2,
 ) -> StreamingQuery:
     """Streaming ingest into the persisted IVF index
     (:mod:`operators.ann_index`): parquet file source of arriving
-    embedding batches → foreachBatch → first batch trains + builds the
-    index (``ivf_build``), every later batch ``ivf_append``\\ s under the
+    (vec_id, embedding) batches → foreachBatch → first batch trains +
+    builds the index (``ivf_build``), every later batch ``ivf_append``\\ s under the
     frozen quantizer — O(|batch|) per micro-batch, only the touched cell
     partitions written, the corpus never rescanned.
 
@@ -373,11 +368,9 @@ def streaming_ann_ingest(
         import os
 
         if os.path.isdir(f"{index_path}/centroids"):
-            ann_index.ivf_append(batch, index_path, id_col=id_col, vec=vec)
+            ann_index.ivf_append(batch, index_path)
         else:
-            ann_index.ivf_build(
-                batch, index_path, k=k, iters=iters, id_col=id_col, vec=vec
-            )
+            ann_index.ivf_build(batch, index_path, k=k)
 
     return (
         spark.readStream.schema(schema)
@@ -395,14 +388,12 @@ def streaming_nsw_ingest(
     schema: T.StructType,
     index_path: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
 ) -> StreamingQuery:
     """Streaming ingest into the persisted NSW graph index
     (:mod:`operators.ann_index` ``nsw_build``/``nsw_insert``/
     ``nsw_query``) — the graph twin of :func:`streaming_ann_ingest`,
     completing the streaming-serving matrix: parquet file source of
-    arriving embedding batches → foreachBatch → the first batch
+    arriving (vec_id, embedding) batches → foreachBatch → the first batch
     bootstraps the index (trains its own exact-grid coarse quantizer
     and runs the bounded k-NN build — plans/graph_ann.
     nsw_graph_from_vectors); every later batch attaches online via
@@ -430,15 +421,13 @@ def streaming_nsw_ingest(
         from youtube_etl_project_spark.operators import ann_index
 
         if os.path.isdir(f"{index_path}/edges"):
-            ann_index.nsw_insert(batch, index_path, id_col=id_col, vec=vec)
+            ann_index.nsw_insert(batch, index_path)
         else:
             from youtube_etl_project_spark.plans.graph_ann import (
                 nsw_graph_from_vectors,
             )
 
-            edges, qe, assign, cb = nsw_graph_from_vectors(
-                batch, id_col=id_col, vec=vec
-            )
+            edges, qe, assign, cb = nsw_graph_from_vectors(batch)
             ann_index.nsw_build(edges, assign, qe, cb, index_path)
 
     return (

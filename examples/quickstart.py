@@ -9,11 +9,12 @@ similarity, text analysis) on the fixture tables.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 from datetime import date
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -76,6 +76,8 @@ def test_append_is_incremental_and_exact(spark, sf_dir, tmp_path):
         map(tuple, ivf_query(_queries(emb), path, k=5, n_probe=4).collect())
     )
     frozen = similarity.kmeans_centroids(half_a, k=K, iters=2)
+    # the append assigned under the frozen quantizer: nothing retrained
+    assert ivf_centroids(spark, path) == frozen
     want = sorted(
         map(
             tuple,
@@ -135,63 +137,6 @@ def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert got_cells <= set(probe_cells), (got_cells, probe_cells)
 
 
-def test_streaming_ann_ingest_builds_then_appends(spark, sf_dir, tmp_path):
-    from youtube_etl_project_spark.streaming.pipeline import (
-        streaming_ann_ingest,
-    )
-
-    emb = _emb(spark, sf_dir)
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    src = str(tmp_path / "src")
-    idx = str(tmp_path / "ivf")
-    ckpt = str(tmp_path / "ckpt")
-
-    half_a.coalesce(1).write.mode("append").parquet(src)
-    q = streaming_ann_ingest(spark, src, emb.schema, idx, ckpt, k=K)
-    q.awaitTermination(120)
-    n1 = ivf_cell_stats(spark, idx).agg(F.sum("n_vectors")).first()[0]
-    assert n1 == half_a.count()
-    frozen = ivf_centroids(spark, idx)
-
-    half_b.coalesce(1).write.mode("append").parquet(src)
-    q2 = streaming_ann_ingest(spark, src, emb.schema, idx, ckpt, k=K)
-    q2.awaitTermination(120)
-    assert (
-        ivf_cell_stats(spark, idx).agg(F.sum("n_vectors")).first()[0]
-        == emb.count()
-    )
-    # append did NOT retrain: quantizer frozen from the first batch
-    assert ivf_centroids(spark, idx) == frozen
-
-    # exactly-once: re-draining with no new files changes nothing
-    q3 = streaming_ann_ingest(spark, src, emb.schema, idx, ckpt, k=K)
-    q3.awaitTermination(120)
-    assert (
-        ivf_cell_stats(spark, idx).agg(F.sum("n_vectors")).first()[0]
-        == emb.count()
-    )
-
-    # the streamed index answers queries exactly like the in-memory twin
-    # under the same frozen centroids
-    got = sorted(
-        map(tuple, ivf_query(_queries(emb), idx, k=5, n_probe=4).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            similarity.ivf_topk(
-                _queries(emb),
-                emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-                frozen,
-                k=5,
-                n_probe=4,
-            ).collect(),
-        )
-    )
-    assert got == want
-
-
 def test_registered_query_matches_inmemory_twin(spark, sf_dir):
     """The REGISTERED serving query (embed_ivf_index_ann, rows-only in the
     gate) is pinned result-identical to the float in-memory IVF twin at
@@ -223,89 +168,6 @@ def test_registered_query_matches_inmemory_twin(spark, sf_dir):
     assert served.schema == twin.schema
 
 
-def test_streaming_nsw_ingest_bootstrap_insert_parity(spark, sf_dir, tmp_path):
-    """The graph twin of the IVF streaming ingest: first batch
-    bootstraps the persisted NSW index, later batches attach online.
-    Parity evidence (the incremental_components pattern): (1) every
-    inserted vector's out-edges equal its beam-search top-m recomputed
-    against a frozen copy of the pre-insert index; (2) every touched
-    neighbor's edge list equals the batch-recomputed top-deg_cap of its
-    old edges plus the capped reverse edges; (3) re-draining with no new
-    files changes nothing (exactly-once)."""
-    import shutil
-
-    from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-    from youtube_etl_project_spark.streaming.pipeline import (
-        streaming_nsw_ingest,
-    )
-
-    emb = _emb(spark, sf_dir)
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
-    src = str(tmp_path / "src")
-    idx = str(tmp_path / "nsw")
-    ckpt = str(tmp_path / "ckpt")
-
-    half_a.coalesce(1).write.mode("append").parquet(src)
-    q = streaming_nsw_ingest(spark, src, emb.schema, idx, ckpt)
-    q.awaitTermination(300)
-    e0 = spark.read.parquet(f"{idx}/edges")
-    assert e0.select("src").distinct().count() == half_a.count()
-
-    pre = str(tmp_path / "pre")
-    shutil.copytree(idx, pre)
-
-    half_b.coalesce(1).write.mode("append").parquet(src)
-    q2 = streaming_nsw_ingest(spark, src, emb.schema, idx, ckpt)
-    q2.awaitTermination(300)
-
-    new_ids = {r.vec_id for r in half_b.collect()}
-    e1 = spark.read.parquet(f"{idx}/edges")
-
-    # (1) inserted out-edges == beam-search top-m on the frozen snapshot
-    qe_b = grid_rows(
-        half_b, "vec_id", "embedding", GRID, id_out="id", pos="pos"
-    )
-    want_rows = ann_index.nsw_query(qe_b, pre, topk=8).collect()
-    want = {(r.query_id, r.neighbor_id, r.dist_q) for r in want_rows}
-    got = {
-        (r.src, r.dst, r.d)
-        for r in e1.collect()
-        if r.src in new_ids
-    }
-    assert got == want and want
-
-    # (2) touched neighbors: old edges + reverse edges, re-capped at 16
-    old: dict = {}
-    for r in spark.read.parquet(f"{pre}/edges").collect():
-        old.setdefault(r.src, []).append((r.d, r.dst))
-    rev: dict = {}
-    for qid, nid, d in want:
-        rev.setdefault(nid, []).append((d, qid))
-    e1_rows: dict = {}
-    for r in e1.collect():
-        if r.src not in new_ids:
-            e1_rows.setdefault(r.src, []).append((r.d, r.dst))
-    for u, extra in rev.items():
-        expect = sorted(old.get(u, []) + extra)[:16]
-        assert sorted(e1_rows[u]) == expect, u
-
-    # (3) exactly-once: re-drain with no new files changes nothing
-    n_edges = e1.count()
-    q3 = streaming_nsw_ingest(spark, src, emb.schema, idx, ckpt)
-    q3.awaitTermination(300)
-    assert spark.read.parquet(f"{idx}/edges").count() == n_edges
-
-    # the updated index serves: new nodes are reachable as results
-    res = ann_index.nsw_query(qe_b, idx, topk=5).collect()
-    per_q: dict = {}
-    for r in res:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    assert set(per_q) == new_ids
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
-
-
 def _nsw_index_from(spark, df, idx):
     from youtube_etl_project_spark.operators import ann_index
     from youtube_etl_project_spark.plans.graph_ann import (
@@ -333,22 +195,65 @@ def _nsw_state(spark, idx):
 
 
 def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """foreachBatch is at-least-once: replaying an nsw_insert batch —
-    whether the previous attempt completed fully or landed only some of
-    its writes — must converge to the exact single-run state (ADVICE
-    r10: duplicated (id,pos) component rows would silently DOUBLE
-    nsw_query's sum-over-pos distances)."""
+    """An insert attaches each new vector as the beam search of the
+    pre-insert graph says: (1) its out-edges equal its top-8 search
+    result on a frozen copy of the pre-insert index; (2) every touched
+    neighbor's edge list equals its old edges plus the reverse edges,
+    re-capped at 16; (3) the new vectors are served as results.
+
+    Delivery is at-least-once: replaying an nsw_insert batch — whether
+    the previous attempt completed fully or landed only some of its
+    writes — must converge to the exact single-run state (duplicated
+    (id,pos) component rows would silently DOUBLE nsw_query's
+    sum-over-pos distances)."""
+    import shutil
+
     from youtube_etl_project_spark.operators import ann_index
+    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     emb = _emb(spark, sf_dir)
     base = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
     idx = str(tmp_path / "nsw")
     _nsw_index_from(spark, base, idx)
+    pre = str(tmp_path / "pre")
+    shutil.copytree(idx, pre)
 
     ann_index.nsw_insert(batch, idx)
     want = _nsw_state(spark, idx)
     assert want[0] and want[1]
+
+    new_ids = {r.vec_id for r in batch.collect()}
+    e1 = spark.read.parquet(f"{idx}/edges").collect()
+    # (1) inserted out-edges == beam-search top-8 on the frozen snapshot
+    qe_b = grid_rows(
+        batch, "vec_id", "embedding", GRID, id_out="id", pos="pos"
+    )
+    searched = {
+        (r.query_id, r.neighbor_id, r.dist_q)
+        for r in ann_index.nsw_query(qe_b, pre, topk=8).collect()
+    }
+    assert searched
+    assert {(r.src, r.dst, r.d) for r in e1 if r.src in new_ids} == searched
+    # (2) touched neighbors: old edges + reverse edges, re-capped at 16
+    old: dict = {}
+    for r in spark.read.parquet(f"{pre}/edges").collect():
+        old.setdefault(r.src, []).append((r.d, r.dst))
+    rev: dict = {}
+    for qid, nid, d in searched:
+        rev.setdefault(nid, []).append((d, qid))
+    kept: dict = {}
+    for r in e1:
+        if r.src not in new_ids:
+            kept.setdefault(r.src, []).append((r.d, r.dst))
+    for u, extra in rev.items():
+        assert sorted(kept[u]) == sorted(old.get(u, []) + extra)[:16], u
+    # (3) the updated index serves the new nodes as results
+    per_q: dict = {}
+    for r in ann_index.nsw_query(qe_b, idx, topk=5).collect():
+        per_q.setdefault(r.query_id, []).append(r.rank)
+    assert set(per_q) == new_ids
+    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
     # full replay (crash after everything but the checkpoint commit)
     ann_index.nsw_insert(batch, idx)
@@ -462,57 +367,6 @@ def test_nsw_insert_empty_cell_attaches_via_second_cell(
     assert second_cell in dst_cells
 
 
-def test_nsw_compact_reduces_files_preserves_results(
-    spark, sf_dir, tmp_path
-):
-    """VERDICT r10 #6: repeated nsw_insert batches fragment cell
-    partitions; nsw_compact rewrites ONLY fragmented cells down to one
-    file each and every nsw_query trace is bit-identical before/after."""
-    from youtube_etl_project_spark.operators import ann_index
-    from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-
-    emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") % 3 == 0)
-    idx = str(tmp_path / "nsw")
-    _nsw_index_from(spark, base, idx)
-    for m in (1, 2):
-        ann_index.nsw_insert(
-            emb.filter(
-                (F.col("vec_id") % 3 == m) & (F.col("vec_id") < 60)
-            ),
-            idx,
-        )
-
-    before = ann_index.nsw_file_stats(idx)
-    assert any(
-        n > 1 for ds in before.values() for n in ds.values()
-    ), before
-
-    qs = grid_rows(
-        emb.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding",
-        GRID, id_out="id", pos="pos"
-    )
-    want = sorted(map(tuple, ann_index.nsw_query(qs, idx).collect()))
-    health_want = sorted(
-        map(tuple, ann_index.nsw_cell_stats(spark, idx).collect())
-    )
-
-    done = ann_index.nsw_compact(spark, idx)
-    assert sum(done.values()) > 0
-
-    after = ann_index.nsw_file_stats(idx)
-    for ds, cells in after.items():
-        for c, n in cells.items():
-            assert n == 1, (ds, c, n)
-    assert sorted(map(tuple, ann_index.nsw_query(qs, idx).collect())) == want
-    assert (
-        sorted(map(tuple, ann_index.nsw_cell_stats(spark, idx).collect()))
-        == health_want
-    )
-    # idempotent: a second pass finds nothing fragmented
-    assert sum(ann_index.nsw_compact(spark, idx).values()) == 0
-
-
 def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
     spark, sf_dir, tmp_path
 ):
@@ -581,9 +435,9 @@ def test_driver_coarse_ranking_matches_the_spark_tie_rule(spark, tmp_path):
         _nearest_coarse_cells,
         _query_vectors,
     )
+    from youtube_etl_project_spark.operators.grid import nearest_cells
     from youtube_etl_project_spark.plans.exact_kmeans import (
         kmeans_dists_exact,
-        nearest_cells,
     )
 
     cb = spark.createDataFrame(
@@ -727,6 +581,41 @@ def test_warm_probe_job_budget(spark, sf_dir):
     for name in names[2:]:
         inference = [j for j in warm[name] if j.startswith("parquet at")]
         assert not inference, (name, warm[name])
+
+
+def test_nsw_insert_job_budget(spark, sf_dir, tmp_path):
+    """Timing-free guard for the online NSW attach: the new vectors'
+    coarse cells are ranked on the driver against the cached codebook,
+    and the batch is collected once and reused as a local relation, so
+    one warm nsw_insert of a 20-vector batch launches at most 59 Spark
+    jobs: the batch collect, the beam-search rounds, the pins, the two
+    appends and the reverse-edge overwrite. Jobs are counted per job
+    group."""
+    import uuid
+
+    from youtube_etl_project_spark.operators import ann_index
+
+    emb = _emb(spark, sf_dir)
+    base = emb.filter(F.col("vec_id") % 2 == 0)
+    idx = str(tmp_path / "nsw_jobs")
+    _nsw_index_from(spark, base, idx)
+    sc = spark.sparkContext
+
+    def insert_jobs(lo: int) -> int:
+        batch = emb.filter(
+            (F.col("vec_id") % 2 == 1)
+            & (F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 40)
+        )
+        group = f"insert-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            ann_index.nsw_insert(batch, idx)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    insert_jobs(0)  # cold: reads the codebook and the frame schemas
+    assert insert_jobs(40) <= 59
 
 
 def test_rebuild_at_a_uri_path_serves_the_new_centroids(spark, tmp_path):

@@ -63,10 +63,11 @@ def test_reliable_pin_survives_block_wipe(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, pinned.collect())) == before
 
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _CRASH_SCRIPT = textwrap.dedent(
     """
     import os, sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, sys.argv[1])  # the checkout under test
     import youtube_etl_project_spark.operators.checkpointing as ckpt
 
     crash_after = int(os.environ.get("CRASH_AFTER_PINS", "0"))
@@ -117,7 +118,7 @@ def test_driver_crash_then_restart_on_dirty_checkpoint_dir(
     # before the CC loop converges)
     env_a = dict(env, CRASH_AFTER_PINS="2")
     pa = subprocess.run(
-        [sys.executable, "-c", _CRASH_SCRIPT], env=env_a,
+        [sys.executable, "-c", _CRASH_SCRIPT, _REPO], env=env_a,
         capture_output=True, text=True, timeout=300,
     )
     assert pa.returncode == 42, pa.stderr[-2000:]
@@ -130,7 +131,7 @@ def test_driver_crash_then_restart_on_dirty_checkpoint_dir(
     # with an undisturbed local-mode reference
     env_b = dict(env, CRASH_AFTER_PINS="0")
     pb = subprocess.run(
-        [sys.executable, "-c", _CRASH_SCRIPT], env=env_b,
+        [sys.executable, "-c", _CRASH_SCRIPT, _REPO], env=env_b,
         capture_output=True, text=True, timeout=300,
     )
     assert pb.returncode == 0, pb.stderr[-2000:]

@@ -49,9 +49,11 @@ def test_simhash_deterministic_and_local(spark):
         ],
         "id long, text string",
     )
-    toks = F.split("text", " ")
-    out1 = {r.id: r.h for r in df.select("id", dedup.simhash64(toks).alias("h")).collect()}
-    out2 = {r.id: r.h for r in df.select("id", dedup.simhash64(toks).alias("h")).collect()}
+    def fingerprints():
+        sig = dedup.simhash64_md5_df(df, "id", "text")
+        return {r.id: r.simhash for r in sig.collect()}
+
+    out1, out2 = fingerprints(), fingerprints()
     assert out1 == out2  # deterministic
     ham = df.select(
         dedup.hamming64(
@@ -165,12 +167,12 @@ def test_simhash_pairs_exact_vs_bruteforce(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in dedup.simhash_pairs(
+        for r in dedup.simhash_pairs_md5(
             docs, "doc_id", "text", max_distance=3
         ).collect()
     }
     # brute force: cross join on the same fingerprints
-    sig = dedup.simhash64_df(docs, "doc_id", "text")
+    sig = dedup.simhash64_md5_df(docs, "doc_id", "text")
     l = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("a"))
     r = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("b"))
     brute = {
@@ -203,30 +205,6 @@ def test_simhash_block_combos_same_pairs(spark, sf_dir):
     assert combo5 == classic
     assert combo6 == classic
     assert classic, "fixture should contain at least one near-dup pair"
-
-
-def test_choose_simhash_blocks_rule():
-    """Pin the adaptive geometry rule: key width ≥ log2(n)+8 capped at
-    48 bits — B=5 covers every fixture scale (500 .. 60k docs), corpus
-    growth widens keys instead of densifying frozen buckets."""
-    # B=4 keys are 16 bits: only corpora under 2^8 docs keep them sparse
-    assert dedup.choose_simhash_blocks(2**7) == 4
-    # all three fixture scales land on B=5 (24-bit min key width)
-    for n in (500, 5_000, 50_000, 60_000):
-        assert dedup.choose_simhash_blocks(n) == 5
-    # cluster scale widens keys: 10^7 docs -> B=7 (36-bit keys,
-    # 35 tables); 10^9+ saturates at the 64-table budget: B=8 (40-bit
-    # keys, 56 tables) — past ~2^32 docs the named path is a 128-bit
-    # fingerprint, not denser 64-bit banding
-    assert dedup.choose_simhash_blocks(10**7) == 7
-    assert dedup.choose_simhash_blocks(10**9) == 8
-    assert dedup.choose_simhash_blocks(10**12) == 8
-    # monotone non-decreasing in n
-    prev = 0
-    for e in range(2, 48):
-        b = dedup.choose_simhash_blocks(2**e)
-        assert b >= prev
-        prev = b
 
 
 def test_containment_catches_subset_jaccard_misses(spark):

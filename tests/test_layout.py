@@ -1,30 +1,9 @@
-"""Z-order layout: key arithmetic + the measurable pruning effect.
-
-The claim behind ``write_zordered`` is physical, not relational: with the
-same rows and the same file count, Z-order clustering gives every file a
-small min/max rectangle in BOTH dimensions, so a stats-pruning planner
-(parquet row groups; Delta/Iceberg manifests) reads a small fraction of
-files for a 2-d box predicate, where a single-column sort layout must
-read everything matching only its own column. We measure exactly that:
-per-file min/max via ``file_stats`` and the fraction of files whose
-rectangle intersects the box."""
+"""Z-order layout: the Morton-key bit arithmetic."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from youtube_etl_project_spark.operators.layout import (
-    file_stats,
-    morton_key,
-    overlap_fraction,
-    write_zordered,
-)
-
-
-def _grid(spark, n=4096):
-    # Deterministic decorrelated dims: a walks the domain linearly, b is a
-    # multiplicative scatter of the same index (Knuth hash, mod domain).
-    rows = [(i, i % 64, (i * 2654435761) % 4294967296 % 64) for i in range(n)]
-    return spark.createDataFrame(rows, "id long, a long, b long")
+from youtube_etl_project_spark.operators.layout import morton_key
 
 
 def test_morton_key_interleaves_bits(spark):
@@ -46,45 +25,6 @@ def test_morton_key_interleaves_bits(spark):
     want = [ref(a, b) for a, b in
             [(0, 0), (1, 0), (0, 1), (1, 1), (2, 0), (0, 2), (3, 3), (63, 63)]]
     assert got == want
-
-
-def test_zorder_layout_prunes_2d_boxes(spark, tmp_path):
-    df = _grid(spark)
-    n_files = 16
-
-    linear = str(tmp_path / "linear")
-    (
-        df.repartitionByRange(n_files, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    zordered = str(tmp_path / "zordered")
-    write_zordered(df, zordered, "a", "b", bits=6, n_files=n_files)
-
-    # Same rows either way.
-    lin_df = spark.read.parquet(linear)
-    z_df = spark.read.parquet(zordered)
-    assert z_df.count() == df.count()
-    assert (
-        z_df.agg(F.sum("id")).first()[0] == lin_df.agg(F.sum("id")).first()[0]
-    )
-
-    # A box selecting ~1/4 of each dimension.
-    box = {"a": (16, 31), "b": (16, 31)}
-    lin_frac = overlap_fraction(file_stats(lin_df, ["a", "b"]), box)
-    z_frac = overlap_fraction(file_stats(z_df, ["a", "b"]), box)
-
-    # Linear layout: sorted on a only — the box's a-range maps to ~1/4 of
-    # files, but every one of those spans all of b, so nothing prunes
-    # further. Z-order: both dims localized; the box touches only files
-    # whose rectangle meets it in BOTH dims.
-    assert lin_frac >= 0.2, f"sanity: a-sorted layout reads {lin_frac}"
-    assert z_frac < lin_frac, (z_frac, lin_frac)
-    assert z_frac <= 0.5 * lin_frac, (
-        f"z-order should prune at least 2x vs single-column sort: "
-        f"{z_frac} vs {lin_frac}"
-    )
 
 
 def test_zorder_key_matches_registered_oracle_semantics(spark):

@@ -1,7 +1,6 @@
 """Distributed ridge regression: the one-pass sufficient statistics and
 closed-form solve must agree EXACTLY with numpy on the gathered data,
-the Column scorer must match the numpy predictions, and the whole fit
-must be run-to-run deterministic."""
+and the whole fit must be run-to-run deterministic."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -46,40 +45,6 @@ def test_ridge_fit_matches_numpy(spark, sf_dir):
     assert (w == w2).all()
 
 
-def test_predict_column_matches_numpy(spark, sf_dir):
-    emb, x, y = _xy(spark, sf_dir)
-    df = emb.select(
-        "vec_id", "embedding", F.col("label").cast("double").alias("y")
-    )
-    w = linear.ridge_fit(df, "embedding", "y", lam=LAM)
-    got = {
-        r.vec_id: r.p
-        for r in df.select(
-            "vec_id", linear.ridge_predict(F.col("embedding"), w).alias("p")
-        ).collect()
-    }
-    ids = [r.vec_id for r in df.select("vec_id").collect()]
-    z = np.hstack([x, np.ones((x.shape[0], 1))])
-    want = z @ np.asarray(w)
-    for i, vid in enumerate(ids):
-        assert abs(got[vid] - want[i]) < 1e-9
-
-
-def test_r2_matches_numpy_and_beats_mean_baseline(spark, sf_dir):
-    emb, x, y = _xy(spark, sf_dir)
-    df = emb.select("embedding", F.col("label").cast("double").alias("y"))
-    w = linear.ridge_fit(df, "embedding", "y", lam=LAM)
-    row = linear.r2_score(df, "embedding", "y", w).first()
-    z = np.hstack([x, np.ones((x.shape[0], 1))])
-    pred = z @ np.asarray(w)
-    sse = float(((y - pred) ** 2).sum())
-    sst = float(((y - y.mean()) ** 2).sum())
-    assert row.n == len(y)
-    assert abs(row.r2 - round(1 - sse / sst, 6)) <= 1e-6
-    assert 0.0 < row.r2 <= 1.0  # the fit beats the mean baseline
-    assert abs(row.rmse - round(np.sqrt(sse / len(y)), 6)) <= 1e-6
-
-
 def test_null_rows_are_skipped(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0], 2.0), (2, None, 5.0), (3, [0.0, 1.0], None),
@@ -92,40 +57,3 @@ def test_null_rows_are_skipped(spark):
     z = np.array([[1.0, 0.0, 1.0], [2.0, 0.0, 1.0]])
     assert np.allclose(np.asarray(g), z.T @ z)
     assert np.allclose(np.asarray(m), z.T @ np.array([2.0, 4.0]))
-
-
-def test_groupwise_ridge_matches_numpy_per_group(spark, sf_dir):
-    emb, x, y = _xy(spark, sf_dir)
-    df = emb.select(
-        (F.col("vec_id") % 3).cast("string").alias("g"),
-        "vec_id",
-        "embedding",
-        F.col("label").cast("double").alias("y"),
-    )
-    got = {
-        r.group: r
-        for r in linear.groupwise_ridge(df, "g", "embedding", "y",
-                                        lam=LAM).collect()
-    }
-    rows = df.select("g", "embedding", "y").collect()
-    for gkey in ("0", "1", "2"):
-        gx = np.stack([np.asarray(r.embedding) for r in rows if r.g == gkey])
-        gy = np.asarray([r.y for r in rows if r.g == gkey])
-        w = _numpy_ridge(gx, gy, LAM)
-        z = np.hstack([gx, np.ones((gx.shape[0], 1))])
-        sse = float(((gy - z @ w) ** 2).sum())
-        assert got[gkey].n == len(gy)
-        assert np.allclose(got[gkey].weights, w, rtol=1e-8)
-        assert abs(got[gkey].rmse - round(np.sqrt(sse / len(gy)), 6)) <= 1e-6
-
-
-def test_groupwise_ridge_degenerate_group(spark):
-    df = spark.createDataFrame(
-        [("a", [1.0, 0.0], 2.0), ("a", [2.0, 1.0], 3.0),
-         ("b", None, 1.0), ("b", [1.0, 1.0], None)],
-        "g string, embedding array<double>, y double",
-    )
-    rows = {r.group: r for r in
-            linear.groupwise_ridge(df, "g", "embedding", "y").collect()}
-    assert rows["a"].n == 2 and rows["a"].weights is not None
-    assert rows["b"].n == 0 and rows["b"].r2 is None

@@ -225,103 +225,3 @@ def test_run_day_warm_job_budget(spark, tmp_path):
     tables = (wh.stg_videos, wh.dim_channels, wh.fact_videos, wh.agg_daily)
     assert jobs_of(lambda: [t.read() for t in tables]) == 0
     assert wh.fact_videos.count() == 8 and wh.agg_daily.count() == 4
-
-
-def test_backfill_skips_done_days_and_resumes(spark, tmp_path, raw_root):
-    import os
-
-    from youtube_etl_project_spark.pipeline import backfill
-
-    day2 = date(2024, 3, 3)
-    _seed_day(raw_root)
-    write_json_array_file(
-        raw_root,
-        day2,
-        "videos",
-        [make_video("v9", "ch1", category_id=1)],
-        ts_suffix="20240303_060000",
-    )
-    write_json_array_file(
-        raw_root,
-        day2,
-        "channels",
-        [make_channel("ch1")],
-        ts_suffix="20240303_060000",
-    )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-
-    first = backfill(wh, raw_root, [DAY, day2], file_format="array")
-    assert set(first) == {DAY.isoformat(), day2.isoformat()}
-    n_facts = wh.fact_videos.read().count()
-
-    # Simulate a crash AFTER day 1 committed: delete day2's marker and
-    # re-run — only day2 re-loads, and idempotence keeps tables identical.
-    os.remove(os.path.join(wh.root, "_backfill", day2.isoformat()))
-    second = backfill(wh, raw_root, [DAY, day2], file_format="array")
-    assert set(second) == {day2.isoformat()}
-    assert wh.fact_videos.read().count() == n_facts
-
-    third = backfill(wh, raw_root, [DAY, day2], file_format="array")
-    assert third == {}
-
-
-def test_backfill_report_after_crash(spark, tmp_path, raw_root, monkeypatch):
-    import pytest
-
-    from youtube_etl_project_spark import pipeline
-    from youtube_etl_project_spark.pipeline import backfill, backfill_report
-
-    day2 = date(2024, 3, 3)
-    day3 = date(2024, 3, 4)
-    _seed_day(raw_root)
-    write_json_array_file(
-        raw_root, day2, "videos",
-        [make_video("v9", "ch1", category_id=1)],
-        ts_suffix="20240303_060000",
-    )
-    write_json_array_file(
-        raw_root, day2, "channels", [make_channel("ch1")],
-        ts_suffix="20240303_060000",
-    )
-    write_json_array_file(
-        raw_root, day3, "videos",
-        [make_video("v10", "ch1", category_id=1)],
-        ts_suffix="20240304_060000",
-    )
-    write_json_array_file(
-        raw_root, day3, "channels", [make_channel("ch1")],
-        ts_suffix="20240304_060000",
-    )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    plan = [DAY, day2, day3]
-
-    # Crash while loading day2: day1 commits, day2 records the failure,
-    # day3 is never attempted.
-    real_load_day = pipeline.load_day
-
-    def exploding(wh_, raw, day, fmt):
-        if day == day2:
-            raise RuntimeError("executor lost")
-        return real_load_day(wh_, raw, day, fmt)
-
-    monkeypatch.setattr(pipeline, "load_day", exploding)
-    with pytest.raises(RuntimeError):
-        backfill(wh, raw_root, plan, file_format="array")
-
-    rep = backfill_report(wh, plan)
-    assert (rep["done"], rep["failed"], rep["pending"]) == (1, 1, 1)
-    by_day = {r["day"]: r for r in rep["days"]}
-    assert by_day[DAY.isoformat()]["status"] == "done"
-    assert by_day[day2.isoformat()]["status"] == "failed"
-    assert "executor lost" in by_day[day2.isoformat()]["error"]
-    assert by_day[day3.isoformat()]["status"] == "pending"
-
-    # Restart with the bug fixed: the failed day re-runs, its failure
-    # marker clears, and the report converges to all-done.
-    monkeypatch.setattr(pipeline, "load_day", real_load_day)
-    backfill(wh, raw_root, plan, file_format="array")
-    rep2 = backfill_report(wh, plan)
-    assert (rep2["done"], rep2["failed"], rep2["pending"]) == (3, 0, 0)
-
-    # Marker-dir-only view (days=None) sees the same completed set.
-    assert backfill_report(wh)["done"] == 3

@@ -250,7 +250,7 @@ def test_no_unpartitioned_window_exec(plans):
     ]
     assert not offenders, (
         f"single-partition global window (WindowExec: No Partition Defined) "
-        f"in: {offenders} — use operators/ranking.global_rank / exact_ntile "
+        f"in: {offenders} — use operators/ranking.global_rank / exact_ntile_multi "
         f"or a partitioned window instead"
     )
 

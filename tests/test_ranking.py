@@ -10,7 +10,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.ranking import (
-    exact_ntile,
     exact_ntile_multi,
     global_rank,
 )
@@ -59,20 +58,9 @@ def test_global_rank_no_unpartitioned_window(spark):
         assert prefix and " ASC" not in prefix.split(",")[0], plan
 
 
-@pytest.mark.parametrize("n,k", [(1000, 4), (17, 4), (3, 4), (16, 4), (101, 10)])
-def test_exact_ntile_matches_window_ntile(spark, n, k):
-    df = _frame(spark, n)
-    order = [F.col("v").asc(), F.col("k").asc()]
-    tiled = exact_ntile(df, k, order, "t", num_partitions=4)
-    w = Window.orderBy(*order)
-    expected = df.withColumn("t", F.ntile(k).over(w))
-    assert sorted(map(tuple, tiled.select("id", "t").collect())) == sorted(
-        map(tuple, expected.select("id", "t").collect())
-    )
-    assert dict(tiled.schema["t"].jsonValue().items())["type"] == "integer"
-
-
-@pytest.mark.parametrize("n,k", [(1000, 4), (17, 4), (101, 10)])
+@pytest.mark.parametrize(
+    "n,k", [(1000, 4), (17, 4), (3, 4), (16, 4), (101, 10)]
+)
 def test_exact_ntile_multi_matches_windows(spark, n, k):
     # three orderings (one DESC via negation) fused into one ranking
     # pass must match three independent window NTILEs exactly
@@ -103,9 +91,13 @@ def test_exact_ntile_multi_matches_windows(spark, n, k):
     assert sorted(map(tuple, tiled.collect())) == sorted(
         map(tuple, expected.collect())
     )
+    for t in ("t_v", "t_w", "t_m"):
+        assert tiled.schema[t].dataType.typeName() == "integer"
 
 
 def test_exact_ntile_multi_matches_sequential(spark):
+    """Bigint order slots, one ascending and one descending measure:
+    the fused ranking equals one window NTILE per measure."""
     df = _frame(spark, 200)
     fused = exact_ntile_multi(
         df,
@@ -117,8 +109,11 @@ def test_exact_ntile_multi_matches_sequential(spark):
         ],
         num_partitions=4,
     )
-    seq = exact_ntile(df, 4, [F.asc("v"), F.asc("id")], "a", 4)
-    seq = exact_ntile(seq, 4, [F.desc("v"), F.asc("id")], "b", 4)
+    seq = df.select(
+        "id",
+        F.ntile(4).over(Window.orderBy(F.asc("v"), F.asc("id"))).alias("a"),
+        F.ntile(4).over(Window.orderBy(F.desc("v"), F.asc("id"))).alias("b"),
+    )
     assert sorted(map(tuple, fused.select("id", "a", "b").collect())) == sorted(
         map(tuple, seq.select("id", "a", "b").collect())
     )

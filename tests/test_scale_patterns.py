@@ -1,7 +1,6 @@
 """Scale-pattern verification: these assert the *plan shape* that makes
-operators viable at 100 TB — partition pruning reaching the file index,
-bucketed joins eliminating their shuffle, salted joins preserving
-semantics under fan-out."""
+operators viable at 100 TB — bucketed joins eliminating their shuffle,
+salted joins preserving semantics under fan-out."""
 
 from __future__ import annotations
 
@@ -10,30 +9,11 @@ import uuid
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.skew import salted_join
-from youtube_etl_project_spark.sources.json_sink import write_date_partitioned
 from youtube_etl_project_spark.sources import load_table
 
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events")
-    root = str(tmp_path / "raw")
-    write_date_partitioned(ev, root, ts_col="ts")
-    back = spark.read.json(root)
-    pruned = back.filter((F.col("year") == 2024) & (F.col("month") == 1) & (F.col("day") == 2))
-    plan = _physical_plan(pruned)
-    assert "PartitionFilters" in plan
-    # pruning must reach the file index, not survive as a post-scan filter
-    day2 = pruned.count()
-    assert 0 < day2 < ev.count()
-    total = sum(
-        r["count"]
-        for r in back.groupBy("year", "month", "day").count().collect()
-    )
-    assert total == ev.count()
 
 
 def test_bucketed_join_no_shuffle(spark, sf_dir):

@@ -57,24 +57,6 @@ def test_lsh_recall_vs_brute_force(spark, sf_dir):
     assert all(pair[0] != pair[1] for pair in ann)
 
 
-def test_cosine_pairs_lsh_vs_exact(spark, sf_dir):
-    from youtube_etl_project_spark.operators import similarity as sim
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in sim.cosine_pairs(emb, threshold=0.4).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in sim.cosine_pairs_lsh(emb, threshold=0.4).collect()
-    }
-    assert lsh <= exact  # verify step -> precision 1.0
-    assert exact, "fixture should contain cosine>=0.4 pairs"
-    recall = len(lsh) / len(exact)
-    assert recall >= 0.8, f"embedding-pair LSH recall collapsed: {recall}"
-
-
 def test_cosine_pairs_blocked_matches_plain(spark, sf_dir):
     """The blocked-matmul prefilter + exact verify must be bit-identical to
     the pure declarative baseline (values AND pair set), across several

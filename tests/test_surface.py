@@ -3,11 +3,15 @@ nothing uses. Scanned from source with ``ast`` over every ``.py`` file of
 the repository (package, tests, tools, examples, ``bench.py``,
 ``perfbench/``); nothing is imported and no Spark session starts.
 
-Three findings fail:
+Four findings fail:
 
 * a top-level package function that no reached code names (reachability
   by name, from module-level code, registered queries and every file
   outside the package);
+* a top-level package function that only test files reach (``tests/``,
+  ``test_*.py``, ``conftest.py``): the same scan with test files left out
+  of the roots. ``REFERENCE_TWINS`` names the exceptions, each a
+  brute-force twin that a remaining test compares a program path against;
 * a parameter its function never reads;
 * a defaulted parameter that no call of its function's name sets, by
   position, by keyword, through ``*args``/``**kwargs`` or through
@@ -34,9 +38,18 @@ OUT_OF_SCOPE = {PKG / "testkit.py"}
 ALLOWED = {
     "session.py:get_spark(master)": "cluster master URL; None defers to spark-submit",
     "functions/bpe.py:released_merges(path)": "where the released merge table lives",
-    "sources/jdbc_sink.py:write_jdbc(driver)": "JDBC driver class of the target warehouse",
-    "sources/jdbc_sink.py:read_jdbc(driver)": "JDBC driver class of the source warehouse",
     "sql.py:register_catalog(prefix)": "view-name prefix for a shared session catalog",
+}
+
+# Package functions only tests reach, kept because a remaining test
+# compares a program path against them: (reason, the test files that do).
+REFERENCE_TWINS = {
+    "operators/similarity.py:cosine_pairs": (
+        "brute-force cross-join cosine pairs; test_similarity compares "
+        "cosine_pairs_blocked and test_semantic compares semantic_dedup "
+        "against it",
+        ("test_similarity.py", "test_semantic.py"),
+    ),
 }
 
 _FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -91,12 +104,22 @@ def _where(py: Path, qual: str) -> str:
     return f"{py.relative_to(PKG).as_posix()}:{qual}"
 
 
-def _dead_functions() -> list[str]:
+def _is_test(py: Path) -> bool:
+    return (
+        py.relative_to(REPO).parts[0] == "tests"
+        or py.name.startswith("test_")
+        or py.name == "conftest.py"
+    )
+
+
+def _unreached(with_tests: bool) -> list[tuple[Path, ast.FunctionDef]]:
     roots: set[str] = set()
     bodies: dict[str, set[str]] = defaultdict(set)
     defs = []
     pkg = set(_package_files())
     for py, tree in _trees().items():
+        if not with_tests and _is_test(py):
+            continue
         for node in tree.body:
             if py in pkg and isinstance(node, _FUNC):
                 defs.append((py, node))
@@ -111,10 +134,22 @@ def _dead_functions() -> list[str]:
             if m not in reached:
                 reached.add(m)
                 todo.append(m)
+    return [(py, n) for py, n in defs if n.name not in reached]
+
+
+def _dead_functions() -> list[str]:
     return [
         f"{_where(py, n.name)} line {n.lineno}"
-        for py, n in defs
-        if n.name not in reached
+        for py, n in _unreached(with_tests=True)
+    ]
+
+
+def _test_only_functions() -> list[str]:
+    dead = {id(n) for _, n in _unreached(with_tests=True)}
+    return [
+        _where(py, n.name)
+        for py, n in _unreached(with_tests=False)
+        if id(n) not in dead
     ]
 
 
@@ -236,6 +271,10 @@ def test_no_unreferenced_package_function():
     _report(_dead_functions())
 
 
+def test_no_package_function_only_tests_reach():
+    _report(sorted(set(_test_only_functions()) - set(REFERENCE_TWINS)))
+
+
 def test_no_parameter_its_function_never_reads():
     _report(sorted(set(_unread_parameters()) - set(ALLOWED)))
 
@@ -245,8 +284,41 @@ def test_no_defaulted_parameter_that_no_call_sets():
 
 
 def test_allowlist_names_live_deployment_settings():
-    """Every allowlist entry has a reason and still names a parameter
-    that the scan would otherwise report."""
+    """Every allowlist entry has a reason and still names a finding the
+    scan would otherwise report; every reference twin is still named by
+    each test file its reason cites."""
     found = set(_unread_parameters()) | set(_unset_defaults())
     assert all(ALLOWED.values())
     assert sorted(set(ALLOWED) - found) == []
+    assert sorted(set(REFERENCE_TWINS) - set(_test_only_functions())) == []
+    for where, (reason, tests) in REFERENCE_TWINS.items():
+        name = where.rsplit(":", 1)[1]
+        assert reason and tests, where
+        for t in tests:
+            assert name in _names(_trees()[REPO / "tests" / t]), (where, t)
+
+
+def _entry_checkout_path() -> str:
+    """The fixed checkout path the driver contract puts on ``sys.path``:
+    the string argument of ``sys.path.insert`` in ``__spark_entry__.py``."""
+    for n in ast.walk(_trees()[REPO / "__spark_entry__.py"]):
+        if (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "insert"
+            and isinstance(n.args[-1], ast.Constant)
+        ):
+            return n.args[-1].value
+    raise AssertionError("__spark_entry__.py inserts no fixed path")
+
+
+def test_no_fixed_checkout_path_outside_the_driver_contract():
+    """Only the driver contract may name its fixed checkout path; any
+    other file that did would import, or read, that checkout instead of
+    its own when run from a second copy."""
+    fixed = _entry_checkout_path()
+    _report(sorted(
+        py.relative_to(REPO).as_posix()
+        for py in _trees()
+        if py.name != "__spark_entry__.py" and fixed in py.read_text()
+    ))

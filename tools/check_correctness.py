@@ -14,8 +14,9 @@ import sys
 import time
 import traceback
 from datetime import date, datetime
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 

@@ -30,7 +30,6 @@ from collections import Counter
 from functools import cache, lru_cache
 
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # GPT-2-style pre-tokenization, expressed in stdlib `re` (no \p classes):
@@ -171,19 +170,3 @@ MERGES_V1 = __file__.rsplit("/", 1)[0] + "/bpe_merges_v1.txt"
 @cache
 def released_merges(path: str = MERGES_V1) -> list[tuple[bytes, bytes]]:
     return load_merges(path)
-
-
-def fit_corpus_bpe(
-    docs: DataFrame,
-    sample: int = 128,
-    n_merges: int = 200,
-) -> list[tuple[bytes, bytes]]:
-    """Train merges on a deterministic sample of ``docs`` (doc_id, text):
-    lowest ``doc_id`` first, stable across partitioning/run order."""
-    rows = (
-        docs.select(F.col("text").alias("t"))
-        .orderBy(F.col("doc_id").asc())
-        .limit(sample)
-        .collect()
-    )
-    return train_bpe([r["t"] for r in rows], n_merges)

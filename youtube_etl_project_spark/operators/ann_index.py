@@ -457,10 +457,11 @@ def _coarse_model(spark: SparkSession, path: str):
 
 
 def _query_vectors(qrows: "list") -> "dict[int, dict[int, int]]":
-    """Collected (id, pos, q) grid rows as {id: {pos: q}}."""
+    """Collected (id, pos, q) grid rows (Rows or dicts) as
+    {id: {pos: q}}."""
     by_q: "dict[int, dict[int, int]]" = {}
     for r in qrows:
-        by_q.setdefault(r.id, {})[r.pos] = r.q
+        by_q.setdefault(r["id"], {})[r["pos"]] = r["q"]
     return by_q
 
 
@@ -771,31 +772,46 @@ def nsw_insert(batch: DataFrame, path: str) -> None:
     shares its top-2 cells stays edgeless.
     """
     from pyspark.sql import Window
+    from pyspark.sql.types import StructField, StructType
 
     from youtube_etl_project_spark.operators.checkpointing import pin
     from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     spark = batch.sparkSession
     nn = batch.filter(F.col("embedding").isNotNull())
-    # the same grid snap the persisted index was built with
-    qe_new = grid_rows(
+    # the same grid snap the persisted index was built with; the batch is
+    # batch-sized, so it is collected once and re-enters every plan below
+    # as a local relation
+    qe_grid = grid_rows(
         nn, "vec_id", "embedding", GRID, id_out="id", pos="pos"
     )
-    if qe_new.isEmpty():
+    qtbl = qe_grid.toArrow()
+    if qtbl.num_rows == 0:
         return
-    cb = fixture_cache.read_frame(spark, f"{path}/coarse")
-    qq = qe_new.withColumnRenamed("id", "query_id")
-    dc = F.col("q") - F.col("cq")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cell"))
+    qe_new = spark.createDataFrame(qtbl)
+    # each new vector's coarse cell, ranked on the driver against the
+    # cached codebook under the (dist, cell) rule
+    assigned = [
+        {"id": qid, "cell": c}
+        for qid, c, _ in _nearest_coarse_cells(
+            spark, path, _query_vectors(qtbl.to_pylist()), 1
+        )
+    ]
+    cell_type = fixture_cache.read_frame(spark, f"{path}/coarse").schema[
+        "cell"
+    ].dataType
     assign_new = F.broadcast(
-        qq.join(F.broadcast(cb), "pos")
-        .groupBy("query_id", "cell")
-        .agg(F.sum(dc * dc).cast("long").alias("dist"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select(F.col("query_id").alias("id"), "cell")
+        spark.createDataFrame(
+            pa.Table.from_pylist(assigned, pa.schema(
+                [("id", pa.int64()), ("cell", pa.int64())]
+            )),
+            StructType([
+                StructField("id", qe_grid.schema["id"].dataType),
+                StructField("cell", cell_type),
+            ]),
+        )
     )
-    new_cells = sorted(r.cell for r in assign_new.select("cell").collect())
+    new_cells = sorted({a["cell"] for a in assigned})
     # 1) neighbors of each new vector on the PRE-batch graph
     res = nsw_query(
         qe_new, path, topk=8, include_cell=True,
@@ -938,71 +954,3 @@ def nsw_cell_stats(spark: SparkSession, path: str) -> DataFrame:
         )
     )
 
-
-def nsw_file_stats(path: str) -> "dict[str, dict[int, int]]":
-    """Files per cell partition for each NSW dataset — the FRAGMENTATION
-    monitor: every :func:`nsw_insert` batch appends one-or-more files to
-    its new vectors' cell partitions (and dynamic-overwrites touched
-    ones), so a hot ingest cell accumulates small files and its probe
-    pays per-file open cost. Driver-side listing is safe: the cell count
-    is K ∝ √n (model-sized) and only directory metadata is read."""
-    import os
-    import re
-
-    out: dict[str, dict[int, int]] = {}
-    for ds in ("edges", "components"):
-        cells: dict[int, int] = {}
-        base = os.path.join(path, ds)
-        if not os.path.isdir(base):
-            continue
-        for entry in os.listdir(base):
-            m = re.fullmatch(r"cell=(\d+)", entry)
-            if not m:
-                continue
-            n = sum(
-                1
-                for f in os.listdir(os.path.join(base, entry))
-                if f.endswith(".parquet")
-            )
-            cells[int(m.group(1))] = n
-        out[ds] = cells
-    return out
-
-
-def nsw_compact(spark: SparkSession, path: str) -> "dict[str, int]":
-    """Compact fragmented cell partitions of the persisted NSW graph —
-    the post-ingest maintenance pass: for each dataset (edges,
-    components), cells holding more than one parquet file are read back,
-    eagerly pinned (a plan may never scan the path its dynamic overwrite
-    is rewriting — the localCheckpoint materializes the rows FIRST),
-    coalesced to one file per cell, and dynamic-partition-overwritten in
-    place. Rewrite cost
-    is proportional to the fragmented cells' data only — untouched
-    partitions' files are never opened or rewritten. Row content is
-    unchanged (pinned by pytest: identical nsw_query traces before and
-    after), so probes pay fewer file opens for the same pruned scans.
-
-    Returns {dataset: number of cells compacted}."""
-    from youtube_etl_project_spark.operators.checkpointing import pin
-
-    stats = nsw_file_stats(path)
-    done: dict[str, int] = {}
-    for ds, cells in stats.items():
-        frag = sorted(
-            c for c, n in cells.items() if n > 1
-        )
-        done[ds] = len(frag)
-        if not frag:
-            continue
-        rows = pin(  # eager materialization BEFORE the overwrite
-            fixture_cache.read_frame(spark, f"{path}/{ds}").filter(
-                F.col("cell").isin(frag)
-            ),
-            reliable=False,
-        )
-        rows.repartition("cell").write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).option("maxRecordsPerFile", 0).partitionBy("cell").parquet(
-            f"{path}/{ds}"
-        )
-    return done

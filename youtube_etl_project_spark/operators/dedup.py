@@ -803,74 +803,17 @@ def ngram_containment_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash: bit i set iff the majority of token hashes have bit i
-    set. Expressed as a 64-wide array fold over per-token xxhash64 — all
-    map-side, one long out."""
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(7)))
-    n = F.size(hashes)
-
-    def bit_vote(i: int) -> Column:
-        ones = F.size(
-            F.filter(
-                hashes,
-                lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-        # majority of tokens set this bit (ties → 0)
-        return F.when(ones * 2 > n, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        out = out + F.shiftleft(bit_vote(i), i)
-    return out
-
-
-def simhash64_df(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """DataFrame-level SimHash: explode tokens → hash once → 64 bit-count
-    aggregates → fold back to one long. Same result as ``simhash64`` but
-    each token hashes exactly once (the expression form re-evaluates the
-    hash array per bit — fine for ad-hoc columns, wrong shape for a corpus
-    scan). Returns (id, n_tokens, simhash). One shuffle on the doc id."""
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit(""))
-    tok_rows = spread(docs).select(
-        F.col(id_col).alias("doc"), F.explode(toks).alias("t")
-    )
-    hashed = tok_rows.select("doc", F.xxhash64("t", F.lit(7)).alias("h"))
-    agg = hashed.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        *[
-            F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1))).alias(f"b{i}")
-            for i in range(64)
-        ],
-    )
-    sim = F.lit(0).cast("long")
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") * 2 > F.col("n_tokens"), F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        sim = sim + F.shiftleft(bit.cast("long"), i)
-    return agg.select(
-        F.col("doc").alias(id_col),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        sim.alias("simhash"),
-    )
-
 
 def simhash64_md5_df(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """64-bit SimHash with **md5-domain token bits** — the oracle-twin of
-    :func:`simhash64_df` (whose xxhash64 bits have no DuckDB equivalent).
+    """64-bit SimHash with **md5-domain token bits**, so every bit is
+    reproducible in DuckDB.
 
     Token bits come from md5's first 16 hex chars split into two 32-bit
     halves (``conv(hex, 16, 10)``; DuckDB: ``('0x' || hex)::BIGINT``):
-    bit i<32 reads the low half, bit i≥32 the high half. Same plan shape
-    as the flagship: explode tokens → hash once per token → 64 bit-count
+    bit i<32 reads the low half, bit i≥32 the high half. Plan: explode
+    tokens → hash once per token → 64 bit-count
     SUMs in one aggregate (whole-stage codegen, one shuffle on doc) →
     majority vote (ties → 0) → fold to one long. Bit 63 folds as
     ``b63 * (-2^63)`` so the two's-complement top bit never overflows an
@@ -915,30 +858,6 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_distance: int = 3,
-) -> DataFrame:
-    """Near-dup pairs at Hamming distance ≤ d over 64-bit SimHashes —
-    *exact* (recall 1.0), via pigeonhole banding instead of all-pairs.
-
-    Split the fingerprint into d+1 disjoint bit bands: any two hashes
-    within distance d have all d differing bits confined to ≤ d bands, so
-    they agree exactly on at least one band. Bucket-join on
-    (band_id, band_bits), verify ``bit_count(xor) ≤ d`` on candidates only
-    (the classic Manku/Jain/Sarma'07 web-dedup layout). Cost ∝ band
-    collisions, not n².
-
-    Returns (id_a, id_b, hamming) with id_a < id_b.
-    """
-    sig = simhash64_df(docs, id_col, text_col).select(
-        F.col(id_col).alias("doc"), "simhash"
-    )
-    return simhash_banded_pairs(sig, max_distance)
-
-
 def simhash_pairs_md5(
     docs: DataFrame,
     id_col: str,
@@ -946,11 +865,13 @@ def simhash_pairs_md5(
     max_distance: int = 3,
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """:func:`simhash_pairs` over the **md5-domain** fingerprints
-    (:func:`simhash64_md5_df`) — same pigeonhole banding and exact-Hamming
-    verify, but every bit is reproducible in DuckDB, so the whole pairs
-    pipeline sits under the value-hash oracle (round 7: this converted
-    the registered ``dedup_simhash_pairs`` from rows-only)."""
+    """Near-dup pairs at Hamming distance ≤ d over the **md5-domain**
+    fingerprints (:func:`simhash64_md5_df`) — *exact* (recall 1.0), via
+    pigeonhole banding instead of all-pairs (:func:`simhash_banded_pairs`).
+    Every bit is reproducible in DuckDB, so the whole pairs pipeline sits
+    under the value-hash oracle of the registered ``dedup_simhash_pairs``.
+
+    Returns (id_a, id_b, hamming) with id_a < id_b."""
     sig = simhash64_md5_df(docs, id_col, text_col).select(
         F.col(id_col).alias("doc"), "simhash"
     )
@@ -978,48 +899,17 @@ def simhash_block_combos(
     return list(combinations(range(n_blocks), n_blocks - max_distance))
 
 
-def choose_simhash_blocks(n: int) -> int:
-    """Adaptive band geometry — the auto_lsh_geometry pattern for the
-    simhash candidate join: pick the smallest block count B whose
-    combination-key width is ≥ log2(n) + 8, so expected band-bucket
-    occupancy stays ≤ ~1/256 per key and candidate volume stays ~linear
-    in n instead of n²/2^keybits (the r9 frozen-geometry finding: 4
-    blocks freeze keys at 16 bits, so occupancy ∝ n). Wider keys cost
-    combinatorially more tables (C(B, B-d): 4, 10, 20, 35, 56, ...), so
-    the search stops at a 64-table budget — at d=3 that caps B at 8
-    (40-bit keys, 56 tables), enough for ~2^32 docs at the target
-    occupancy; past that the geometry saturates and candidate growth
-    returns (the named escape is a 128-bit fingerprint, which doubles
-    every width, not denser 64-bit banding). Deterministic integer rule
-    → oracle-expressible as a tabulated twin; pinned against this
-    definition by tests/test_dedup.py."""
-    from math import comb
-
-    max_distance = 3
-    target = min(40, max(2, n - 1).bit_length() + 8)
-    best_b, best_w = max_distance + 1, -1
-    b = max_distance + 1
-    while comb(b, b - max_distance) <= 64 and 64 // b >= 1:
-        lens = simhash_block_lengths(b)
-        key_bits = min(
-            sum(lens[x] for x in c)
-            for c in simhash_block_combos(b, max_distance)
-        )
-        if key_bits > best_w:
-            best_b, best_w = b, key_bits
-        if key_bits >= target:
-            return b
-        b += 1
-    return best_b
-
-
 def simhash_banded_pairs(
     sig: DataFrame,
     max_distance: int = 3,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Pigeonhole banding + exact-Hamming verify over (doc, simhash)
-    fingerprints — shared by the xxhash and md5 signature families.
+    fingerprints: split the fingerprint into d+1 disjoint bit bands; any
+    two hashes within distance d agree exactly on at least one band, so a
+    bucket join on (band_id, band_bits) plus a ``bit_count(xor) ≤ d``
+    verify on the candidates finds every pair (the classic
+    Manku/Jain/Sarma'07 web-dedup layout). Cost ∝ band collisions, not n².
 
     ``n_blocks`` (default d+1, the classic layout) widens the band keys
     via the Manku/Jain/Sarma WWW'07 block-combination scheme: split the
@@ -1027,8 +917,7 @@ def simhash_banded_pairs(
     B-d of them (:func:`simhash_block_combos` — still exact recall by
     pigeonhole). B=5 at d=3 turns 16-bit keys into 24-28-bit keys: 2^8-2^12
     × sparser buckets for 2.5× more band rows, collapsing the n²/2^16
-    candidate regime that froze the 4-band geometry (r9 verdict);
-    :func:`choose_simhash_blocks` picks B from the corpus size."""
+    candidate regime that froze the 4-band geometry (r9 verdict)."""
     if n_blocks is None:
         n_blocks = max_distance + 1
     if n_blocks < max_distance + 1:

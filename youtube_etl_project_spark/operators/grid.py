@@ -24,7 +24,7 @@ grid and the formula, so each caller states its own.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 GRID = 1_000_000  # the component grid of every exact-int64 vector path
@@ -58,6 +58,17 @@ def grid_rows(
         df.filter(F.col(vec).isNotNull())
         .select(ident, F.posexplode(vec).alias(pos, "e"))
         .select(id_out or id_col, pos, snap(F.col("e"), grid).alias("q"))
+    )
+
+
+def nearest_cells(dists: DataFrame, keys: "list[str]", n: int) -> DataFrame:
+    """The ``n`` nearest cells per ``keys`` of (..., cell, dist) rows:
+    ``rn`` is the row_number over ``keys`` ordered by (dist, cell), so on
+    an exact-int distance tie the lower cell wins; rows with
+    ``rn <= n`` are kept."""
+    w = Window.partitionBy(*keys).orderBy(F.asc("dist"), F.asc("cell"))
+    return dists.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= n
     )
 
 

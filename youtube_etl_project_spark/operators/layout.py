@@ -8,19 +8,17 @@ Morton key and range-partitioning + sorting on it gives every file a
 small min/max hyper-rectangle in BOTH dimensions, so engines that prune
 on column statistics (parquet row-group stats; Delta/Iceberg file stats
 — the lakehouse ``OPTIMIZE ZORDER BY`` feature this re-expresses) skip
-most files for 2-d box predicates. Spark itself prunes parquet row
-groups via pushed filters, so the benefit shows up without any table
-format: `tests/test_layout.py` measures overlap fractions directly from
-per-file min/max.
+most files for 2-d box predicates. The registered
+``zorder_pruning_report`` (plans/layout_queries.py) grades that effect
+on per-bucket min/max under both layouts.
 
 Everything here is pure column arithmetic (bit shifts/masks inside
-whole-stage codegen) — no UDFs, no driver state; the write is one
-range-shuffle, exactly what a sorted write costs anyway.
+whole-stage codegen) — no UDFs, no driver state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -55,51 +53,3 @@ def morton_sql(a: str, b: str, bits: int = 10) -> str:
         terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 10,
-    n_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order of (col_a, col_b):
-    range-partition on the Morton key (one shuffle — the same cost as any
-    sorted write), sort within partitions so parquet row-group stats are
-    tight too, and drop the key before writing. ``n_files`` bounds output
-    file count; at cluster scale pick it from target file size
-    (~1 GB/file), not executor count."""
-    keyed = df.withColumn("__z", morton_key(col_a, col_b, bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def file_stats(df: DataFrame, cols: "list[str]") -> DataFrame:
-    """Per-file min/max of ``cols`` — the statistics a lakehouse manifest
-    (or parquet footer) would hold, computed here explicitly so layout
-    quality is measurable without a table format. One aggregation grouped
-    by ``input_file_name()``."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-
-
-def overlap_fraction(
-    stats: DataFrame, box: "dict[str, tuple[float, float]]"
-) -> float:
-    """Fraction of files whose min/max rectangle intersects the query
-    box — the fraction a stats-pruning scan planner would have to read.
-    Driver-side over the (small) per-file stats frame."""
-    cond = F.lit(True)
-    for c, (lo, hi) in box.items():
-        cond = cond & (F.col(f"max_{c}") >= lo) & (F.col(f"min_{c}") <= hi)
-    total = stats.count()
-    return stats.filter(cond).count() / total if total else 0.0

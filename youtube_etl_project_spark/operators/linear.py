@@ -7,8 +7,8 @@ two sufficient statistics — the (d+1)² Gram matrix and the (d+1)
 target moment — both computable in ONE shuffle-free Arrow pass whose
 reduce payload is O(d²) regardless of row count. The data never moves;
 only the statistics do. The solve is a d×d numpy call on the driver
-(the model, not the data), and scoring is a pure-Column dot product
-back on the executors. This is the workhorse for trainable quality
+(the model, not the data), and scoring with the weights is a Column
+dot product back on the executors. This is the workhorse for trainable quality
 scorers over corpus features (generalizing the heuristic quality
 signals in operators/textops.py): fit on a labeled sample, score the
 full corpus JVM-side.
@@ -17,8 +17,7 @@ full corpus JVM-side.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def ridge_moments(
@@ -88,102 +87,3 @@ def ridge_fit(
     reg = np.eye(g.shape[0]) * lam
     reg[-1, -1] = 0.0  # never shrink the intercept
     return np.linalg.solve(g + reg, m).tolist()
-
-
-def ridge_predict(vec_col: Column, weights: "list[float]") -> Column:
-    """Score a vector column with fitted weights, JVM-side: the
-    left-fold dot from operators/similarity plus the intercept — no
-    Python on the scoring path, so the full corpus scores in codegen."""
-    from youtube_etl_project_spark.operators.similarity import dot
-
-    w = F.array(*[F.lit(float(x)) for x in weights[:-1]])
-    return dot(vec_col, w) + F.lit(float(weights[-1]))
-
-
-def r2_score(
-    df: DataFrame, vec: str, target: str, weights: "list[float]"
-) -> DataFrame:
-    """1-row frame (n, r2, rmse) of the fit on ``df`` — the eval twin.
-    Aggregates in one pass over predictions computed map-side."""
-    scored = df.filter(
-        F.col(vec).isNotNull() & F.col(target).isNotNull()
-    ).select(
-        F.col(target).cast("double").alias("__y"),
-        ridge_predict(F.col(vec), weights).alias("__p"),
-    )
-    e2 = (F.col("__y") - F.col("__p")) ** 2
-    agg = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(e2).alias("sse"),
-        F.sum("__y").alias("sy"),
-        F.sum(F.col("__y") * F.col("__y")).alias("syy"),
-    )
-    sst = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
-    return agg.select(
-        F.col("n").cast("long").alias("n"),
-        F.round(F.lit(1.0) - F.col("sse") / sst, 6).alias("r2"),
-        F.round(F.sqrt(F.col("sse") / F.col("n")), 6).alias("rmse"),
-    )
-
-
-GROUP_RIDGE_SCHEMA = (
-    "group string, n long, r2 double, rmse double, weights array<double>"
-)
-
-
-def groupwise_ridge(
-    df: DataFrame,
-    group: str,
-    vec: str = "embedding",
-    target: str = "y",
-    lam: float = 1.0,
-) -> DataFrame:
-    """MANY small models data-parallel: one ridge fit PER GROUP via
-    ``applyInPandas`` — each group's design fits executor memory (per-
-    domain/per-source scorers: thousands of groups, d=64 each), so the
-    whole solve happens executor-side with zero driver state; only
-    (group, weights, fit metrics) come back. The complement of
-    :func:`ridge_fit`'s one-global-model moment pass — same math, the
-    opposite distribution strategy, chosen by model count not data size.
-
-    Groups whose usable rows can't determine a d+1 system still solve
-    (ridge regularizes), but degenerate all-null groups yield a null-
-    stats row rather than failing the job."""
-    import numpy as np  # noqa: F401 — asserted importable before shipping
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np  # noqa: F811 — runs on the worker
-
-        key = str(pdf[group].iloc[0])
-        mask = pdf[vec].notna() & pdf[target].notna()
-        if not mask.any():
-            return pd.DataFrame(
-                {"group": [key], "n": [0], "r2": [None], "rmse": [None],
-                 "weights": [None]}
-            )
-        x = np.stack(pdf.loc[mask, vec].to_numpy()).astype(np.float64)
-        y = pdf.loc[mask, target].to_numpy().astype(np.float64)
-        z = np.hstack([x, np.ones((x.shape[0], 1))])
-        g = z.T @ z
-        reg = np.eye(g.shape[0]) * lam
-        reg[-1, -1] = 0.0
-        w = np.linalg.solve(g + reg, z.T @ y)
-        pred = z @ w
-        sse = float(((y - pred) ** 2).sum())
-        sst = float(((y - y.mean()) ** 2).sum())
-        r2 = 1.0 - sse / sst if sst > 0 else None
-        return pd.DataFrame(
-            {
-                "group": [key],
-                "n": [int(len(y))],
-                "r2": [round(r2, 6) if r2 is not None else None],
-                "rmse": [round(float(np.sqrt(sse / len(y))), 6)],
-                "weights": [w.tolist()],
-            }
-        )
-
-    return (
-        df.select(group, vec, target)
-        .groupBy(group)
-        .applyInPandas(fit, GROUP_RIDGE_SCHEMA)
-    )

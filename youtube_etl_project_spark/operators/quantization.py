@@ -39,7 +39,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
-from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    nearest_cells,
+    snap,
+)
 from pyspark.sql.functions import pandas_udf
 
 _GRID = 1e9  # mean-snap grid: exact in bigint, ~9 fractional digits
@@ -210,8 +215,6 @@ def pq_train_exact_rows(
     share the identical seed / argmin-tiebreak / snapped-mean /
     empty-cell-carry semantics that the unrolled DuckDB CTE twins
     mirror. Returns {(sub, cell, pos): cq}."""
-    from pyspark.sql import Window
-
     spark = qe.sparkSession
 
     seed_ids = sorted(
@@ -248,13 +251,8 @@ def pq_train_exact_rows(
             .groupBy("id", "sub", "cell")
             .agg(F.sum(d * d).cast("long").alias("dist"))
         )
-        w = Window.partitionBy("id", "sub").orderBy(
-            F.asc("dist"), F.asc("cell")
-        )
-        assign = (
-            dists.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "sub", "cell")
+        assign = nearest_cells(dists, ["id", "sub"], 1).select(
+            "id", "sub", "cell"
         )
         means = (
             assign.join(qe, ["id", "sub"])

@@ -30,8 +30,8 @@ TeraSort's range-partitioned total order):
    plus that partition's offset = the exact global rank.  Identical output
    to the single global window, no single-task stage anywhere.
 
-``exact_ntile`` layers NTILE(k) semantics on top: with n rows total and
-rank i, the first ``n % k`` buckets take ``n//k + 1`` rows and the rest
+``exact_ntile_multi`` layers NTILE(k) semantics on top: with n rows total
+and rank i, the first ``n % k`` buckets take ``n//k + 1`` rows and the rest
 take ``n//k`` — the same fill rule Spark and DuckDB implement, so results
 stay hash-identical with an ``NTILE() OVER (ORDER BY ...)`` oracle.
 """
@@ -130,24 +130,6 @@ def global_rank(
     return ranked, total
 
 
-def exact_ntile(
-    df: DataFrame,
-    k: int,
-    order_cols: Sequence[Column],
-    tile_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """NTILE(k) OVER (ORDER BY order_cols) without the single-partition
-    window, bit-identical to the window form (same fill rule: the first
-    ``n % k`` tiles get the extra row).  Tile column is IntegerType, like
-    Spark's ``F.ntile``."""
-    rank = f"__ntile_rank_{tile_col}"
-    ranked, n = global_rank(df, order_cols, rank, num_partitions)
-    return ranked.withColumn(
-        tile_col, _tile_of_rank(F.col(rank), n, k)
-    ).drop(rank)
-
-
 def _tile_of_rank(r: Column, n: int, k: int) -> Column:
     """NTILE(k) bucket of 1-based rank ``r`` among ``n`` rows — the
     shared fill rule (first ``n % k`` tiles take the extra row), matching
@@ -171,8 +153,8 @@ def exact_ntile_multi(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """NTILE(k) under SEVERAL orderings of the same frame in ONE ranking
-    job — the fused form of calling :func:`exact_ntile` once per measure
-    (which pays one range shuffle + one pin + one offsets collect EACH).
+    job — where one ranking per measure would pay one range shuffle + one
+    pin + one offsets collect EACH.
 
     ``measures`` is an ordered list of ``(tile_col, order_exprs)``. Every
     ``order_exprs`` list must be ASCENDING-sortable Column expressions of

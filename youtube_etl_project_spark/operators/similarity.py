@@ -667,9 +667,8 @@ def cosine_pairs_lsh_md5(
     dim: int,
     threshold: float = 0.4,
 ) -> DataFrame:
-    """Near-dup pair generation via md5-domain hyperplane LSH — the
-    oracle-twin of :func:`cosine_pairs_lsh` (whose sha256 planes and
-    float bucket dots have no cross-engine guarantee). Buckets come from
+    """Near-dup pair generation via md5-domain hyperplane LSH, with no
+    float in the bucket keys, so DuckDB reproduces them. Buckets come from
     :func:`md5_plane_signs` + grid-quantized exact bigint dots; the
     verify is the exact left-fold cosine on candidates only, which
     matches DuckDB's sequential ``list_inner_product`` bit-for-bit (the
@@ -806,8 +805,8 @@ def cosine_pairs(
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (id_a < id_b, cosine ≥
     threshold) via self cross-join — the oracle-checkable baseline of the
-    X2 embedding-dedup mode (quadratic by design; ``cosine_pairs_lsh`` is
-    the scale path, same contract)."""
+    X2 embedding-dedup mode (quadratic by design; ``cosine_pairs_blocked``
+    and the LSH pair generators are the scale paths, same contract)."""
     a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec).alias("__va"))
     b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec).alias("__vb"))
     return (
@@ -818,54 +817,20 @@ def cosine_pairs(
     )
 
 
-def cosine_pairs_lsh(
-    vectors: DataFrame,
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs via hyperplane-LSH bucket self-join.
-
-    Candidates = id pairs sharing ≥1 (table, key) bucket — cost ∝ bucket
-    collisions, not n²; the dense vectors never travel with the exploded
-    bucket rows (same discipline as ``lsh_topk``). Verification computes
-    the exact cosine on candidates only → precision 1.0; recall at the
-    4 planes × 16 tables over 64-dim ``(vec_id, embedding)`` rows is
-    ≈ 1-(1-p^4)^16 with p = 1-θ/π (≈ 0.94 at cosine 0.4), pinned by
-    tests/test_similarity.py.
-    """
-    keys_udf = _table_keys_vectorized(64, 4, 16, 42)
-    keyed = vectors.select(
-        F.col("vec_id").alias("id"), keys_udf("embedding").alias("__ks")
-    )
-    buckets = keyed.select(
-        "id", F.posexplode("__ks").alias("__table", "__key")
-    )
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.__table") == F.col("r.__table"))
-            & (F.col("l.__key") == F.col("r.__key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return _exact_verify(cand, vectors, "vec_id", "embedding", threshold)
-
-
 def cosine_pairs_lsh_exact(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec: str = "embedding",
     threshold: float = 0.4,
 ) -> DataFrame:
-    """:func:`cosine_pairs_lsh` with EXACT-integer bucket keys
-    (sha256-parity ±1 planes, grid-quantized strict-positive dots — the
-    ``lsh_topk_exact`` key family), which made the registered
-    ``dedup_embed_cosine_lsh`` oracle-checkable in round 7: banding is
-    reproducible term-for-term in DuckDB and the candidate verify is the
-    exact-fold cosine both engines share. Same plan shape and output
-    (id_a, id_b, cosine)."""
+    """Embedding-cosine near-dup pairs via hyperplane-LSH bucket
+    self-join, with EXACT-integer bucket keys (sha256-parity ±1 planes,
+    grid-quantized strict-positive dots — the ``lsh_topk_exact`` key
+    family), so the registered ``dedup_embed_cosine_lsh`` is
+    oracle-checkable: banding is reproducible term-for-term in DuckDB and
+    the candidate verify is the exact-fold cosine both engines share.
+    Candidates = id pairs sharing ≥1 (table, key) bucket — cost ∝ bucket
+    collisions, not n². Returns (id_a, id_b, cosine)."""
     vectors = vectors.filter(F.col(vec).isNotNull())
     keys_udf = _table_keys_exact_vectorized(
         64, 4, 16, 42, GRID
@@ -1019,7 +984,7 @@ def cosine_pairs_blocked(
        526 s → ~8 s on 5 k × 64-d at sf0.1 for the hash-embedding corpus).
 
     Still quadratic in total flops — it is the *exact baseline*; use
-    ``cosine_pairs_lsh`` / ``semantic_dedup`` for the subquadratic scale
+    ``cosine_pairs_lsh_exact`` / ``semantic_dedup`` for the subquadratic scale
     path. Per-task memory is bounded by 2·block_rows vectors plus a
     512-row score-matrix chunk regardless of n.
     """

@@ -76,16 +76,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the same (d, w, seeds): cell-wise sum."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "col").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-
-
 def cms_estimate(
     sketch: DataFrame,
     items: DataFrame,

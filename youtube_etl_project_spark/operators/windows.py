@@ -41,13 +41,6 @@ def sliding(
     return GroupedWindow(df, w, list(keys))
 
 
-def session(
-    df: DataFrame, ts_col: str, gap: str, *keys: str
-) -> "GroupedWindow":
-    w = F.session_window(ts_col, gap)
-    return GroupedWindow(df, w, list(keys))
-
-
 class GroupedWindow:
     """Thin wrapper: groupBy(window, keys) with the window key flattened to
     epoch seconds on the way out."""

@@ -24,7 +24,6 @@ Dims broadcast in the aggregate join.
 from __future__ import annotations
 
 import logging
-import os
 from dataclasses import dataclass, field
 from datetime import date as _date
 
@@ -228,83 +227,3 @@ def run_day(
     write_day_entity(channels_raw, raw_root, day, "channels")
     wh = Warehouse(spark, warehouse_root)
     return load_day(wh, raw_root, day, file_format="jsonl")
-
-
-def backfill(
-    wh: Warehouse,
-    raw_root: str,
-    days: "list[_date]",
-    file_format: str = "jsonl",
-) -> dict[str, dict[str, int]]:
-    """Restart-safe historical backfill: run ``load_day`` for every day
-    not yet marked complete, newest marker last.
-
-    Completion markers (``<warehouse>/_backfill/<ISO date>``) are written
-    AFTER a day's load commits, so a crash mid-backfill re-runs only the
-    interrupted day on the next invocation — and because every stage of
-    ``load_day`` is idempotent (MERGE semantics, replaceWhere aggregate,
-    atomic table swaps), the re-run converges instead of duplicating.
-    This is the operational verb the reference's daily cron lacks: its
-    only recovery story is manual re-invocation per day (FA:304-355).
-    """
-    marker_dir = os.path.join(wh.root, "_backfill")
-    os.makedirs(marker_dir, exist_ok=True)
-    results: dict[str, dict[str, int]] = {}
-    for day in sorted(days):
-        marker = os.path.join(marker_dir, day.isoformat())
-        failed = marker + ".failed"
-        if os.path.exists(marker):
-            log.info("backfill: %s already loaded, skipping", day)
-            continue
-        try:
-            results[day.isoformat()] = load_day(wh, raw_root, day, file_format)
-        except Exception as exc:  # noqa: BLE001 — record, then re-raise
-            with open(failed, "w") as f:
-                f.write(f"{type(exc).__name__}: {exc}")
-            raise
-        if os.path.exists(failed):
-            os.remove(failed)
-        with open(marker, "w") as f:
-            f.write("done")
-    return results
-
-
-def backfill_report(
-    wh: Warehouse, days: "list[_date] | None" = None
-) -> dict[str, object]:
-    """Inspectable twin of ``ParquetTable.history()`` for backfills: per-day
-    status derived from the marker directory, so an operator (or a restart
-    policy) can see exactly where a crashed backfill stopped without
-    re-running it.
-
-    Statuses: ``done`` (completion marker present), ``failed`` (the last
-    attempt raised — ``<day>.failed`` records the exception; a later
-    successful re-run clears it), ``pending`` (requested but never
-    completed). With ``days=None`` the report covers every day the marker
-    directory knows about (done or failed) — the "what happened so far"
-    view; passing the planned day list adds the not-yet-attempted tail as
-    ``pending`` — the "how far along are we" view. Pure driver-side file
-    metadata: no Spark jobs, safe to call from monitoring at any frequency.
-    """
-    marker_dir = os.path.join(wh.root, "_backfill")
-    seen: dict[str, dict[str, object]] = {}
-    if os.path.isdir(marker_dir):
-        for name in os.listdir(marker_dir):
-            if name.endswith(".failed"):
-                day = name[: -len(".failed")]
-                # a done marker for the same day supersedes a stale failure
-                if os.path.exists(os.path.join(marker_dir, day)):
-                    continue
-                with open(os.path.join(marker_dir, name)) as f:
-                    seen[day] = {"day": day, "status": "failed",
-                                 "error": f.read()}
-            else:
-                seen[name] = {"day": name, "status": "done"}
-    for day in days or []:
-        seen.setdefault(
-            day.isoformat(), {"day": day.isoformat(), "status": "pending"}
-        )
-    rows = [seen[k] for k in sorted(seen)]
-    counts = {s: sum(1 for r in rows if r["status"] == s)
-              for s in ("done", "failed", "pending")}
-    return {"days": rows, **counts}

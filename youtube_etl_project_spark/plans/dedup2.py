@@ -14,7 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache
-from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap_np
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    nearest_cells,
+    snap_np,
+)
 from youtube_etl_project_spark.registry import cnt, register
 from youtube_etl_project_spark.sources import load_table
 
@@ -409,7 +414,6 @@ def _semantic_v1_oracle() -> str:
         "sits on top is separately oracle-proven by dedup_cluster_cc",
 )
 def dedup_semantic_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
     from youtube_etl_project_spark.plans.similarity_queries import (
         _ivf_v1_dists,
     )

@@ -666,13 +666,10 @@ _SH_COMBO_KEYS, _SH_COMBO_UNION = _simhash_combo_bands(
         "with the 4-band output), while buckets are 2^8-2^12 × sparser, "
         "so candidate volume is ~n·occupancy instead of the n²/2^16 "
         "regime that froze the old geometry (SCALE.md r9 t16/t1=3.7). "
-        "operators/dedup.choose_simhash_blocks picks B from corpus size "
-        "(B=5 covers every fixture scale; a 10^9-doc cluster run gets "
-        "B=8 → 40-bit keys). Bucket equi-join + bit_count(xor) verify on "
+        "Bucket equi-join + bit_count(xor) verify on "
         "candidates only; band keys rebuild from the majority bits in "
         "DuckDB so banding, candidates and the Hamming verify all "
-        "hash-match. The xxhash64 signature family remains in "
-        "operators/dedup.simhash_pairs with brute-force-parity pytest",
+        "hash-match",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

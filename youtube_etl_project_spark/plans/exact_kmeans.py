@@ -16,11 +16,16 @@ carry-forward).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators.checkpointing import pin
-from youtube_etl_project_spark.operators.grid import GRID, snap_np, sq_dists
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    nearest_cells,
+    snap_np,
+    sq_dists,
+)
 
 
 def kmeans_train_exact(
@@ -95,17 +100,6 @@ def kmeans_dists_exact(qe: DataFrame, cb: DataFrame) -> DataFrame:
         qe.join(F.broadcast(cb), "pos")
         .groupBy("id", "cell")
         .agg(F.sum(d * d).cast("long").alias("dist"))
-    )
-
-
-def nearest_cells(dists: DataFrame, keys: "list[str]", n: int) -> DataFrame:
-    """The ``n`` nearest cells per ``keys`` of (..., cell, dist) rows:
-    ``rn`` is the row_number over ``keys`` ordered by (dist, cell), so on
-    an exact-int distance tie the lower cell wins; rows with
-    ``rn <= n`` are kept."""
-    w = Window.partitionBy(*keys).orderBy(F.asc("dist"), F.asc("cell"))
-    return dists.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= n
     )
 
 

@@ -41,6 +41,7 @@ from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.grid import (
     GRID,
     grid_rows,
+    nearest_cells,
     snap_np,
     sq_dists,
 )
@@ -469,7 +470,6 @@ def _graph_from_parts(
     from youtube_etl_project_spark.plans.exact_kmeans import (
         centroid_df,
         kmeans_dists_exact,
-        nearest_cells,
     )
 
     cb = centroid_df(spark, books)
@@ -831,8 +831,8 @@ def auto_search_geometry(n: int) -> "tuple[int, int]":
     distance concentration, both ~log n — the measured 50-query sweep at
     sf0.1 (RECALL.md): fixed (T=3, B=8) recalls 0.57 on the α graph,
     (T=6, B=22) from this rule recalls 0.93. Integer rule, mirrored
-    verbatim in the oracle's geo CTE (the auto_ivf_geometry /
-    choose_simhash_blocks precedent): L = ceil(log2(n)),
+    verbatim in the oracle's geo CTE, as auto_ivf_geometry is:
+    L = ceil(log2(n)),
     T = max(3, (L+1)//2), B = max(8, 2·L)."""
     lg = max(1, (int(n) - 1).bit_length())
     return max(3, (lg + 1) // 2), max(8, 2 * lg)
@@ -1116,11 +1116,7 @@ def _nsw_health_oracle() -> str:
         "of ivf_cell_stats' retrain signal. Because the graph build is "
         "exact-grid deterministic, the monitor itself sits under the "
         "value hash (oracle = build CTEs + degree aggregation over "
-        "kassign LEFT JOIN edge degrees). The companion fragmentation "
-        "monitor + compaction pass (nsw_file_stats / nsw_compact — "
-        "file-level, not row-level) are pinned by pytest instead: "
-        "compaction rewrites only fragmented cells' partitions and "
-        "preserves every nsw_query trace bit-for-bit",
+        "kassign LEFT JOIN edge degrees)",
 )
 def nsw_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     from youtube_etl_project_spark.operators import ann_index
@@ -1309,11 +1305,8 @@ def _online_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
         "merged-degree re-cap where untouched nodes are provable "
         "no-ops, the final search over batch-1 kassign ∪ batch-2 "
         "argmin membership) — cross-engine equality proves the "
-        "streamed index equals the hand-computed evolution, the exact "
-        "claim tests/test_ann_index.py pins for the foreachBatch "
-        "streaming twin (streaming_nsw_ingest runs this identical "
-        "bootstrap+insert code path per micro-batch). Index memoized "
-        "per fixture (build-once/probe-many)",
+        "evolved index equals the hand-computed evolution. Index "
+        "memoized per fixture (build-once/probe-many)",
 )
 def embed_nsw_online_ingest_ann(
     spark: SparkSession, sf_dir: str

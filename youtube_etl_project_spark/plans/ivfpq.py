@@ -37,8 +37,11 @@ from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.quantization import (
     pq_train_exact_rows,
 )
-from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    nearest_cells,
+)
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 from youtube_etl_project_spark.sources.catalog import row_count

@@ -1,8 +1,7 @@
-"""Z-order layout queries: the Morton-key computation that drives
-``operators/layout.write_zordered`` — registered so the bit-interleave
-arithmetic itself is oracle-checked (the layout *effect* — per-file
-bounding boxes shrinking in both dimensions — is measured by
-tests/test_layout.py, since file placement is not SQL-expressible)."""
+"""Z-order layout queries: the Morton-key computation of
+``operators/layout.morton_key`` — registered so the bit-interleave
+arithmetic itself is oracle-checked — and the pruning effect of a
+Morton-key range layout, graded on per-bucket min/max."""
 
 from __future__ import annotations
 
@@ -26,7 +25,7 @@ _BITS = 10
         FROM events
     """,
     doc="Morton (Z-order) key over (user_id, floor(value)) — the "
-        "clustering key write_zordered range-partitions on so parquet/"
+        "clustering key a Z-ordered write range-partitions on so parquet/"
         "manifest min-max stats prune 2-d box predicates (the lakehouse "
         "OPTIMIZE ZORDER layout, re-expressed as pure bit arithmetic in "
         "whole-stage codegen; identical shift/mask term order on both "
@@ -109,10 +108,9 @@ _BOX_B = (300, 399)
         "iff its per-file (min,max) rectangle intersects the box. "
         "Columns: files, files read, rows scanned, rows actually "
         "matching (identical across layouts — layout never changes the "
-        "answer, only the I/O). This quantifies what write_zordered "
-        "buys BEFORE a 100 TB rewrite, on pure integer arithmetic both "
-        "engines replay exactly; tests/test_layout.py measures the same "
-        "effect on physical parquet files",
+        "answer, only the I/O). This quantifies what a Z-ordered "
+        "rewrite buys BEFORE a 100 TB rewrite, on pure integer "
+        "arithmetic both engines replay exactly",
 )
 def zorder_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

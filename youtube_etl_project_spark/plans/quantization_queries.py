@@ -22,8 +22,11 @@ from pyspark.sql import functions as F
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators import quantization as pq
 from youtube_etl_project_spark.operators.checkpointing import pin
-from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    nearest_cells,
+)
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 

@@ -6,8 +6,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache, similarity
-from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-from youtube_etl_project_spark.plans.exact_kmeans import nearest_cells
+from youtube_etl_project_spark.operators.grid import (
+    GRID,
+    grid_rows,
+    nearest_cells,
+)
 from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 from youtube_etl_project_spark.sources.catalog import row_count

@@ -5,9 +5,9 @@ twin — batch/stream parity proven by the same machinery that checks
 every batch operator, not just by pytest.
 
 The memory sink holds only the aggregated frame (hours × event types —
-model-sized); at production scale the same plan writes to a parquet/
-Delta sink (streaming/pipeline.run_events_stream_availablenow) and the
-memory sink remains the test harness.
+model-sized); at production scale the same plan would write to a
+parquet or Delta sink with the same trigger, and the memory sink
+remains the test harness.
 """
 
 from __future__ import annotations

@@ -93,9 +93,7 @@ def fixture_path(name: str) -> str:
     """Absolute path of a golden-fixture parquet under ``tests/fixtures/``,
     derived from this package's location at import time — fixture paths
     are interpolated into oracle SQL strings, so a hard-coded absolute
-    path would break every checkout that is not /root/repo (round-5
-    advice), unlike the ``functions/*.json`` artifacts which were already
-    resolved package-relative."""
+    path would break every other checkout."""
     import os
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -2,32 +2,14 @@
 src/youtube_collector.py:198-239).
 
 The reference writes one JSON array per blob under ``raw/Y/M/D/``.
-Spark-first: ``partitionBy(year, month, day)`` JSON writes (line-delimited
-— the scalable layout; the array-file reader in staging.py exists for
-reference-shaped inputs).
+Spark-first: executors write line-delimited JSON part files under the
+same date path (the scalable layout; the array-file reader in
+staging.py exists for reference-shaped inputs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_date_partitioned(
-    df: DataFrame, root: str, ts_col: str = "collected_at"
-) -> None:
-    """Overwrite ``root`` with line-delimited JSON partitioned by
-    year/month/day derived from ``ts_col`` — Hive-style so readers get
-    partition pruning for free (replaces the reference's manual date-path
-    interpolation, SL:21-22)."""
-    (
-        df.withColumn("year", F.year(ts_col))
-        .withColumn("month", F.month(ts_col))
-        .withColumn("day", F.dayofmonth(ts_col))
-        .write.mode("overwrite")
-        .partitionBy("year", "month", "day")
-        .json(root)
-    )
 
 
 def write_day_entity(df: DataFrame, raw_root: str, day, entity: str) -> str:

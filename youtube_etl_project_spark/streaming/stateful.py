@@ -2,11 +2,12 @@
 (SURVEY §2b: the escape hatch for operators Spark's built-in streaming
 aggregates can't express).
 
-``running_user_totals`` keeps a per-user (count, sum) accumulator across
-micro-batches — the canonical shape for custom sessionization, CDC folding,
-or online feature accumulation. State is per-key and partitioned, so it
-scales horizontally; the GroupState timeout reaps idle keys to bound state
-at 100 TB event volumes.
+``running_user_totals_grid`` keeps a per-user (count, sum) accumulator
+across micro-batches — the canonical shape for custom sessionization,
+CDC folding, or online feature accumulation. State is per-key and
+partitioned, so it scales horizontally. The registered
+``streaming_stateful_totals_parity`` query drains it and hash-matches
+the batch SQL twin.
 """
 
 from __future__ import annotations
@@ -16,108 +17,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
-STATE_SCHEMA = "n long, total double"
-
-
-def _update_user(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming DF in → per-user running totals out (one row per user per
-    micro-batch that touched the user). Arrow-batched; state lives in the
-    state store keyed by user_id."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state v2)
-# ---------------------------------------------------------------------------
-
-def running_user_totals_v2(events: DataFrame) -> DataFrame:
-    """Same running-totals semantics on the Spark 4 ``StatefulProcessor``
-    API (state v2): typed ValueState handles instead of a single opaque
-    tuple, lifecycle hooks, and per-state TTL support — the forward path
-    for custom stateful operators (applyInPandasWithState stays for
-    compatibility). One row per touched user per micro-batch, like v1.
-
-    Requires ``google.protobuf`` in the streaming Python worker (the
-    state-v2 wire protocol); tests/test_stateful_v2.py skips where it is
-    absent and the v1 operator covers the same semantics."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            # StatefulProcessor's mandatory teardown hook; no resources held
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Integer-grid twin (cross-engine-exact accumulation)
-# ---------------------------------------------------------------------------
 
 GRID_OUTPUT_SCHEMA = "user_id long, n_events long, total_cents long"
 GRID_STATE_SCHEMA = "n long, total long"
@@ -140,15 +39,13 @@ def _update_user_grid(
 
 
 def running_user_totals_grid(events: DataFrame) -> DataFrame:
-    """Integer-grid twin of :func:`running_user_totals`: the stream
-    carries ``value_cents`` (the repo's standard ``FLOOR(v·100 + 0.5)``
-    snap, computed JVM-side before the stateful op), and the state
-    accumulates exact bigints — so the final per-user state is
-    order-independent and reproducible in ANSI SQL, unlike float
-    accumulation whose pandas pairwise-summation order no oracle can
-    replay. This is the variant the value-hash parity query drains
-    (``streaming_stateful_totals_parity``); the float flagship above
-    keeps the production-typical schema."""
+    """Streaming DF in → per-user running totals out (one row per user
+    per micro-batch that touched the user). The stream carries
+    ``value_cents`` (the repo's standard ``FLOOR(v·100 + 0.5)`` snap,
+    computed JVM-side before the stateful op), and the state accumulates
+    exact bigints — so the final per-user state is order-independent and
+    reproducible in ANSI SQL, unlike float accumulation whose pandas
+    pairwise-summation order no oracle can replay."""
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(

@@ -5,7 +5,8 @@ its daily aggregates from scratch every run —
 is the upgrade path).
 
     1. day 0   — materialize the per-customer revenue view into a
-                 ParquetTable (commit-log + pointer swap + time travel)
+                 ParquetTable (numbered versions + pointer swap + time
+                 travel)
     2. day 1   — an INSERT-only batch lands: additive merge
                  (operators/mv.additive_merge) folds the delta's
                  aggregate into the view; the base is never rescanned

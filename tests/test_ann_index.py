@@ -2,6 +2,9 @@
 are O(batch) under the frozen quantizer, and probing is real partition
 pruning (only the probed cells' files are read)."""
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import similarity
@@ -178,6 +181,18 @@ def _nsw_index_from(spark, df, idx):
     ann_index.nsw_build(edges, assign, qe, cb, idx)
 
 
+@pytest.fixture(scope="module")
+def nsw_base(spark, sf_dir, tmp_path_factory):
+    """The NSW index over the even vec_ids, built once for the module.
+    The build is deterministic, so a test that needs this index copies
+    it (``shutil.copytree``) and writes only to its copy."""
+    idx = str(tmp_path_factory.mktemp("nsw_base") / "nsw")
+    _nsw_index_from(
+        spark, _emb(spark, sf_dir).filter(F.col("vec_id") % 2 == 0), idx
+    )
+    return idx
+
+
 def _nsw_state(spark, idx):
     e = {
         tuple(r)
@@ -194,7 +209,7 @@ def _nsw_state(spark, idx):
     return e, c
 
 
-def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
+def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path, nsw_base):
     """An insert attaches each new vector as the beam search of the
     pre-insert graph says: (1) its out-edges equal its top-8 search
     result on a frozen copy of the pre-insert index; (2) every touched
@@ -206,16 +221,13 @@ def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
     writes — must converge to the exact single-run state (duplicated
     (id,pos) component rows would silently DOUBLE nsw_query's
     sum-over-pos distances)."""
-    import shutil
-
     from youtube_etl_project_spark.operators import ann_index
     from youtube_etl_project_spark.operators.grid import GRID, grid_rows
 
     emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
     idx = str(tmp_path / "nsw")
-    _nsw_index_from(spark, base, idx)
+    shutil.copytree(nsw_base, idx)
     pre = str(tmp_path / "pre")
     shutil.copytree(idx, pre)
 
@@ -268,12 +280,12 @@ def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
         & (F.col("vec_id") >= 40) & (F.col("vec_id") < 60)
     )
     idx2 = str(tmp_path / "nsw2")
-    _nsw_index_from(spark, base, idx2)
+    shutil.copytree(nsw_base, idx2)
     ann_index.nsw_insert(batch2, idx2)
     want2 = _nsw_state(spark, idx2)
 
     idx3 = str(tmp_path / "nsw3")
-    _nsw_index_from(spark, base, idx3)
+    shutil.copytree(nsw_base, idx3)
     # crash-landed components only (what step 2 of the insert writes)
     qe_b = grid_rows(
         batch2, "vec_id", "embedding", GRID, id_out="id", pos="pos"
@@ -301,19 +313,16 @@ def test_nsw_insert_replay_is_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_nsw_insert_empty_cell_attaches_via_second_cell(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, nsw_base
 ):
     """VERDICT r10 #7: a new vector whose nearest coarse cell has no
     indexed members must attach through its second-nearest cell (the
     build's 2-nearest-cells rule) instead of being inserted edgeless."""
-    import shutil
-
     from youtube_etl_project_spark.operators import ann_index
 
     emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") % 2 == 0)
     idx = str(tmp_path / "nsw")
-    _nsw_index_from(spark, base, idx)
+    shutil.copytree(nsw_base, idx)
 
     # drain one cell: pick the cell of the first held-out vector, remove
     # its partitions so that vector's nearest cell is guaranteed empty
@@ -368,7 +377,7 @@ def test_nsw_insert_empty_cell_attaches_via_second_cell(
 
 
 def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, nsw_base
 ):
     """nsw_insert WIDENS the cached cell adjacency with its known
     (cell, dst_cell) additions instead of dropping it (no full edges
@@ -380,10 +389,9 @@ def test_adjacency_cache_widens_on_insert_and_stamps_foreign_writes(
     from youtube_etl_project_spark.operators import ann_index, fixture_cache
 
     emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
     idx = str(tmp_path / "nsw_adj")
-    _nsw_index_from(spark, base, idx)
+    shutil.copytree(nsw_base, idx)
     edges = os.path.join(idx, "edges")
     rebuilds = []
 
@@ -583,7 +591,7 @@ def test_warm_probe_job_budget(spark, sf_dir):
         assert not inference, (name, warm[name])
 
 
-def test_nsw_insert_job_budget(spark, sf_dir, tmp_path):
+def test_nsw_insert_job_budget(spark, sf_dir, tmp_path, nsw_base):
     """Timing-free guard for the online NSW attach: the new vectors'
     coarse cells are ranked on the driver against the cached codebook,
     and the batch is collected once and reused as a local relation, so
@@ -596,9 +604,8 @@ def test_nsw_insert_job_budget(spark, sf_dir, tmp_path):
     from youtube_etl_project_spark.operators import ann_index
 
     emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") % 2 == 0)
     idx = str(tmp_path / "nsw_jobs")
-    _nsw_index_from(spark, base, idx)
+    shutil.copytree(nsw_base, idx)
     sc = spark.sparkContext
 
     def insert_jobs(lo: int) -> int:

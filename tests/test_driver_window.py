@@ -9,46 +9,9 @@ flagships the window exists to showcase.
 
 from youtube_etl_project_spark.registry import DRIVER_WINDOW, load_all_plans
 
-# round 4: q5/q18 ceded their slots to scd2_point_in_time (temporal-join
-# family) and dedup_minhash_lsh_md5 (the oracle-checked LSH twin) — those
-# TPC-H shapes stay covered by the local full gate + plan audit.
-# round 5 (VERDICT r4 #4): filter_like / sort_mixed / param_fanout /
-# distinct_projection ceded their slots to the round-4 capstones.
-# round 5 (VERDICT r4 #3): embed_lsh_ann / embed_ivf_ann ceded their
-# rows-only slots to the value-hash-checked twins (md5-plane LSH, frozen
-# v1 IVF); filter_notnull ceded to streaming_outer_join_parity.
-# late round 5: filter_kind / fn_keyword_hits / fn_safe_long / fn_dates /
-# explode_tokens ceded to the round-5 capstones (ANN recall report,
-# blocking frontier, record linkage, entity resolution, prefix join);
-# closing wave: group_count_region / fn_engagement_rate ceded to the
-# exact distributed KS test and the TVD drift report.
-# round 6: join_semi / fn_text_blob / dedup_jaccard_dfcut ceded to the
-# scoped MV refresh, the SymSpell fuzzy matcher, and perceptual near-dup.
-# round 7: the rows-only dedup_minhash_lsh row, the exact baselines
-# (dedup_ngram_jaccard / embed_cosine_topk), dedup_cluster_lsh,
-# events_markov_pagerank, scd2_point_in_time, tpch_q3, bloom_semi_join,
-# streaming_dedup_parity, dedup_incremental_indexed and
-# dedup_ensemble_matrix ceded to the round-7 capstones: the custom
-# DataSource (batch + stream) under the gate, the exact-grid-TRAINED
-# model family (PQ re-rank, topic clusters, SemDeDup, md5 SimHash
-# pairs), and the VERDICT-named rotations (k-core, k-anonymity,
-# conformal interval, as-of history). Every family keeps a window row.
-# round 8: json_extract_typed / group_pct_of_total / topk_per_group /
-# cdc_apply_latest / blocking_efficiency_report ceded to the round-8
-# capstones — the four exact-grid-trained promotions (ridge global +
-# per-source, Newton-Schulz Mahalanobis, integer subspace PCA) and
-# collect_sorted_list (driver-side proof of the no-array-output rule);
-# the CDC family keeps merge_upsert_dim + scd2_upsert_customers, the
-# eval family keeps ann_recall_report + embed_drift_report + events_ab_ks.
-# round 10: fn_classify_sentiment / collect_sorted_list /
-# embed_ivf_ann_v1 / embed_drift_report ceded their slots to the four
-# round-10 graph-ANN capstones (NND seated per VERDICT r9 #7, NND
-# iterated to convergence, the persisted NSW serving index, and the
-# wide-pool α-pruned graph) — F3 stays sampled via flagship composition,
-# the no-array rule stays audit-enforced, the IVF serving family keeps
-# embed_ivfpq_index_ann, and the eval family keeps ann_recall_report +
-# events_ab_ks; every ceded shape stays green in the committed
-# both-scale full-gate logs.
+# The window rows each family must keep: the reason each one is seated
+# sits beside it in ``registry.DRIVER_WINDOW``, and the queries that ceded
+# seats are in PARITY.md's driver-window rotation ledger.
 FLAGSHIPS = {
     "dedup_minhash_lsh_md5", "dedup_cluster_cc",
     "embed_lsh_ann_md5",
@@ -62,38 +25,25 @@ FLAGSHIPS = {
     "streaming_stateful_totals_parity",
     "mv_scoped_refresh",
     "multimodal_ahash_near_dup",
-    # round-7 capstones (round 11: api_stream_parity /
-    # k_anonymity_report / ridge_conformal_v1 ceded to the round-11
-    # capstones — the S family keeps api_scan_parity, audit/eval keeps
-    # events_ab_ks + ann_recall_report, ridge keeps embed_ridge_r2 +
-    # source_quality_scorer_r2; dedup_exact_substring ceded to the
-    # suffix-rank rows that reproduce its exact span grouping)
+    # the custom DataSource and the exact-grid-trained model family
     "api_scan_parity",
     "text_topic_clusters", "dedup_semantic", "dedup_simhash_pairs",
     "graph_kcore_docs",
     "user_recent_history",
-    # round-8 capstones
+    # exact-grid-trained ridge, Mahalanobis and PCA
     "embed_ridge_r2", "source_quality_scorer_r2",
     "embed_mahalanobis_outliers", "embed_pca_project",
-    # round-8 continuation: IVF-PQ composed ANN (join_fact_dim ceded —
-    # J1 keeps its driver row via flagship_daily_agg, the same broadcast
-    # fact⋈dim shape plus the aggregate)
+    # IVF-PQ ANN with both training loops
     "embed_ivfpq_ann",
-    # round-9 capstones: the persisted IVF-PQ serving index, the ANN->MMR
-    # production retrieval composition, and the fixed greedy k-center
-    # (proj_defensive / filter_date_incremental / events_tumbling_window
-    # ceded — all long-green trivial-family shapes covered by the local
-    # full gate; sessionization keeps events_session_window)
+    # the persisted IVF-PQ index, ANN->MMR retrieval, greedy k-center
     "embed_ivfpq_index_ann", "embed_ann_mmr_diversify",
     "embed_kcenter_select",
-    # round-9 stretch: NSW graph ANN (agg_refresh_daily ceded — A7 keeps
-    # mv_scoped_refresh, the harder incremental form)
+    # NSW graph ANN
     "embed_nsw_ann",
-    # round-10 capstones: the completed graph-ANN story
+    # NN-descent, the persisted NSW index and the α-pruned graph
     "embed_nsw_nnd_ann", "embed_nsw_nnd2_ann",
     "embed_nsw_index_ann", "embed_nsw_alpha_ann",
-    # round-11 capstones: suffix-rank dedup (both forms + long-span) and
-    # the persisted-NSW lifecycle monitor
+    # suffix-rank dedup, the NSW health monitor, search geometry, ingest
     "dedup_suffix_spans", "dedup_dup_segments",
     "dedup_suffix_spans_64", "nsw_index_health",
     "embed_nsw_alpha_auto_ann",

@@ -178,29 +178,53 @@ def test_run_day_distributed_sink_end_to_end(spark, tmp_path):
     assert not arrays, "reference-shaped array fixtures are test-only now"
 
 
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_warehouse_has_empty_declared_tables(spark, tmp_path):
+    """Opening a fresh warehouse launches no Spark job and exposes the
+    dim, fact and aggregate tables empty, with their declared columns."""
+    from youtube_etl_project_spark import schemas
+
+    root = str(tmp_path / "wh")
+    opened = []
+    assert _jobs_of(spark, lambda: opened.append(Warehouse(spark, root))) == 0
+    wh = opened[0]
+    declared = {
+        wh.dim_channels: schemas.DIM_CHANNELS_SCHEMA,
+        wh.fact_videos: schemas.FACT_VIDEOS_SCHEMA,
+        wh.agg_daily: schemas.AGG_DAILY_SCHEMA,
+    }
+    for table, schema in declared.items():
+        df = table.read()
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        assert table.count() == 0 and df.count() == 0
+    assert not wh.stg_videos.exists()
+
+
 def test_run_day_warm_job_budget(spark, tmp_path):
     """Timing-free plan-shape guard: a warm ``run_day`` launches at most 14
     Spark jobs — no schema-inference job per table read, no count job
     after a write, no pass over the aggregate to find the partitions it
     replaces — and opening a warehouse table launches none. Jobs are
     counted per job group."""
-    import uuid
     from datetime import timedelta
 
     from youtube_etl_project_spark.pipeline import run_day
     from youtube_etl_project_spark.testkit import make_channel, make_video
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_of(fn):
-        group = f"budget-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        return len(tracker.getJobIdsForGroup(group))
 
     raw_root, wh_root = str(tmp_path / "raw"), str(tmp_path / "wh")
 
@@ -217,11 +241,11 @@ def test_run_day_warm_job_budget(spark, tmp_path):
         )
         return lambda: run_day(spark, videos, channels, raw_root, wh_root, d)
 
-    jobs_of(day(0))
-    warm = jobs_of(day(1))
+    _jobs_of(spark, day(0))
+    warm = _jobs_of(spark, day(1))
     assert warm <= 14, f"warm run_day launched {warm} Spark jobs"
 
     wh = Warehouse(spark, wh_root)
     tables = (wh.stg_videos, wh.dim_channels, wh.fact_videos, wh.agg_daily)
-    assert jobs_of(lambda: [t.read() for t in tables]) == 0
+    assert _jobs_of(spark, lambda: [t.read() for t in tables]) == 0
     assert wh.fact_videos.count() == 8 and wh.agg_daily.count() == 4

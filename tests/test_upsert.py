@@ -40,8 +40,8 @@ def test_insert_only_merge_keeps_target(spark):
 def test_parquet_table_atomic_swap_and_truncate(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     assert not t.exists()
-    assert t.write(spark.range(5).withColumn("x", F.lit("a"))) == 5
-    assert t.read().count() == 5
+    t.write(spark.range(5).withColumn("x", F.lit("a")))
+    assert t.read().count() == 5 and t.count() == 5
     v1 = t.current_path()
     t.write(spark.range(3).withColumn("x", F.lit("b")))
     assert t.read().count() == 3
@@ -57,16 +57,6 @@ def test_parquet_table_atomic_swap_and_truncate(spark, tmp_path):
     for table in (wh.dim_channels, wh.fact_videos, wh.agg_daily):
         assert table.count() > 0
         assert table.read().schema == spark.read.parquet(table.current_path()).schema
-
-    # a version without a commit record (written before records existed)
-    # falls back to inference; the next write records again
-    t.write(spark.range(2).withColumn("x", F.lit("c")))
-    os.remove(os.path.join(t.current_path(), "_COMMIT.json"))
-    assert t.read().columns == ["id", "x"]
-    assert t.count() == 2  # scanned
-    _truncate_within(t)
-    assert os.path.exists(os.path.join(t.current_path(), "_COMMIT.json"))
-    assert t.count() == 0 and t.read().columns == ["id", "x"]
 
 
 def _truncate_within(t: ParquetTable, timeout: float = 60.0) -> None:
@@ -120,7 +110,8 @@ def test_overwrite_partitions_keeps_null_partition_and_rejects_foreign_rows(
     t = ParquetTable(spark, str(tmp_path / "agg"))
     t.write(spark.createDataFrame([(None, 1), ("a", 2), ("b", 3)], schema))
     fresh = spark.createDataFrame([("a", 20), ("b", 30)], schema)
-    assert overwrite_partitions(t, fresh, "d", ["a", "b"]) == 3
+    overwrite_partitions(t, fresh, "d", ["a", "b"])
+    assert t.count() == 3
     assert set(map(tuple, t.read().collect())) == {(None, 1), ("a", 20), ("b", 30)}
     committed = t.current_path()
     # a row outside the named partitions fails the write, nothing commits
@@ -182,6 +173,59 @@ def test_crash_between_write_and_swap(spark, tmp_path, monkeypatch):
     assert [(r.k, r.v) for r in t.read().collect()] == [(2, "new")]
 
 
+def test_crash_between_rename_and_swap(spark, tmp_path, monkeypatch):
+    """Kill the writer after its staged version is renamed to the next
+    number but before the pointer swap: the dir above the pointer is never
+    served as history, and the next write replaces it."""
+    from youtube_etl_project_spark.operators import upsert as upsert_mod
+
+    t = ParquetTable(spark, str(tmp_path / "rn"), keep_versions=2)
+    t.write(spark.range(1).toDF("id"))
+    t.write(spark.range(2).toDF("id"))
+    committed = ["v_000000000001", "v_000000000000"]
+    assert t.history() == committed
+
+    real_replace = os.replace
+
+    def crash_on_commit(src, dst, *a, **kw):
+        if dst.endswith("_CURRENT"):
+            raise OSError("simulated crash before pointer swap")
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(upsert_mod.os, "replace", crash_on_commit)
+    with pytest.raises(OSError, match="simulated crash"):
+        t.write(spark.range(5).toDF("id"))
+    monkeypatch.undo()
+
+    assert os.path.isdir(os.path.join(t.root, "v_000000000002"))  # orphan
+    assert t.history() == committed
+    assert t.count() == 2 and t.read().count() == 2
+    assert t.read_version(1).count() == 1
+    with pytest.raises(ValueError):
+        t.read_version(2)
+
+    # the next write takes the orphan's number and replaces its data
+    t.write(spark.range(3).toDF("id"))
+    assert t.history() == ["v_000000000002", "v_000000000001"]
+    assert t.read().count() == 3 and t.read_version(1).count() == 2
+    assert not [n for n in os.listdir(t.root) if n.startswith("_tmp_")]
+
+
+def test_old_layout_pointer_fails_loudly(spark, tmp_path):
+    """A pointer naming a version of the old uuid layout is refused, never
+    read as a numbered version."""
+    t = ParquetTable(spark, str(tmp_path / "old"))
+    t.write(spark.range(1).toDF("id"))
+    os.rename(t.current_path(), os.path.join(t.root, "v_3fa9c0de12ab"))
+    with open(os.path.join(t.root, "_CURRENT"), "w") as f:
+        f.write("v_3fa9c0de12ab")
+    with pytest.raises(ValueError, match="older layout"):
+        t.write(spark.range(2).toDF("id"))
+    with pytest.raises(ValueError, match="older layout"):
+        t.history()
+    assert os.listdir(t.root).count("v_3fa9c0de12ab") == 1
+
+
 def test_time_travel_reads_previous_versions(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "tt"), keep_versions=3)
     for i in range(4):
@@ -223,89 +267,6 @@ def test_vacuum_respects_retention(spark, tmp_path):
     assert t.read_version(1).count() == 1
 
 
-def test_history_recovers_pre_log_table(spark, tmp_path):
-    """A table committed by pre-_LOG code (pointer exists, no log file):
-    history()/read_version(0) must serve the pointer's version, and the
-    next write must prune it under the retention policy (ADVICE r2)."""
-    import os
-
-    t = ParquetTable(spark, str(tmp_path / "legacy"))
-    t.write(spark.range(5).toDF("id"))
-    os.remove(t._log)  # simulate a pre-_LOG commit
-
-    assert t.history() == [os.path.basename(t.current_path())]
-    assert t.read_version(0).count() == 5
-    old_dir = t.current_path()
-    t.write(spark.range(3).toDF("id"))  # retention must reclaim old dir
-    assert not os.path.exists(old_dir)
-    assert t.read().count() == 3
-
-
-def test_history_recovers_crash_between_swap_and_log(spark, tmp_path):
-    """Crash window of the swap-then-log protocol: pointer moved, log
-    append lost. The pointer is the newest commit; logged predecessors
-    stay as history."""
-    import os
-
-    t = ParquetTable(spark, str(tmp_path / "cw"), keep_versions=3)
-    t.write(spark.range(1).toDF("id"))
-    t.write(spark.range(2).toDF("id"))
-    # strip the newest entry from the log = crashed before the append
-    with open(t._log) as f:
-        entries = [ln for ln in f.read().splitlines() if ln]
-    cur_name = os.path.basename(t.current_path())
-    assert entries[-1] == cur_name
-    with open(t._log, "w") as f:
-        f.write("\n".join(entries[:-1]) + "\n")
-
-    hist = t.history()
-    assert hist[0] == cur_name and len(hist) == 2
-    assert t.read_version(0).count() == 2
-    assert t.read_version(1).count() == 1
-
-
-def test_history_trims_legacy_orphan_tail(spark, tmp_path):
-    """Log entries after the pointer's entry (a pre-swap-then-log writer
-    crashed between its log append and its pointer swap) are uncommitted
-    orphans and must not be served as history."""
-    t = ParquetTable(spark, str(tmp_path / "ot"), keep_versions=3)
-    t.write(spark.range(1).toDF("id"))
-    with open(t._log, "a") as f:
-        f.write("v_deadbeef0000\n")  # orphan tail entry, no dir, no pointer
-    import os
-
-    assert t.history() == [os.path.basename(t.current_path())]
-    assert t.read_version(0).count() == 1
-
-
-def test_delete_where(spark, tmp_path):
-    """DELETE semantics: TRUE rows go, FALSE and NULL rows stay, the
-    delete is a real commit (history grows, time travel sees pre-state),
-    and a no-match delete commits nothing."""
-    from pyspark.sql import functions as F
-
-    t = ParquetTable(spark, str(tmp_path / "dw"), keep_versions=3)
-    df = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 30)], "id long, v long"
-    )
-    t.write(df)
-
-    # NULL predicate rows survive
-    assert t.delete_where(F.col("v") > 15) == 1
-    assert sorted(r["id"] for r in t.read().collect()) == [1, 2]
-
-    # string conditions work; time travel still sees the pre-delete rows
-    assert t.delete_where("id = 1") == 1
-    assert t.read_version(2).count() == 3
-    assert t.read_version(1).count() == 2
-    assert [r["id"] for r in t.read().collect()] == [2]
-
-    # no matching rows -> zero removed, no new version committed
-    depth = len(t.history())
-    assert t.delete_where("id = 99") == 0
-    assert len(t.history()) == depth
-
-
 def test_concurrent_writer_loses_cleanly(spark, tmp_path):
     """Two interleaved writers: exactly one commits, the loser raises
     ConcurrentWriteError, its version directory is discarded, and the
@@ -319,12 +280,11 @@ def test_concurrent_writer_loses_cleanly(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "race"), keep_versions=3)
     t.write(spark.createDataFrame([(1, "base")], "id long, v string"))
 
-    # writer A starts: snapshots its CAS base and writes its data dir
+    # writer A starts: snapshots its CAS base and stages its data dir
     base_a = t._pointer_version()
-    prior_a = t.history()
-    v_a = "v_writer_a_dir"
+    staged_a = t._staging()
     spark.createDataFrame([(2, "a")], "id long, v string").write.parquet(
-        os.path.join(t.root, v_a)
+        staged_a
     )
 
     # writer B commits in between (a full, normal write)
@@ -333,28 +293,12 @@ def test_concurrent_writer_loses_cleanly(spark, tmp_path):
 
     # writer A's commit must detect the moved pointer and fail cleanly
     with pytest.raises(ConcurrentWriteError, match="advanced"):
-        t._commit(v_a, base_a, prior_a)
+        t._commit(staged_a, base_a)
 
     assert t._pointer_version() == winner  # pointer untouched by loser
     assert [r["v"] for r in t.read().collect()] == ["b"]
-    assert not os.path.exists(os.path.join(t.root, v_a))  # orphan gone
+    assert not os.path.exists(staged_a)  # orphan gone
     assert not os.path.exists(t._lock)  # lock released
-
-
-def test_concurrent_writer_force_overwrites(spark, tmp_path):
-    """force=True opts a blind overwrite out of the CAS (it genuinely
-    doesn't care what it replaces)."""
-    t = ParquetTable(spark, str(tmp_path / "force"))
-    t.write(spark.createDataFrame([(1, "x")], "id long, v string"))
-    base_a = t._pointer_version()
-    prior_a = t.history()
-    v_a = "v_forced_dir"
-    spark.createDataFrame([(2, "forced")], "id long, v string").write.parquet(
-        os.path.join(t.root, v_a)
-    )
-    t.write(spark.createDataFrame([(3, "mid")], "id long, v string"))
-    t._commit(v_a, base_a, prior_a, force=True)
-    assert [r["v"] for r in t.read().collect()] == ["forced"]
 
 
 def test_commit_lock_contention_and_staleness(spark, tmp_path):
@@ -477,10 +421,9 @@ def test_paused_writer_aborts_after_lock_stolen(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "paused"))
     t.write(spark.createDataFrame([(1, "base")], "id long, v string"))
     base = t._pointer_version()
-    prior = t.history()
-    v_a = "v_paused_dir"
+    staged = t._staging()
     spark.createDataFrame([(2, "late")], "id long, v string").write.parquet(
-        os.path.join(t.root, v_a)
+        staged
     )
 
     real_pv = ParquetTable._pointer_version
@@ -494,29 +437,8 @@ def test_paused_writer_aborts_after_lock_stolen(spark, tmp_path):
 
     t._pointer_version = steal_mid_commit.__get__(t)
     with pytest.raises(ConcurrentWriteError, match="stolen"):
-        t._commit(v_a, base, prior)
+        t._commit(staged, base)
     t._pointer_version = real_pv.__get__(t)
 
     assert t._pointer_version() == base  # pointer untouched
-    assert not os.path.exists(os.path.join(t.root, v_a))  # version discarded
-
-
-def test_force_overwrite_prunes_interleaved_competitor(spark, tmp_path):
-    """force=True with an interleaved competitor commit must include the
-    superseded competitor version in the retention sweep (round-5 advice:
-    the stale pre-write history snapshot leaked its data dir forever)."""
-    t = ParquetTable(spark, str(tmp_path / "forceleak"))  # keep_versions=1
-    t.write(spark.createDataFrame([(1, "x")], "id long, v string"))
-    base = t._pointer_version()
-    prior = t.history()
-    v_a = "v_forced_dir"
-    spark.createDataFrame([(2, "forced")], "id long, v string").write.parquet(
-        os.path.join(t.root, v_a)
-    )
-    t.write(spark.createDataFrame([(3, "mid")], "id long, v string"))
-    mid_dir = t.current_path()
-    t._commit(v_a, base, prior, force=True)
-    assert [r["v"] for r in t.read().collect()] == ["forced"]
-    assert not os.path.exists(mid_dir)  # superseded competitor pruned
-    vdirs = [d for d in os.listdir(t.root) if d.startswith("v_")]
-    assert vdirs == [v_a]
+    assert not os.path.exists(staged)  # version discarded

@@ -25,6 +25,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -107,6 +108,8 @@ def scd_upsert_dim(
 
 # Per-version commit record: written schema + row count (see ParquetTable).
 _COMMIT_RECORD = "_COMMIT.json"
+# Committed version names: zero-padded so they sort in commit order.
+_VERSION = re.compile(r"v_\d{12}")
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -126,38 +129,34 @@ def _nullable(dt: T.DataType) -> T.DataType:
 class ParquetTable:
     """Versioned parquet table with atomic pointer swap.
 
-    Layout: ``<root>/v_<uuid>/`` data directories + ``<root>/_CURRENT`` text
-    pointer + ``<root>/_LOG`` append-only commit log. Writes land in a fresh
-    directory and the pointer flips last, so readers never observe partial
-    data — the parquet stand-in for Delta's ACID commit (SURVEY §4
-    transaction row; reference FA:294-365 semantics).
+    Layout: numbered version directories ``<root>/v_<n>/`` (``n`` padded to
+    12 digits, so names sort in commit order) and a text pointer
+    ``<root>/_CURRENT`` naming the newest one. A version is committed
+    exactly when its name is ≤ the pointer's. A write stages its data in
+    ``<root>/_tmp_<uuid>/``, renames it to the next number and flips the
+    pointer last, so readers never observe partial data — the parquet
+    stand-in for Delta's ACID commit (SURVEY §4 transaction row;
+    reference FA:294-365 semantics).
 
     Each version directory also holds ``_COMMIT.json``: the written schema
     and row count (Spark's file listing skips ``_`` files). ``read()``
     hands that schema to the reader, so opening a table launches no
     schema-inference job, and ``count()`` answers from the record with no
     scan. The row count comes from an ``Observation`` riding the write
-    job itself. A version without the record (committed before it
-    existed) is read with inference; the next write adds one.
+    job itself.
 
-    Concurrent writers are guarded Delta-OCC-style since round 5: the
-    pointer swap is a compare-and-swap inside a lock-file critical
-    section, so when two writers race, exactly one commits and the other
-    gets ``ConcurrentWriteError`` with its version discarded and the
-    table intact (see ``write()``; previously last-wins could silently
-    drop a competitor's commit).
+    Concurrent writers are guarded Delta-OCC-style: the pointer swap is a
+    compare-and-swap inside a lock-file critical section, so when two
+    writers race, exactly one commits and the other gets
+    ``ConcurrentWriteError`` with its version discarded and the table
+    intact (see ``write()``).
 
     ``keep_versions`` adds Delta-style time travel: the newest N committed
     versions survive (``history()``, ``read_version(n_back)``); older ones
-    are pruned on write. The default 1 keeps only the current version —
-    identical disk footprint to the un-versioned behavior. The log is
-    appended AFTER the pointer swap, so every log entry is a real commit;
-    the one crash window (between swap and append) leaves the current
-    version unlisted, which ``history()`` repairs by treating the pointer
-    as the newest commit. Tables written by older append-before-swap code
-    (or with no ``_LOG`` at all) are also handled: entries after the
-    pointer's entry are uncommitted orphans and are trimmed, and a pointer
-    absent from the log is appended as the last known commit.
+    are pruned on write. The default 1 keeps only the current version.
+    A commit that crashes between its rename and its pointer swap leaves
+    a directory numbered above the pointer: never listed, and replaced by
+    the next commit.
     """
 
     def __init__(self, spark: SparkSession, root: str, keep_versions: int = 1):
@@ -169,10 +168,6 @@ class ParquetTable:
     @property
     def _pointer(self) -> str:
         return os.path.join(self.root, "_CURRENT")
-
-    @property
-    def _log(self) -> str:
-        return os.path.join(self.root, "_LOG")
 
     # Commit-lock tuning: how long to wait for a competitor's in-flight
     # pointer swap (the critical section is milliseconds — file writes,
@@ -278,155 +273,126 @@ class ParquetTable:
         if not self.exists():
             return None
         with open(self._pointer) as f:
-            return f.read().strip()
+            version = f.read().strip()
+        if not _VERSION.fullmatch(version):
+            raise ValueError(
+                f"table {self.root} points at {version!r}, not a numbered "
+                "version: it was written in an older layout; rewrite it"
+            )
+        return version
 
     def current_path(self) -> str | None:
         v = self._pointer_version()
         return None if v is None else os.path.join(self.root, v)
 
-    def _commit_record(self, path: str) -> dict | None:
-        try:
-            with open(os.path.join(path, _COMMIT_RECORD)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _read_path(self, path: str) -> DataFrame:
-        rec = self._commit_record(path)
-        reader = self.spark.read
-        if rec is not None:
-            reader = reader.schema(T.StructType.fromJson(rec["schema"]))
-        return reader.parquet(path)
-
-    def read(self) -> DataFrame:
+    def _current(self) -> str:
         path = self.current_path()
         if path is None:
             raise FileNotFoundError(f"table {self.root} has no committed version")
-        return self._read_path(path)
+        return path
+
+    @staticmethod
+    def _commit_record(path: str) -> dict:
+        with open(os.path.join(path, _COMMIT_RECORD)) as f:
+            return json.load(f)
+
+    def _read_path(self, path: str) -> DataFrame:
+        schema = T.StructType.fromJson(self._commit_record(path)["schema"])
+        return self.spark.read.schema(schema).parquet(path)
+
+    def read(self) -> DataFrame:
+        return self._read_path(self._current())
 
     def count(self) -> int:
-        """Rows in the current version: the count its write observed, or a
-        scan for a version committed without a commit record."""
-        path = self.current_path()
-        rec = None if path is None else self._commit_record(path)
-        return rec["rows"] if rec is not None else self.read().count()
+        """Rows in the current version, as its write observed them."""
+        return self._commit_record(self._current())["rows"]
 
-    def write(self, df: DataFrame) -> int:
+    def _staging(self) -> str:
+        return os.path.join(self.root, f"_tmp_{uuid.uuid4().hex}")
+
+    def write(self, df: DataFrame) -> None:
         """Commit ``df`` as the new current version, replacing the table's
-        contents; return its row count, observed on the write job (no
-        second scan).
+        contents. Its row count is observed on the write job (no second
+        scan) and recorded for ``count()``.
 
         Concurrent-writer guard (optimistic concurrency, Delta-OCC
         style): the pointer value is snapshotted HERE, before the data
         write, and the commit succeeds only if the pointer is unchanged
         at swap time — checked and swapped inside the ``_LOCK`` critical
         section, so two interleaved writers can never both swap. The
-        loser's data directory is removed and ``ConcurrentWriteError``
+        loser's staged data is removed and ``ConcurrentWriteError``
         raised (re-read + retry is the caller's move — blind last-wins
         would silently drop the competitor's commit, which for
-        read-modify-write verbs like delete_where means losing its
-        changes entirely).
+        read-modify-write verbs like a merge means losing its changes
+        entirely).
         """
-        # Snapshot pointer + history BEFORE the data write: the CAS base,
-        # and (for retention) a pre-_LOG current version only reachable
-        # through the pointer fallback.
         base = self._pointer_version()
-        prior = self.history()
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.root, version)
+        staged = self._staging()
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "errorifexists"
-        ).parquet(out)
-        rows = int(obs.get["rows"])
+        ).parquet(staged)
         # The schema as a parquet read reports it: every field nullable.
-        record = {"schema": _nullable(df.schema).jsonValue(), "rows": rows}
-        with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
+        record = {"schema": _nullable(df.schema).jsonValue(),
+                  "rows": int(obs.get["rows"])}
+        with open(os.path.join(staged, _COMMIT_RECORD), "w") as f:
             json.dump(record, f)
-        self._commit(version, base, prior)
-        return rows
+        self._commit(staged, base)
 
-    def _commit(
-        self,
-        version: str,
-        base: str | None,
-        prior: list[str],
-        force: bool = False,
-    ) -> None:
-        """Swap the pointer to ``version`` iff it still reads ``base``."""
+    def _commit_empty(self, schema: dict, base: str | None) -> None:
+        """Commit a version holding only a record: ``schema`` and no rows.
+        No Spark job runs; ``read()`` hands the schema to a reader that
+        finds no data files."""
+        staged = self._staging()
+        os.makedirs(staged)
+        with open(os.path.join(staged, _COMMIT_RECORD), "w") as f:
+            json.dump({"schema": schema, "rows": 0}, f)
+        self._commit(staged, base)
+
+    def _commit(self, staged: str, base: str | None) -> None:
+        """Publish the staging dir ``staged`` as the version after ``base``,
+        iff the pointer still reads ``base``."""
         with self._commit_lock():
             now = self._pointer_version()
-            if not force and now != base:
-                shutil.rmtree(
-                    os.path.join(self.root, version), ignore_errors=True
-                )
+            if now != base:
+                shutil.rmtree(staged, ignore_errors=True)
                 raise ConcurrentWriteError(
                     f"table {self.root} advanced {base!r} -> {now!r} "
                     "during this write; this version was discarded"
                 )
-            if force and now != base:
-                # A competitor committed between our pre-write snapshot
-                # and this forced overwrite: re-read history UNDER the
-                # lock so the superseded competitor version joins the
-                # retention sweep below (the stale ``prior`` predates it
-                # and would leak its data directory forever).
-                prior = self.history()
             if not self._lock_is_mine():
                 # We were paused long enough for a waiter to declare this
                 # lock stale and steal it — the critical section is no
                 # longer ours, so committing now could interleave with
                 # the stealer's swap (lost update). Abort cleanly.
-                shutil.rmtree(
-                    os.path.join(self.root, version), ignore_errors=True
-                )
+                shutil.rmtree(staged, ignore_errors=True)
                 raise ConcurrentWriteError(
                     f"commit lock for {self.root} was stolen while this "
                     "writer was stalled; this version was discarded"
                 )
+            n = 0 if base is None else int(base[2:]) + 1
+            out = os.path.join(self.root, f"v_{n:012d}")
+            # A dir already here was left by a commit that crashed before
+            # its pointer swap: uncommitted, so it is replaced.
+            shutil.rmtree(out, ignore_errors=True)
+            os.rename(staged, out)
             tmp = self._pointer + ".tmp"
             with open(tmp, "w") as f:
-                f.write(version)
+                f.write(os.path.basename(out))
             os.replace(tmp, self._pointer)  # atomic commit
-            # Log after the swap: every logged entry is a real commit (a
-            # crash right here leaves the commit unlisted; history()
-            # repairs that from the pointer).
-            with open(self._log, "a") as f:
-                f.write(version + "\n")
         # Retention: drop committed versions beyond the keep window.
-        for stale in ([version] + prior)[self.keep_versions:]:
-            p = os.path.join(self.root, stale)
-            if os.path.exists(p):
-                shutil.rmtree(p, ignore_errors=True)
+        for stale in self.history()[self.keep_versions:]:
+            shutil.rmtree(os.path.join(self.root, stale), ignore_errors=True)
 
     def history(self) -> list[str]:
-        """Committed version names, newest first, pruned versions excluded.
-
-        The log may end with orphans (crash after log append, before
-        pointer swap); everything after the current pointer's entry is
-        uncommitted and excluded.
-        """
-        cur = self.current_path()
+        """Committed version names, newest first, pruned versions excluded."""
+        cur = self._pointer_version()
         if cur is None:
             return []
-        cur_name = os.path.basename(cur)
-        entries: list[str] = []
-        if os.path.exists(self._log):
-            with open(self._log) as f:
-                entries = [ln.strip() for ln in f if ln.strip()]
-        if cur_name in entries:
-            # entries after the pointer's version are uncommitted orphans
-            # (pre-swap-then-log writers crashed mid-commit) — trim
-            entries = entries[: entries.index(cur_name) + 1]
-        else:
-            # pointer committed but unlisted: a pre-_LOG table, or a crash
-            # between the pointer swap and the log append — the pointer is
-            # the newest known commit; logged predecessors stay as history
-            entries = entries + [cur_name]
-        return [
-            v
-            for v in reversed(entries)
-            if os.path.isdir(os.path.join(self.root, v))
-        ]
+        return sorted(
+            (v for v in os.listdir(self.root) if _VERSION.fullmatch(v) and v <= cur),
+            reverse=True,
+        )
 
     def read_version(self, n_back: int = 0) -> DataFrame:
         """Time travel: ``n_back=0`` is the current commit, 1 the previous,
@@ -439,85 +405,51 @@ class ParquetTable:
             )
         return self._read_path(os.path.join(self.root, hist[n_back]))
 
-    def truncate(self) -> None:
-        """S9: TRUNCATE TABLE — commit an empty version preserving schema.
+    def create(self, schema: T.StructType) -> None:
+        """CREATE TABLE IF NOT EXISTS: a table with no version yet gets an
+        empty one with ``schema``, committed like ``truncate()``'s (a
+        creator racing another gets ``ConcurrentWriteError``, as any
+        losing writer does)."""
+        if not self.exists():
+            self._commit_empty(_nullable(schema).jsonValue(), None)
 
-        The empty version is a directory holding only a commit record
-        with the current version's schema and ``rows: 0``, so no Spark
-        job runs: ``read()`` hands that schema to a reader that finds no
-        data files. A current version without a record (written before
-        records existed) takes its schema from one inference read."""
+    def truncate(self) -> None:
+        """S9: TRUNCATE TABLE — commit an empty version preserving schema."""
         base = self._pointer_version()
         if base is None:
             return
-        rec = self._commit_record(os.path.join(self.root, base))
-        schema = (
-            rec["schema"] if rec else _nullable(self.read().schema).jsonValue()
-        )
-        prior = self.history()
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.root, version)
-        os.makedirs(out)
-        with open(os.path.join(out, _COMMIT_RECORD), "w") as f:
-            json.dump({"schema": schema, "rows": 0}, f)
-        self._commit(version, base, prior)
-
-    def delete_where(self, condition) -> int:
-        """DELETE FROM table WHERE condition — the GDPR/right-to-erasure
-        verb: commits a new version without the matching rows and returns
-        how many were removed. Copy-on-write like Delta without deletion
-        vectors: the surviving rows rewrite into a fresh directory and the
-        pointer flips atomically, so concurrent readers keep a consistent
-        pre-delete snapshot and time travel (``keep_versions``) still
-        works — note retention then keeps the deleted rows on disk until
-        the version ages out, which a compliance deployment bounds by
-        vacuum cadence. ``condition`` is a Column or SQL string."""
-        import pyspark.sql.functions as _F
-
-        cond = _F.expr(condition) if isinstance(condition, str) else condition
-        cur = self.read()
-        n_before = cur.count()
-        # NULL predicate must keep the row (SQL DELETE deletes TRUE only;
-        # a bare ~cond would silently drop the NULLs too)
-        survivors = cur.filter(~_F.coalesce(cond, _F.lit(False)))
-        n_after = survivors.count()
-        if n_after != n_before:
-            self.write(survivors)
-        return n_before - n_after
+        path = os.path.join(self.root, base)
+        self._commit_empty(self._commit_record(path)["schema"], base)
 
     def vacuum(self) -> None:
-        """GC stale version directories: anything but the committed version.
+        """GC stale directories: every version but the retained committed
+        ones, and every staging dir.
 
-        A writer that dies between the data write and the pointer swap
-        leaves a complete-but-uncommitted ``v_*`` directory — invisible to
-        readers (the pointer never moved: crash-safety proven by
+        A writer that dies before its pointer swap leaves a staging dir
+        or a version numbered above the pointer — invisible to readers
+        (crash-safety proven by
         ``tests/test_upsert.py::test_crash_between_write_and_swap``), but
         leaking disk. Single-writer assumption as documented for write();
         call between loads, never concurrently with one.
         """
-        retained = {
-            os.path.join(self.root, v)
-            for v in self.history()[: self.keep_versions]
-        }
-        cur = self.current_path()
-        if cur:
-            retained.add(cur)
+        retained = set(self.history()[: self.keep_versions])
         for name in os.listdir(self.root):
-            p = os.path.join(self.root, name)
-            if name.startswith("v_") and os.path.isdir(p) and p not in retained:
-                shutil.rmtree(p, ignore_errors=True)
+            if name.startswith("_tmp_") or (
+                name.startswith("v_") and name not in retained
+            ):
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
 
 def overwrite_partitions(
     table: ParquetTable, df: DataFrame, partition_col: str, values
-) -> int:
+) -> None:
     """A7: replaceWhere-style refresh — replace the partitions whose
     ``partition_col`` is in ``values`` (one value or a list) with ``df``
     and keep the rest: the reference's ``DELETE … WHERE analysis_date =
     today`` + INSERT (SL:136-155), made atomic by the version swap. Rows
     whose partition value is NULL are never replaced. ``df`` must hold
     rows of the named partitions only; like Delta's replaceWhere, the
-    write fails on any other row. Returns the committed row count."""
+    write fails on any other row. ``table`` must exist (see ``create``)."""
     values = list(values) if isinstance(values, (list, tuple, set)) else [values]
     key = F.col(partition_col)
     fresh = df.withColumn(
@@ -526,11 +458,9 @@ def overwrite_partitions(
             F.raise_error(f"row outside the replaced {partition_col} partitions")
         ),
     )
-    if not table.exists():
-        return table.write(fresh)
     current = table.read()
     kept = current.filter(key.isNull() | ~key.isin(values))
-    return table.write(kept.unionByName(fresh.select(*current.columns)))
+    table.write(kept.unionByName(fresh.select(*current.columns)))
 
 
 def scd2_upsert(

@@ -83,6 +83,10 @@ def enrich_videos(raw: DataFrame) -> DataFrame:
 
 @dataclass
 class Warehouse:
+    """The warehouse tables under ``root``. Opening it creates dim, fact
+    and aggregate as empty tables of their declared schemas, so every
+    load stage merges into an existing table."""
+
     spark: SparkSession
     root: str
     stg_videos: ParquetTable = field(init=False)
@@ -95,6 +99,9 @@ class Warehouse:
         self.dim_channels = ParquetTable(self.spark, f"{self.root}/dim_channels")
         self.fact_videos = ParquetTable(self.spark, f"{self.root}/fact_videos")
         self.agg_daily = ParquetTable(self.spark, f"{self.root}/agg_daily_by_region")
+        self.dim_channels.create(schemas.DIM_CHANNELS_SCHEMA)
+        self.fact_videos.create(schemas.FACT_VIDEOS_SCHEMA)
+        self.agg_daily.create(schemas.AGG_DAILY_SCHEMA)
 
 
 def load_day(
@@ -142,12 +149,7 @@ def load_day(
             safe_long("video_count").alias("video_count"),
         )
     )
-    if wh.dim_channels.exists():
-        merged = scd_upsert_dim(wh.dim_channels.read(), channels, ["channel_id"])
-    else:
-        merged = channels.withColumn("first_seen_date", F.current_date()).withColumn(
-            "last_updated", F.current_timestamp()
-        )
+    merged = scd_upsert_dim(wh.dim_channels.read(), channels, ["channel_id"])
     wh.dim_channels.write(
         merged.select(*[f.name for f in schemas.DIM_CHANNELS_SCHEMA])
     )
@@ -165,12 +167,9 @@ def load_day(
         .withColumn("comment_count", safe_long("comment_count"))
         .select(*[f.name for f in schemas.FACT_VIDEOS_SCHEMA])
     )
-    if wh.fact_videos.exists():
-        wh.fact_videos.write(
-            insert_only_merge(wh.fact_videos.read(), facts, ["video_id"])
-        )
-    else:
-        wh.fact_videos.write(facts.dropDuplicates(["video_id"]))
+    wh.fact_videos.write(
+        insert_only_merge(wh.fact_videos.read(), facts, ["video_id"])
+    )
     counts["fact_videos"] = wh.fact_videos.count()
 
     # -- stage 4: aggregate refresh (J1+A1 → A7 replaceWhere; non-fatal) ---

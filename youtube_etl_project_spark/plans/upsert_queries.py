@@ -318,11 +318,12 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Snapshot diff through REAL time travel: writes orders-derived "
         "v1 to a ParquetTable, commits v2 on top (merge-upsert + "
         "retention filter), then reads read_version(1) vs "
-        "read_version(0) back through the commit-log/pointer machinery "
+        "read_version(0) back through the numbered-version/pointer "
+        "machinery (v_<n> directories, committed up to _CURRENT) "
         "and classifies every key added / removed / changed / unchanged "
         "with per-column change counts — the 'what did last night's "
         "load do' audit. The oracle recomputes the same diff purely "
-        "relationally, so the commit log, pointer swap, retention and "
+        "relationally, so the version numbering, pointer swap, retention and "
         "time-travel read path are all under the value-hash gate (T3 "
         "was previously pytest-evidence only). Exact arithmetic: "
         "decimal-domain prices, string statuses, bigint counts. Plan: "

@@ -86,13 +86,13 @@ HEADLINE = [
     "embed_lsh_ann_md5",
     "embed_ivf_ann_v1",
     "dedup_embed_cosine_lsh_md5",
-    # (round 8 continuation: embed_pq_encode_v1 left the list so the
-    # MMR addition keeps the norm_py/contended extras inside the
+    # (round 8 continuation: the frozen-v1 PQ encode row left the list
+    # so the MMR addition keeps the norm_py/contended extras inside the
     # driver's 1980-char parse window — the r7 precedent; the PQ family
     # keeps embed_pq_rmse (grid-trained) and embed_ivfpq_ann (trained
     # encode + ADC + refine), and the frozen-v1 serving family keeps
-    # embed_ivf_ann_v1 + dedup_semantic_v1; embed_pq_encode_v1 stays
-    # gate-covered at both scales)
+    # embed_ivf_ann_v1 + dedup_semantic_v1; the v1 PQ encode stays
+    # gate-covered inside embed_pq_rerank_v1)
     "streaming_outer_join_parity",
     "dedup_semantic_v1",
     "ann_recall_report",
@@ -179,7 +179,8 @@ HEADLINE = [
 for _ceded in ("embed_drift_report", "join_skew_report", "ivf_cell_report"):
     HEADLINE.remove(_ceded)
 
-# Host-speed reference: the exact calib_jvm_sec recorded in BENCH_r03.json
+# Host-speed reference: the exact calib_jvm_sec recorded in
+# history/BENCH_r03.json
 # (0.302 — not a rounded 0.30, which would bias every normalized number by
 # ~0.7%). normalized = raw * (CALIB_REF_SEC / calib_jvm_sec) rescales this
 # run's times to that host speed, so round-over-round deltas reflect plan
@@ -313,9 +314,9 @@ def main() -> None:
     # (".cache() of base tables outside the timed region"), so it is
     # removed: every timed sample now computes from the parquet inputs,
     # scan included. Old-methodology numbers are preserved in
-    # BENCH_QUIET_r11A.json / BENCH_r10.json for comparison; the per-row
-    # delta for untouched queries is the (now honestly charged) scan
-    # constant. See OPTIMIZATION_r11.md "Bench methodology".
+    # BENCH_QUIET_r11A.json / history/BENCH_r10.json for comparison;
+    # the per-row delta for untouched queries is the (now honestly
+    # charged) scan constant. See OPTIMIZATION_r11.md "Bench methodology".
     #
     # Round-12 (VERDICT r11 #1): between-rows stall sentinel. The timed
     # action per sample is unchanged (noop sink, min over samples); a

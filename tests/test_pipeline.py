@@ -216,7 +216,7 @@ def test_fresh_warehouse_has_empty_declared_tables(spark, tmp_path):
 
 
 def test_run_day_warm_job_budget(spark, tmp_path):
-    """Timing-free plan-shape guard: a warm ``run_day`` launches at most 14
+    """Timing-free plan-shape guard: a warm ``run_day`` launches at most 12
     Spark jobs — no schema-inference job per table read, no count job
     after a write, no pass over the aggregate to find the partitions it
     replaces — and opening a warehouse table launches none. Jobs are
@@ -243,7 +243,7 @@ def test_run_day_warm_job_budget(spark, tmp_path):
 
     _jobs_of(spark, day(0))
     warm = _jobs_of(spark, day(1))
-    assert warm <= 14, f"warm run_day launched {warm} Spark jobs"
+    assert warm <= 12, f"warm run_day launched {warm} Spark jobs"
 
     wh = Warehouse(spark, wh_root)
     tables = (wh.stg_videos, wh.dim_channels, wh.fact_videos, wh.agg_daily)

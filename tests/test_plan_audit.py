@@ -16,6 +16,7 @@ import re
 
 import pytest
 
+from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import audit_pins, pin
 from youtube_etl_project_spark.registry import load_all_plans
 
@@ -25,10 +26,8 @@ from youtube_etl_project_spark.registry import load_all_plans
 # real BPE merge application (inherently iterative string algorithm — no
 # Column-expression equivalent; Arrow-batched with an LRU word cache).
 ARROW_ALLOWED = {
-    "embed_cosine_topk",
     "embed_lsh_ann",
     "embed_ivf_ann",
-    "embed_ivf_index_ann",  # persisted-index probe: same numpy cell-assign
     "dedup_embed_cosine_lsh",  # hyperplane-LSH bucket keys: numpy matmul
     # (_table_keys_exact_vectorized → grid.snap_np + grid.plane_keys)
     # md5-plane bucket keys: the same map-side Arrow int64 matmul
@@ -51,27 +50,19 @@ ARROW_ALLOWED = {
     "multimodal_ahash_near_dup",  # same decode+aHash kernel, then banding
     "multimodal_video_frame_near_dup",  # same aHash kernel, bounded to
     # DISTINCT frame keys (dedupe-before-decode) + synth payload udf
-    "text_topic_clusters",  # kmeans_assign_arrow: grid.sq_dists per batch
     "multimodal_frame_sample",
     "text_token_count_bpe",
     "pack_sequences_bpe",
-    "embed_pca_project_v1",  # frozen released model: numpy matmul apply
     # (round 8: embed_pca_project / embed_mahalanobis_outliers /
     # source_quality_scorer_r2 left this list — the exact-grid trainers'
     # scoring paths are broadcast model joins in whole-stage codegen, no
     # Python in the plan at all; see plans/exact_linalg.py)
-    "text_topic_assign_v1",  # frozen-centroid assignment: numpy matmul
-    "embed_nsw_ann",  # graph build: per-cell exact-int64 k-NN matmul
-    # (_knn_parts_blocked → grid.sq_dists — inside the edges pin, so it
-    # surfaces via the pre-pin gates; the search trace is pure codegen)
-    "embed_nsw_nnd_ann",  # same build kernel under the NN-descent round
     # (round 7: embed_pq_rmse / adc_topk / rerank_topk left this list —
     # the exact-grid trainer's assignment is a broadcast codebook join in
     # whole-stage codegen, no Python in the plan at all)
     # the SemDeDup within-cell τ test runs as the per-cell Arrow int64
     # matmul kernel (_semantic_pairs_blocked, grid.snap_np at 1e3);
     # exact integers, oracle hashes unchanged
-    "dedup_semantic",
     "dedup_semantic_v1",
     # round 12: the greedy MMR trace over the pinned shortlist runs as
     # ONE per-query Arrow int64 kernel (sims matmul + 5 greedy rounds,
@@ -102,6 +93,10 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _cache_misses() -> float:
+    return sum(tier["misses"] for tier in fixture_cache.stats().values())
+
+
 @pytest.fixture(scope="module")
 def built(spark, sf_dir):
     # AQE wraps un-executed plans in AdaptiveSparkPlan(isFinalPlan=false),
@@ -116,9 +111,13 @@ def built(spark, sf_dir):
             # plan: checkpointing truncates lineage, so without this the
             # per-round plans of iterative operators are invisible to
             # every gate below (the r8 kcenter global-window blind spot).
+            # A build that misses no fixture cache serves its index and
+            # model state warm, so the pins that built it do not run.
+            misses = _cache_misses()
             with audit_pins() as pinned:
                 df = spec.fn(spark, sf_dir)
-            out[name] = (_plan(df), df.schema, list(pinned))
+            rebuilt = _cache_misses() > misses
+            out[name] = (_plan(df), df.schema, list(pinned), rebuilt)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     return out
@@ -126,19 +125,26 @@ def built(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def plans(built):
-    return {n: p for n, (p, _, _) in built.items()}
+    return {n: p for n, (p, _, _, _) in built.items()}
 
 
 @pytest.fixture(scope="module")
 def schemas(built):
-    return {n: s for n, (_, s, _) in built.items()}
+    return {n: s for n, (_, s, _, _) in built.items()}
 
 
 @pytest.fixture(scope="module")
 def pre_pin_plans(built):
     """name -> concatenated formatted plans of every pin() the query ran
     at build time (its iterative-loop internals)."""
-    return {n: "\n".join(pp) for n, (_, _, pp) in built.items() if pp}
+    return {n: "\n".join(pp) for n, (_, _, pp, _) in built.items() if pp}
+
+
+@pytest.fixture(scope="module")
+def rebuilt(built):
+    """Names whose build missed a fixture cache, so it built its cached
+    state (and ran that state's pins) in this session."""
+    return {n for n, (_, _, _, r) in built.items() if r}
 
 
 def test_no_row_at_a_time_python_udfs(plans):
@@ -259,11 +265,12 @@ def test_no_comparator_hostile_output_columns(schemas):
     # The driver's comparator canonicalizes results by pandas
     # sort_values over EVERY output column: list/dict cells throw
     # `unhashable type: 'list'` (measured: user_recent_history ERR in
-    # CORRECTNESS_r07.json) and Decimal cells canonicalize differently
-    # from our local replica (both r5 hash-fails). No registered plan may
-    # emit a top-level ArrayType/MapType/StructType/DecimalType/BinaryType
-    # column — serialize collections to delimited strings (array_join) or
-    # explode to rows; report exact big integers as digit strings.
+    # history/CORRECTNESS_r07.json) and Decimal cells canonicalize
+    # differently from our local replica (both r5 hash-fails). No
+    # registered plan may emit a top-level
+    # ArrayType/MapType/StructType/DecimalType/BinaryType column —
+    # serialize collections to delimited strings (array_join) or explode
+    # to rows; report exact big integers as digit strings.
     from pyspark.sql.types import (
         ArrayType,
         BinaryType,
@@ -317,20 +324,8 @@ PRE_PIN_GLOBAL_WINDOW_ALLOWED: set = set()
 # Arrow int64 k-NN kernel (plans/graph_ann._knn_parts_blocked).
 PRE_PIN_ARROW_ALLOWED = {
     "embed_nsw_ann",
-    "embed_nsw_nnd_ann",
-    # first call builds the persisted graph via the same kernel
-    "embed_nsw_index_ann",
     # k-NN build kernel + the per-src α-prune kernel (both bounded groups)
     "embed_nsw_alpha_ann",
-    # iterated NND rounds over the kernel-built base graph
-    "embed_nsw_nnd2_ann",
-    # first call builds the persisted α-graph via the same kernels
-    "embed_nsw_alpha_index_ann",
-    # round 11: auto-geometry search over the α graph — on a cold
-    # fixture cache the first call runs the same bounded build kernels
-    # (memoized thereafter; whitelisting keeps the audit independent of
-    # cache warmth / test order)
-    "embed_nsw_alpha_auto_ann",
     # round 11: the online-ingest row's bootstrap runs the bounded k-NN
     # build kernel on batch 1 (nsw_graph_from_vectors) before nsw_insert
     "embed_nsw_online_ingest_ann",
@@ -359,6 +354,27 @@ def test_python_inside_pins_only_where_justified(pre_pin_plans):
         and n not in PRE_PIN_ARROW_ALLOWED
     ]
     assert not offenders, f"unexpected Python stages inside pin() in: {offenders}"
+
+
+def test_arrow_allowlists_name_live_arrow_queries(
+    plans, pre_pin_plans, rebuilt
+):
+    """Every ARROW_ALLOWED entry names a registered query whose plan holds
+    an Arrow node, and every PRE_PIN_ARROW_ALLOWED entry one whose pre-pin
+    plans do: an entry that excuses nothing is stale. A pre-pin entry is
+    judged only when its build missed a fixture cache; one served from
+    caches an earlier test warmed ran no build pins to show."""
+
+    def arrow(plan: str) -> bool:
+        return any(op in plan for op in _ARROW_OPS)
+
+    stale = sorted(n for n in ARROW_ALLOWED if not arrow(plans.get(n, "")))
+    stale += sorted(
+        f"{n} (pre-pin)"
+        for n in PRE_PIN_ARROW_ALLOWED
+        if n in rebuilt and not arrow(pre_pin_plans.get(n, ""))
+    )
+    assert not stale, f"allowlist entries with no Arrow node: {stale}"
 
 
 def test_no_unpartitioned_window_inside_pins(pre_pin_plans):

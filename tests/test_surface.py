@@ -1,9 +1,10 @@
-"""Surface guard: the package exposes no function or parameter that
-nothing uses. Scanned from source with ``ast`` over every ``.py`` file of
-the repository (package, tests, tools, examples, ``bench.py``,
-``perfbench/``); nothing is imported and no Spark session starts.
+"""Surface guard: the package exposes no function, parameter or data
+file that nothing uses. Scanned from source with ``ast`` over every
+``.py`` file of the repository (package, tests, tools, examples,
+``bench.py``, ``perfbench/``); nothing is imported and no Spark session
+starts.
 
-Four findings fail:
+Five findings fail:
 
 * a top-level package function that no reached code names (reachability
   by name, from module-level code, registered queries and every file
@@ -16,7 +17,11 @@ Four findings fail:
 * a defaulted parameter that no call of its function's name sets, by
   position, by keyword, through ``*args``/``**kwargs`` or through
   ``functools.partial``; aliased imports count as the original name, and
-  a call by a name several functions share counts for each of them.
+  a call by a name several functions share counts for each of them;
+* a data file (any non-``.py`` file under the package's ``functions/``
+  or under ``tests/fixtures/``) whose basename no string constant of any
+  ``.py`` file contains: a released model or golden fixture left behind
+  by the code that loaded it.
 
 ``testkit.py`` is out of scope: its builders' defaults are the fields
 of a template record, not options of the program.
@@ -32,6 +37,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 PKG = REPO / "youtube_etl_project_spark"
 OUT_OF_SCOPE = {PKG / "testkit.py"}
+DATA_DIRS = (PKG / "functions", REPO / "tests" / "fixtures")
 
 # Deployment settings: each default is right for this repository's
 # environment and is the knob a deployment elsewhere changes.
@@ -55,15 +61,18 @@ REFERENCE_TWINS = {
 _FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+def _hidden(path: Path) -> bool:
+    rel = path.relative_to(REPO).parts
+    return any(p.startswith(".") or p == "__pycache__" for p in rel)
+
+
 @cache
 def _trees() -> dict[Path, ast.Module]:
-    out = {}
-    for py in sorted(REPO.rglob("*.py")):
-        rel = py.relative_to(REPO).parts
-        if any(p.startswith(".") or p == "__pycache__" for p in rel):
-            continue
-        out[py] = ast.parse(py.read_text(), str(py))
-    return out
+    return {
+        py: ast.parse(py.read_text(), str(py))
+        for py in sorted(REPO.rglob("*.py"))
+        if not _hidden(py)
+    }
 
 
 def _package_files() -> list[Path]:
@@ -296,6 +305,28 @@ def test_allowlist_names_live_deployment_settings():
         assert reason and tests, where
         for t in tests:
             assert name in _names(_trees()[REPO / "tests" / t]), (where, t)
+
+
+def _unnamed_data_files() -> list[str]:
+    strings = "\n".join(
+        n.value
+        for tree in _trees().values()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    )
+    return [
+        f.relative_to(REPO).as_posix()
+        for d in DATA_DIRS
+        for f in sorted(d.rglob("*"))
+        if f.is_file()
+        and f.suffix != ".py"
+        and not _hidden(f)
+        and f.name not in strings
+    ]
+
+
+def test_every_data_file_is_named_by_code():
+    _report(_unnamed_data_files())
 
 
 def _entry_checkout_path() -> str:

@@ -1,28 +1,17 @@
 """Build the released embedding-model artifacts (run once; committed —
 the BPE-artifact pattern, tools/build_bpe_artifact.py, extended to the
-PCA/topic family per VERDICT r4 #3):
+embedding models):
 
-1. ``youtube_etl_project_spark/functions/pca_model_v1.json`` — mean + 16
-   PCA components trained once on the sf0.01 embeddings (numpy moment
-   pass over the raw parquet; eigh + sign-fix via the same
-   ``similarity.pca_components`` rules the runtime uses).
-2. ``tests/fixtures/pca_proj_v1.parquet`` — golden ``(content_md5, pos,
-   pq)``: the 1e4-grid projection of every distinct embedding across the
-   sf0.001/0.01/0.1 fixtures under the frozen model, keyed by the DuckDB
-   content hash of the 1e6-quantized components (the key expression is
-   computed IN DuckDB here and reused verbatim by the oracle, so the two
-   can never drift).
-3. ``youtube_etl_project_spark/functions/topic_centroids_v1.json`` — the
-   k=8 kmeans centroids over the sf0.01 hash embeddings (trained once
-   via the repo's deterministic ``kmeans_centroids``).
-4. ``tests/fixtures/topic_assign_v1.parquet`` — golden ``(content_md5,
-   cluster_id)`` for every distinct document text across the fixtures:
-   embedding via the hash-embed oracle SQL (already proven hash-equal to
-   the Spark side), assignment via the same ``-2XCᵀ + |C|²`` argmin the
-   runtime's ``nearest_centroid_vectorized`` computes.
+1. ``youtube_etl_project_spark/functions/ivf_centroids_v1.json`` — the
+   k=8 IVF coarse quantizer over the sf0.01 embeddings.
+2. ``youtube_etl_project_spark/functions/pq_codebooks_v1.json`` — the
+   m=8 × k=16 PQ codebooks over the sf0.01 embeddings.
+3. ``youtube_etl_project_spark/functions/ridge_weights_v1.json`` — the
+   closed-form ridge weights of the label on the sf0.01 embeddings.
 
-Re-run only on a deliberate model-version bump; training is
-deterministic, so a re-run over unchanged fixtures is a no-op diff.
+Each trains once via the repo's deterministic trainers. Re-run only on a
+deliberate model-version bump; training is deterministic, so a re-run
+over unchanged fixtures is a no-op diff.
 """
 
 from __future__ import annotations
@@ -31,126 +20,12 @@ import json
 import os
 import sys
 
-import duckdb
-import numpy as np
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from youtube_etl_project_spark.operators import similarity  # noqa: E402
-from youtube_etl_project_spark.plans.corpus3 import (  # noqa: E402
-    _hash_embed_oracle,
-)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIRS = [
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-]
 FN_DIR = os.path.join(REPO, "youtube_etl_project_spark", "functions")
-FIX_DIR = os.path.join(REPO, "tests", "fixtures")
-PCA_MODEL = os.path.join(FN_DIR, "pca_model_v1.json")
-PCA_GOLDEN = os.path.join(FIX_DIR, "pca_proj_v1.parquet")
-TOPIC_MODEL = os.path.join(FN_DIR, "topic_centroids_v1.json")
-TOPIC_GOLDEN = os.path.join(FIX_DIR, "topic_assign_v1.parquet")
-
-# MUST stay identical to the oracle join keys in plans/embeddings2.py /
-# plans/corpus4.py — the golden tables are keyed with these expressions.
-PCA_KEY_SQL = (
-    "md5(array_to_string(list_transform(embedding, "
-    "x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)), ','))"
-)
-N_COMPONENTS = 16
-PROJ_GRID = 10_000  # 1e4: coarse enough that batch-boundary ULP drift
-# in the runtime's per-Arrow-batch matmul cannot straddle a cell
-
-
-def build_pca() -> None:
-    emb = [
-        np.asarray(r[0], dtype=np.float64)
-        for r in duckdb.sql(
-            "SELECT embedding FROM "
-            "read_parquet('/root/testdata/sf0.01/embeddings.parquet') "
-            "WHERE embedding IS NOT NULL ORDER BY vec_id"
-        ).fetchall()
-    ]
-    X = np.stack(emb)
-    mean = X.mean(axis=0)
-    cov = (X.T @ X) / len(X) - np.outer(mean, mean)
-    _, comps = similarity.pca_components(cov.tolist())
-    with open(PCA_MODEL, "w") as f:
-        json.dump({"mean": mean.tolist(), "components": comps}, f)
-    print(f"wrote PCA model (d={X.shape[1]}, k={N_COMPONENTS}) -> {PCA_MODEL}")
-
-    W = np.asarray(comps)[:, :N_COMPONENTS]
-    con = duckdb.connect()
-    seen: dict[str, np.ndarray] = {}
-    for d in SF_DIRS:
-        rows = con.sql(
-            f"SELECT {PCA_KEY_SQL} AS k, embedding FROM "
-            f"read_parquet('{d}/embeddings.parquet') "
-            "WHERE embedding IS NOT NULL"
-        ).fetchall()
-        for key, e in rows:
-            if key not in seen:
-                p = (np.asarray(e, dtype=np.float64) - mean) @ W
-                seen[key] = np.floor(p * PROJ_GRID + 0.5).astype(np.int64)
-    ks, poss, pqs = [], [], []
-    for key, pq in seen.items():
-        for pos, v in enumerate(pq):
-            ks.append(key)
-            poss.append(pos)
-            pqs.append(int(v))
-    con.sql(
-        "CREATE TABLE g (content_md5 VARCHAR, pos BIGINT, pq BIGINT)"
-    )
-    con.executemany("INSERT INTO g VALUES (?, ?, ?)", list(zip(ks, poss, pqs)))
-    con.sql(f"COPY g TO '{PCA_GOLDEN}' (FORMAT PARQUET)")
-    print(f"wrote {len(seen)} golden projections -> {PCA_GOLDEN}")
-
-
-def build_topic() -> None:
-    # centroids train once via the repo's deterministic Spark kmeans
-    from youtube_etl_project_spark.plans.corpus3 import text_hash_embedding
-    from youtube_etl_project_spark.session import get_spark
-
-    spark = get_spark("build_topic_artifact")
-    emb = text_hash_embedding(spark, "/root/testdata/sf0.01")
-    cents = similarity.kmeans_centroids(
-        emb, vec="embedding", k=8, iters=2, id_col="doc_id"
-    )
-    with open(TOPIC_MODEL, "w") as f:
-        json.dump({"centroids": cents}, f)
-    print(f"wrote {len(cents)} centroids -> {TOPIC_MODEL}")
-
-    C = np.asarray(cents, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    con = duckdb.connect()
-    seen: dict[str, int] = {}
-    for d in SF_DIRS:
-        con.sql("DROP VIEW IF EXISTS documents")
-        con.sql(
-            f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{d}/documents.parquet')"
-        )
-        rows = con.sql(
-            f"""
-            WITH emb AS ({_hash_embed_oracle()})
-            SELECT md5(dd.text) AS k, emb.embedding
-            FROM emb JOIN documents dd USING (doc_id)
-            """
-        ).fetchall()
-        for key, e in rows:
-            if key not in seen:
-                x = np.asarray(e, dtype=np.float64)
-                dist = -2.0 * (x @ C.T) + c2
-                seen[key] = int(dist.argmin())
-    con.sql("CREATE TABLE g (content_md5 VARCHAR, cluster_id BIGINT)")
-    con.executemany("INSERT INTO g VALUES (?, ?)", list(seen.items()))
-    con.sql(f"COPY g TO '{TOPIC_GOLDEN}' (FORMAT PARQUET)")
-    print(f"wrote {len(seen)} golden assignments -> {TOPIC_GOLDEN}")
-
-
 IVF_MODEL = os.path.join(FN_DIR, "ivf_centroids_v1.json")
 
 
@@ -175,12 +50,11 @@ def build_ivf() -> None:
 
 PQ_MODEL = os.path.join(FN_DIR, "pq_codebooks_v1.json")
 RIDGE_MODEL = os.path.join(FN_DIR, "ridge_weights_v1.json")
-MAHA_MODEL = os.path.join(FN_DIR, "mahalanobis_v1.json")
 
 
 def build_pq() -> None:
     """m=8 × k=16 PQ codebooks trained once on the sf0.01 embeddings via
-    the repo's deterministic pq_train. embed_pq_encode_v1 embeds them as
+    the repo's deterministic pq_train. embed_pq_rerank_v1 embeds them as
     1e6-grid integer literals; encoding (per-subspace squared-L2 argmin)
     is then exact bigint arithmetic in both engines."""
     from youtube_etl_project_spark.operators import quantization
@@ -216,51 +90,7 @@ def build_ridge() -> None:
     print(f"wrote {len(w)} ridge weights -> {RIDGE_MODEL}")
 
 
-def build_maha() -> None:
-    """Frozen Mahalanobis model: corpus mean + regularized inverse
-    covariance from the sf0.01 embeddings (same 1e-6·I regularization as
-    the flagship). Stored pre-quantized (mean 1e3, Σ⁻¹ 1e4) with bounds
-    asserted so the v1 query's bigint fold can never overflow."""
-    emb = [
-        np.asarray(r[0], dtype=np.float64)
-        for r in duckdb.sql(
-            "SELECT embedding FROM "
-            "read_parquet('/root/testdata/sf0.01/embeddings.parquet') "
-            "WHERE embedding IS NOT NULL"
-        ).fetchall()
-    ]
-    X = np.stack(emb)
-    mu = X.mean(axis=0)
-    C = (X.T @ X) / len(X) - np.outer(mu, mu)
-    Ci = np.linalg.inv(C + 1e-6 * np.eye(len(C)))
-    muq = np.floor(mu * 1_000 + 0.5).astype(np.int64)
-    aq = np.floor(Ci * 10_000 + 0.5).astype(np.int64)
-    # Sum-level overflow bound (round-5 advice: a per-term |aq| ceiling
-    # alone lets the 64x64 bilinear FOLD reach ~6.5e20 and silently wrap
-    # Spark's int64 SUM while DuckDB's HUGEINT sum survives — a gate
-    # mismatch or a silently wrong dist_q). The v1 query computes
-    # sum_ij d_i·aq_ij·d_j with d in 1e3 units, so the worst-case
-    # accumulated magnitude is max|d|² · Σ|aq|; bound max|d| from the
-    # actual fixture spread (+1 quantization slack, 2x headroom for a
-    # query vector as far from the mean as the farthest corpus vector).
-    max_abs_centered = 2.0 * (np.abs(X - mu).max() * 1_000 + 1)
-    bilinear_bound = max_abs_centered**2 * np.abs(aq).sum()
-    assert bilinear_bound < 2**62, (
-        f"bilinear fold can overflow int64: bound {bilinear_bound:.3e}"
-    )
-    with open(MAHA_MODEL, "w") as f:
-        json.dump({"mu_q3": muq.tolist(), "ci_q4": aq.tolist()}, f)
-    print(
-        f"wrote mahalanobis model (|aq|max={np.abs(aq).max()}) -> "
-        f"{MAHA_MODEL}"
-    )
-
-
 if __name__ == "__main__":
-    os.makedirs(FIX_DIR, exist_ok=True)
-    build_pca()
-    build_topic()
     build_ivf()
     build_pq()
     build_ridge()
-    build_maha()

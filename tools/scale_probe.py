@@ -120,11 +120,9 @@ PROBE_QUERIES = (
     "orders_revenue_gini",
     "lineitem_exact_percentiles",
     "streaming_dropdup_parity",
-    # round-5 wave: md5-domain ANN, frozen-model serving twins, fused
-    # RFM ranking, stream-stream outer join
+    # round-5 wave: md5-domain ANN, fused RFM ranking, stream-stream
+    # outer join
     "embed_lsh_ann_md5",
-    "embed_pca_project_v1",
-    "text_topic_assign_v1",
     "streaming_outer_join_parity",
     # round-5 second wave: frozen-cell SemDeDup, PQ serving path
     # (shortlist+re-rank covers the ADC scan), ANN recall report,

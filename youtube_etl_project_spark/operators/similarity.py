@@ -1224,15 +1224,11 @@ def pca_project(
     components: "list[list[float]]",
     n_components: int,
     out: str = "proj",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Apply a trained PCA: ``(x - mean) @ W[:, :k]`` as one numpy matmul
     per Arrow batch (the dense-linear-algebra rule — same as
-    ``nearest_centroid_vectorized``). Output rounded to ``round_dp`` dp
-    so re-runs are bit-stable despite float batch boundaries; pass
-    ``round_dp=None`` for the raw doubles (callers that grid-snap
-    afterwards must not round twice — a 6-dp round moves values by up to
-    5e-7, enough to straddle a coarse grid cell)."""
+    ``nearest_centroid_vectorized``). Output rounded to 6 dp so re-runs
+    are bit-stable despite float batch boundaries."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -1248,9 +1244,7 @@ def pca_project(
         res = [None] * len(arr)
         if valid.any():
             x = np.stack(arr[valid]).astype(np.float64)
-            p = (x - mu) @ W
-            if round_dp is not None:
-                p = np.round(p, round_dp)
+            p = np.round((x - mu) @ W, 6)
             for slot, row in zip(np.nonzero(valid)[0], p):
                 res[slot] = row.tolist()
         return pd.Series(res)

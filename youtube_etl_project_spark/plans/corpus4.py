@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows
-from youtube_etl_project_spark.registry import cnt, fixture_path, register
+from youtube_etl_project_spark.registry import cnt, register
 from youtube_etl_project_spark.sources import load_table
 
 
@@ -276,53 +276,6 @@ def corpus_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", "doc_id", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 50)
         .select("source", "doc_id", F.col("rn").cast("long").alias("rn"))
-    )
-
-
-# Released topic model (functions/topic_centroids_v1.json, k=8 kmeans
-# trained once on the sf0.01 hash embeddings by
-# tools/build_ann_artifacts.py) + golden per-text assignments.
-_TOPIC_GOLDEN = fixture_path("topic_assign_v1.parquet")
-
-
-@register(
-    "text_topic_assign_v1",
-    oracle=f"""
-        SELECT d.doc_id, g.cluster_id
-        FROM documents d
-        JOIN read_parquet('{_TOPIC_GOLDEN}') g ON md5(d.text) = g.content_md5
-    """,
-    doc="X4 serving path, ORACLE-CHECKED (VERDICT r4 #3, the BPE golden "
-        "pattern): assign every document to its topic under the RELEASED "
-        "v1 centroid model (frozen k=8 kmeans, committed like a released "
-        "classifier). The golden fixture maps md5(text) to the reference "
-        "assignment — embeddings recomputed by the hash-embed oracle SQL "
-        "(already proven hash-equal to the Spark side) and argmin'd with "
-        "the same -2XCᵀ+|C|² arithmetic the runtime uses — so the "
-        "distributed hash-embed → Arrow-matmul assignment pipeline is "
-        "value-checked end-to-end at any fixture scale. The data-trained "
-        "flagship (text_topic_clusters) is ALSO oracle-checked since round 7 via exact-grid training; this "
-        "twin proves the application path",
-)
-def text_topic_assign_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-
-    from youtube_etl_project_spark import functions as _fns
-    from youtube_etl_project_spark.operators import similarity
-    from youtube_etl_project_spark.plans.corpus3 import text_hash_embedding
-
-    path = os.path.join(
-        os.path.dirname(_fns.__file__), "topic_centroids_v1.json"
-    )
-    with open(path) as f:
-        cents = json.load(f)["centroids"]
-    emb = text_hash_embedding(spark, sf_dir)
-    return emb.select(
-        "doc_id",
-        similarity.nearest_centroid_vectorized(cents)(F.col("embedding"))
-        .cast("long")
-        .alias("cluster_id"),
     )
 
 

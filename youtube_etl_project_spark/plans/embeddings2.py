@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.checkpointing import pin
 from youtube_etl_project_spark.operators.grid import GRID, grid_rows, snap
-from youtube_etl_project_spark.registry import fixture_path, register
+from youtube_etl_project_spark.registry import register
 from youtube_etl_project_spark.sources import load_table
 
 
@@ -221,69 +221,6 @@ def embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.col("k").cast("long").alias("pos"),
         F.col("pq").cast("long").alias("pq"),
-    )
-
-
-# Released PCA model (functions/pca_model_v1.json, trained once on the
-# sf0.01 embeddings by tools/build_ann_artifacts.py) + its golden
-# projection fixture. The join-key expression MUST stay identical to
-# build_ann_artifacts.PCA_KEY_SQL — both are the DuckDB content hash of
-# the 1e6-quantized embedding components.
-_PCA_GOLDEN = fixture_path("pca_proj_v1.parquet")
-_PCA_KEY_SQL = (
-    "md5(array_to_string(list_transform(e.embedding, "
-    "x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)), ','))"
-)
-
-
-def _pca_model_v1() -> tuple[list, list]:
-    import json
-    import os
-
-    from youtube_etl_project_spark import functions as _fns
-
-    path = os.path.join(os.path.dirname(_fns.__file__), "pca_model_v1.json")
-    with open(path) as f:
-        m = json.load(f)
-    return m["mean"], m["components"]
-
-
-@register(
-    "embed_pca_project_v1",
-    oracle=f"""
-        SELECT e.vec_id, g.pos, g.pq
-        FROM embeddings e
-        JOIN read_parquet('{_PCA_GOLDEN}') g
-          ON {_PCA_KEY_SQL} = g.content_md5
-    """,
-    doc="X3 serving path, ORACLE-CHECKED (VERDICT r4 #3, the BPE golden "
-        "pattern): apply the RELEASED v1 PCA model (frozen mean + 16 "
-        "components, committed like a tokenizer vocab) to every "
-        "embedding, emitting 1e4-grid projection integers. The golden "
-        "fixture holds the sequential numpy reference projection of "
-        "every distinct fixture embedding, keyed by a DuckDB content "
-        "hash of the quantized components — so the distributed "
-        "per-Arrow-batch matmul is hash-checked against the frozen "
-        "model at any fixture scale. The data-trained flagship "
-        "(embed_pca_project) stays rows-only by nature; this twin "
-        "carries the cross-engine proof of the application path, which "
-        "is also the production shape (train once, project the corpus)",
-)
-def embed_pca_project_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from youtube_etl_project_spark.operators import similarity
-
-    mean, comps = _pca_model_v1()
-    emb = load_table(spark, sf_dir, "embeddings")
-    proj = similarity.pca_project(
-        emb, mean, comps, 16, round_dp=None
-    ).select("vec_id", "proj")
-    flat = proj.select(
-        "vec_id", F.posexplode("proj").alias("pos", "p")
-    )
-    return flat.select(
-        "vec_id",
-        F.col("pos").cast("long").alias("pos"),
-        snap(F.col("p"), 10_000).alias("pq"),
     )
 
 
@@ -825,8 +762,8 @@ def _maha_oracle() -> str:
         "Training: exact-integer moments (one Gram self-join, d² ints "
         "collected) + grid-snapped Newton-Schulz X←X(2I−AX) on the "
         "driver — pure matmuls, which is what makes the inverse "
-        "SQL-expressible as unrolled MATERIALIZED CTEs. Scoring: the "
-        "embed_mahalanobis_v1 bilinear-form join (explode → centered "
+        "SQL-expressible as unrolled MATERIALIZED CTEs. Scoring: a "
+        "bilinear-form join (explode → centered "
         "via exact tdiv → broadcast Σ̂⁻¹ join → one int64 sum per "
         "vector, all codegen — the pandas_udf left the plan this "
         "round). Top-20 via TakeOrderedAndProject + the two-pass "
@@ -960,96 +897,6 @@ def embed_ridge_score_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(F.col("q") * F.col("wq")) + F.lit(_RIDGE_BQ))
             .cast("long")
             .alias("yhat_q")
-        )
-    )
-
-
-def _maha_v1_model_q() -> tuple[list[tuple[int, int]], list[tuple[int, int, int]]]:
-    """Frozen v1 Mahalanobis model (functions/mahalanobis_v1.json),
-    pre-quantized by the builder: mean on the 1e3 grid, Σ⁻¹ on the 1e4
-    grid (bounds asserted at build time so the bigint fold can't
-    overflow)."""
-    import json
-    import os
-
-    from youtube_etl_project_spark import functions as _fns
-
-    path = os.path.join(
-        os.path.dirname(_fns.__file__), "mahalanobis_v1.json"
-    )
-    with open(path) as f:
-        m = json.load(f)
-    mu = [(j, int(v)) for j, v in enumerate(m["mu_q3"])]
-    a = [
-        (i, j, int(v))
-        for i, row in enumerate(m["ci_q4"])
-        for j, v in enumerate(row)
-        if v != 0  # sparse literal: zero entries contribute nothing
-    ]
-    return mu, a
-
-
-_MAHA_MU, _MAHA_A = _maha_v1_model_q()
-_MAHA_MU_VALUES = ", ".join(f"({j}, {q})" for j, q in _MAHA_MU)
-_MAHA_A_VALUES = ", ".join(f"({i}, {j}, {q})" for i, j, q in _MAHA_A)
-
-
-@register(
-    "embed_mahalanobis_v1",
-    oracle=f"""
-        WITH mu(j, muq) AS (VALUES {_MAHA_MU_VALUES}),
-        a(i, j, aq) AS (VALUES {_MAHA_A_VALUES}),
-        qe AS (
-            SELECT vec_id, u.pos - 1 AS j,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * 1000 + 0.5)
-                        AS BIGINT) AS q
-            FROM embeddings e CROSS JOIN LATERAL (
-                SELECT unnest(e.embedding) AS v,
-                       generate_subscripts(e.embedding, 1) AS pos
-            ) AS u
-            WHERE e.embedding IS NOT NULL
-        ), centered AS (
-            SELECT qe.vec_id, qe.j, qe.q - mu.muq AS c
-            FROM qe JOIN mu ON mu.j = qe.j
-        )
-        SELECT ci.vec_id,
-               CAST(SUM(ci.c * a.aq * cj.c) AS BIGINT) AS dist_q
-        FROM centered ci
-        JOIN a ON a.i = ci.j
-        JOIN centered cj ON cj.vec_id = ci.vec_id AND cj.j = a.j
-        GROUP BY ci.vec_id
-    """,
-    doc="Outlier-scoring serving path, ORACLE-CHECKED (VERDICT r4 #3): "
-        "squared Mahalanobis distance under the FROZEN v1 model — mean "
-        "on the 1e3 grid, inverse covariance on the 1e4 grid (both "
-        "quantized at build time with overflow bounds asserted), so "
-        "(x-mu)' A (x-mu) is an exact bigint bilinear fold both engines "
-        "reproduce term-for-term. The corrupt-embedding filter deployed "
-        "the way production deploys it: moments fit once "
-        "(embed_mahalanobis_outliers, rows-only by nature — the dxd "
-        "inverse), scored frozen at corpus scale. Explode → centered "
-        "join → broadcast A join → one sum per vector",
-)
-def embed_mahalanobis_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mudf = spark.createDataFrame(_MAHA_MU, "j int, muq long")
-    adf = spark.createDataFrame(_MAHA_A, "i int, j int, aq long")
-    emb = load_table(spark, sf_dir, "embeddings")
-    qe = grid_rows(emb, "vec_id", "embedding", _EL_S1)
-    centered = qe.join(F.broadcast(mudf), "j").select(
-        "vec_id", "j", (F.col("q") - F.col("muq")).alias("c")
-    )
-    ci = centered.select(
-        "vec_id", F.col("j").alias("i"), F.col("c").alias("c_i")
-    )
-    cj = centered.select("vec_id", "j", F.col("c").alias("c_j"))
-    return (
-        ci.join(F.broadcast(adf), "i")
-        .join(cj, ["vec_id", "j"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.col("c_i") * F.col("aq") * F.col("c_j"))
-            .cast("long")
-            .alias("dist_q")
         )
     )
 

@@ -9,9 +9,9 @@ exact-operand arithmetic), so the ENTIRE Lloyd loop unrolls into DuckDB
 CTEs (``_pq_exact_train_ctes``) and the driver hash-checks training +
 encode + ADC + re-rank end-to-end. The float trainer (``pq_train``)
 remains the FAISS-style production path with its numpy-replica pytest
-(tests/test_pq.py) and backs the released v1 artifacts.  The serving
-path under the RELEASED v1 codebooks (embed_pq_encode_v1 / adc_topk_v1 /
-rerank_v1) is unchanged and also oracle-checked.
+(tests/test_pq.py) and backs the released v1 codebooks.  The serving
+path under them (embed_pq_rerank_v1: encode, LUT, ADC shortlist, exact
+re-rank) is also oracle-checked.
 """
 
 from __future__ import annotations
@@ -452,64 +452,41 @@ def _v1_components(emb: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "embed_pq_encode_v1",
-    oracle=f"""
-        WITH cb(sub, code, pos, cbq) AS (VALUES {_PQ_V1_VALUES}),
-        qe AS MATERIALIZED (
-            SELECT vec_id,
-                   CAST((u.pos - 1) // {_PQ_DSUB} AS BIGINT) AS sub,
-                   (u.pos - 1) % {_PQ_DSUB} AS pos,
-                   CAST(FLOOR(CAST(u.v AS DOUBLE) * 1000000 + 0.5)
-                        AS BIGINT) AS q
-            FROM embeddings e CROSS JOIN LATERAL (
-                SELECT unnest(e.embedding) AS v,
-                       generate_subscripts(e.embedding, 1) AS pos
-            ) AS u
-            WHERE e.embedding IS NOT NULL
-        ), dists AS (
-            SELECT qe.vec_id, qe.sub, cb.code,
-                   SUM((qe.q - cb.cbq) * (qe.q - cb.cbq)) AS dist
-            FROM qe JOIN cb ON cb.sub = qe.sub AND cb.pos = qe.pos
-            GROUP BY 1, 2, 3
-        )
-        SELECT vec_id, sub, code FROM (
-            SELECT vec_id, sub, code,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                      ORDER BY dist ASC, code ASC) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    """,
-    doc="X3/PQ serving path, ORACLE-CHECKED end-to-end (VERDICT r4 #3): "
-        "PQ encoding under the RELEASED v1 codebooks — the frozen m=8 × "
-        "k=16 codebooks embed as 1e6-grid integer literals in both "
-        "engines, and each subvector's code (squared-L2 argmin with code "
-        "tiebreak) is exact bigint arithmetic. Proves the distributed "
-        "encode that every ADC/re-rank query builds on; the per-call-"
-        "trained flagships (embed_pq_rmse/adc/rerank) are ALSO oracle-"
-        "checked since round 7 via exact-grid training",
-)
-
-def embed_pq_encode_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_v1_spark_parts(spark: SparkSession, sf_dir: str):
+    """Spark mirror of the ``embed_pq_rerank_v1`` oracle's qe → dists →
+    codes/lut → adc CTEs: returns the (qe, adc) DataFrames, all
+    exact-bigint.  ``dists`` feeds both codes and lut, so it is pinned
+    once rather than recomputed per reference."""
     emb = load_table(spark, sf_dir, "embeddings")
     qe = _v1_components(emb)
-    dists = _pq_v1_dists(spark, qe)
+    dists = pin(_pq_v1_dists(spark, qe))
     w = Window.partitionBy("vec_id", "sub").orderBy(
         F.asc("dist"), F.asc("code")
     )
-    return (
+    codes = (
         dists.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", F.col("code").cast("int").alias("code"))
+        .select("vec_id", "sub", "code")
     )
+    lut = dists.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "sub", "code", "dist"
+    )
+    adc = (
+        codes.join(F.broadcast(lut), ["sub", "code"])
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("dist").cast("long").alias("adist"))
+    )
+    return qe, adc
 
 
-# Shared CTE prefix for the v1 PQ serving oracles: grid-snap every
-# embedding, compute every (vec, sub, code) squared distance against the
-# frozen codebooks, then derive codes (argmin) and per-query LUTs (the
-# SAME dists rows restricted to the query vectors) from one relation.
-_PQ_V1_BASE_CTES = f"""
-        WITH cb(sub, code, pos, cbq) AS (VALUES {{values}}),
+_RERANK_SHORTLIST = 50
+
+
+@register(
+    "embed_pq_rerank_v1",
+    oracle=f"""
+        WITH cb(sub, code, pos, cbq) AS (VALUES {_PQ_V1_VALUES}),
         qe AS MATERIALIZED (
             SELECT vec_id,
                    CAST((u.pos - 1) // {_PQ_DSUB} AS BIGINT) AS sub,
@@ -537,91 +514,14 @@ _PQ_V1_BASE_CTES = f"""
             ) WHERE rn = 1
         ), lut AS (
             SELECT vec_id AS query_id, sub, code, dist
-            FROM dists WHERE vec_id < {{nq}}
+            FROM dists WHERE vec_id < {_N_QUERIES}
         ), adc AS (
             SELECT l.query_id, c.vec_id AS neighbor_id,
                    CAST(SUM(l.dist) AS BIGINT) AS adist
             FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
             WHERE l.query_id <> c.vec_id
             GROUP BY 1, 2
-        )"""
-
-
-def _pq_v1_spark_parts(spark: SparkSession, sf_dir: str):
-    """Spark mirror of ``_PQ_V1_BASE_CTES``: returns (qe, codes, lut, adc)
-    DataFrames, all exact-bigint.  ``dists`` feeds both codes and lut, so
-    it is pinned once (CLAUDE.md: multi-referenced derived frames)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qe = _v1_components(emb)
-    dists = pin(_pq_v1_dists(spark, qe))
-    w = Window.partitionBy("vec_id", "sub").orderBy(
-        F.asc("dist"), F.asc("code")
-    )
-    codes = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "code")
-    )
-    lut = dists.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "sub", "code", "dist"
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dist").cast("long").alias("adist"))
-    )
-    return qe, codes, lut, adc
-
-
-@register(
-    "embed_pq_adc_topk_v1",
-    oracle=_PQ_V1_BASE_CTES.format(values=_PQ_V1_VALUES, nq=_N_QUERIES)
-    + f"""
-        SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rank, adist
-        FROM (
-            SELECT query_id, neighbor_id, adist,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adist ASC,
-                                               neighbor_id ASC) AS rnk
-            FROM adc
-        ) WHERE rnk <= {_TOPK}
-    """,
-    doc="X3/PQ serving path, ORACLE-CHECKED end-to-end (VERDICT r4 #3, "
-        "completing the embed_pq_encode_v1 story): asymmetric-distance "
-        "top-10 under the RELEASED v1 codebooks. The per-query LUT is "
-        "literally the dists relation restricted to the query vectors "
-        "(build once, reuse for codes AND LUTs), the scan is a "
-        "broadcast-LUT gather over the codes, and every distance is "
-        "exact bigint arithmetic on the 1e6 grid — so the full "
-        "encode->LUT->ADC->rank pipeline hash-matches DuckDB. The "
-        "per-call-trained flagship (embed_pq_adc_topk) is ALSO oracle-"
-        "checked since round 7 via exact-grid training",
-)
-def embed_pq_adc_topk_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, _, _, adc = _pq_v1_spark_parts(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rnk").cast("long").alias("rank"),
-            "adist",
-        )
-    )
-
-
-_RERANK_SHORTLIST = 50
-
-
-@register(
-    "embed_pq_rerank_v1",
-    oracle=_PQ_V1_BASE_CTES.format(values=_PQ_V1_VALUES, nq=_N_QUERIES)
-    + f""", shortlist AS (
+        ), shortlist AS (
             SELECT query_id, neighbor_id FROM (
                 SELECT query_id, neighbor_id,
                        ROW_NUMBER() OVER (PARTITION BY query_id
@@ -658,7 +558,7 @@ _RERANK_SHORTLIST = 50
         "rows; everything corpus-sized is one broadcast-LUT pass",
 )
 def embed_pq_rerank_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qe, _, _, adc = _pq_v1_spark_parts(spark, sf_dir)
+    qe, adc = _pq_v1_spark_parts(spark, sf_dir)
     ws = Window.partitionBy("query_id").orderBy(
         F.asc("adist"), F.asc("neighbor_id")
     )

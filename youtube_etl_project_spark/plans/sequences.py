@@ -306,7 +306,7 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "histories are '|'-delimited STRINGS, not arrays — the driver's "
         "comparator canonicalizes by pandas sort_values over every output "
         "column, and list cells throw `unhashable type: 'list'` (measured "
-        "in CORRECTNESS_r07.json). The join is lossless: epoch-µs and "
+        "in history/CORRECTNESS_r07.json). The join is lossless: epoch-µs and "
         "micro-grid values are exact bigints rendered as digits, and "
         "event_type never contains the delimiter. Determinism: the "
         "recency order is a total order (ts DESC, event_id DESC) and the "

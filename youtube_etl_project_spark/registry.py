@@ -62,11 +62,12 @@ Cross-engine determinism rules used throughout the plans:
 * **Never OUTPUT an array/map/struct column** (round 7, driver-measured):
   the driver canonicalizes by pandas ``sort_values`` over every output
   column, and list cells throw ``unhashable type: 'list'``
-  (``user_recent_history`` ERR in CORRECTNESS_r07.json). Serialize ordered
-  collections to delimited strings (``array_join``/``concat_ws`` of exact
-  digit/enum renderings, with ``string_agg(... ORDER BY rn)`` as the
-  DuckDB twin) or explode to ``(key, rn, ...)`` rows. Enforced for
-  arrays/maps/structs/decimals/binary by
+  (``user_recent_history`` ERR in history/CORRECTNESS_r07.json).
+  Serialize ordered collections to delimited strings
+  (``array_join``/``concat_ws`` of exact digit/enum renderings, with
+  ``string_agg(... ORDER BY rn)`` as the DuckDB twin) or explode to
+  ``(key, rn, ...)`` rows. Enforced for arrays/maps/structs/decimals/binary
+  by
   ``tests/test_plan_audit.py::test_no_comparator_hostile_output_columns``.
 """
 

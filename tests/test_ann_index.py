@@ -548,9 +548,11 @@ def test_warm_probe_job_budget(spark, sf_dir):
     warm call reuses the schema, model and row count known since the
     build. The second embed_ivf_index_ann and embed_ivfpq_index_ann calls
     each build their DataFrame with at most one Spark job (the query-batch
-    collect; probe cells are ranked on the driver), and the second
-    dedup_minhash_lsh_md5 and record_linkage_mutual_best calls run no
-    parquet schema-inference job. Jobs are counted per job group."""
+    collect; probe cells are ranked on the driver), the second
+    dedup_minhash_lsh_md5 call runs no parquet schema-inference job, and
+    the second record_linkage_mutual_best call runs no job at all (no
+    pin: mutual acceptance is a window count). Jobs are counted per job
+    group."""
     import uuid
 
     from youtube_etl_project_spark.registry import load_all_plans
@@ -586,9 +588,11 @@ def test_warm_probe_job_budget(spark, sf_dir):
     warm = {name: build_jobs(name) for name in names}
     assert len(warm["embed_ivf_index_ann"]) <= 1, warm
     assert len(warm["embed_ivfpq_index_ann"]) <= 1, warm
-    for name in names[2:]:
-        inference = [j for j in warm[name] if j.startswith("parquet at")]
-        assert not inference, (name, warm[name])
+    inference = [
+        j for j in warm["dedup_minhash_lsh_md5"] if j.startswith("parquet at")
+    ]
+    assert not inference, warm
+    assert not warm["record_linkage_mutual_best"], warm
 
 
 def test_nsw_insert_job_budget(spark, sf_dir, tmp_path, nsw_base):

@@ -1,10 +1,12 @@
-"""Completeness pin for SymSpell deletion-neighborhood fuzzy matching
-(operators/linkage.deletion_neighborhood_pairs): the oracle gate proves
-cross-engine exactness, but BOTH engines run the neighborhood semantics —
-this test proves those semantics equal literal brute-force edit-distance
-≤ 1 over a real sample, plus the hand-made edge cases."""
+"""Exactness pin for positional deletion-neighborhood fuzzy matching
+(operators/linkage.deletion_neighborhood_pairs): the oracle gate checks
+the exact join against a verify-based SQL form, and these tests check it
+against literal brute-force edit distance ≤ 1 — over a real sample, over
+random strings with letter runs, and on hand-made edge cases."""
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import functions as F
 
@@ -72,3 +74,39 @@ def test_matches_brute_force_on_fixture_sample(spark):
     }
     assert blocked == brute
     assert len(brute) > 0  # the sample genuinely exercises the matcher
+
+
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_exact_pairs_match_brute_force_on_runs(spark):
+    # short strings over {a, b}: letter runs, equal names and 1-char names
+    rng = random.Random(7)
+    names = [
+        "".join(rng.choice("ab") for _ in range(rng.randint(1, 5)))
+        for _ in range(300)
+    ]
+    # key 300 has two names; it matches with its min name, "ab"
+    rows = [(i, n) for i, n in enumerate(names)] + [(300, "bbbb"), (300, "ab")]
+    df = spark.createDataFrame(rows, "k long, nm string")
+    got = [
+        (r.ka, r.kb)
+        for r in deletion_neighborhood_pairs(df, "k", "nm").collect()
+    ]
+    by_key = dict(enumerate(names)) | {300: "ab"}
+    want = {
+        (a, b)
+        for a in by_key
+        for b in by_key
+        if a < b and _lev(by_key[a], by_key[b]) <= 1
+    }
+    assert len(got) == len(set(got))  # no pair row is repeated
+    assert set(got) == want
+    assert {p for p in want if 300 in p}  # the two-name key takes part

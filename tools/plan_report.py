@@ -87,8 +87,9 @@ SHOWCASE = {
     "sets — provably identical output to the all-pairs exact join",
     "record_linkage_mutual_best": "record linkage: cross-source-only "
     "band join (within-source pairs never materialize), doc-partitioned "
-    "row_number selection, mutual-acceptance self-join on the pinned "
-    "one-row-per-doc best frame — no global sort anywhere",
+    "row_number selection, mutual acceptance as a count window over "
+    "the unordered (least, greatest) pair of the one-row-per-doc best "
+    "frame — no self-join, no pin, no global sort anywhere",
     "corpus_weighted_sample_k": "fixed-k weighted sampling: "
     "embarrassingly parallel integer sort keys + TakeOrderedAndProject "
     "(O(k) per partition, merge on the driver) — no global SortExec",
@@ -111,11 +112,13 @@ SHOWCASE = {
     "semi-filter, so the recompute branch's cost follows the delta's "
     "key footprint; the untouched remainder rides one anti-join — no "
     "full-view rebuild anywhere",
-    "fuzzy_dup_degree_sym": "SymSpell edit-distance matching: deletion "
-    "variants generated map-side in codegen (transform/sequence — no "
-    "UDF), ONE variant-keyed shuffle for the candidate equi-join, "
-    "early-exit levenshtein verify on candidates only — never the "
-    "O(n²) all-pairs comparison",
+    "fuzzy_dup_degree_sym": "exact edit-distance-1 matching (FastSS with "
+    "positions): deletion variants tagged with position, deleted char "
+    "and first-of-run flag, generated map-side in codegen "
+    "(transform/sequence — no UDF), ONE variant-keyed shuffle whose join "
+    "residual keeps exactly the pairs at distance ≤ 1, once each — no "
+    "distinct, no verify, never the O(n²) all-pairs comparison; both "
+    "directions come from one explode of the pairs",
     "events_quantile_normalize": "quantile normalization: pooled ranks "
     "and the rank lookup both run the two-pass distributed rank; "
     "within-cohort ranks are properly PARTITIONED windows — the "

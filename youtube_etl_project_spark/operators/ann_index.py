@@ -40,9 +40,10 @@ from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import fixture_cache
 from youtube_etl_project_spark.operators.similarity import (
-    cosine,
     kmeans_centroids,
     nearest_centroid_vectorized,
+    norm,
+    normed_cosine,
 )
 
 
@@ -363,24 +364,27 @@ def ivf_query(
             probe_cells.append(c)
     # An Arrow table becomes a LocalRelation: broadcasting it reads no
     # RDD, unlike a DataFrame made from Python rows.
+    # Each side's norm is projected once per row, so a scored pair pays
+    # one dot fold.
     probes = F.broadcast(
         spark.createDataFrame(
             batch.take(rows).append_column(
                 "cell", pa.array(probe_cells, pa.int32())
             )
-        )
+        ).withColumn("__qn", norm(F.col("__qv")))
     )
     cells = sorted(set(probe_cells))
     assignments = (
         fixture_cache.read_frame(spark, f"{path}/assignments")
         .filter(F.col("cell").isin(cells))
         .select(F.col("id").alias("neighbor_id"),
-                F.col("embedding").alias("__cv"), "cell")
+                F.col("embedding").alias("__cv"),
+                norm(F.col("embedding")).alias("__cn"), "cell")
     )
     scored = (
         probes.join(assignments, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
+        .withColumn("cosine", normed_cosine("q", "c"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

@@ -15,9 +15,9 @@ pairs, never |A|x|B|); scores are exact integer per-mille (``div`` on
 bigints, bit-identical across engines — never a floored double division,
 which can round up at representation edges); best-match selection is a
 window partitioned by record id (massively parallel, never a global sort);
-the mutual-acceptance self-join runs on the already-selected best rows
-(one per record), which are pinned so the candidate pipeline executes
-once.
+mutual acceptance is a window count over the already-selected best rows
+(one per record) keyed by the unordered pair, so the candidate pipeline
+executes once without a self-join.
 
 No reference-repo counterpart (the reference's analytic surface is
 src/snowflake_loader.py:42-193); this is part of the SURVEY §2b
@@ -154,27 +154,19 @@ def best_match(pairs: DataFrame, min_score_pm: int = 100) -> DataFrame:
 
 def mutual_best(best: DataFrame) -> DataFrame:
     """Flag mutual-best decisions: ``mutual = 1`` when the matched record's
-    own best match points back. ``best`` is pinned first so the candidate
-    pipeline upstream executes once, not once per self-join branch."""
-    pinned = pin(best)
-    reverse = pinned.select(
-        F.col("doc_id").alias("r_doc"),
-        F.col("best_match_id").alias("r_best"),
+    own best match points back. ``doc_id`` is unique in ``best``, so the
+    unordered pair {doc, best match} holds two rows exactly when the
+    decision is mutual: one window count, no self-join, so the candidate
+    pipeline upstream runs once without a pin."""
+    pair = Window.partitionBy(
+        F.least("doc_id", "best_match_id"), F.greatest("doc_id", "best_match_id")
     )
-    return (
-        pinned.join(
-            reverse,
-            (F.col("best_match_id") == F.col("r_doc"))
-            & (F.col("doc_id") == F.col("r_best")),
-            "left",
-        )
-        .select(
-            "doc_id",
-            "best_match_id",
-            "score_pm",
-            "n_inter",
-            F.col("r_doc").isNotNull().cast("long").alias("mutual"),
-        )
+    return best.select(
+        "doc_id",
+        "best_match_id",
+        "score_pm",
+        "n_inter",
+        (F.count(F.lit(1)).over(pair) == 2).cast("long").alias("mutual"),
     )
 
 
@@ -276,68 +268,60 @@ def incremental_best_match(
 def deletion_neighborhood_pairs(
     df: DataFrame, key: str, text: str
 ) -> DataFrame:
-    """SymSpell-style edit-distance-1 candidate generation + exact verify.
+    """Every pair of keys whose strings are at Levenshtein distance ≤ 1,
+    exactly once, with no verify step (FastSS with positions).
 
-    Every string matches itself and its ``length`` single-deletion
-    variants; two strings at Levenshtein distance ≤ 1 ALWAYS share a
-    variant (equal → identity; insertion/deletion → the shorter string is
-    a deletion of the longer; substitution → both delete the substituted
-    position), so the equi-join on variants is a COMPLETE candidate
-    generator for k=1 — unlike first-character or attribute blocking
-    (``fuzzy_match_levenshtein``), which misses pairs that differ in the
-    blocked position. Candidates are a superset (two distance-2 strings
-    can share a variant, e.g. 'ab'/'ba'), so each pair is verified with
-    Spark's early-exit ``levenshtein(a, b, 1)``.
+    Each string emits its original (``p = 0``) and one row per deletion
+    position ``p = i``, carrying the variant ``v``, the deleted character
+    ``c`` and ``f``, true when ``i`` starts a run of equal characters.
+    One equi-join on ``v`` keeps a row pair only when it is:
 
-    Scale shape (100 TB): cost is O(n·L) exploded rows plus the variant
-    equi-join — one shuffle keyed by variant, never the O(n²) all-pairs
-    the brute-force form needs (measured: DuckDB all-pairs over just 15k
-    names takes ~2 min; this plan's join is sub-second). Feed it
-    DISTINCT strings (exact-dedup first): duplicate texts would put their
-    whole multiplicity into every shared variant bucket.
+    * a substitution: ``pa = pb > 0`` and ``ca <> cb`` (both delete the
+      substituted position; equal ``c`` would mean equal strings);
+    * an insertion or deletion: one side's original against the other's
+      deletion with ``f`` set (deleting anywhere in a run gives the same
+      variant, so only the run's first position may match);
+    * an equal name: both originals.
 
-    Returns one row per unordered pair: (ka, kb, na, nb) with ka < kb.
+    Each pair at distance ≤ 1 meets exactly one of these once, and each
+    row that meets one is such a pair, so the join is the answer: no
+    ``distinct``, no name re-attach, no ``levenshtein`` filter. Unlike
+    first-character or attribute blocking (``fuzzy_match_levenshtein``),
+    no pair that differs in a blocked position is missed.
+
+    Scale shape (100 TB): O(n·L) exploded rows and one shuffle keyed by
+    variant, never the O(n²) all-pairs of the brute-force form. Feed it
+    DISTINCT strings (exact-dedup first): duplicate texts put their whole
+    multiplicity into every shared variant bucket.
+
+    Returns one row per unordered pair: (ka, kb) with ka < kb.
     """
-    # Round 12 (ADVICE r11 #2): keys must be unique for the keys-only
-    # candidate distinct + broadcast name re-attach to be equivalent to
-    # the old names-carried distinct — a duplicate k (same key, two
-    # names) would cross-product on re-attach. Enforce it with a
-    # DETERMINISTIC dimension-sized dedupe (min name per key; a plain
-    # dropDuplicates picks an arbitrary survivor) instead of relying on
-    # the docstring precondition.
+    # A key with two names would pair once per name; keep the min name
+    # per key, a deterministic dimension-sized dedupe.
     base = (
         df.select(F.col(key).alias("k"), F.col(text).alias("nm"))
         .filter(F.length("nm") >= 1)
         .groupBy("k")
         .agg(F.min("nm").alias("nm"))
     )
-    variants = F.expr(
-        "array_append(transform(sequence(1, length(nm)), i -> "
-        "concat(substring(nm, 1, i-1), substring(nm, i+1, length(nm)))), "
-        "nm)"
+    rows = F.expr(
+        "array_append(transform(sequence(1, length(nm)), i -> named_struct("
+        "'v', concat(substring(nm, 1, i-1), substring(nm, i+1, length(nm))), "
+        "'p', i, 'c', substring(nm, i, 1), "
+        "'f', i = 1 OR substring(nm, i-1, 1) <> substring(nm, i, 1))), "
+        "named_struct('v', nm, 'p', 0, 'c', CAST(NULL AS STRING), "
+        "'f', false))"
     )
-    # Round-11 (guide §8 / §2.3 "shuffle keys, not payloads"): the
-    # variant self-join and the candidate distinct move ONLY (key,
-    # variant) / (ka, kb) — the name strings used to ride every exploded
-    # row through both the join shuffle and a string-keyed distinct
-    # (measured at sf0.1: 5.1 s → 3.2 s for the pair stage; 1.46M
-    # candidate rows, 956k distinct pairs). Names re-attach to the
-    # distinct ID pairs via two broadcast joins of the dimension-sized
-    # base frame before the levenshtein verify.
-    d = base.select("k", F.explode(variants).alias("v"))
-    a = d.select(F.col("k").alias("ka"), "v")
-    b = d.select(F.col("k").alias("kb"), "v")
-    cand = (
-        a.join(b, "v")
-        .filter(F.col("ka") < F.col("kb"))
-        .select("ka", "kb")
-        .distinct()  # coinciding deletions ('aab') produce duplicate rows
+    d = base.select("k", F.inline(rows))
+    a = d.select(*(F.col(c).alias(f"{c}a") for c in ("k", "p", "c", "f")), "v")
+    b = d.select(*(F.col(c).alias(f"{c}b") for c in ("k", "p", "c", "f")), "v")
+    pa, pb = F.col("pa"), F.col("pb")
+    edit = (
+        ((pa == pb) & (pa > 0) & (F.col("ca") != F.col("cb")))
+        | ((pa == 0) & (pb > 0) & F.col("fb"))
+        | ((pb == 0) & (pa > 0) & F.col("fa"))
+        | ((pa == 0) & (pb == 0))
     )
-    named = cand.join(
-        F.broadcast(base.select(F.col("k").alias("ka"), F.col("nm").alias("na"))),
-        "ka",
-    ).join(
-        F.broadcast(base.select(F.col("k").alias("kb"), F.col("nm").alias("nb"))),
-        "kb",
-    ).select("ka", "kb", "na", "nb")
-    return named.filter(F.levenshtein("na", "nb", 1) != -1)
+    return a.join(b, "v").filter((F.col("ka") < F.col("kb")) & edit).select(
+        "ka", "kb"
+    )

@@ -46,6 +46,15 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def normed_cosine(a: str, b: str) -> Column:
+    """:func:`cosine` of the vectors ``__<a>v`` and ``__<b>v`` whose norms
+    were projected once per row as ``__<a>n`` and ``__<b>n``: the same
+    float ops in the same order, bit for bit."""
+    return dot(F.col(f"__{a}v"), F.col(f"__{b}v")) / (
+        F.col(f"__{a}n") * F.col(f"__{b}n")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -55,19 +64,25 @@ def brute_force_topk(
 
     ``queries`` must be small (it is broadcast); candidates stream through
     map-side scoring — no shuffle until the per-query top-k window, which
-    partitions by query_id. Deterministic tiebreak on neighbor id.
+    partitions by query_id. Deterministic tiebreak on neighbor id. Each
+    side's norm is computed once per row, so a scored pair pays one dot
+    fold; the division is :func:`cosine`'s, bit for bit.
     """
     q = queries.select(
-        F.col("query_id"), F.col("embedding").alias("__qv")
+        F.col("query_id"),
+        F.col("embedding").alias("__qv"),
+        norm(F.col("embedding")).alias("__qn"),
     )
     c = candidates.select(
-        F.col("neighbor_id"), F.col("embedding").alias("__cv")
+        F.col("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        norm(F.col("embedding")).alias("__cn"),
     )
     scored = (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
+        .withColumn("cosine", normed_cosine("q", "c"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -638,24 +653,19 @@ def _exact_verify(
     whose sequential-fold cosine over ``vectors`` is ≥ threshold, rounded
     to 6 dp — the value DuckDB's ``list_inner_product`` twin computes.
     Each side's norm is computed once per vector, so a candidate pays one
-    dot fold; ``dot/(‖a‖·‖b‖)`` is :func:`cosine`'s float ops in the same
-    order, bit for bit."""
+    dot fold (:func:`normed_cosine`)."""
 
     def side(s: str) -> DataFrame:
         return vectors.select(
             F.col(id_col).alias(f"id_{s}"),
-            F.col(vec).alias(f"__v{s}"),
-            norm(F.col(vec)).alias(f"__n{s}"),
+            F.col(vec).alias(f"__{s}v"),
+            norm(F.col(vec)).alias(f"__{s}n"),
         )
 
     return (
         cand.join(side("a"), "id_a")
         .join(side("b"), "id_b")
-        .withColumn(
-            "cosine",
-            dot(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb")),
-        )
+        .withColumn("cosine", normed_cosine("a", "b"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )

@@ -267,25 +267,32 @@ def record_linkage_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sym GROUP BY k
     """,
     doc="Per-record fuzzy-duplicate degree at edit distance ≤ 1 over ALL "
-        "customer names via SymSpell deletion neighborhoods "
-        "(operators/linkage.deletion_neighborhood_pairs): every string "
-        "joins on itself + its single-deletion variants, so the candidate "
-        "join is COMPLETE for k=1 with no blocking misses, then each "
-        "candidate is verified with the early-exit levenshtein bound. "
+        "customer names via positional deletion neighborhoods "
+        "(operators/linkage.deletion_neighborhood_pairs, FastSS with "
+        "positions): every string joins on itself + its single-deletion "
+        "variants tagged with the deleted position and character, and the "
+        "join's residual keeps exactly the substitution, insertion/deletion "
+        "and equal-name matches, so the candidate set IS the answer — each "
+        "pair at distance ≤ 1 once, with no distinct and no verify step. "
         "Cost is O(n·L) exploded rows + one variant-keyed shuffle vs the "
-        "O(n²) all-pairs a brute-force scan needs (the oracle runs the "
-        "same provably-complete neighborhood semantics in SQL; "
-        "completeness vs literal brute force is pinned by pytest on a "
-        "sample — tests/test_linkage2.py). Output: each record with ≥ 1 "
+        "O(n²) all-pairs a brute-force scan needs. The oracle keeps the "
+        "independent verify-based form (superset candidates + "
+        "levenshtein), and tests/test_linkage2.py pins the exact set "
+        "against literal brute force. Output: each record with ≥ 1 "
         "neighbor, its neighbor count and smallest neighboring key — the "
         "triage list an ER reviewer works through",
 )
 def fuzzy_dup_degree_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     pairs = linkage.deletion_neighborhood_pairs(cust, "c_custkey", "c_name")
+    # both directions from one pass over the pairs: a unionAll of two
+    # projections would run the whole pair pipeline twice
     sym = pairs.select(
-        F.col("ka").alias("k"), F.col("kb").alias("nb")
-    ).unionAll(pairs.select(F.col("kb").alias("k"), F.col("ka").alias("nb")))
+        F.inline(F.array(
+            F.struct(F.col("ka").alias("k"), F.col("kb").alias("nb")),
+            F.struct(F.col("kb").alias("k"), F.col("ka").alias("nb")),
+        ))
+    )
     return sym.groupBy(F.col("k").alias("custkey")).agg(
         F.count(F.lit(1)).cast("long").alias("n_neighbors"),
         F.min("nb").cast("long").alias("nearest_key"),

@@ -1,10 +1,11 @@
 """SparkSession builder tuned for this engine.
 
-Defaults target the test environment (local[32], 128 GiB single JVM) but the
-knobs are the ones that matter on a real cluster: AQE for runtime re-planning
-(coalesced shuffle partitions + skew-join splitting), Arrow for any
-pandas-UDF boundary, UTC session time so timestamp semantics are stable, and
-a shuffle-partition count sized to the parallelism at hand.
+Defaults target the test environment (local[32], one JVM whose heap is
+sized to the host's physical memory) but the knobs are the ones that
+matter on a real cluster: AQE for runtime re-planning (coalesced shuffle
+partitions + skew-join splitting), Arrow for any pandas-UDF boundary, UTC
+session time so timestamp semantics are stable, and a shuffle-partition
+count sized to the parallelism at hand.
 """
 
 from __future__ import annotations
@@ -12,6 +13,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(phys_bytes: int) -> str:
+    """Default driver heap: a quarter of physical memory, between 1g and
+    8g. A fixed 8g let one sf0.1 build of the cached queries grow to
+    5.8 GB RSS on a 16 GB host, so a second engine process beside it was
+    OOM-killed; a quarter leaves room for two engines and their Python
+    workers."""
+    mb = phys_bytes // (4 * 1024 * 1024)
+    return f"{min(max(mb, 1024), 8192)}m"
 
 
 def get_spark(
@@ -39,7 +50,11 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS); read as long + convert
         # (sources/catalog.py) since Spark has no nanos timestamp type.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # bucketed-table support without polluting the repo: warehouse +

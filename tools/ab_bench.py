@@ -1,14 +1,14 @@
 """Alternating parent/change pairs of the benchmark.
 
     python tools/ab_bench.py REV --workload corpus_dedup_ann --pairs 10 \\
-        [--change REV2] [--seconds 5] [--trace 0] [--out pairs.json]
+        [--change REV2] [--trace 0] [--out pairs.json]
 
 Exports REV with ``git archive`` into a temporary directory and runs
 ``perfbench/run.py`` there (the parent) and in this checkout (the
 change; ``--change REV2`` exports that revision instead, so both sides
 run from fresh directories), alternating which side goes first; both
-sides of pair ``i`` use seed ``i + 1``. Each run is one fresh process, as
-the benchmark runs it.
+sides of pair ``i`` use seed ``i + 1``. Each run is one fresh process of
+``run_seconds`` (``BENCHMARK.json``), as the benchmark runs it.
 
 For each metric of the run (``end_to_end`` of ``BENCHMARK.json``, or
 ``per_layer`` with ``--trace 1``) it prints the median and quartiles of
@@ -76,12 +76,12 @@ def steal_s(record: dict) -> float:
     return sum(record["run_record"]["host_steal_s_per_pass"])
 
 
-def run_side(checkout: str, args, seed: int) -> dict:
+def run_side(checkout: str, args, seconds: float, seed: int) -> dict:
     """One ``perfbench/run.py`` process in ``checkout``: its run record
     and result line."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", args.workload,
-        "--seed", str(seed), "--seconds", str(args.seconds),
+        "--seed", str(seed), "--seconds", str(seconds),
         "--trace", str(args.trace),
     ]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -112,13 +112,13 @@ def main() -> int:
     )
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", help="write every run's record here as JSON")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["per_layer" if args.trace else "end_to_end"]
+        spec = json.load(fh)
+    metrics = spec["per_layer" if args.trace else "end_to_end"]
     parent_dir = tempfile.mkdtemp(prefix="ab_bench_")
     change_dir = tempfile.mkdtemp(prefix="ab_bench_") if args.change else ROOT
     runs = []
@@ -130,7 +130,10 @@ def main() -> int:
             seed = i + 1
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             got = {
-                side: run_side(parent_dir if side == "parent" else change_dir, args, seed)
+                side: run_side(
+                    parent_dir if side == "parent" else change_dir,
+                    args, spec["run_seconds"], seed,
+                )
                 for side in order
             }
             runs.append({"seed": seed, "order": order, **got})

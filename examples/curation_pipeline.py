@@ -11,7 +11,7 @@
       --> curated corpus + per-stage funnel counts
 
 Every stage is the operator the registry also exposes as a standalone
-oracle-checked query (text_quality_score, dedup_minhash_lsh +
+oracle-checked query (text_quality_score, dedup_minhash_lsh_md5 +
 dedup_survivor_policy, corpus_temperature_mix, pack_sequences) — this
 script is the composition, not new logic. State that ever reaches the
 driver: per-stage counts and the model-sized source-rate table. The
@@ -69,9 +69,8 @@ def main() -> None:
     n1 = gated.count()
 
     # 2. lexical near-dedup: LSH pairs -> star CC -> policy survivor
-    pairs = dedup.minhash_lsh_pairs(
-        gated, "doc_id", "text", shingle_k=3, n_hashes=32, n_bands=8,
-        threshold=0.5,
+    pairs = dedup.minhash_lsh_pairs_md5(
+        gated, "doc_id", "text", n_hashes=32, n_bands=8, threshold=0.5
     )
     labels = graph.connected_components_star(
         pairs, src="id_a", dst="id_b"

@@ -1,6 +1,6 @@
 """End-to-end corpus deduplication: the production 100 TB recipe.
 
-    documents --> MinHash signatures --> LSH band buckets --> candidate
+    documents --> md5 MinHash signatures --> LSH band buckets --> candidate
     pairs --> exact-Jaccard verify --> connected components --> keep the
     min-id survivor per cluster --> deduplicated corpus
 
@@ -33,9 +33,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_k=3, n_hashes=32, n_bands=8,
-        threshold=0.5,
+    pairs = dedup.minhash_lsh_pairs_md5(
+        docs, "doc_id", "text", n_hashes=32, n_bands=8, threshold=0.5
     )
     labels = graph.connected_components(pairs, src="id_a", dst="id_b")
     survivors = (

@@ -1,8 +1,8 @@
 """Day-over-day incremental dedup against a persisted LSH index.
 
-    day 0:  corpus --> lsh_index() --> write index table
+    day 0:  corpus --> md5_signature_df() --> write index table
     day N:  batch arrives
-            --> incremental_minhash_pairs(corpus_index=read index)
+            --> incremental_minhash_pairs_md5(corpus_index=read index)
             --> drop batch docs that duplicate the corpus (or each other)
             --> append surviving docs to the corpus, their rows to the index
 
@@ -27,7 +27,7 @@ from youtube_etl_project_spark.operators import dedup  # noqa: E402
 from youtube_etl_project_spark.session import get_spark  # noqa: E402
 from youtube_etl_project_spark.sources import load_table  # noqa: E402
 
-PARAMS = dict(shingle_k=3, n_hashes=32, n_bands=8, threshold=0.5)
+PARAMS = dict(n_hashes=32, n_bands=8, threshold=0.5)
 
 
 def main() -> None:
@@ -51,14 +51,14 @@ def main() -> None:
     corpus, batch = docs.filter(~is_batch), docs.filter(is_batch)
 
     # ---- day 0: build and persist the index ------------------------------
-    dedup.lsh_index(
-        corpus, "doc_id", "text", PARAMS["shingle_k"], PARAMS["n_hashes"]
+    dedup.md5_signature_df(
+        corpus, "doc_id", "text", PARAMS["n_hashes"]
     ).write.mode("overwrite").parquet(index_path)
     idx = spark.read.parquet(index_path)
     print(f"day 0: corpus={corpus.count()} docs, index rows={idx.count()}")
 
     # ---- day 1: batch arrives -------------------------------------------
-    pairs = dedup.incremental_minhash_pairs(
+    pairs = dedup.incremental_minhash_pairs_md5(
         None, batch, "doc_id", "text", corpus_index=idx, **PARAMS
     ).localCheckpoint(eager=True)  # referenced twice below
     n_batch = batch.count()
@@ -75,8 +75,8 @@ def main() -> None:
     )
 
     # ---- append the survivors' index rows (corpus never re-shingled) -----
-    dedup.lsh_index(
-        fresh, "doc_id", "text", PARAMS["shingle_k"], PARAMS["n_hashes"]
+    dedup.md5_signature_df(
+        fresh, "doc_id", "text", PARAMS["n_hashes"]
     ).write.mode("append").parquet(index_path)
     print(
         f"index now {spark.read.parquet(index_path).count()} rows "

@@ -67,7 +67,7 @@ def main() -> None:
 
     # 3. LLM-data-pipeline operators
     docs = load_table(spark, SF_DIR, "documents")
-    dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).show(5)
+    dedup.minhash_lsh_pairs_md5(docs, "doc_id", "text", threshold=0.5).show(5)
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 3).select(

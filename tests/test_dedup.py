@@ -19,8 +19,8 @@ def test_minhash_lsh_vs_exact_ground_truth(spark, sf_dir):
         dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 3, threshold=0.5)
     )
     lsh = _pairs(
-        dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", 3, n_hashes=32, n_bands=8, threshold=0.5
+        dedup.minhash_lsh_pairs_md5(
+            docs, "doc_id", "text", n_hashes=32, n_bands=8, threshold=0.5
         )
     )
     # verification step guarantees precision = 1 (every LSH pair is a true
@@ -129,8 +129,8 @@ def test_df_cut_join_row_bound(spark):
 
 def test_lsh_bucket_cap_degrades_gracefully(spark):
     docs = _hot_corpus(spark)
-    capped = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", 3, n_hashes=32, n_bands=8,
+    capped = dedup.minhash_lsh_pairs_md5(
+        docs, "doc_id", "text", n_hashes=32, n_bands=8,
         threshold=0.5, max_df=10, max_bucket=10,
     )
     got = _pairs(capped)
@@ -149,13 +149,13 @@ def test_lsh_bucket_cap_degrades_gracefully(spark):
 def test_guarded_lsh_inert_on_clean_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     plain = _pairs(
-        dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", 3, n_hashes=32, n_bands=8, threshold=0.5
+        dedup.minhash_lsh_pairs_md5(
+            docs, "doc_id", "text", n_hashes=32, n_bands=8, threshold=0.5
         )
     )
     guarded = _pairs(
-        dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", 3, n_hashes=32, n_bands=8, threshold=0.5,
+        dedup.minhash_lsh_pairs_md5(
+            docs, "doc_id", "text", n_hashes=32, n_bands=8, threshold=0.5,
             max_df=50, max_bucket=50,
         )
     )

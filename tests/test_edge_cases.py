@@ -17,15 +17,17 @@ def _docs(spark, rows):
 def test_minhash_empty_and_short_docs(spark):
     # empty input
     assert (
-        dedup.minhash_lsh_pairs(
-            _docs(spark, []), "doc_id", "text", 3, 32, 8, 0.5
+        dedup.minhash_lsh_pairs_md5(
+            _docs(spark, []), "doc_id", "text", 32, 8, 0.5
         ).count()
         == 0
     )
     # all docs shorter than the shingle width -> no signatures, no pairs
     short = _docs(spark, [(1, "one two"), (2, "a b")])
     assert (
-        dedup.minhash_lsh_pairs(short, "doc_id", "text", 3, 32, 8, 0.5).count()
+        dedup.minhash_lsh_pairs_md5(
+            short, "doc_id", "text", 32, 8, 0.5
+        ).count()
         == 0
     )
 

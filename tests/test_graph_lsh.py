@@ -1,8 +1,9 @@
-"""dedup_cluster_lsh has no DuckDB oracle (xxhash64-seeded LSH): pin it
-against dedup_cluster_cc (exact pairs → CC) instead. Because LSH emits a
-subset of the exact near-dup pairs, its clustering must be a REFINEMENT of
-the exact clustering: any two docs the LSH path groups together must also
-be grouped together by the exact path."""
+"""dedup_cluster_lsh against dedup_cluster_cc (exact pairs → CC). The
+DuckDB oracle proves the two engines agree on the LSH clustering; this
+pins how it relates to the exact one. Because LSH emits a subset of the
+exact near-dup pairs, its clustering must be a REFINEMENT of the exact
+clustering: any two docs the LSH path groups together must also be
+grouped together by the exact path."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
-"""incremental_minhash_pairs(A, B) must equal minhash_lsh_pairs(A ∪ B)
-restricted to pairs touching B — same params, same seed, so the band
-collisions and Jaccard verification are bit-identical; only the
-corpus-corpus pairs may be absent."""
+"""incremental_minhash_pairs_md5(A, B) must equal
+minhash_lsh_pairs_md5(A ∪ B) restricted to pairs touching B — same
+params, same md5 signatures, so the band collisions and Jaccard
+verification are bit-identical; only the corpus-corpus pairs may be
+absent."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from pyspark.sql import functions as F
 
 from youtube_etl_project_spark.operators import dedup
 
-PARAMS = dict(shingle_k=3, n_hashes=32, n_bands=8, threshold=0.5)
+PARAMS = dict(n_hashes=32, n_bands=8, threshold=0.5)
 
 
 def _norm(rows):
@@ -36,11 +37,13 @@ def test_incremental_equals_full_restricted_to_batch(spark, sf_dir):
     assert batch_ids, "split produced an empty batch"
 
     inc = _norm(
-        dedup.incremental_minhash_pairs(
+        dedup.incremental_minhash_pairs_md5(
             corpus, batch, "doc_id", "text", **PARAMS
         ).collect()
     )
-    full = dedup.minhash_lsh_pairs(docs, "doc_id", "text", **PARAMS).collect()
+    full = dedup.minhash_lsh_pairs_md5(
+        docs, "doc_id", "text", **PARAMS
+    ).collect()
     full_touching_batch = _norm(
         r for r in full if r.id_a in batch_ids or r.id_b in batch_ids
     )
@@ -56,7 +59,7 @@ def test_incremental_empty_batch(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     empty = docs.filter(F.lit(False))
     assert (
-        dedup.incremental_minhash_pairs(
+        dedup.incremental_minhash_pairs_md5(
             docs, empty, "doc_id", "text", **PARAMS
         ).count()
         == 0
@@ -78,15 +81,17 @@ def test_corpus_index_path_matches_direct(spark, sf_dir, tmp_path):
     # persist the index and run from the parquet round-trip, as production
     # would — must match recomputing signatures from the corpus text
     path = str(tmp_path / "idx")
-    dedup.lsh_index(corpus, "doc_id", "text").write.parquet(path)
+    dedup.md5_signature_df(
+        corpus, "doc_id", "text", PARAMS["n_hashes"]
+    ).write.parquet(path)
     via_index = _norm(
-        dedup.incremental_minhash_pairs(
+        dedup.incremental_minhash_pairs_md5(
             None, batch, "doc_id", "text",
             corpus_index=spark.read.parquet(path), **PARAMS,
         ).collect()
     )
     direct = _norm(
-        dedup.incremental_minhash_pairs(
+        dedup.incremental_minhash_pairs_md5(
             corpus, batch, "doc_id", "text", **PARAMS
         ).collect()
     )

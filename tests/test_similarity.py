@@ -47,7 +47,7 @@ def test_lsh_recall_vs_brute_force(spark, sf_dir):
     }
     ann = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.lsh_topk(
+        for r in similarity.lsh_topk_exact(
             q, c, dim=64, k=5, n_planes=4, n_tables=8
         ).collect()
     }

@@ -4,7 +4,7 @@ file that nothing uses. Scanned from source with ``ast`` over every
 ``bench.py``, ``perfbench/``); nothing is imported and no Spark session
 starts.
 
-Five findings fail:
+Seven findings fail:
 
 * a top-level package function that no reached code names (reachability
   by name, from module-level code, registered queries and every file
@@ -21,7 +21,13 @@ Five findings fail:
 * a data file (any non-``.py`` file under the package's ``functions/``
   or under ``tests/fixtures/``) whose basename no string constant of any
   ``.py`` file contains: a released model or golden fixture left behind
-  by the code that loaded it.
+  by the code that loaded it;
+* a file other than ``__spark_entry__.py`` that names the driver
+  contract's fixed checkout path;
+* a file that imports ``__spark_entry__`` before the package (a
+  ``conftest.py`` that imports the package counts for the tests it
+  covers): the contract's fixed path would shadow the file's own
+  checkout.
 
 ``testkit.py`` is out of scope: its builders' defaults are the fields
 of a template record, not options of the program.
@@ -353,3 +359,48 @@ def test_no_fixed_checkout_path_outside_the_driver_contract():
         for py in _trees()
         if py.name != "__spark_entry__.py" and fixed in py.read_text()
     ))
+
+
+def _first_import_line(nodes, module: str) -> int | None:
+    """Line of the first ``import module[.x]`` or ``from module[.x]
+    import ...`` among ``nodes``."""
+    lines = []
+    for n in nodes:
+        if isinstance(n, ast.Import):
+            names = [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom) and n.module and not n.level:
+            names = [n.module]
+        else:
+            continue
+        if any(m == module or m.startswith(module + ".") for m in names):
+            lines.append(n.lineno)
+    return min(lines, default=None)
+
+
+def _entry_before_package() -> list[str]:
+    pkg = PKG.name
+    # a conftest that imports the package at module level runs before
+    # every test file beside or below it
+    preloaded = [
+        py.parent
+        for py, tree in _trees().items()
+        if py.name == "conftest.py"
+        and _first_import_line(tree.body, pkg) is not None
+    ]
+    out = []
+    for py, tree in _trees().items():
+        entry = _first_import_line(ast.walk(tree), "__spark_entry__")
+        if entry is None or any(d in py.parents for d in preloaded):
+            continue
+        first = _first_import_line(ast.walk(tree), pkg)
+        if first is None or first > entry:
+            out.append(py.relative_to(REPO).as_posix())
+    return sorted(out)
+
+
+def test_package_is_imported_before_the_driver_contract():
+    """``__spark_entry__`` puts the driver's fixed checkout first on
+    ``sys.path``. A script that imports it before the package would then
+    import that checkout's package, not its own, when run from a second
+    copy (a parent checkout in an A/B comparison)."""
+    _report(_entry_before_package())

@@ -53,8 +53,11 @@ def rows_to_multiset(cols, rows):
 
 
 def main():
-    import __spark_entry__ as entrymod
+    # this checkout's package first: __spark_entry__ puts the driver's
+    # fixed checkout on sys.path, which must not shadow a second copy
     from youtube_etl_project_spark.session import get_spark
+
+    import __spark_entry__ as entrymod
 
     spark = get_spark("correctness-check")
     con = duckdb.connect()

@@ -42,8 +42,11 @@ def main() -> int:
     )
     only = {a for a in sys.argv[1:] if "/" not in a}
 
-    import __spark_entry__ as entry
+    # this checkout's package first: __spark_entry__ puts the driver's
+    # fixed checkout on sys.path, which must not shadow a second copy
     from youtube_etl_project_spark.session import get_spark
+
+    import __spark_entry__ as entry
 
     spark = get_spark("determinism-check")
     spark.sparkContext.setLogLevel("ERROR")

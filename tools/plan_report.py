@@ -24,8 +24,6 @@ SHOWCASE = {
     "scan (PushedFilters) with column pruning (ReadSchema)",
     "window_latest_per_key": "QUALIFY rewrite: single sort+shuffle window, "
     "filter on row_number",
-    "dedup_minhash_lsh": "signatures map-side in codegen; the only wide "
-    "exchanges are the doc groupBy and the band-bucket self-join",
     "embed_cosine_topk": "broadcast query set; per-partition top-k before "
     "the final k-row exchange",
     "tpch_q19_disjunctive_revenue": "three-way disjunction spanning both "
@@ -72,10 +70,11 @@ SHOWCASE = {
     "pinned partitions, broadcast per-partition offsets, "
     "partition-LOCAL row_number — no single-partition WindowExec "
     "anywhere (round 4's replacement for unpartitioned global windows)",
-    "dedup_minhash_lsh_md5": "the oracle-checkable LSH twin: md5 "
-    "signatures as flat codegen columns (4 slots sliced per digest), "
-    "band-bucket self-join, verify on candidates — same exchanges as "
-    "the xxhash flagship, every value reproducible in ANSI SQL",
+    "dedup_minhash_lsh_md5": "MinHash-LSH flagship: md5 signatures (4 "
+    "slots sliced per digest) read as flat columns from the per-fixture "
+    "signature index, band-bucket self-join, the candidate dedup as the "
+    "one Exchange, verify on candidates only — every value reproducible "
+    "in ANSI SQL",
     "embed_ivf_index_ann": "persisted-index ANN serving: probe cells "
     "ranked on the driver against the cached centroid model and "
     "broadcast back as a local relation, cell IN (...) filter "

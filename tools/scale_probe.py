@@ -38,7 +38,6 @@ PROBE_QUERIES = (
     "events_session_window",
     "funnel_conversion",
     "text_langid",
-    "dedup_minhash_lsh",
     "dedup_cluster_lsh",
     "embed_cosine_topk",
     "embed_lsh_ann",
@@ -300,8 +299,8 @@ NOTES = {
     ),
     "dedup_ngram_jaccard": (
         "exact all-pairs baseline — quadratic co-occurrence join BY "
-        "DESIGN; dedup_jaccard_dfcut / dedup_minhash_lsh are the scale "
-        "paths"
+        "DESIGN; dedup_jaccard_dfcut / dedup_minhash_lsh_md5 are the "
+        "scale paths"
     ),
     "embed_knn_label_accuracy": (
         "exact-kNN evaluation baseline — all queries x all corpus flops "

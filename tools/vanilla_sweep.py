@@ -24,6 +24,10 @@ def main() -> int:
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
+    # this checkout's package first: __spark_entry__ puts the driver's
+    # fixed checkout on sys.path, which must not shadow a second copy
+    import youtube_etl_project_spark  # noqa: F401
+
     import __spark_entry__ as entry
 
     failed = []

@@ -4,7 +4,7 @@ append increments.
 ``similarity.ivf_topk`` trains and assigns on every call — right for the
 oracle gate, wrong for production, where the corpus is ~static and
 queries arrive forever. This module materializes the two IVF artifacts
-the same way ``dedup.lsh_index`` does for near-dup:
+the same way ``dedup.md5_signature_df`` does for near-dup:
 
 * ``<path>/centroids`` — the K×dim coarse quantizer (the *model*; a few
   KB). :func:`ivf_centroids` holds it in the model tier of
@@ -24,7 +24,7 @@ and joins run as Spark jobs.
 
 Increments: ``ivf_append`` assigns new vectors with the FROZEN centroids
 and appends only their cell partitions — O(batch) work, no corpus
-rescan, mirroring ``incremental_minhash_pairs``. Centroids are not
+rescan, mirroring ``incremental_minhash_pairs_md5``. Centroids are not
 retrained on append; after heavy drift rebuild (cells stay balanced only
 while the data distribution matches the training sample — the standard
 IVF operational caveat, handled by monitoring cell sizes via

@@ -1,33 +1,30 @@
 """Deduplication family (SURVEY §2b X1/X2): exact, MinHash+LSH, SimHash,
 n-gram Jaccard — the LLM-training-pipeline dedup stack.
 
-Everything here is native Column expressions (xxhash64, array lambdas) — no
-MLlib vector conversions, no Python UDFs — so signatures/bands compute
-map-side inside codegen and the only shuffles are the band-bucket join (LSH)
-or the shingle self-join (exact Jaccard). That is the 100 TB shape: LSH cost
-scales with matching candidate pairs, not n².
+Everything here is native Column expressions (md5, xxhash64 shingle ids,
+array lambdas) — no MLlib vector conversions, no Python UDFs — so
+signatures/bands compute map-side inside codegen and the only shuffles
+are the band-bucket join (LSH) or the shingle self-join (exact Jaccard).
+That is the 100 TB shape: LSH cost scales with matching candidate pairs,
+not n².
 
 Design notes per operator:
 
 * exact_dedup: content-hash (sha2 of canonicalized row) groupBy — one
   shuffle on the hash; or key-based latest/first-wins via window.
-* minhash_lsh_pairs: per-row k-shingles → n_hashes minhash signature (one
-  xxhash64 per seed per shingle, map-side) → b bands × r rows → explode
-  bands → self-join on (band, band_hash) → exact-Jaccard verify on the
-  candidates only. Deterministic: fixed integer seeds.
+* minhash_lsh_pairs_md5: per-row word 3-shingles → n_hashes minhash
+  signature in the md5 domain (lexicographic mins of fixed-width md5 hex
+  slices, 4 signature slots per digest, map-side) → b bands × r rows →
+  explode bands → self-join on (band, band_hash) → exact-Jaccard verify
+  on the candidates only. Every signature, band hash, candidate set and
+  verified Jaccard is reproducible in ANSI SQL, so the full, guarded,
+  incremental and indexed paths are all value-hash oracle-checked.
 * simhash: 64-bit fingerprint; per-bit majority vote over token hashes,
   computed as a 64-element array fold. Near-dup = small Hamming distance,
   found via band buckets on hash prefixes.
 * ngram_jaccard_pairs: exact all-pairs Jaccard via shingle explode +
   self-join (the oracle-checkable baseline; quadratic in colliding docs —
-  use minhash_lsh_pairs at scale).
-* md5_* twins (round 4): the same LSH pipeline with signatures in the md5
-  domain — lexicographic mins of fixed-width md5 hex slices, 4 signature
-  slots per digest — so every signature, band hash, candidate set and
-  verified Jaccard is reproducible in ANSI SQL and the full/guarded/
-  incremental/indexed paths are value-hash oracle-checked. ~2x the hash
-  cost of xxhash64; production keeps the xxhash flagship, the gate keeps
-  the md5 proof.
+  use minhash_lsh_pairs_md5 at scale).
 """
 
 from __future__ import annotations
@@ -151,166 +148,10 @@ def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataF
 # X2: MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature_df(
-    base: DataFrame,
-    id_col: str = "doc",
-    shingles_col: str = "shingles",
-    n_hashes: int = 32,
-    seed: int = 42,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Minhash signatures as n_hashes flat long columns ``h0..h{n-1}``.
-
-    ``max_df`` applies :func:`df_cut` to the exploded shingles before
-    hashing, so ultra-common shingles neither shape the signature nor
-    inflate the verify sets — the cut then holds end-to-end (bands AND
-    exact-Jaccard verify see the same filtered shingle space).
-
-    Shape matters here: explode shingles → one xxhash64 per seed as a plain
-    column → min-aggregate per doc. Flat columns stay in whole-stage codegen
-    and each hash is computed exactly once; the tempting nested form
-    (transform(seeds, s -> array_min(transform(shingles, ...)))) gets
-    re-evaluated per downstream reference in the interpreted higher-order
-    path — measured 30x slower. One shuffle, on the doc id.
-    """
-    sh = base.select(F.col(id_col).alias("doc"), F.explode(shingles_col).alias("sh"))
-    if max_df is not None:
-        sh = df_cut(sh, "sh", max_df)
-    hashed = sh.select(
-        "doc",
-        F.col("sh").alias("sh_id"),
-        *[
-            F.xxhash64("sh", F.lit(seed * 1_000_003 + i)).alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    # sh_set rides the same aggregation: the verify step needs each doc's
-    # shingle set, and collecting the 64-bit ids here means the whole
-    # pipeline reads/shuffles the corpus exactly once.
-    return hashed.groupBy("doc").agg(
-        F.collect_set("sh_id").alias("sh_set"),
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(n_hashes)]
-    )
-
-
-def lsh_band_rows(
-    sig: DataFrame, n_bands: int, rows_per_band: int
-) -> DataFrame:
-    """(doc, band_id, band_hash) rows from flat signature columns — docs
-    agreeing on any band collide in the bucket join."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"h{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select("doc", F.explode(bands).alias("b")).select(
-        "doc", "b.band_id", "b.band_hash"
-    )
-
-
 def _jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    threshold: float = 0.6,
-    seed: int = 42,
-    max_df: int | None = None,
-    max_bucket: int | None = None,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash, verified with exact Jaccard.
-
-    Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
-    Candidate generation cost ∝ bucket collisions (b·n rows through one
-    shuffle); verification touches candidates only.
-
-    Hot-key guards for the 100 TB path (both off by default so the sf-scale
-    oracle/recall checks see the full space):
-
-    * ``max_df`` — shingle document-frequency cut (:func:`df_cut`) before
-      signatures: boilerplate shingles stop dragging near-identical
-      signatures together AND stop inflating the verify sets.
-    * ``max_bucket`` — drop (band_id, band_hash) buckets larger than this
-      before the self-join. A bucket of m docs emits m·(m-1)/2 candidate
-      pairs; one boilerplate-driven hot band at corpus scale is a
-      quadratic blowup. Docs agreeing on any *other* band still pair, so
-      recall degrades gracefully (pinned by tests/test_dedup.py).
-    """
-    rows_per_band = n_hashes // n_bands
-    if signatures is not None:
-        # round 12: persisted signature index (same contract as the md5
-        # twin's ``signatures`` — see minhash_lsh_pairs_md5); only valid
-        # for the uncut space
-        assert max_df is None, "signature index is built on the uncut space"
-        sig = signatures
-    else:
-        toks = F.filter(
-            F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
-        )
-        base = spread(docs).select(
-            F.col(id_col).alias("doc"),
-            word_shingle_ids(toks, shingle_k).alias("shingles"),
-        ).filter(F.size("shingles") > 0)
-
-        sig = minhash_signature_df(base, "doc", "shingles", n_hashes, seed,
-                                   max_df=max_df)
-    banded = lsh_band_rows(sig.drop("sh_set"), n_bands, rows_per_band)
-    if max_bucket is not None:
-        wb = Window.partitionBy("band_id", "band_hash")
-        banded = (
-            banded.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-
-    # Candidate pairs travel as bare (id_a, id_b) through dedup — never
-    # shuffle the shingle arrays per-candidate; the doc-level hashed
-    # shingle sets (collected in the same pass as the signature) re-attach
-    # via two joins for the exact-Jaccard verify.
-    left = banded.alias("l")
-    right = banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    a = sig.select(F.col("doc").alias("id_a"), F.col("sh_set").alias("sh_a"))
-    b = sig.select(F.col("doc").alias("id_b"), F.col("sh_set").alias("sh_b"))
-    verified = (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
-    )
-    return (
-        verified.filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 def md5_signature_df(
@@ -320,9 +161,8 @@ def md5_signature_df(
     n_hashes: int = 16,
     max_df: int | None = None,
 ) -> DataFrame:
-    """MinHash signatures in the **md5 domain** — the oracle-checkable
-    twin of :func:`minhash_signature_df` (whose seeded xxhash64 has no
-    DuckDB equivalent).
+    """MinHash signatures in the **md5 domain**, reproducible in DuckDB
+    SQL. Returns (doc, sh_set, h0..h{n-1}).
 
     Word 3-shingles are kept as STRINGS (space-joined via the same
     zip_with ladder as ``word_shingle_ids`` — the indexed
@@ -332,9 +172,20 @@ def md5_signature_df(
     4 disjoint 8-hex-char / 32-bit slices): n_hashes/4 md5 calls per
     shingle row, measured 3-4x off the naive one-md5-per-slot form.
     Mins are LEXICOGRAPHIC — md5 hex is fixed-width lowercase on both
-    engines, so the string min IS the numeric min. Returns
-    (doc, sh_set, h0..h{n-1}); same explode → flat columns → one-shuffle
-    aggregate shape as the flagship."""
+    engines, so the string min IS the numeric min.
+
+    Shape matters: explode shingles → digests as plain columns →
+    min-aggregate per doc. Flat columns stay in whole-stage codegen and
+    each digest is computed once; the nested form
+    (transform(seeds, s -> array_min(transform(shingles, ...)))) is
+    re-evaluated per downstream reference in the interpreted
+    higher-order path (measured 30x slower). One shuffle, on the doc id;
+    ``sh_set`` rides the same aggregation, so the verify step never
+    re-reads the corpus.
+
+    ``max_df`` applies :func:`df_cut` to the exploded shingles before
+    hashing, so the cut holds end to end: bands AND the exact-Jaccard
+    verify sets see the same filtered shingle space."""
     assert n_hashes % 4 == 0, "md5 slicing packs 4 hashes per digest"
     t = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit(""))
     s2 = F.zip_with(
@@ -352,8 +203,6 @@ def md5_signature_df(
     )
     sh = base.select("doc", F.explode("shingles").alias("sh"))
     if max_df is not None:
-        # same end-to-end cut semantics as minhash_signature_df: bands
-        # AND verify sets see the filtered shingle space
         sh = df_cut(sh, "sh", max_df)
     sh = sh.select(
         "doc",
@@ -415,25 +264,35 @@ def minhash_lsh_pairs_md5(
     max_bucket: int | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
-    """Banded MinHash-LSH with an **md5-domain signature** — the
-    oracle-twin variant of :func:`minhash_lsh_pairs`: every signature
-    component, band hash, candidate set and verified Jaccard is
-    reproducible bit-for-bit in ANSI SQL (see :func:`md5_signature_df`).
+    """Near-duplicate pairs via banded MinHash-LSH over the md5-domain
+    signature (:func:`md5_signature_df`), verified with exact Jaccard.
+    Every signature component, band hash, candidate set and verified
+    Jaccard is reproducible bit-for-bit in ANSI SQL.
 
-    Same scale posture as the flagship: flat signature columns in
-    whole-stage codegen, one shuffle on doc, candidates travel as bare
-    id pairs, shingle sets re-attach only for the verify. md5 is ~2x the
-    hash cost of xxhash64 — the price of cross-engine checkability.
+    Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >=
+    threshold. Candidate generation cost ∝ bucket collisions (b·n rows
+    through one shuffle); candidates travel as bare id pairs and the
+    shingle sets re-attach only for the verify.
 
-    ``signatures`` (round 12): a persisted :func:`md5_signature_df`
-    frame for ``docs`` — the corpus signature index. When given, the
-    corpus is never re-shingled/re-hashed (the signature pass measured
-    ~2.1 s of the row's ~2.3 s at sf0.1 — in-plan exchange reuse
-    already shares it across this function's three references, so a
-    per-fixture index is the remaining lever); banding, the candidate
-    join and the exact-Jaccard verify all read the index columns. Only
-    valid for the uncut space (``max_df`` must be None — a df cut
-    changes both bands and verify sets).
+    Hot-key guards for the 100 TB path (both off by default so the
+    sf-scale oracle/recall checks see the full space):
+
+    * ``max_df`` — shingle document-frequency cut (:func:`df_cut`) before
+      signatures: boilerplate shingles stop dragging near-identical
+      signatures together AND stop inflating the verify sets.
+    * ``max_bucket`` — drop (band_id, band_hash) buckets larger than this
+      before the self-join. A bucket of m docs emits m·(m-1)/2 candidate
+      pairs; one boilerplate-driven hot band at corpus scale is a
+      quadratic blowup. Docs agreeing on any *other* band still pair, so
+      recall degrades gracefully (pinned by tests/test_dedup.py).
+
+    ``signatures``: a persisted :func:`md5_signature_df` frame for
+    ``docs`` — the corpus signature index. When given, the corpus is
+    never re-shingled/re-hashed (the signature pass measured ~2.1 s of
+    the row's ~2.3 s at sf0.1); banding, the candidate join and the
+    exact-Jaccard verify all read the index columns. Only valid for the
+    uncut space (``max_df`` must be None — a df cut changes both bands
+    and verify sets).
     """
     assert n_hashes % n_bands == 0, (
         "n_hashes must divide evenly into n_bands — a remainder would "
@@ -488,20 +347,27 @@ def incremental_minhash_pairs_md5(
     threshold: float = 0.5,
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
-    """The md5-domain twin of :func:`incremental_minhash_pairs` — same
-    contract (batch-vs-corpus + within-batch pairs, the corpus never
-    self-joins, batch bands broadcast so the corpus streams map-side; the
-    batch id rides in id_a for cross pairs, batch-batch pairs ordered
-    id_a < id_b) — but with oracle-checkable signatures: because a pair
-    collides in a band iff both docs agree on it, regardless of which
-    join produced it, the result equals the FULL md5 pipeline's pairs
-    restricted to batch-touching ones, which is exactly what the DuckDB
-    twin computes.
+    """Near-dup pairs of a new ``batch`` against an existing ``corpus``
+    plus within the batch itself — the corpus NEVER self-joins. This is
+    the daily-crawl-vs-historical-index shape: re-deduplicating 100 TB
+    because 0.1 TB arrived is the classic accidental quadratic, and
+    :func:`minhash_lsh_pairs_md5` over the union does exactly that.
 
-    Pass ``corpus_index`` (a persisted :func:`md5_signature_df` table;
+    Returns (id_a, id_b, jaccard) with jaccard >= threshold, where at
+    least one side is a batch doc (batch-batch pairs ordered id_a < id_b;
+    batch-corpus pairs carry the batch id in id_a). Ids must be disjoint
+    across the two frames. A pair collides in a band iff both docs agree
+    on it, whichever join produced it, so the result equals the full
+    pipeline's pairs restricted to batch-touching ones — what the DuckDB
+    twin computes, and what tests/test_incremental_dedup.py pins.
+
+    The batch's band rows are orders of magnitude smaller than the
+    corpus's, so the batch side is broadcast into the batch⋈corpus band
+    join and the corpus band index streams map-side against it. Pass
+    ``corpus_index`` (a persisted :func:`md5_signature_df` table;
     ``corpus`` is then ignored and may be None) and the corpus is never
-    re-shingled — only its flat signature columns are scanned, the
-    production serving shape."""
+    re-shingled — only its flat signature columns are scanned. See
+    examples/incremental_dedup.py for the day-over-day loop."""
     assert n_hashes % n_bands == 0, (
         "n_hashes must divide evenly into n_bands — a remainder would "
         "silently drop trailing signature rows from every band"
@@ -550,134 +416,14 @@ def incremental_minhash_pairs_md5(
     )
 
 
-def lsh_index(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    n_hashes: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """The persistable LSH index of a corpus: one row per doc with its
-    hashed shingle set and flat minhash columns ``h0..h{n-1}`` — plain
-    parquet-writable columns. At 100 TB this table is what you
-    materialize once and append each day's batch rows to;
-    :func:`incremental_minhash_pairs` accepts it as ``corpus_index`` so
-    arriving batches never re-shingle the corpus. See
-    examples/incremental_dedup.py for the day-over-day loop.
-    """
-    toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")
-    )
-    base = spread(docs).select(
-        F.col(id_col).alias("doc"),
-        word_shingle_ids(toks, shingle_k).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    return minhash_signature_df(base, "doc", "shingles", n_hashes, seed)
-
-
-def incremental_minhash_pairs(
-    corpus: DataFrame | None,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    threshold: float = 0.6,
-    seed: int = 42,
-    max_bucket: int | None = None,
-    corpus_index: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs of a new ``batch`` against an existing ``corpus``
-    plus within the batch itself — the corpus NEVER self-joins. This is
-    the daily-crawl-vs-historical-index shape: re-deduplicating 100 TB
-    because 0.1 TB arrived is the classic accidental quadratic, and
-    ``minhash_lsh_pairs`` over the union does exactly that.
-
-    Returns (id_a, id_b, jaccard) with jaccard >= threshold, where at
-    least one side is a batch doc (batch-batch pairs ordered id_a < id_b;
-    batch-corpus pairs carry the batch id in id_a). Ids must be disjoint
-    across the two frames.
-
-    Scale shape: the batch's band rows are orders of magnitude smaller
-    than the corpus's, so the batch side is explicitly broadcast into the
-    batch⋈corpus band join — the corpus band index streams map-side
-    against it, no corpus shuffle at all. In production pass
-    ``corpus_index`` (a persisted :func:`lsh_index` table; ``corpus``
-    is then ignored and may be None) so the corpus is never re-shingled
-    — only its flat index columns are scanned; equivalence with the
-    full-recompute answer is pinned by tests/test_incremental_dedup.py:
-    incremental(A, B) == pairs of full(A ∪ B) touching B.
-
-    Parameters mirror :func:`minhash_lsh_pairs`; ``max_bucket`` caps hot
-    corpus-side buckets (a boilerplate band shared by m corpus docs would
-    otherwise fan every colliding batch doc out m ways).
-    """
-    rows_per_band = n_hashes // n_bands
-
-    def _sig(docs: DataFrame) -> DataFrame:
-        return lsh_index(docs, id_col, text_col, shingle_k, n_hashes, seed)
-
-    sig_b = _sig(batch)
-    if corpus_index is not None:
-        sig_c = corpus_index
-    elif corpus is not None:
-        sig_c = _sig(corpus)
-    else:
-        raise ValueError("need corpus or corpus_index")
-    bands_b = lsh_band_rows(sig_b.drop("sh_set"), n_bands, rows_per_band)
-    bands_c = lsh_band_rows(sig_c.drop("sh_set"), n_bands, rows_per_band)
-    if max_bucket is not None:
-        wb = Window.partitionBy("band_id", "band_hash")
-        bands_c = (
-            bands_c.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-
-    bb = (
-        bands_b.alias("l")
-        .join(
-            bands_b.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-    )
-    bc = (
-        F.broadcast(bands_b.alias("l"))
-        .join(
-            bands_c.alias("r"),
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash")),
-        )
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-    )
-    candidates = bb.unionByName(bc).dropDuplicates(["id_a", "id_b"])
-
-    sig_all = sig_b.unionByName(sig_c)
-    a = sig_b.select(F.col("doc").alias("id_a"), F.col("sh_set").alias("sh_a"))
-    b = sig_all.select(
-        F.col("doc").alias("id_b"), F.col("sh_set").alias("sh_b")
-    )
-    return (
-        candidates.join(F.broadcast(a), "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
 def batch_duplicate_ids(
     pairs: DataFrame, batch_ids: DataFrame
 ) -> DataFrame:
-    """Which batch docs to drop, given :func:`incremental_minhash_pairs`
-    output: every batch doc paired with a corpus doc (those pairs carry
-    the batch id in ``id_a``), plus the larger id of each batch-batch
-    pair (keep-first-by-id survivor rule). ``batch_ids`` is a one-column
+    """Which batch docs to drop, given
+    :func:`incremental_minhash_pairs_md5` output: every batch doc paired
+    with a corpus doc (those pairs carry the batch id in ``id_a``), plus
+    the larger id of each batch-batch pair (keep-first-by-id survivor
+    rule). ``batch_ids`` is a one-column
     (doc_id) frame; returns the same shape. NOT ``greatest(id_a, id_b)``:
     a corpus id larger than its batch partner would wrongly shield the
     duplicate batch doc."""
@@ -701,8 +447,9 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs shingle Jaccard via explode + equi-self-join —
-    the ground-truth twin of minhash_lsh_pairs. Cost ∝ co-occurring shingle
-    pairs; at 100 TB use the LSH variant and keep this for sampled audits.
+    the ground-truth twin of minhash_lsh_pairs_md5. Cost ∝ co-occurring
+    shingle pairs; at 100 TB use the LSH variant and keep this for
+    sampled audits.
 
     ``max_df`` bounds the self-join: shingles in more than max_df documents
     are dropped from the shingle *sets* (numerator and denominator alike,

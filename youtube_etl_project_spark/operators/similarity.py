@@ -7,9 +7,11 @@
 * brute-force top-k: broadcast the (small) query set against all candidate
   vectors, score per-row, window row_number ≤ k. Linear in candidates —
   the exact baseline.
-* LSH (random hyperplane) buckets: deterministic pseudo-random hyperplanes
-  derived from xxhash64, sign-bit bucket key; ANN = top-k within bucket.
-  The 100 TB path: bucket join replaces the cross product.
+* LSH (random hyperplane) buckets: deterministic ±1 hyperplanes from
+  sha256 (:func:`lsh_topk_exact`) or md5 (:func:`lsh_ann_md5`) parity,
+  sign bits of exact grid-integer dots as the bucket key; ANN = top-k
+  within bucket, reproducible in DuckDB SQL. The 100 TB path: bucket
+  join replaces the cross product.
 """
 
 from __future__ import annotations
@@ -99,43 +101,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_components(dim: int, plane_id: int, seed: int = 42) -> list[float]:
-    """Deterministic pseudo-random ±1 hyperplane, precomputed driver-side
-    (sha256-derived). Literal arrays keep the Catalyst expression tree tiny —
-    building the components as per-row hash expressions made plan
-    compilation/evaluation the bottleneck (measured ~30x slowdown)."""
-    import hashlib
-
-    out = []
-    for j in range(dim):
-        h = hashlib.sha256(f"{seed}:{plane_id}:{j}".encode()).digest()[0]
-        out.append(1.0 if h & 1 else -1.0)
-    return out
-
-
-def _table_keys_vectorized(dim: int, n_planes: int, n_tables: int, seed: int):
-    """Arrow-vectorized bucket keys: one numpy matmul per table over the
-    whole batch — the right tool for dense per-row linear algebra (the pure
-    Column fold interprets ~4M lambda steps for 2k vectors × 32 planes).
-    Returns a pandas_udf: array<float> → array<long> (one key per table).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [
-        np.array(
-            [hyperplane_components(dim, p, seed + 7919 * t) for p in range(n_planes)]
-        ).T  # dim × n_planes
-        for t in range(n_tables)
-    ]
-
-    @pandas_udf("array<long>")
-    def keys(v: pd.Series) -> pd.Series:
-        x = np.stack(v.to_numpy()).astype(np.float64)  # batch × dim
-        return pd.Series(list(plane_keys(x, mats, strict=False)))
-
-    return keys
-
-
 def kmeans_centroids(
     vectors: DataFrame,
     vec: str = "embedding",
@@ -184,7 +149,7 @@ def nearest_centroid_vectorized(centroids: list[list[float]]):
     is constant per row and drops out of the argmin). The Column-fold twin
     below interprets K zip_with/aggregate lambdas per row — measured ~10x
     slower at 5k×64-dim and the gap widens with rows; dense per-row linear
-    algebra belongs in numpy (same rule as ``_table_keys_vectorized``)."""
+    algebra belongs in numpy (same rule as the LSH bucket-key kernels)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -371,11 +336,23 @@ def lsh_topk_exact(
     n_planes: int | None = None,
     n_tables: int | None = None,
 ) -> DataFrame:
-    """:func:`lsh_topk` with EXACT-integer bucket keys (sha256-parity ±1
-    planes, grid-quantized dots) — the oracle-expressible form that put
-    the registered ``embed_lsh_ann`` under the value-hash gate in round
-    7. Same plan shape: id+key bucket join (vectors never enter it),
-    candidate dedup, exact-fold cosine scoring, (rank, id) tiebreaks."""
+    """ANN top-k: score only candidates that share ≥1 LSH bucket with the
+    query across n_tables hash tables. Bucket keys are EXACT integers
+    (sha256-parity ±1 planes, grid-quantized dots), so the registered
+    ``embed_lsh_ann`` is reproducible in DuckDB SQL.
+
+    Recall < 1 by construction; raise n_tables (cost ∝ n_tables exploded
+    rows through the bucket join) or lower n_planes to trade cost for
+    recall. Only ids and keys enter the bucket join and the pair dedup
+    (dense vectors there measured a 12x blow-up at 80k candidates); the
+    query side is small by contract and broadcast, so the candidate side
+    never shuffles for the bucket join. Scoring is the exact-fold cosine
+    with (rank, id) tiebreaks.
+
+    Leave ``n_planes``/``n_tables`` as None to derive the geometry from
+    a corpus count (one cheap aggregate) via :func:`auto_lsh_geometry`,
+    the scale-safe default: bucket density stays bounded as the corpus
+    grows."""
     if n_planes is None or n_tables is None:
         ap, at = auto_lsh_geometry(candidates.count())
         n_planes = ap if n_planes is None else n_planes
@@ -448,14 +425,12 @@ def auto_lsh_geometry(n_candidates: int) -> tuple[int, int]:
       bucket size stays ≈ target_bucket = 128 regardless of n.
     * ``n_tables = ceil(ln(1-recall) / ln(1-p^planes))`` in [1, 64]: holds
       recall ≈ 1-(1-p^planes)^tables ≈ 0.9 as planes rise. ``p_near = 0.60``
-      is the per-plane collision probability of a true top-10 neighbor
-      back-solved from the WEAKEST measured plane family (round 8: the
-      sha256-parity exact-key family that the gated embed_lsh_ann
-      serves measured recall@10 = 0.88 at the old p=0.62-derived
-      (4, 15) ⇒ p ≈ 0.603; the seeded float family measures p ≈ 0.62 —
-      calibrating to the weaker family keeps the 0.9 floor true for
-      BOTH, at the cost of ~2 extra tables) — still conservative at
-      larger corpora, where true neighbors are closer and p rises.
+      is the per-plane collision probability of a true top-10 neighbor,
+      back-solved from the sha256-parity exact-key family that
+      :func:`lsh_topk_exact` and the gated embed_lsh_ann use: it
+      measured recall@10 = 0.88 at the p=0.62-derived (4, 15) ⇒
+      p ≈ 0.603 — still conservative at larger corpora, where true
+      neighbors are closer and p rises.
 
     At sf0.1 (n=2000) this yields (4, 17); at 16× data (n=32000) it
     yields (8, 64-capped): 2^8 buckets keep collision cost ≈
@@ -475,94 +450,6 @@ def auto_lsh_geometry(n_candidates: int) -> tuple[int, int]:
         1, min(64, math.ceil(math.log(1 - recall) / math.log(1 - p_all)))
     )
     return planes, tables
-
-
-def lsh_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int | None = 4,
-    n_tables: int | None = 8,
-) -> DataFrame:
-    """ANN top-k: score only candidates that share ≥1 LSH bucket with the
-    query across n_tables hash tables.
-
-    Recall < 1 by construction; raise n_tables (cost ∝ n_tables exploded
-    rows through the bucket join) or lower n_planes to trade cost for
-    recall. At scale the bucket equi-join shuffles each side once on
-    (table, key) instead of materializing the cross product.
-
-    Bucket keys compute via a vectorized numpy pandas_udf (one matmul per
-    table per Arrow batch): ~5x faster warm than the pure-Column fold at
-    2k×64-dim, and the gap widens with row count — dense per-row linear
-    algebra is the case where Arrow+numpy beats Catalyst expressions.
-
-    Pass ``n_planes=None`` (and/or ``n_tables=None``) to auto-derive the
-    geometry from a corpus count (one cheap aggregate) via
-    ``auto_lsh_geometry`` — the scale-safe default: bucket density stays
-    bounded as the corpus grows instead of degrading quadratically.
-    """
-    if n_planes is None or n_tables is None:
-        ap, at = auto_lsh_geometry(candidates.count())
-        n_planes = ap if n_planes is None else n_planes
-        n_tables = at if n_tables is None else n_tables
-    keys_udf = _table_keys_vectorized(dim, n_planes, n_tables, 42)
-
-    def bucket_ids(df: DataFrame, id_out: str) -> DataFrame:
-        # ids + bucket keys ONLY — the 64-float vectors never enter the
-        # bucket join or the pair dedup (measured 12x blow-up at 80k
-        # candidates when they did: every exploded row, join row, and
-        # dropDuplicates shuffle carried two dense arrays)
-        keyed = df.select(F.col(id_out), keys_udf("embedding").alias("__ks"))
-        return keyed.select(
-            id_out, F.posexplode("__ks").alias("__table", "__key")
-        ).select(
-            id_out,
-            F.struct(
-                F.col("__table").alias("table"), F.col("__key").alias("key")
-            ).alias("__b"),
-        )
-
-    # query side is small by contract → broadcast: the candidate side never
-    # shuffles for the bucket join, only the bare id pairs do (for dedup)
-    pairs = (
-        F.broadcast(bucket_ids(queries, "query_id"))
-        .join(bucket_ids(candidates, "neighbor_id"), "__b")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = (
-        pairs.join(
-            F.broadcast(
-                queries.select(
-                    F.col("query_id"), F.col("embedding").alias("__qv")
-                )
-            ),
-            "query_id",
-        )
-        .join(
-            candidates.select(
-                F.col("neighbor_id"), F.col("embedding").alias("__cv")
-            ),
-            "neighbor_id",
-        )
-        .withColumn("cosine", cosine(F.col("__qv"), F.col("__cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
 
 
 def md5_plane_signs(
@@ -715,8 +602,7 @@ def lsh_ann_md5(
     multiprobe: int = 0,
 ) -> DataFrame:
     """Hyperplane-LSH ANN whose EVERY intermediate is reproducible in
-    ANSI SQL — the oracle-twin of :func:`lsh_topk` (whose sha256-seeded
-    planes and float dot products have no cross-engine bit guarantee).
+    ANSI SQL, in the md5 plane family.
 
     Three md5/fixed-point substitutions make it checkable:
 
@@ -729,10 +615,10 @@ def lsh_ann_md5(
       quantized vectors (MIPS scoring) with an id tiebreak — every
       emitted value is integer-domain.
 
-    Same scale posture as the flagship: bucket keys are one map-side
-    Arrow int64 kernel (:func:`_md5_bucket_keys_folded`), the bucket
-    equi-join shuffles bare ids, and scoring touches candidate pairs
-    only. Returns (query_id, neighbor_id, rank, dot_q).
+    Same scale posture as :func:`lsh_topk_exact`: bucket keys are one
+    map-side Arrow int64 kernel (:func:`_md5_bucket_keys_folded`), the
+    bucket equi-join shuffles bare ids, and scoring touches candidate
+    pairs only. Returns (query_id, neighbor_id, rank, dot_q).
 
     ``multiprobe > 0`` additionally probes, per table, every bucket at
     Hamming distance 1 from the query's own (the first ``multiprobe``

@@ -335,11 +335,11 @@ def _md5_lsh_cluster_oracle() -> str:
     oracle=_md5_lsh_cluster_oracle(),
     doc="X2 at 100 TB: the production dedup path — banded MinHash-LSH "
         "candidate pairs (cost ∝ collisions, not n²) → connected "
-        "components → cluster id + survivor flag. Since round 4 the "
-        "signatures live in the md5 domain (dedup.minhash_lsh_pairs_md5), "
-        "so the ENTIRE path — banding, candidate join, exact-Jaccard "
-        "verify, transitive closure — is ORACLE-CHECKED against a DuckDB "
-        "recursive CTE (was rows-only with xxhash64 signatures). "
+        "components → cluster id + survivor flag. The signatures live "
+        "in the md5 domain (dedup.minhash_lsh_pairs_md5), so the ENTIRE "
+        "path — banding, candidate join, exact-Jaccard verify, "
+        "transitive closure — is ORACLE-CHECKED against a DuckDB "
+        "recursive CTE. "
         "tests/test_graph_lsh.py still pins the refinement property vs "
         "the exact-pair clustering",
 )

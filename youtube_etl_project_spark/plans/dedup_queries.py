@@ -1,15 +1,11 @@
 """Dedup queries (SURVEY §2b X1/X2) — exact keyed, content-hash, exact
-n-gram Jaccard, and the banded LSH family. Since round 4 most of the LSH
-stack runs in the **md5 domain** (signatures = lexicographic mins of
-fixed-width md5 hex slices), which makes every hash reproducible in ANSI
-SQL — the md5 pair pipeline, its guarded production config, the
-incremental and persisted-index serving paths, and the SimHash bit-vote
-fold are all value-hash oracle-checked; round 7 converted
-`dedup_embed_cosine_lsh` too (sha256-parity hyperplanes, exact integer
-bucket keys). Only the xxhash64 flagship (`dedup_minhash_lsh`, the
-fastest production hash) stays rows-only in this module, with
-tests/test_dedup.py asserting its candidates against the exact-Jaccard
-ground truth and the md5 twin carrying the cross-engine proof."""
+n-gram Jaccard, and the banded LSH family. The MinHash-LSH stack runs in
+the **md5 domain** (signatures = lexicographic mins of fixed-width md5
+hex slices), which makes every hash reproducible in ANSI SQL: the pair
+pipeline, its guarded production config, the incremental and
+persisted-index serving paths and the SimHash bit-vote fold are all
+value-hash oracle-checked, and so is `dedup_embed_cosine_lsh`
+(sha256-parity hyperplanes, exact integer bucket keys)."""
 
 from __future__ import annotations
 
@@ -191,53 +187,6 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def xx_sig_full_path(spark: SparkSession, sf_dir: str) -> str:
-    """Per-fixture xxhash64 signature index for the production flagship —
-    the same round-12 build-once/probe-many contract as
-    :func:`md5_sig_full_path` (hashed shingle ids and signature slots are
-    all bigint, so the parquet round trip is bit-exact); rows-only gate +
-    tests/test_dedup.py recall floors keep checking the pair output."""
-
-    def _build(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = F.filter(
-            F.split(F.col("text"), r"\s+"), lambda x: x != F.lit("")
-        )
-        base = dedup.spread(docs).select(
-            F.col("doc_id").alias("doc"),
-            dedup.word_shingle_ids(toks, 3).alias("shingles"),
-        ).filter(F.size("shingles") > 0)
-        dedup.minhash_signature_df(
-            base, "doc", "shingles", 32, 42
-        ).repartition(1).write.mode("overwrite").parquet(f"{path}/sig")
-
-    return (
-        fixture_cache.cached_build(
-            "lsh_sig_xx_full_", sf_dir, _build, marker="sig/_SUCCESS"
-        )
-        + "/sig"
-    )
-
-
-
-@register(
-    "dedup_minhash_lsh",
-    oracle=None,  # xxhash64-seeded signatures have no DuckDB twin
-    doc="X2: banded MinHash-LSH candidate generation + exact-Jaccard verify "
-        "(≥0.5). The scalable near-dup path: cost ∝ bucket collisions. "
-        "tests/test_dedup.py checks candidates ⊆/≈ exact ground truth",
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_k=3, n_hashes=32, n_bands=8,
-        threshold=0.5,
-        signatures=fixture_cache.read_frame(
-            spark, xx_sig_full_path(spark, sf_dir)
-        ),
-    )
-
-
 _MD5_HASHES, _MD5_BANDS = 16, 4
 _MD5_RPB = _MD5_HASHES // _MD5_BANDS
 # 4 signature slots per seeded digest: slice i reads 8 hex chars at
@@ -363,11 +312,9 @@ MD5_LSH_PAIRS_CTES = md5_lsh_pairs_ctes()
         "signature lives in the md5 domain — substr(md5(seed||'~'||"
         "shingle),1,16) with a lexicographic min (fixed-width lowercase "
         "hex: string min == numeric min on both engines) — so candidate "
-        "generation AND verify hash-match a pure-SQL DuckDB twin, closing "
-        "the rows-only gap round 3 flagged for the LSH family. Same "
-        "pipeline shape and scale posture as dedup_minhash_lsh (16 flat "
-        "signature columns post-explode, bucket equi-join, verify on "
-        "candidates only)",
+        "generation AND verify hash-match a pure-SQL DuckDB twin. 16 "
+        "flat signature columns post-explode, read from a per-fixture "
+        "signature index; bucket equi-join; verify on candidates only",
 )
 def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -549,7 +496,7 @@ def dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reproducible in ANSI SQL, and the verify is the exact left-fold "
         "cosine on candidates only (the dedup_embed_cosine bit-identity "
         "precedent). The semantic-dedup analogue of "
-        "dedup_minhash_lsh_md5: the sha256/float flagship "
+        "dedup_minhash_lsh_md5: the sha256-plane flagship "
         "(dedup_embed_cosine_lsh) stays the production path, this twin "
         "carries the cross-engine proof of the bucketed plan shape",
 )
@@ -727,8 +674,7 @@ def dedup_lsh_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="X2: 64-bit SimHash fingerprints — token bits in the md5 domain "
         "(two 32-bit hex-cast halves), so the full bit-vote majority fold "
         "is reproduced in DuckDB and the fingerprints are ORACLE-CHECKED "
-        "(converted from rows-only in round 4; the xxhash64 production "
-        "twin remains inside dedup_simhash_pairs). Same plan shape: "
+        "and dedup_simhash_pairs bands the same fingerprints. Plan: "
         "explode → hash once → 64 bit-count sums in one aggregate → "
         "majority fold, one shuffle on doc",
 )
